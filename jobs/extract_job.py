@@ -3,7 +3,7 @@
     zip -qr engine.zip pdf_to_text_spark
     spark-submit --master <cluster> --py-files engine.zip \
         jobs/extract_job.py --in <pages.parquet path> --out <out_dir> \
-        [--buckets 4096] [--no-resume] [--threshold 250]
+        [--buckets 4096] [--partitions N] [--no-resume] [--ocr-scanned]
 
 Reads the Common-Crawl-style pages table, runs the routed extraction
 pipeline with salted/whale-aware partitioning, writes bucket-partitioned
@@ -27,9 +27,7 @@ def main() -> None:
     ap.add_argument("--out", dest="out_dir", required=True)
     ap.add_argument("--buckets", type=int, default=4096)
     ap.add_argument("--partitions", type=int, default=None)
-    ap.add_argument("--threshold", type=int, default=250)
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--branched", action="store_true", help="use the column-pruning branch-filtered operator")
     ap.add_argument(
         "--ocr-scanned", action="store_true",
         help="opt-in scanned-page OCR fallback (SPEC v1.2 item 4)",
@@ -50,8 +48,6 @@ def main() -> None:
         n_buckets=args.buckets,
         n_partitions=args.partitions,
         resume=not args.no_resume,
-        threshold=args.threshold,
-        fused=not args.branched,
         ocr_scanned=args.ocr_scanned,
     )
     print(json.dumps(summary))

@@ -870,10 +870,13 @@ class _FastBail(Exception):
 
 
 # one alternation, ordered EXACTLY like _tokenize_slow's branch ladder
-# so both tokenizers segment identical streams identically
+# so the fused scanner segments a stream as the reference tokenizer does.
+# Group 2 is possessive so a nested-paren or unterminated string fails in
+# linear time and bails; a backtracking group would try 2^n splits of
+# the run before the paren (ReDoS)
 _SCAN_RE = re.compile(
     rb"([ \t\r\n\f\x00]+)"  # 1 whitespace run
-    rb"|(\((?:[^\\()]+|\\.)*\))"  # 2 literal string, no nested parens
+    rb"|(\((?:[^\\()]++|\\.)*+\))"  # 2 literal string, no nested parens
     rb"|(<<)"  # 3 inline dictionary open
     rb"|(<[0-9A-Fa-f \t\r\n\f\x00]*>)"  # 4 hex string
     rb"|(\[)"  # 5
@@ -926,81 +929,6 @@ def _skip_inline_image(content: bytes, end_of_bi: int) -> int:
             break
         j += 2
     return j + 2
-
-
-def _tokenize(content: bytes):
-    """Tokenize a content stream; returns a list of
-    ('str', raw bytes) | ('num', f) | ('name', b) | ('op', b) | ('arr', list).
-
-    r6: a single-regex ``finditer`` scanner covers the common grammar
-    (one C-level match per token instead of a Python branch ladder with
-    per-character loops — the tokenizer was 45% of the extraction
-    pipeline's CPU). Anything it does not cover — nested-paren
-    strings, malformed hex, stray bytes — bails and the stream is
-    re-tokenized from scratch by the reference implementation
-    (``_tokenize_slow``), so token semantics and error behavior are
-    identical by construction. Inline dicts and inline images are
-    positional skips shared by both paths."""
-    try:
-        return _tokenize_fast(content)
-    except _FastBail:
-        return list(_tokenize_slow(content))
-
-
-def _tokenize_fast(content: bytes) -> list:
-    out: list = []
-    arr_stack: list[list] = []
-    pos, n = 0, len(content)
-    scan = _SCAN_RE.finditer
-    while pos < n:
-        restart = False
-        for m in scan(content, pos):
-            if m.start() != pos:
-                raise _FastBail()
-            g = m.lastindex
-            pos = m.end()
-            if g == 1:
-                continue
-            if g == 2:
-                tok = ("str", _unescape(m.group(2)[1:-1]))
-            elif g == 8:
-                tok = ("num", float(m.group(8)))
-            elif g == 7:
-                tok = ("name", m.group(7))
-            elif g == 9:
-                opb = m.group(9)
-                if opb == b"BI":
-                    pos = _skip_inline_image(content, pos)
-                    restart = True
-                    break
-                tok = ("op", opb)
-            elif g == 5:
-                arr_stack.append([])
-                continue
-            elif g == 6:
-                if not arr_stack:
-                    raise _FastBail()  # slow path raises its native error
-                tok = ("arr", arr_stack.pop())
-            elif g == 4:
-                hx = bytes(b for b in m.group(4)[1:-1] if b not in _WS_BYTES)
-                if len(hx) % 2:
-                    hx += b"0"
-                tok = ("str", bytes.fromhex(hx.decode("ascii")))
-            else:  # g == 3
-                pos = _skip_inline_dict(content, pos)
-                restart = True
-                break
-            if arr_stack:
-                arr_stack[-1].append(tok)
-            else:
-                out.append(tok)
-        else:
-            if pos != n:
-                raise _FastBail()
-            break
-        if restart:
-            continue
-    return out
 
 
 def _tokenize_slow(content: bytes):
@@ -1073,19 +1001,7 @@ def _tokenize_slow(content: bytes):
         elif c == b"<":
             if content[i + 1 : i + 2] == b"<":  # inline dict (e.g. BDC
                 # property list): skip the balanced << ... >> — no text
-                depth, j = 1, i + 2
-                while j < n and depth:
-                    if content[j : j + 2] == b"<<":
-                        depth += 1
-                        j += 2
-                    elif content[j : j + 2] == b">>":
-                        depth -= 1
-                        j += 2
-                    else:
-                        j += 1
-                if depth:
-                    raise PdfError("unterminated inline dictionary")
-                i = j
+                i = _skip_inline_dict(content, i + 2)
             else:  # hex string <48656C6C6F>; whitespace legal, odd pads 0
                 j = content.find(b">", i + 1)
                 if j == -1:
@@ -1128,28 +1044,7 @@ def _tokenize_slow(content: bytes):
                 if not m:
                     raise PdfError(f"bad content token at {i}")
                 if m.group(0) == b"BI":
-                    # §8.9.7 inline image: BI <pairs> ID <binary> EI.
-                    # The binary payload is NOT token-syntax — without
-                    # this skip it would tokenize as garbage (or fake
-                    # text). Data starts one whitespace byte after ID;
-                    # EI must be delimiter-bounded on both sides.
-                    idm = re.compile(rb"\bID[\r\n ]").search(content, m.end())
-                    if idm is None:
-                        raise PdfError("inline image missing ID")
-                    j = idm.end()
-                    while True:
-                        j = content.find(b"EI", j)
-                        if j == -1:
-                            raise PdfError("inline image missing EI")
-                        before = content[j - 1 : j]
-                        after = content[j + 2 : j + 3]
-                        if (
-                            before and before[0] in _WS_BYTES
-                            and (after == b"" or after[0] in _WS_BYTES)
-                        ):
-                            break
-                        j += 2
-                    i = j + 2
+                    i = _skip_inline_image(content, m.end())
                     continue
                 tok = emit(("op", m.group(0)))
                 if tok:
@@ -1845,7 +1740,7 @@ def extract_pdf_pages(
         # frozen spec: \x02 (the engine's internal page sentinel) is
         # stripped from page text — a PDF string could inject it via an
         # octal escape and would otherwise split one page into two in
-        # the fused operator's PAGE_SEP join/split round-trip
+        # the doc-level operator's PAGE_SEP join/split round-trip
         text = _runs_to_text(_runs_from_content(content, fonts)).replace("\x02", "")
         if page_ocr is not None and not text:
             imgs = _page_painted_images(objs, page, content)

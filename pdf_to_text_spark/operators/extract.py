@@ -1,19 +1,21 @@
-"""Extraction operators: content-type routing + Arrow-batched parse UDFs.
+"""Extraction operators: one Arrow-batched UDF routes and parses each row.
 
 Spark-first re-expression of the reference's per-file pipeline
 (``/root/reference/2_OpenCV_OCR/main.py:86-127``,
 ``core_document_processing.py:45-89``):
 
-- routing is pure Catalyst (magic bytes / text-layer sniff, SURVEY P3) —
-  the ``F.when`` ladder, no UDF;
-- parsing is the ONLY Python: scalar Arrow-batched pandas UDFs that call
-  the frozen core spec (``core.pdfparse`` / ``core.htmlextract``), so
-  UDF output is byte-identical to the sequential oracle by construction;
+- routing and parsing run in ONE scalar pandas UDF (``parse_any_udf``):
+  the frozen P3 ladder (text-layer fast path → empty guard → ``%PDF-``
+  magic → ``<`` in a 32-byte lstripped window → error) is plain Python
+  over each row, then the row goes to the frozen core spec
+  (``core.pdfparse`` / ``core.htmlextract``), so UDF output is
+  byte-identical to the sequential oracle by construction;
 - all normalization is the Catalyst chain (``functions.text``);
-- the doc-level result needs NO shuffle: the PDF UDF returns the ordered
-  page array and reassembly is ``array_join(transform(...))`` — at 100 TB
-  the extraction stage is embarrassingly parallel (scan → project →
-  write), which is what makes ≥0.8 scaling efficiency attainable.
+- the doc-level result needs NO shuffle: PDF pages come back joined on
+  ``PAGE_SEP`` and reassembly is ``array_join(transform(split(...)))``
+  — at 100 TB the extraction stage is embarrassingly parallel (scan →
+  project → write), which is what makes ≥0.8 scaling efficiency
+  attainable.
 
 Per-row ``extract_ms`` is measured inside the UDF batch loop and feeds
 the per-partition lineage table (north rule).
@@ -40,21 +42,23 @@ _PDF_RESULT = T.StructType(
     [
         T.StructField("pages", T.ArrayType(T.StringType())),
         T.StructField("error", T.StringType()),
-        T.StructField("ms", T.DoubleType()),
     ]
 )
 
-_HTML_RESULT = T.StructType(
-    [
-        T.StructField("content", T.StringType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("ms", T.DoubleType()),
-    ]
-)
+
+def _ocr_hook(ocr_scanned: bool):
+    """The scanned-page OCR fallback (round 5, ``core.scanocr``): pages
+    with no text layer that paint a readable image OCR via the frozen
+    raster. Default OFF = goldens unchanged."""
+    if not ocr_scanned:
+        return None
+    from pdf_to_text_spark.core.scanocr import ocr_scanned_images
+
+    return ocr_scanned_images
 
 
 def _html_main_safe(data: bytes) -> tuple[str | None, str | None]:
-    """Row-level error tolerance for the HTML branch (same contract as
+    """Row-level error tolerance for the HTML route (same contract as
     ``extract_pdf_pages_safe``): never raises."""
     try:
         return extract_main_content_bytes(data), None
@@ -62,31 +66,21 @@ def _html_main_safe(data: bytes) -> tuple[str | None, str | None]:
         return None, f"unexpected:{type(e).__name__}"
 
 
-def make_pdf_pages_udf(password: bytes | str = b"", ocr_scanned: bool = False):
-    """binary → (ordered page texts, error, parse-ms). SURVEY M1/M2/M5:
-    deterministic text-object decode replaces rasterize+OCR. Errors
-    (including unexpected exceptions on malformed-but-magic-valid input)
-    become rows, never task failures. ``password`` is the user password
-    applied to every encrypted document in the frame (round-5 item 6) —
-    wrong or missing passwords stay disclosed error rows.
-    ``ocr_scanned`` enables the scanned-page fallback (round 5,
-    ``core.scanocr``): pages with no text layer that paint a readable
-    image OCR via the frozen raster; default OFF = goldens unchanged."""
-    if ocr_scanned:
-        from pdf_to_text_spark.core.scanocr import ocr_scanned_images as _hook
-    else:
-        _hook = None
+def make_pdf_pages_udf(ocr_scanned: bool = False):
+    """binary → (ordered page texts, error) for the per-page table.
+    SURVEY M1/M2/M5: deterministic text-object decode replaces
+    rasterize+OCR. Errors (including unexpected exceptions on
+    malformed-but-magic-valid input) become rows, never task failures."""
+    hook = _ocr_hook(ocr_scanned)
 
     @F.pandas_udf(_PDF_RESULT)
     def pdf_pages_udf(html: pd.Series) -> pd.DataFrame:
-        pages_out, err_out, ms_out = [], [], []
+        pages_out, err_out = [], []
         for data in html:
-            t0 = time.perf_counter()
-            pages, err = extract_pdf_pages_safe(bytes(data), password, _hook)
+            pages, err = extract_pdf_pages_safe(bytes(data), b"", hook)
             pages_out.append(pages)
             err_out.append(err)
-            ms_out.append((time.perf_counter() - t0) * 1000.0)
-        return pd.DataFrame({"pages": pages_out, "error": err_out, "ms": ms_out})
+        return pd.DataFrame({"pages": pages_out, "error": err_out})
 
     return pdf_pages_udf
 
@@ -94,138 +88,8 @@ def make_pdf_pages_udf(password: bytes | str = b"", ocr_scanned: bool = False):
 pdf_pages_udf = make_pdf_pages_udf()
 
 
-@F.pandas_udf(_HTML_RESULT)
-def html_main_udf(html: pd.Series) -> pd.DataFrame:
-    """binary → (raw main-content blocks, error, parse-ms). North-rule
-    DOM text-density/link-density boilerplate strip (core.htmlextract)."""
-    out, err_out, ms_out = [], [], []
-    for data in html:
-        t0 = time.perf_counter()
-        content, err = _html_main_safe(bytes(data))
-        out.append(content)
-        err_out.append(err)
-        ms_out.append((time.perf_counter() - t0) * 1000.0)
-    return pd.DataFrame({"content": out, "error": err_out, "ms": ms_out})
-
-
-def _is_empty(html: Column) -> Column:
-    return html.isNull() | (F.octet_length(html) == 0)
-
-
 def _is_pdf_magic(html: Column) -> Column:
     return F.substring(html, 1, 5) == F.lit(b"%PDF-")
-
-
-# bytes.lstrip()'s whitespace set — the Python routers (fused UDF,
-# fixtures oracle) lstrip raw BYTES, which never strips U+00A0, so the
-# Catalyst sniff must not either (WS_A includes \xa0 and would diverge
-# on a latin-1 NBSP-leading payload)
-_WS_SNIFF = " \t\n\r\x0b\f"
-
-
-def _is_html_magic(html: Column) -> Column:
-    prefix = F.decode(F.substring(html, 1, _SNIFF_WINDOW), "ISO-8859-1")
-    return F.substring(F.regexp_replace(prefix, f"^[{_WS_SNIFF}]+", ""), 1, 1) == "<"
-
-
-def sniff_route(html: Column, text: Column, threshold: int = 250) -> Column:
-    """P3 routing ladder, pure Catalyst. Order is frozen spec:
-    text-layer fast path → empty guard → %PDF- magic → '<' within a
-    32-byte lstripped window → error."""
-    return (
-        F.when(text_layer_sufficient(text, threshold), ROUTE_TEXT)
-        .when(_is_empty(html), ROUTE_ERROR)
-        .when(_is_pdf_magic(html), ROUTE_PDF)
-        .when(_is_html_magic(html), ROUTE_HTML)
-        .otherwise(ROUTE_ERROR)
-    )
-
-
-def _assemble_pdf_doc(r: Column) -> Column:
-    """Ordered page array → normalized doc text, shuffle-free (A5)."""
-    pages_norm = F.transform(r["pages"], lambda p: normalize_extracted(p))
-    return normalize_extracted(F.array_join(pages_norm, "\n\n"))
-
-
-def extract_documents(
-    pages_df: DataFrame,
-    threshold: int = 250,
-    pdf_password: bytes | str = b"",
-    ocr_scanned: bool = False,
-) -> DataFrame:
-    """The headline operator: pages table → (url, extracted_text, error,
-    route, bytes_in, extract_ms).
-
-    Branch-filtered sub-frames + ``unionByName`` so each UDF only sees
-    its own rows (SURVEY §4.1: the reference's cost-based routing).
-    The branch predicates are spelled out (not ``route == x`` over the
-    when-ladder) so Catalyst prunes ``html`` entirely from the
-    text-layer branch's parquet scan — verified via ReadSchema in
-    tests/test_plans.py.
-    """
-    suff = text_layer_sufficient(F.col("text"), threshold)
-    empty = _is_empty(F.col("html"))
-    pdfm = _is_pdf_magic(F.col("html"))
-    htmlm = _is_html_magic(F.col("html"))
-    routed = pages_df
-    bytes_in = F.coalesce(F.octet_length("html"), F.lit(0)).alias("bytes_in")
-
-    text_b = routed.filter(suff).select(
-        "url",
-        normalize_extracted(F.col("text")).alias("extracted_text"),
-        F.lit(None).cast("string").alias("error"),
-        F.lit(ROUTE_TEXT).alias("route"),
-        F.lit(0).alias("bytes_in"),  # html never read on the fast path
-        F.lit(0.0).alias("extract_ms"),
-    )
-
-    pdf_udf = (
-        pdf_pages_udf
-        if not pdf_password and not ocr_scanned
-        else make_pdf_pages_udf(pdf_password, ocr_scanned)
-    )
-    pdf_b = (
-        routed.filter(~suff & ~empty & pdfm)
-        .withColumn("r", pdf_udf("html"))
-        .select(
-            "url",
-            F.when(F.col("r.error").isNotNull(), F.lit(None).cast("string"))
-            .otherwise(_assemble_pdf_doc(F.col("r")))
-            .alias("extracted_text"),
-            F.when(F.col("r.error").isNotNull(), F.concat(F.lit("pdf:"), F.col("r.error")))
-            .alias("error"),
-            F.lit(ROUTE_PDF).alias("route"),
-            bytes_in,
-            F.col("r.ms").alias("extract_ms"),
-        )
-    )
-
-    html_b = (
-        routed.filter(~suff & ~empty & ~pdfm & htmlm)
-        .withColumn("r", html_main_udf("html"))
-        .select(
-            "url",
-            F.when(F.col("r.error").isNotNull(), F.lit(None).cast("string"))
-            .otherwise(normalize_extracted(F.col("r.content")))
-            .alias("extracted_text"),
-            F.when(F.col("r.error").isNotNull(), F.concat(F.lit("html:"), F.col("r.error")))
-            .alias("error"),
-            F.lit(ROUTE_HTML).alias("route"),
-            bytes_in,
-            F.col("r.ms").alias("extract_ms"),
-        )
-    )
-
-    err_b = routed.filter(~suff & (empty | (~pdfm & ~htmlm))).select(
-        "url",
-        F.lit(None).cast("string").alias("extracted_text"),
-        F.when(empty, "empty_payload").otherwise("unknown_format").alias("error"),
-        F.lit(ROUTE_ERROR).alias("route"),
-        bytes_in,
-        F.lit(0.0).alias("extract_ms"),
-    )
-
-    return text_b.unionByName(pdf_b).unionByName(html_b).unionByName(err_b)
 
 
 # internal page sentinel — guaranteed absent from page text because
@@ -233,7 +97,7 @@ def extract_documents(
 # could otherwise inject it via an octal escape)
 PAGE_SEP = "\x02"
 
-_FUSED_RESULT = T.StructType(
+_PARSE_RESULT = T.StructType(
     [
         T.StructField("raw", T.StringType()),
         T.StructField("error", T.StringType()),
@@ -244,19 +108,15 @@ _FUSED_RESULT = T.StructType(
 
 
 def make_parse_any_udf(password: bytes | str = b"", ocr_scanned: bool = False):
-    """Single-pass routed parse (SURVEY §7.2 decision record: adopted
-    after profiling showed the 4-branch union re-reading the shuffled
-    input 4×). Routing logic is the same frozen spec as ``sniff_route``;
-    PDF pages are joined on PAGE_SEP so normalization can stay Catalyst.
-    ``password`` is threaded to the PDF decryptor (round-5 item 6);
-    ``ocr_scanned`` enables the scanned-page OCR fallback
-    (``core.scanocr``, default OFF = goldens unchanged)."""
-    if ocr_scanned:
-        from pdf_to_text_spark.core.scanocr import ocr_scanned_images as _hook
-    else:
-        _hook = None
+    """Single-pass routed parse (SURVEY §7.2 decision record): one Arrow
+    round trip per row, whatever its route. PDF pages are joined on
+    PAGE_SEP so normalization can stay Catalyst. ``password`` is
+    threaded to the PDF decryptor (round-5 item 6) — wrong or missing
+    passwords stay disclosed error rows; ``ocr_scanned`` enables the
+    scanned-page OCR fallback."""
+    hook = _ocr_hook(ocr_scanned)
 
-    @F.pandas_udf(_FUSED_RESULT)
+    @F.pandas_udf(_PARSE_RESULT)
     def parse_any_udf(html: pd.Series, text: pd.Series) -> pd.DataFrame:
         from pdf_to_text_spark.core.textnorm import text_layer_sufficient as _suff
 
@@ -272,12 +132,12 @@ def make_parse_any_udf(password: bytes | str = b"", ocr_scanned: bool = False):
                     err, route = "empty_payload", ROUTE_ERROR
                 elif data.startswith(b"%PDF-"):
                     route = ROUTE_PDF
-                    pages, perr = extract_pdf_pages_safe(data, password, _hook)
+                    pages, perr = extract_pdf_pages_safe(data, password, hook)
                     if perr is not None:
                         err = f"pdf:{perr}"
                     else:
                         raw = PAGE_SEP.join(pages)
-                elif data[:32].lstrip()[:1] == b"<":
+                elif data[:_SNIFF_WINDOW].lstrip()[:1] == b"<":
                     route = ROUTE_HTML
                     raw, herr = _html_main_safe(data)
                     if herr is not None:
@@ -296,30 +156,25 @@ def make_parse_any_udf(password: bytes | str = b"", ocr_scanned: bool = False):
 parse_any_udf = make_parse_any_udf()
 
 
-def extract_documents_fused(
+def extract_documents(
     pages_df: DataFrame,
-    threshold: int = 250,
     pdf_password: bytes | str = b"",
     ocr_scanned: bool = False,
 ) -> DataFrame:
-    """Fused single-UDF-stage variant of ``extract_documents`` — same
-    output, byte-identical (tests pin equality to the goldens).
+    """The headline operator: pages table → (url, extracted_text, error,
+    route, bytes_in, extract_ms).
 
-    Tradeoff vs the branch-filtered variant: one pass over the shuffled
-    input (4× less shuffle read, 4× fewer tasks) but the ``html`` column
-    is read for every row — on tables where most rows take the
-    text-layer fast path, prefer ``extract_documents`` (column pruning);
-    on parse-heavy crawl tables this one wins. ``threshold`` is fixed at
-    250 here (the frozen spec) — the pure-Python router has it baked in.
+    One scan, one ``ArrowEvalPython`` node (``parse_any_udf``), one
+    Catalyst projection — audited in tests/test_plans.py. The text-layer
+    threshold is the frozen spec's 250, baked into the Python router.
+    ``bytes_in`` is 0 on the text-layer route (its html is never parsed).
     """
-    if threshold != 250:
-        raise ValueError("fused variant pins the frozen-spec threshold (250)")
-    fused_udf = (
+    parse = (
         parse_any_udf
         if not pdf_password and not ocr_scanned
         else make_parse_any_udf(pdf_password, ocr_scanned)
     )
-    parsed = pages_df.withColumn("r", fused_udf("html", "text"))
+    parsed = pages_df.withColumn("r", parse("html", "text"))
     r = F.col("r")
     pages_arr = F.split(r["raw"], PAGE_SEP)
     pdf_doc = normalize_extracted(
@@ -342,18 +197,25 @@ def extract_documents_fused(
     )
 
 
+# former name of ``extract_documents``, kept because the frozen benchmark
+# harness (perfbench/prefixes.py) imports it
+extract_documents_fused = extract_documents
+
+
 def extract_pdf_page_table(
     pages_df: DataFrame, ocr_scanned: bool = False
 ) -> DataFrame:
-    """Per-page table for the PDF branch: (url, page_num, page_text) —
+    """Per-page table for the PDF route: (url, page_num, page_text) —
     the golden_pages contract (analog of the reference's per-page
     ``3_Extracted_Texts/*/page_N.txt`` files). Uses posexplode (M1/O2);
-    empty pages are preserved as empty strings. ``ocr_scanned`` enables
-    the opt-in scanned-page fallback (SPEC v1.2 item 4)."""
-    routed = pages_df.withColumn("route", sniff_route(F.col("html"), F.col("text")))
-    page_udf = pdf_pages_udf if not ocr_scanned else make_pdf_pages_udf(b"", True)
+    empty pages are preserved as empty strings. The UDF returns the page
+    ARRAY rather than a ``PAGE_SEP`` join, which could not tell a
+    zero-page PDF (``[]``) from one empty page (both join to ``""``).
+    ``ocr_scanned`` enables the opt-in scanned-page fallback (SPEC v1.2
+    item 4)."""
+    page_udf = pdf_pages_udf if not ocr_scanned else make_pdf_pages_udf(True)
     return (
-        routed.filter(F.col("route") == ROUTE_PDF)
+        pages_df.filter(~text_layer_sufficient(F.col("text")) & _is_pdf_magic(F.col("html")))
         .withColumn("r", page_udf("html"))
         .filter(F.col("r.error").isNull())
         .select("url", F.posexplode("r.pages").alias("pos", "page_text_raw"))

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_to_text_spark.operators.dedup import minhash_lsh_pairs
-from pdf_to_text_spark.operators.extract import extract_documents_fused
+from pdf_to_text_spark.operators.extract import extract_documents
 from pdf_to_text_spark.operators.textstats import lang_id, quality_score
 
 
@@ -73,7 +73,7 @@ def build_training_corpus(
 
     cache_mark = mark_caches()
     extracted = register_cache(
-        extract_documents_fused(pages)
+        extract_documents(pages)
         .filter(F.col("error").isNull() & (F.length("extracted_text") > 0))
         .select("url", "extracted_text")
     )

@@ -9,9 +9,11 @@
    re-scan cheap; output is keyed by url so re-running is idempotent);
 3. **skew handling**: whale rows (html bytes above ``whale_bytes``) are
    split off and repartitioned one-per-task, small rows get a salted
-   ``repartition(n, bucket, salt)`` — a single 200-page PDF never
+   ``repartition(n, url, salt)`` — a single 200-page PDF never
    serializes a whole task behind it (north rule skew clause);
-4. extraction (operators/extract.py — shuffle-free);
+4. extraction (``operators.extract.extract_documents`` — one UDF pass,
+   shuffle-free), then a repartition of the extracted rows on the
+   output bucket so each bucket is written by one task;
 5. write results parquet partitioned by bucket with dynamic partition
    overwrite (re-runs replace exactly the buckets they recompute);
 6. **lineage**: per-output-partition metrics rows
@@ -23,7 +25,7 @@
    mid-job kill leaves the bucket uncommitted and it is redone whole.
 
 At 100 TB: n_buckets scales to ~#cores×4 of the cluster; everything
-here is per-bucket-parallel with exactly one shuffle (the explicit
+here is per-bucket-parallel with two shuffles (the input and output-bucket
 repartition), no driver-side collect of data rows (only the tiny
 per-bucket/metric aggregates, O(n_buckets)).
 """
@@ -38,9 +40,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_to_text_spark.operators.extract import extract_documents, extract_documents_fused
+from pdf_to_text_spark.operators.extract import extract_documents
 
 DEFAULT_WHALE_BYTES = 1 << 20  # 1 MiB: above this a row is a "whale"
+_SALT_MOD = 8  # salt values per url-hash slot of the input shuffle
 
 
 def bucket_of(url_col, n_buckets: int):
@@ -115,68 +118,21 @@ def _write_metrics(out_dir: str, run_id: str, mrows) -> None:
 def size_aware_repartition(
     df: DataFrame,
     n_partitions: int,
-    bytes_col: str = "html",
     whale_bytes: int = DEFAULT_WHALE_BYTES,
-    salt_mod: int = 8,
 ) -> DataFrame:
     """Salted repartition with whale isolation (SURVEY §7.1 M4).
 
-    Small rows: hash-shuffle on (bucketable key, salt) so many small
-    docs pack evenly. Whales: one row per task via round-robin
-    ``repartition()`` on a whale-only frame — AQE cannot split a
-    single oversized *row*, so we place whales explicitly.
-
-    General-purpose operator for flows without a bucketed write; the
-    production extraction job uses ``bucket_colocated_repartition``
-    instead (same skew guarantees, one shuffle for shuffle+write).
+    Small rows: hash-shuffle on (url, salt) so many small docs pack
+    evenly. Whales (``html`` above ``whale_bytes``): one row per task via
+    round-robin ``repartition()`` on a whale-only frame — AQE cannot
+    split a single oversized *row*, so we place whales explicitly.
     """
-    is_whale = F.octet_length(bytes_col) > F.lit(whale_bytes)
-    salt = F.pmod(F.xxhash64("url", F.lit(0x5A17)), F.lit(salt_mod))
+    is_whale = F.octet_length("html") > F.lit(whale_bytes)
+    salt = F.pmod(F.xxhash64("url", F.lit(0x5A17)), F.lit(_SALT_MOD))
     small = df.filter(~is_whale | is_whale.isNull()).repartition(
         n_partitions, F.col("url"), salt
     )
     whales = df.filter(is_whale).repartition(max(2, n_partitions // 2))
-    return small.unionByName(whales)
-
-
-def bucket_colocated_repartition(
-    df: DataFrame,
-    n_buckets: int,
-    bytes_col: str = "html",
-    whale_bytes: int = DEFAULT_WHALE_BYTES,
-    whale_parallelism: int = 16,
-) -> DataFrame:
-    """ONE shuffle for the whole extraction job.
-
-    Small rows hash-shuffle on the OUTPUT bucket key, so after
-    extraction each task already owns whole buckets and the partitioned
-    write needs no second repartition — one less full-corpus shuffle,
-    which on a real cluster is a full NETWORK pass of the extracted
-    text. Measured single-node tradeoff (115k docs, interleaved A/B):
-    a wash at 16 cores (39.1 s vs 40.6 s) but +23% wall at 4 cores
-    (110 s vs 136 s) — the coarse bucket-granularity tasks pack badly
-    at low parallelism (sub-bucket salting was tried and measured WORSE,
-    139 s, plus 4× the files). Hence ``run_extraction`` defaults to
-    output-side co-location (fastest at every measured level on shared-
-    disk local mode) and exposes this input-side variant via
-    ``colocate="input"`` for network-bound clusters where the saved
-    shuffle pass dominates.
-
-    Skew guarantees are unchanged in kind:
-    - input-order/key skew: bucket = pmod(xxhash64(url), n_buckets) is
-      itself the salt — any adversarial input layout randomizes;
-    - granularity: set n_buckets ≥ 4× cluster cores (the documented
-      sizing rule), so bucket-cost variance amortizes across waves; the
-      shuffle targets 4×n_buckets slots so hash collisions between
-      buckets rarely stack two buckets on one task;
-    - row-size skew (the one AQE cannot fix — a single oversized row):
-      whales are still split onto their own frame, one-per-task.
-    """
-    is_whale = F.octet_length(bytes_col) > F.lit(whale_bytes)
-    small = df.filter(~is_whale | is_whale.isNull()).repartition(
-        n_buckets * 4, F.col("bucket")
-    )
-    whales = df.filter(is_whale).repartition(max(2, whale_parallelism))
     return small.unionByName(whales)
 
 
@@ -189,24 +145,9 @@ def run_extraction(
     n_partitions: int | None = None,
     whale_bytes: int = DEFAULT_WHALE_BYTES,
     resume: bool = True,
-    threshold: int = 250,
-    fused: bool = True,
-    colocate: str = "output",
     ocr_scanned: bool = False,
 ) -> dict:
     """Run the extraction job; returns a small summary dict.
-
-    ``fused=True`` uses the single-UDF-stage operator (one pass over the
-    shuffled input — profiled 4× less shuffle read than the 4-branch
-    union); ``fused=False`` keeps the branch-filtered variant whose
-    text-layer fast path prunes the html column at the scan.
-
-    ``colocate`` picks where the bucket co-location shuffle happens:
-    ``"output"`` (default) = salted input repartition + repartition of
-    the extracted text before the write (fastest measured at every
-    local parallelism level); ``"input"`` = one shuffle total on the
-    bucket key (see ``bucket_colocated_repartition`` — the choice for
-    network-bound clusters). Both emit O(n_buckets) files.
 
     ``ocr_scanned`` enables the opt-in scanned-page OCR fallback
     (SPEC v1.2 item 4; default OFF = frozen-spec output)."""
@@ -226,28 +167,17 @@ def run_extraction(
     if done:
         pages = pages.filter(F.col("bucket").isin(pending))
 
-    # co-location keeps the write at O(n_buckets) files, never
-    # O(n_tasks × n_buckets): the small-file explosion is the classic
-    # 100 TB killer (measured 5× pipeline cost at bench scale without
-    # co-location). Where the co-locating shuffle happens is the
-    # ``colocate`` tradeoff — see the docstring.
-    if colocate == "input":
-        staged = bucket_colocated_repartition(
-            pages, n_buckets, whale_bytes=whale_bytes,
-            whale_parallelism=max(2, n_partitions // 2),
-        )
-    elif colocate == "output":
-        staged = size_aware_repartition(pages, n_partitions, whale_bytes=whale_bytes)
-    else:
-        raise ValueError(f"colocate must be 'input' or 'output', got {colocate!r}")
-
-    extract = extract_documents_fused if fused else extract_documents
-    # re-derive bucket after extraction (a projection — rows never move)
-    result = extract(staged, threshold=threshold, ocr_scanned=ocr_scanned).withColumn(
-        "bucket", bucket_of(F.col("url"), n_buckets)
+    staged = size_aware_repartition(pages, n_partitions, whale_bytes=whale_bytes)
+    # re-derive bucket after extraction (a projection — rows never move),
+    # then co-locate each bucket in one task: the write stays at
+    # O(n_buckets) files, never O(n_tasks × n_buckets) — the small-file
+    # explosion is the classic 100 TB killer (measured 5× pipeline cost
+    # at bench scale without co-location)
+    result = (
+        extract_documents(staged, ocr_scanned=ocr_scanned)
+        .withColumn("bucket", bucket_of(F.col("url"), n_buckets))
+        .repartition(n_buckets, "bucket")
     )
-    if colocate == "output":
-        result = result.repartition(n_buckets, "bucket")
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     out_path = os.path.join(out_dir, "extracted")

@@ -2,7 +2,8 @@
 
 The reference is purely batch; the north rule's resume story is the
 manifest mechanism in plans/pipeline.py. This module adds the
-incremental-crawl capability: the SAME extraction operators run under
+incremental-crawl capability: the batch path's one extraction operator
+(``operators.extract.extract_documents``) runs unchanged under
 ``readStream`` with ``trigger(availableNow=True)`` — checkpointed,
 exactly-once per file, so a recurring crawl drop-off is picked up
 incrementally with zero code divergence from the batch path.

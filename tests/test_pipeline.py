@@ -90,23 +90,15 @@ def test_size_aware_repartition_isolates_whales(spark, pages_df):
     assert df.count() == pages_df.count()
 
 
-def test_colocate_modes_byte_identical(spark, corpus_dir, tmp_path, golden_extracted):
-    """Both co-location strategies must produce identical rows (only the
-    shuffle placement differs) and O(n_buckets) files."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    outs = {}
-    for mode in ("output", "input"):
-        out = str(tmp_path / f"co_{mode}")
-        run_extraction(spark, f"{corpus_dir}/pages.parquet", out, n_buckets=8,
-                       resume=False, colocate=mode)
-        outs[mode] = spark.read.parquet(f"{out}/extracted")
-        nf = sum(1 for r, _, fs in os.walk(f"{out}/extracted")
-                 for x in fs if x.endswith(".parquet"))
-        assert nf <= 8 + 4  # n_buckets + a few whale-task files
-    j = outs["output"].alias("a").join(outs["input"].alias("b"), "url", "full_outer")
+def test_colocate_modes_byte_identical(spark, corpus_dir, golden_extracted, tmp_path):
+    """Output-side bucket co-location keeps the rows byte-identical to
+    the goldens and the write at O(n_buckets) files."""
+    out = str(tmp_path / "co_output")
+    run_extraction(spark, f"{corpus_dir}/pages.parquet", out, n_buckets=8, resume=False)
+    nf = sum(1 for _, _, fs in os.walk(f"{out}/extracted") for x in fs if x.endswith(".parquet"))
+    assert nf <= 8 + 4  # n_buckets + a few whale-task files
+    got = spark.read.parquet(f"{out}/extracted")
+    j = got.alias("a").join(golden_extracted.alias("b"), "url", "full_outer")
     diff = j.filter(
         ~F.col("a.extracted_text").eqNullSafe(F.col("b.extracted_text"))
         | ~F.col("a.error").eqNullSafe(F.col("b.error"))

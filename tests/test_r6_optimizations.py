@@ -5,13 +5,18 @@ rewrite computes the SAME values as the reference path it replaced:
 
 - ``ngram_jaccard_pairs``: numpy postings kernel vs the inverted-index
   self-join (strategy="kernel" vs "join");
-- the PDF content-stream regex scanner vs the reference tokenizer
-  (including bail-to-slow cases);
+- the fused PDF content-stream scanner + interpreter vs the reference
+  tokenizer + interpreter (including bail-to-slow cases, which must be
+  reached in linear time);
 - ``similarity._bucket_norm_projection`` numpy kernel vs the original
   higher-order-expression projection (including null / off-width rows).
 """
 
 from __future__ import annotations
+
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -46,6 +51,10 @@ def test_ngram_jaccard_kernel_matches_join_strategy(spark):
 
 
 def test_tokenizer_fast_matches_slow_on_adversarial_streams():
+    """The fast regex scanner (``_runs_fast``) must read adversarial
+    tokenizer streams exactly as the slow reference tokenizer does;
+    streams outside its grammar must bail and, through
+    ``_runs_from_content``, take the slow path."""
     from pdf_to_text_spark.core import pdfparse as P
 
     cases = [
@@ -61,16 +70,18 @@ def test_tokenizer_fast_matches_slow_on_adversarial_streams():
         b"(empty)()Tj",
     ]
     for c in cases:
-        fast = P._tokenize_fast(c)
-        slow = list(P._tokenize_slow(c))
-        assert fast == slow, f"token mismatch on {c!r}"
+        fast = P._runs_fast(c, None)
+        slow = P._runs_interpret(P._tokenize_slow(c), None)
+        assert fast == slow, f"runs mismatch on {c!r}"
 
-    # bail cases must fall back (via _tokenize) to slow-path behavior
+    # bail cases must fall back (via _runs_from_content) to slow-path behavior
     bail_cases = [b"(a(b)c) Tj", b"(unterminated", b"(trail\\"]
     for c in bail_cases:
         with pytest.raises(P._FastBail):
-            P._tokenize_fast(c)
-        assert P._tokenize(c) == list(P._tokenize_slow(c))
+            P._runs_fast(c, None)
+        assert P._runs_from_content(c, None) == P._runs_interpret(
+            P._tokenize_slow(c), None
+        ), f"bail path mismatch on {c!r}"
 
 
 def test_fused_run_interpreter_matches_reference():
@@ -91,9 +102,45 @@ def test_fused_run_interpreter_matches_reference():
         assert fast == ref, f"runs mismatch on {c!r}"
     # bail case falls through _runs_from_content to the reference path
     nested = b"BT ((nested) parens) Tj ET"
+    with pytest.raises(P._FastBail):
+        P._runs_fast(nested, None)
     assert P._runs_from_content(nested, None) == P._runs_interpret(
         P._tokenize_slow(nested), None
     )
+
+
+@pytest.mark.parametrize(
+    "content_expr",
+    [
+        # a nested paren after 40 plain chars (legal per PDF 32000 §7.3.4.2)
+        'b"BT (" + b"Smith, J. and Jones, K. Proceedings of t" + b" (ed.) x) Tj ET"',
+        # a 500 KB literal string that never closes
+        'b"BT (" + b"Lorem ipsum dolor sit amet " * 18_520',
+    ],
+    ids=["nested_paren_after_40_chars", "unterminated_500kb"],
+)
+def test_content_scanner_is_linear_on_adversarial_strings(content_expr):
+    """The literal-string branch of ``_SCAN_RE`` must fail fast on a
+    string it does not cover, so the stream reaches the reference path;
+    a backtracking branch takes exponential time here. Run in a
+    subprocess because the regex engine does not yield to signals."""
+    code = (
+        "from pdf_to_text_spark.core import pdfparse as P\n"
+        f"c = {content_expr}\n"
+        "assert P._runs_from_content(c, None) == "
+        "P._runs_interpret(P._tokenize_slow(c), None)\n"
+    )
+    try:
+        r = subprocess.run(
+            [sys.executable, "-c", code],
+            cwd=Path(__file__).resolve().parents[1],
+            capture_output=True,
+            text=True,
+            timeout=30,
+        )
+    except subprocess.TimeoutExpired:
+        pytest.fail(f"content-stream scan did not finish in 30 s: {content_expr}")
+    assert r.returncode == 0, r.stderr
 
 
 def test_bucket_norm_kernel_matches_expression_path(spark):

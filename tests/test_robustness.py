@@ -1,8 +1,8 @@
 """Row-level error tolerance + routing-spec consistency (round-2
 hardening): malformed-but-magic-valid payloads must become error ROWS
-(never task failures), identically in the branched operator, the fused
-operator, and the sequential oracle; edge payloads (NBSP prefix, \\x02
-octal injection) must route/extract identically on all three paths."""
+(never task failures), identically in the operator and the sequential
+oracle; edge payloads (NBSP prefix, \\x02 octal injection) must
+route/extract identically on both paths."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from pdf_to_text_spark.core.pdfgen import build_pdf, page_content_stream
 from pdf_to_text_spark.fixtures import oracle_extract
-from pdf_to_text_spark.operators.extract import extract_documents, extract_documents_fused
+from pdf_to_text_spark.operators.extract import extract_documents
 
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -54,43 +54,40 @@ def _by_url(df):
 
 
 def test_malformed_pdfs_become_error_rows(spark, adversarial_df):
-    for extract in (extract_documents, extract_documents_fused):
-        got = _by_url(extract(adversarial_df))
-        assert got["u_dangling"].error == "pdf:dangling contents ref"
-        assert got["u_dangling"].extracted_text is None
-        assert got["u_badop"].error == "pdf:unexpected:IndexError"
-        assert got["u_badop"].route == "pdf"
-        assert got["u_ok"].error is None and "hello world" in got["u_ok"].extracted_text
+    got = _by_url(extract_documents(adversarial_df))
+    assert got["u_dangling"].error == "pdf:dangling contents ref"
+    assert got["u_dangling"].extracted_text is None
+    assert got["u_badop"].error == "pdf:unexpected:IndexError"
+    assert got["u_badop"].route == "pdf"
+    assert got["u_ok"].error is None and "hello world" in got["u_ok"].extracted_text
 
 
 def test_nbsp_prefix_routes_identically(spark, adversarial_df):
-    """bytes.lstrip() (fused UDF + oracle) never strips U+00A0; the
-    Catalyst sniff must agree → unknown_format on every path."""
-    for extract in (extract_documents, extract_documents_fused):
-        got = _by_url(extract(adversarial_df))
-        assert got["u_nbsp"].route == "error"
-        assert got["u_nbsp"].error == "unknown_format"
+    """bytes.lstrip() (UDF router + oracle) never strips U+00A0 →
+    unknown_format on both paths."""
+    got = _by_url(extract_documents(adversarial_df))
+    assert got["u_nbsp"].route == "error"
+    assert got["u_nbsp"].error == "unknown_format"
 
 
 def test_all_paths_agree_with_oracle(spark, adversarial_df):
+    got = _by_url(extract_documents(adversarial_df))
     for url, _, html, text, _ in _adversarial_rows():
         o_text, o_err, o_route, _ = oracle_extract(html, text)
-        for extract in (extract_documents, extract_documents_fused):
-            row = _by_url(extract(adversarial_df))[url]
-            assert (row.extracted_text, row.error, row.route) == (o_text, o_err, o_route), url
+        row = got[url]
+        assert (row.extracted_text, row.error, row.route) == (o_text, o_err, o_route), url
 
 
 def test_page_sep_injection_stays_byte_identical(spark):
-    """A PDF string containing a raw \\x02 (the fused operator's page
+    """A PDF string containing a raw \\x02 (the operator's page
     sentinel) must not split a page: frozen spec strips \\x02 from page
-    text, so branched == fused == oracle, with the sentinel gone."""
+    text, so operator == oracle, with the sentinel gone."""
     pdf = build_pdf([page_content_stream(["ab\x02cd", "second line"])])
     df = spark.createDataFrame([("u_sep", None, pdf, None, "en")], PAGES_SCHEMA)
     o_text, o_err, o_route, _ = oracle_extract(pdf, None)
     assert o_err is None and "\x02" not in o_text and "abcd" in o_text
-    for extract in (extract_documents, extract_documents_fused):
-        row = _by_url(extract(df))["u_sep"]
-        assert (row.extracted_text, row.error, row.route) == (o_text, o_err, o_route)
+    row = _by_url(extract_documents(df))["u_sep"]
+    assert (row.extracted_text, row.error, row.route) == (o_text, o_err, o_route)
 
 
 def test_minhash_bands_must_divide(spark):

@@ -178,18 +178,14 @@ def test_ocr_skips_to_first_readable_image():
 
 
 def test_spark_ocr_scanned_matches_oracle(spark, tmp_path_factory):
-    """``extract_documents(ocr_scanned=True)`` (and the fused variant)
-    match the OCR-enabled sequential oracle byte-identically on a
-    scanned-heavy corpus — and the DEFAULT path on the same corpus
+    """``extract_documents(ocr_scanned=True)`` matches the OCR-enabled
+    sequential oracle byte-identically on a scanned-heavy corpus — and the DEFAULT path on the same corpus
     still matches the OCR-off goldens (the flag is opt-in; the frozen
     spec is unchanged)."""
     from pyspark.sql import functions as F
 
     from pdf_to_text_spark.fixtures import make_corpus, oracle_extract, write_corpus
-    from pdf_to_text_spark.operators.extract import (
-        extract_documents,
-        extract_documents_fused,
-    )
+    from pdf_to_text_spark.operators.extract import extract_documents
 
     classes = [
         ("pdf_scanned", 6), ("pdf_digital", 3), ("html_article", 2), ("broken", 1),
@@ -207,7 +203,7 @@ def test_spark_ocr_scanned_matches_oracle(spark, tmp_path_factory):
         | ~F.col("g.error").eqNullSafe(F.col("o.error"))
     ).count() == 0
 
-    # 2. OCR ON == the OCR-enabled oracle, for both operator variants
+    # 2. OCR ON == the OCR-enabled oracle
     rows = make_corpus(48, seed=11, classes=classes)
     exp = [
         (r["url"],) + oracle_extract(r["html"], r["text"], ocr=True)[:3]
@@ -216,17 +212,15 @@ def test_spark_ocr_scanned_matches_oracle(spark, tmp_path_factory):
     oracle_on = spark.createDataFrame(
         exp, "url string, extracted_text string, error string, route string"
     )
-    for variant in (
-        extract_documents(pages, ocr_scanned=True),
-        extract_documents_fused(pages, ocr_scanned=True),
-    ):
-        got = variant.select("url", "extracted_text", "error", "route")
-        j = got.alias("g").join(oracle_on.alias("o"), "url", "full_outer")
-        assert j.filter(
-            ~F.col("g.extracted_text").eqNullSafe(F.col("o.extracted_text"))
-            | ~F.col("g.error").eqNullSafe(F.col("o.error"))
-            | ~F.col("g.route").eqNullSafe(F.col("o.route"))
-        ).count() == 0
+    got = extract_documents(pages, ocr_scanned=True).select(
+        "url", "extracted_text", "error", "route"
+    )
+    j = got.alias("g").join(oracle_on.alias("o"), "url", "full_outer")
+    assert j.filter(
+        ~F.col("g.extracted_text").eqNullSafe(F.col("o.extracted_text"))
+        | ~F.col("g.error").eqNullSafe(F.col("o.error"))
+        | ~F.col("g.route").eqNullSafe(F.col("o.route"))
+    ).count() == 0
 
     # 3. the flag actually recovers text: scanned docs are empty under
     # OCR-off goldens but non-empty under OCR
