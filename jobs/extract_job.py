@@ -19,6 +19,7 @@ import json
 from pyspark.sql import SparkSession
 
 from pdf_to_text_spark.plans.pipeline import run_extraction
+from pdf_to_text_spark.session import ARROW_BATCH_CONF
 
 
 def main() -> None:
@@ -37,7 +38,7 @@ def main() -> None:
     spark = (
         SparkSession.builder.appName("pdf_to_text_spark.extract")
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
+        .config(map=ARROW_BATCH_CONF)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")

@@ -12,13 +12,18 @@
    ``repartition(n, url, salt)`` — a single 200-page PDF never
    serializes a whole task behind it (north rule skew clause);
 4. extraction (``operators.extract.extract_documents`` — one UDF pass,
-   shuffle-free), then a repartition of the extracted rows on the
-   output bucket so each bucket is written by one task;
+   shuffle-free), then a hash repartition of the extracted rows on the
+   output bucket into ``min(n_buckets, n_partitions)`` tasks: each bucket
+   lands in exactly one task (one file per bucket), and the write runs
+   one task per slot rather than one per bucket;
 5. write results parquet partitioned by bucket with dynamic partition
    overwrite (re-runs replace exactly the buckets they recompute);
 6. **lineage**: per-output-partition metrics rows
    ``(run_id, partition_id, doc_count, bytes_in, extract_ms)`` appended
-   to ``out_dir/metrics`` (north-star metrics table);
+   to ``out_dir/metrics`` (north-star metrics table), aggregated from a
+   read-back of the written output with the plan's own schema (no footer
+   opened for inference) and a bucket-directory listing job of at most
+   ``n_partitions`` tasks;
 7. **manifest**: after the write action succeeds, one JSON line per
    completed bucket in ``out_dir/_manifest/`` — checkpointed
    partition-completion (north rule), written only after commit so a
@@ -169,26 +174,34 @@ def run_extraction(
 
     staged = size_aware_repartition(pages, n_partitions, whale_bytes=whale_bytes)
     # re-derive bucket after extraction (a projection — rows never move),
-    # then co-locate each bucket in one task: the write stays at
-    # O(n_buckets) files, never O(n_tasks × n_buckets) — the small-file
-    # explosion is the classic 100 TB killer (measured 5× pipeline cost
-    # at bench scale without co-location)
+    # then hash-partition on it: every bucket lands in exactly one task,
+    # so the write stays at one file per bucket, never O(n_tasks ×
+    # n_buckets) — the small-file explosion is the classic 100 TB killer.
+    # One task per slot, not per bucket: at ~1 ms of work per row, the
+    # fixed cost of n_buckets mostly-tiny write tasks (empty ones on
+    # resume) outweighs the rows they write; a cluster with more slots
+    # than buckets still gets one task per bucket.
     result = (
         extract_documents(staged, ocr_scanned=ocr_scanned)
         .withColumn("bucket", bucket_of(F.col("url"), n_buckets))
-        .repartition(n_buckets, "bucket")
+        .repartition(min(n_buckets, n_partitions), "bucket")
     )
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    # listing the bucket directories back (more than Spark's threshold of
+    # 32) launches a job of one task per directory; bound it to the slots
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.parallelism", n_partitions)
     out_path = os.path.join(out_dir, "extracted")
     result.write.partitionBy("bucket").mode("overwrite").parquet(out_path)
 
     # lineage from the WRITTEN output (single extraction pass, no
     # persist): a columnar read of 3 small columns — the text and html
-    # bytes are never re-read (column pruning). partition_id == bucket:
-    # the bucket IS the physical output partition.
+    # bytes are never re-read (column pruning), and the plan's own schema
+    # means no footer is opened to infer one. partition_id == bucket: the
+    # bucket IS the physical output partition.
     mrows = (
-        spark.read.parquet(out_path)
+        spark.read.schema(result.schema)
+        .parquet(out_path)
         .filter(F.col("bucket").isin(pending))
         .groupBy(F.col("bucket").alias("partition_id"))
         .agg(

@@ -11,6 +11,17 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Arrow batch sizing for the pandas UDFs, shared by ``get_spark`` and the
+# production job. Large binary rows (PDF whales): batches are bounded by
+# BYTES so a batch of multi-MB documents fits executor memory at 100 TB
+# scale. A small record cap would bound nothing for true whales (N × any
+# size) while taxing every small-row UDF with per-batch overhead; a batch
+# closes when either limit hits.
+ARROW_BATCH_CONF = {
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    "spark.sql.execution.arrow.maxBytesPerBatch": str(32 * 1024 * 1024),
+}
+
 
 def _default_heap() -> str:
     """1.5 GB per core, capped at half of physical RAM, floor 8 GB.
@@ -54,14 +65,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # large binary rows (PDF whales): bound Arrow batches by BYTES
-        # (r6) so a batch of multi-MB documents fits executor memory at
-        # 100 TB scale. The old 256-record cap bounded nothing for true
-        # whales (256 × any size) while taxing every small-row pandas
-        # UDF with ~200 batches per task of per-batch overhead; the
-        # byte cap handles both (a batch closes when either limit hits).
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(32 * 1024 * 1024))
+        .config(map=ARROW_BATCH_CONF)
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # scan-parallelism floor = core count (r6): the bench tables are
         # single files a hair over one 128 MB split, so TPC-H-shaped

@@ -13,6 +13,16 @@ from pdf_to_text_spark.plans.pipeline import (
 )
 
 
+def _part_files(out) -> dict[str, list[str]]:
+    """Part files of the written output, per ``bucket=`` directory."""
+    root = os.path.join(out, "extracted")
+    return {
+        d: [f for f in os.listdir(os.path.join(root, d)) if f.endswith(".parquet")]
+        for d in os.listdir(root)
+        if d.startswith("bucket=")
+    }
+
+
 def _read_sorted(spark, out):
     return (
         spark.read.parquet(os.path.join(out, "extracted"))
@@ -36,6 +46,11 @@ def test_full_run_matches_golden(spark, corpus_dir, golden_extracted, tmp_path):
     assert set(m.columns) == {"run_id", "partition_id", "doc_count", "bytes_in", "extract_ms"}
     assert m.agg(F.sum("doc_count")).collect()[0][0] == golden_extracted.count()
     assert m.agg(F.sum("extract_ms")).collect()[0][0] >= 0
+    # ... and reconciles per bucket with the rows written there
+    written = got.groupBy("bucket").agg(F.count("*").alias("n"), F.sum("bytes_in").alias("b"))
+    assert {r["partition_id"]: (r["doc_count"], r["bytes_in"]) for r in m.collect()} == {
+        r["bucket"]: (r["n"], r["b"]) for r in written.collect()
+    }
     # manifest committed all buckets
     assert committed_buckets(out) == set(range(16))
 
@@ -67,6 +82,11 @@ def test_resume_equals_fresh(spark, corpus_dir, tmp_path):
 
     s2 = run_extraction(spark, f"{corpus_dir}/pages.parquet", resumed_out, n_buckets=8)
     assert s2["buckets_done"] == 3 and s2["buckets_run"] == 5
+    # the resumed run's lineage lists exactly the buckets it recomputed
+    m2 = spark.read.parquet(os.path.join(resumed_out, "metrics")).filter(
+        F.col("run_id") == s2["run_id"]
+    )
+    assert sorted(r["partition_id"] for r in m2.collect()) == [3, 4, 5, 6, 7]
 
     assert _read_sorted(spark, resumed_out) == _read_sorted(spark, fresh_out)
 
@@ -92,11 +112,12 @@ def test_size_aware_repartition_isolates_whales(spark, pages_df):
 
 def test_colocate_modes_byte_identical(spark, corpus_dir, golden_extracted, tmp_path):
     """Output-side bucket co-location keeps the rows byte-identical to
-    the goldens and the write at O(n_buckets) files."""
+    the goldens and the write at one file per bucket."""
     out = str(tmp_path / "co_output")
     run_extraction(spark, f"{corpus_dir}/pages.parquet", out, n_buckets=8, resume=False)
-    nf = sum(1 for _, _, fs in os.walk(f"{out}/extracted") for x in fs if x.endswith(".parquet"))
-    assert nf <= 8 + 4  # n_buckets + a few whale-task files
+    # whales ride the same output shuffle: exactly one file per bucket
+    files = _part_files(out)
+    assert files and all(len(fs) == 1 for fs in files.values()), files
     got = spark.read.parquet(f"{out}/extracted")
     j = got.alias("a").join(golden_extracted.alias("b"), "url", "full_outer")
     diff = j.filter(
@@ -104,3 +125,37 @@ def test_colocate_modes_byte_identical(spark, corpus_dir, golden_extracted, tmp_
         | ~F.col("a.error").eqNullSafe(F.col("b.error"))
     )
     assert diff.count() == 0
+
+
+def test_write_tail_sized_to_slots(spark, corpus_dir, tmp_path):
+    """No stage of a pass runs a task per bucket: the output shuffle has
+    one task per slot and the bucket-directory listing job is bounded
+    by the slots too; each bucket is still exactly one file."""
+    n_buckets, n_partitions = 64, 4
+    out = str(tmp_path / "out")
+    sc = spark.sparkContext
+    group = "test_write_tail_sized_to_slots"
+    sc.setJobGroup(group, "one run_extraction pass")
+    try:
+        run_extraction(
+            spark,
+            f"{corpus_dir}/pages.parquet",
+            out,
+            n_buckets=n_buckets,
+            n_partitions=n_partitions,
+            resume=False,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    tasks = {
+        sid: tracker.getStageInfo(sid).numTasks
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+        if tracker.getStageInfo(sid) is not None
+    }
+    assert tasks and max(tasks.values()) < n_buckets, tasks
+    files = _part_files(out)
+    assert len(files) > 32  # enough directories for Spark to list them in a job
+    assert all(len(fs) == 1 and fs[0].startswith("part-") for fs in files.values()), files
