@@ -856,24 +856,21 @@ def _unescape(raw: bytes) -> bytes:
     return bytes(out)
 
 
-_NAME_RE = re.compile(rb"/[^\s()<>\[\]/]*")
-_NUM_RE = re.compile(rb"[-+]?\d*\.?\d+")
-_OP_RE = re.compile(rb"[A-Za-z'\"*]+")
 _WS_BYTES = frozenset(b" \t\r\n\f\x00")
-_WS_RUN_RE = re.compile(rb"[ \t\r\n\f\x00]+")
-_STR_SPECIAL_RE = re.compile(rb"[\\()]")
+# inside a literal string only escape pairs and parens move the depth
+_STR_DELIM_RE = re.compile(rb"\\.|[()]", re.S)
+_INLINE_ID_RE = re.compile(rb"\bID[\r\n ]")
 
 
-class _FastBail(Exception):
-    """Internal: the fast scanner met syntax it does not cover — retry
-    the stream with the reference tokenizer."""
-
-
-# one alternation, ordered EXACTLY like _tokenize_slow's branch ladder
-# so the fused scanner segments a stream as the reference tokenizer does.
-# Group 2 is possessive so a nested-paren or unterminated string fails in
-# linear time and bails; a backtracking group would try 2^n splits of
-# the run before the paren (ReDoS)
+# one alternation, ordered EXACTLY like the branch ladder of the
+# reference tokenizer (tests/content_reference.py) so the scanner
+# segments a stream as the reference does. Group 2 is possessive so a
+# nested-paren or unterminated string fails in linear time; a
+# backtracking group would try 2^n splits of the run before the paren
+# (ReDoS). Group 10 takes any byte the others do not read, so finditer
+# never searches ahead for the next token (from each ``(`` of
+# ``(\(\(…`` that search re-read the rest of the stream: quadratic);
+# ``_off_grammar_token`` reads what starts there
 _SCAN_RE = re.compile(
     rb"([ \t\r\n\f\x00]+)"  # 1 whitespace run
     rb"|(\((?:[^\\()]++|\\.)*+\))"  # 2 literal string, no nested parens
@@ -883,7 +880,8 @@ _SCAN_RE = re.compile(
     rb"|(\])"  # 6
     rb"|(/[^\s()<>\[\]/]*)"  # 7 name
     rb"|([-+]?\d*\.?\d+)"  # 8 number
-    rb"|([A-Za-z'\"*]+)",  # 9 operator
+    rb"|([A-Za-z'\"*]+)"  # 9 operator
+    rb"|(.)",  # 10 any other byte
     re.S,
 )
 
@@ -906,13 +904,48 @@ def _skip_inline_dict(content: bytes, j: int) -> int:
     return j
 
 
-def _skip_inline_image(content: bytes, end_of_bi: int) -> int:
-    """§8.9.7 inline image: skip ``<pairs> ID <binary> EI`` starting
-    after the BI operator; returns the position after EI. The binary
-    payload is NOT token syntax — without this skip it would tokenize
-    as garbage (or fake text). Data starts one whitespace byte after
-    ID; EI must be delimiter-bounded on both sides."""
-    idm = re.compile(rb"\bID[\r\n ]").search(content, end_of_bi)
+def _string_end(content: bytes, i: int) -> tuple[int, bool]:
+    """Literal string (§7.3.4.2) opening with the ``(`` at ``i``:
+    returns the position after its balancing ``)`` and True, or
+    ``(len(content), False)`` when it never closes. Nested parens count
+    depth; a backslash escapes the byte after it."""
+    depth = 1
+    for m in _STR_DELIM_RE.finditer(content, i + 1):
+        c = content[m.start()]
+        if c == 0x28:
+            depth += 1
+        elif c == 0x29:
+            depth -= 1
+            if not depth:
+                return m.end(), True
+    return len(content), False
+
+
+def _off_grammar_token(content: bytes, pos: int) -> tuple[bytes, int]:
+    """Read what starts at ``pos``, a byte only the catch-all group 10
+    of ``_SCAN_RE`` matched. A literal string with nested parens, or one
+    that never closes (its body then runs to EOF), returns its
+    unescaped bytes and the position after it; a bad or unterminated
+    hex string or any other byte raises."""
+    c = content[pos]
+    if c == 0x28:
+        end, closed = _string_end(content, pos)
+        return _unescape(content[pos + 1 : end - 1 if closed else end]), end
+    if c == 0x3C:  # not "<<" and not a valid hex string
+        if content.find(b">", pos + 1) == -1:
+            raise PdfError("unterminated hex string")
+        raise PdfError("bad hex string")
+    raise PdfError(f"bad content token at {pos}")
+
+
+def _inline_image_span(content: bytes, after_bi: int) -> tuple[int, int, int]:
+    """§8.9.7 inline image ``<pairs> ID <binary> EI`` after the BI
+    operator ending at ``after_bi``: returns the start of ID, the start
+    of the binary data and the start of EI. The binary payload is NOT
+    token syntax — without this skip it would tokenize as garbage (or
+    fake text). Data starts one whitespace byte after ID; EI must be
+    delimiter-bounded on both sides."""
+    idm = _INLINE_ID_RE.search(content, after_bi)
     if idm is None:
         raise PdfError("inline image missing ID")
     j = idm.end()
@@ -926,130 +959,8 @@ def _skip_inline_image(content: bytes, end_of_bi: int) -> int:
             before and before[0] in _WS_BYTES
             and (after == b"" or after[0] in _WS_BYTES)
         ):
-            break
+            return idm.start(), idm.end(), j
         j += 2
-    return j + 2
-
-
-def _tokenize_slow(content: bytes):
-    """Yield ('str', raw bytes) | ('num', f) | ('name', b) | ('op', b) | ('arr', list).
-
-    String tokens stay RAW BYTES here — the byte→text decode depends on
-    the current font's ToUnicode CMap, which only the interpreter
-    (``_runs_from_content``) knows at show time.
-
-    Positional matching throughout (no ``content[i:]`` slices) — the
-    tokenizer must stay O(n) on multi-MB whale content streams.
-
-    r6 hot-loop rework (the tokenizer was 45% of the whole extraction
-    pipeline's CPU): whitespace runs skip via one regex match instead
-    of one loop iteration per byte, and literal strings take a slice
-    fast path when the next special byte is the closing paren (the
-    overwhelmingly common case) instead of a per-character append loop.
-    Token semantics are byte-identical; the per-character path remains
-    for strings with escapes/nesting."""
-    i, n = 0, len(content)
-    arr_stack: list[list] = []
-
-    def emit(tok):
-        if arr_stack:
-            arr_stack[-1].append(tok)
-            return None
-        return tok
-
-    while i < n:
-        if content[i] in _WS_BYTES:
-            i = _WS_RUN_RE.match(content, i).end()
-            continue
-        c = content[i : i + 1]
-        if c == b"(":
-            m = _STR_SPECIAL_RE.search(content, i + 1)
-            if m is None:
-                # unterminated plain string: everything to EOF, as the
-                # per-char loop would produce
-                tok = emit(("str", content[i + 1 :]))
-                if tok:
-                    yield tok
-                i = n
-                continue
-            if content[m.start()] == 0x29:  # plain string, no escapes
-                tok = emit(("str", content[i + 1 : m.start()]))
-                if tok:
-                    yield tok
-                i = m.start() + 1
-                continue
-            depth, j, buf = 1, i + 1, bytearray()
-            while j < n and depth:
-                ch = content[j]
-                if ch == 0x5C:
-                    buf += content[j : j + 2]
-                    j += 2
-                    continue
-                if ch == 0x28:
-                    depth += 1
-                elif ch == 0x29:
-                    depth -= 1
-                    if depth == 0:
-                        j += 1
-                        break
-                buf.append(ch)
-                j += 1
-            tok = emit(("str", _unescape(bytes(buf))))
-            if tok:
-                yield tok
-            i = j
-        elif c == b"<":
-            if content[i + 1 : i + 2] == b"<":  # inline dict (e.g. BDC
-                # property list): skip the balanced << ... >> — no text
-                i = _skip_inline_dict(content, i + 2)
-            else:  # hex string <48656C6C6F>; whitespace legal, odd pads 0
-                j = content.find(b">", i + 1)
-                if j == -1:
-                    raise PdfError("unterminated hex string")
-                hx = bytes(
-                    b for b in content[i + 1 : j] if b not in _WS_BYTES
-                )
-                if not re.fullmatch(rb"[0-9A-Fa-f]*", hx):
-                    raise PdfError("bad hex string")
-                if len(hx) % 2:
-                    hx += b"0"
-                tok = emit(("str", bytes.fromhex(hx.decode("ascii"))))
-                if tok:
-                    yield tok
-                i = j + 1
-        elif c == b"[":
-            arr_stack.append([])
-            i += 1
-        elif c == b"]":
-            items = arr_stack.pop()
-            tok = emit(("arr", items))
-            if tok:
-                yield tok
-            i += 1
-        elif c == b"/":
-            m = _NAME_RE.match(content, i)
-            tok = emit(("name", m.group(0)))
-            if tok:
-                yield tok
-            i = m.end()
-        else:
-            m = _NUM_RE.match(content, i)
-            if m and m.group(0):
-                tok = emit(("num", float(m.group(0))))
-                if tok:
-                    yield tok
-                i = m.end()
-            else:
-                m = _OP_RE.match(content, i)
-                if not m:
-                    raise PdfError(f"bad content token at {i}")
-                if m.group(0) == b"BI":
-                    i = _skip_inline_image(content, m.end())
-                    continue
-                tok = emit(("op", m.group(0)))
-                if tok:
-                    yield tok
-                i = m.end()
 
 
 # --------------------------------------------------------------- fonts/CMaps
@@ -1373,22 +1284,13 @@ def _runs_from_content(
 ) -> list[tuple[float, float, str]]:
     """Interpret text operators → (y, x, text) runs.
 
-    r6: the common grammar runs through ``_runs_fast`` — the regex
-    scanner and the operator interpreter fused into one loop (no token
-    list, no second dispatch pass). Streams outside the scanner's
-    grammar fall back to the reference tokenizer + this interpreter,
-    so behavior (including error classes) is identical by
-    construction."""
-    try:
-        return _runs_fast(content, fonts)
-    except _FastBail:
-        return _runs_interpret(_tokenize_slow(content), fonts)
-
-
-def _runs_fast(
-    content: bytes,
-    fonts: dict[bytes, tuple[int, dict[int, str]] | None] | None,
-) -> list[tuple[float, float, str]]:
+    One loop fuses the regex scanner (``_SCAN_RE``, one C-level match
+    per token) with the text-operator interpreter: no token list, no
+    second dispatch pass. Operands go on ``stack`` and array items on
+    ``arr_stack`` as ``(kind, value)`` pairs; an operator consumes the
+    stack. A byte only the catch-all branch reads (a nested or
+    unterminated string, a malformed token) goes through
+    ``_off_grammar_token`` and the scan resumes after what it read."""
     runs: list[tuple[float, float, str]] = []
     x = y = 0.0
     leading = 0.0
@@ -1398,10 +1300,9 @@ def _runs_fast(
     pos, n = 0, len(content)
     scan = _SCAN_RE.finditer
     while pos < n:
-        restart = False
+        # every byte matches a branch, so the matches tile the stream;
+        # a break means a skip moved pos and the scan restarts there
         for m in scan(content, pos):
-            if m.start() != pos:
-                raise _FastBail()
             g = m.lastindex
             pos = m.end()
             if g == 1:  # whitespace
@@ -1431,13 +1332,15 @@ def _runs_fast(
                 elif g == 9:
                     opb = m.group(9)
                     if opb == b"BI":
-                        pos = _skip_inline_image(content, pos)
-                        restart = True
+                        pos = _inline_image_span(content, pos)[2] + 2
                         break
                     arr_stack[-1].append(("op", opb))
-                else:  # g == 3 inline dict
+                elif g == 3:  # inline dict
                     pos = _skip_inline_dict(content, pos)
-                    restart = True
+                    break
+                else:  # g == 10
+                    tok, pos = _off_grammar_token(content, m.start())
+                    arr_stack[-1].append(("str", tok))
                     break
                 continue
             if g == 8:
@@ -1471,8 +1374,7 @@ def _runs_fast(
                     if len(stack) >= 2 and stack[-2][0] == "name":
                         cur_font = (fonts or {}).get(stack[-2][1])
                 elif val == b"BI":
-                    pos = _skip_inline_image(content, pos)
-                    restart = True
+                    pos = _inline_image_span(content, pos)[2] + 2
                     break
                 # ET and anything else: no text-position effect
                 stack.clear()
@@ -1487,23 +1389,20 @@ def _runs_fast(
                 arr_stack.append([])
                 continue
             if g == 6:
-                raise _FastBail()  # ']' with no open array
+                raise IndexError("']' with no open array")
             if g == 4:
                 hx = bytes(b for b in m.group(4)[1:-1] if b not in _WS_BYTES)
                 if len(hx) % 2:
                     hx += b"0"
                 stack.append(("str", bytes.fromhex(hx.decode("ascii"))))
                 continue
-            # g == 3 inline dict
-            pos = _skip_inline_dict(content, pos)
-            restart = True
+            if g == 3:  # inline dict
+                pos = _skip_inline_dict(content, pos)
+                break
+            # g == 10
+            tok, pos = _off_grammar_token(content, m.start())
+            stack.append(("str", tok))
             break
-        else:
-            if pos != n:
-                raise _FastBail()
-            break
-        if restart:
-            continue
     return runs
 
 
@@ -1515,57 +1414,6 @@ def _tj_text(items: list, cur_font) -> str:
         elif kind == "num" and val <= TJ_SPACE_KERN:
             parts.append(" ")
     return "".join(parts)
-
-
-def _runs_interpret(
-    tokens,
-    fonts: dict[bytes, tuple[int, dict[int, str]] | None] | None = None,
-) -> list[tuple[float, float, str]]:
-    """Reference interpreter over a token stream (fallback path)."""
-    runs: list[tuple[float, float, str]] = []
-    x = y = 0.0
-    leading = 0.0
-    stack: list = []
-    cur_font: tuple[int, dict[int, str]] | None = None
-
-    def tj_text(items: list) -> str:
-        return _tj_text(items, cur_font)
-
-    for tok in tokens:
-        kind, val = tok
-        if kind != "op":
-            stack.append(tok)
-            continue
-        if val == b"BT":
-            x = y = 0.0
-        elif val == b"Td":
-            x += stack[-2][1]
-            y += stack[-1][1]
-        elif val == b"TD":
-            leading = -stack[-1][1]
-            x += stack[-2][1]
-            y += stack[-1][1]
-        elif val == b"Tm":
-            x, y = stack[-2][1], stack[-1][1]
-        elif val == b"TL":
-            leading = stack[-1][1]
-        elif val == b"T*":
-            y -= leading
-        elif val == b"Tj":
-            runs.append((y, x, _decode_shown(stack[-1][1], cur_font)))
-        elif val == b"'":
-            y -= leading
-            runs.append((y, x, _decode_shown(stack[-1][1], cur_font)))
-        elif val == b"TJ":
-            runs.append((y, x, tj_text(stack[-1][1])))
-        elif val == b"Tf":
-            # operands: font name, size — size has no effect in our
-            # subset; the name selects the CMap for later show ops
-            if len(stack) >= 2 and stack[-2][0] == "name":
-                cur_font = (fonts or {}).get(stack[-2][1])
-        # ET and anything else: no text-position effect in our subset
-        stack.clear()
-    return runs
 
 
 def _runs_to_text(runs: list[tuple[float, float, str]]) -> str:
@@ -1937,18 +1785,7 @@ def _inline_images(content: bytes) -> list[dict]:
     while i < n:
         c = content[i]
         if c == 0x28:  # ( string — skip with escapes + nesting
-            depth, j = 1, i + 1
-            while j < n and depth:
-                ch = content[j]
-                if ch == 0x5C:
-                    j += 2
-                    continue
-                if ch == 0x28:
-                    depth += 1
-                elif ch == 0x29:
-                    depth -= 1
-                j += 1
-            i = j
+            i = _string_end(content, i)[0]
             continue
         if c == 0x3C:  # < : dict or hex string — skip
             if content[i + 1 : i + 2] == b"<":
@@ -1974,22 +1811,10 @@ def _inline_images(content: bytes) -> list[dict]:
         ):
             i += 1
             continue
-        idm = re.compile(rb"\bID[\r\n ]").search(content, i + 2)
-        if idm is None:
-            raise PdfError("inline image missing ID")
-        head = content[i + 2 : idm.start()]
-        j = idm.end()
-        while True:
-            j = content.find(b"EI", j)
-            if j == -1:
-                raise PdfError("inline image missing EI")
-            before = content[j - 1 : j]
-            after = content[j + 2 : j + 3]
-            if before and before[0] in _WS_BYTES and (after == b"" or after[0] in _WS_BYTES):
-                break
-            j += 2
-        raw = content[idm.end() : j]
-        i = j + 2
+        id_start, data_start, ei = _inline_image_span(content, i + 2)
+        head = content[i + 2 : id_start]
+        raw = content[data_start:ei]
+        i = ei + 2
         meta = {
             k: int(r.search(head).group(1))
             for k, r in _BI_INT_RE.items()

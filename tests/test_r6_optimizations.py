@@ -6,8 +6,9 @@ rewrite computes the SAME values as the reference path it replaced:
 - ``ngram_jaccard_pairs``: numpy postings kernel vs the inverted-index
   self-join (strategy="kernel" vs "join");
 - the fused PDF content-stream scanner + interpreter vs the reference
-  tokenizer + interpreter (including bail-to-slow cases, which must be
-  reached in linear time);
+  tokenizer + interpreter kept in ``tests/content_reference.py``
+  (including nested, unterminated and malformed strings, which the
+  scanner must read in linear time);
 - ``similarity._bucket_norm_projection`` numpy kernel vs the original
   higher-order-expression projection (including null / off-width rows).
 """
@@ -22,6 +23,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import *  # noqa: F401,F403 — spark fixture
+from tests.content_reference import mismatches
 
 
 def test_ngram_jaccard_kernel_matches_join_strategy(spark):
@@ -51,12 +53,10 @@ def test_ngram_jaccard_kernel_matches_join_strategy(spark):
 
 
 def test_tokenizer_fast_matches_slow_on_adversarial_streams():
-    """The fast regex scanner (``_runs_fast``) must read adversarial
-    tokenizer streams exactly as the slow reference tokenizer does;
-    streams outside its grammar must bail and, through
-    ``_runs_from_content``, take the slow path."""
-    from pdf_to_text_spark.core import pdfparse as P
-
+    """The scanner (``_runs_from_content``) must read adversarial
+    tokenizer streams exactly as the reference tokenizer does: the same
+    runs, the same ``PdfError`` message or the same exception class,
+    also on streams outside the scanner's token branches."""
     cases = [
         b"BT /F1 12 Tf 72 720 Td (hello world) Tj T* (second) Tj ET",
         b"[ (a) -300 (b) ] TJ",
@@ -68,20 +68,22 @@ def test_tokenizer_fast_matches_slow_on_adversarial_streams():
         b"",
         b"   \t\r\n  ",
         b"(empty)()Tj",
+        b"BI /W 1 /H 1 ID \x00) EI (after) Tj [ BI /W 1 ID ( EI (q) ] TJ",
+        # only the catch-all branch reads these: nested, unterminated,
+        # escaped at EOF, bad or unterminated hex, unbalanced brackets,
+        # stray bytes
+        b"(a(b)c) Tj",
+        b"(c(d\\)e)f) Tj (nest (esc\\() ok) Tj",
+        b"(unterminated",
+        b"(trail\\",
+        b"[ (a(b)) -300 (c) ] TJ",
+        b"] Tj",
+        b"<4G> Tj",
+        b"<48",
+        b"{ }",
+        b")",
     ]
-    for c in cases:
-        fast = P._runs_fast(c, None)
-        slow = P._runs_interpret(P._tokenize_slow(c), None)
-        assert fast == slow, f"runs mismatch on {c!r}"
-
-    # bail cases must fall back (via _runs_from_content) to slow-path behavior
-    bail_cases = [b"(a(b)c) Tj", b"(unterminated", b"(trail\\"]
-    for c in bail_cases:
-        with pytest.raises(P._FastBail):
-            P._runs_fast(c, None)
-        assert P._runs_from_content(c, None) == P._runs_interpret(
-            P._tokenize_slow(c), None
-        ), f"bail path mismatch on {c!r}"
+    assert mismatches((c, None) for c in cases) == []
 
 
 def test_fused_run_interpreter_matches_reference():
@@ -95,18 +97,10 @@ def test_fused_run_interpreter_matches_reference():
         b"<< /MCID 2 >> BDC BT (t) Tj ET EMC",
         b"BT 5 7 TD (td) Tj T* (below) Tj ET",
         b"",
+        b"BT ((nested) parens) Tj ET",
     ]
-    for c in cases:
-        fast = P._runs_fast(c, None)
-        ref = P._runs_interpret(P._tokenize_slow(c), None)
-        assert fast == ref, f"runs mismatch on {c!r}"
-    # bail case falls through _runs_from_content to the reference path
-    nested = b"BT ((nested) parens) Tj ET"
-    with pytest.raises(P._FastBail):
-        P._runs_fast(nested, None)
-    assert P._runs_from_content(nested, None) == P._runs_interpret(
-        P._tokenize_slow(nested), None
-    )
+    assert mismatches((c, None) for c in cases) == []
+    assert P._runs_from_content(cases[-1]) == [(0.0, 0.0, "(nested) parens")]
 
 
 @pytest.mark.parametrize(
@@ -116,19 +110,27 @@ def test_fused_run_interpreter_matches_reference():
         'b"BT (" + b"Smith, J. and Jones, K. Proceedings of t" + b" (ed.) x) Tj ET"',
         # a 500 KB literal string that never closes
         'b"BT (" + b"Lorem ipsum dolor sit amet " * 18_520',
+        # 200,000 nested opens that never close
+        'b"BT " + b"(" * 200_000',
+        # 200 KB of escaped parens in a string that never closes
+        'b"BT " + b"(\\\\" * 100_000',
     ],
-    ids=["nested_paren_after_40_chars", "unterminated_500kb"],
+    ids=[
+        "nested_paren_after_40_chars",
+        "unterminated_500kb",
+        "unclosed_nesting_200k",
+        "escaped_parens_200kb",
+    ],
 )
 def test_content_scanner_is_linear_on_adversarial_strings(content_expr):
-    """The literal-string branch of ``_SCAN_RE`` must fail fast on a
-    string it does not cover, so the stream reaches the reference path;
-    a backtracking branch takes exponential time here. Run in a
-    subprocess because the regex engine does not yield to signals."""
+    """The scanner must read a string no literal-string branch of
+    ``_SCAN_RE`` covers in linear time: a backtracking branch takes
+    exponential time on the nested paren, and a finditer search ahead
+    from every ``(`` takes quadratic time on the escaped parens. Run in
+    a subprocess because the regex engine does not yield to signals."""
     code = (
-        "from pdf_to_text_spark.core import pdfparse as P\n"
-        f"c = {content_expr}\n"
-        "assert P._runs_from_content(c, None) == "
-        "P._runs_interpret(P._tokenize_slow(c), None)\n"
+        "from tests.content_reference import mismatches\n"
+        f"assert mismatches([({content_expr}, None)]) == []\n"
     )
     try:
         r = subprocess.run(
