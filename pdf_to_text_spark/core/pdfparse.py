@@ -1585,10 +1585,7 @@ def extract_pdf_pages(
             texts.append("")
             continue
         fonts = _page_fonts(objs, page)
-        # frozen spec: \x02 (the engine's internal page sentinel) is
-        # stripped from page text — a PDF string could inject it via an
-        # octal escape and would otherwise split one page into two in
-        # the doc-level operator's PAGE_SEP join/split round-trip
+        # frozen spec (SPEC item 2): \x02 is stripped from page text
         text = _runs_to_text(_runs_from_content(content, fonts)).replace("\x02", "")
         if page_ocr is not None and not text:
             imgs = _page_painted_images(objs, page, content)

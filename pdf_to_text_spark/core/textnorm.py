@@ -28,7 +28,10 @@ RE_HCOLLAPSE = f"{CLS_H}+"               # runs of horizontal ws → one space
 RE_LINETRIM = " *\n *"                   # strip around newlines
 RE_BLANKS = "\n{3,}"                     # ≥2 blank lines → one (F3)
 RE_LSTRIP = f"^{CLS_A}+"
-RE_RSTRIP = f"{CLS_A}+$"
+# a true end-of-input anchor in both engines: Java's ``$`` also matches
+# before a final U+0085/U+2028/U+2029, so Spark would strip whitespace
+# that Python keeps
+RE_RSTRIP = f"{CLS_A}+(?![\\s\\S])"
 
 _steps = [
     (re.compile(RE_DEHYPH), ""),

@@ -205,8 +205,8 @@ def minhash_lsh_pairs(
 
 def _jaccard_count_kernel(n_slices: int, threshold: float, id_type):
     """Build the mapInArrow postings kernel for ``ngram_jaccard_pairs``
-    (strategy="kernel"). Each task receives ONE row: (slice, docs) where
-    ``docs`` is the full corpus as (id, sorted-int shingle ids). It
+    (strategy="kernel"). Each row is (slice, docs) where ``docs`` is
+    the full corpus as (id, sorted-int shingle ids). It
     builds CSR postings with numpy and counts pair intersections via
     ``bincount`` — the 127M pair-instances that cost the join path a
     114M-key hash aggregate become vectorized integer adds (guide §4.2:
@@ -229,8 +229,11 @@ def _jaccard_count_kernel(n_slices: int, threshold: float, id_type):
                     continue
                 ids = docs.field("i").to_numpy(zero_copy_only=False)
                 sl = docs.field("s")
+                # offsets are absolute indices into the unsliced child
+                # .values returns: cut this row's span out of it
                 off = np.asarray(sl.offsets, dtype=np.int64)
-                vals = sl.values.to_numpy(zero_copy_only=False).astype(np.int64)
+                vals = sl.values.slice(off[0], off[-1] - off[0])
+                vals = vals.to_numpy(zero_copy_only=False).astype(np.int64)
                 lens = off[1:] - off[:-1]
                 order = np.argsort(ids, kind="stable")  # id order == pair order
                 inv = np.empty(n, np.int64)

@@ -11,10 +11,11 @@ Spark-first re-expression of the reference's per-file pipeline
   (``core.pdfparse`` / ``core.htmlextract``), so UDF output is
   byte-identical to the sequential oracle by construction;
 - all normalization is the Catalyst chain (``functions.text``);
-- the doc-level result needs NO shuffle: PDF pages come back joined on
-  ``PAGE_SEP`` and reassembly is ``array_join(transform(split(...)))``
-  — at 100 TB the extraction stage is embarrassingly parallel (scan →
-  project → write), which is what makes ≥0.8 scaling efficiency
+- a PDF comes back as its page ARRAY, normalized once per page; the
+  document text (a join of that array) and the per-page table (a
+  ``posexplode`` of it) read the same expression, and neither needs a
+  shuffle — at 100 TB the extraction stage is embarrassingly parallel
+  (scan → project → write), which is what makes ≥0.8 scaling efficiency
   attainable.
 
 Per-row ``extract_ms`` is measured inside the UDF batch loop and feeds
@@ -32,18 +33,16 @@ from pyspark.sql import types as T
 
 from pdf_to_text_spark.core.htmlextract import extract_main_content_bytes
 from pdf_to_text_spark.core.pdfparse import extract_pdf_pages_safe
-from pdf_to_text_spark.functions.text import normalize_extracted, text_layer_sufficient
+from pdf_to_text_spark.core.textnorm import RE_BLANKS
+from pdf_to_text_spark.functions.text import (
+    normalize_extracted,
+    strip_outer,
+    text_layer_sufficient,
+)
 
 ROUTE_TEXT, ROUTE_PDF, ROUTE_HTML, ROUTE_ERROR = "text_layer", "pdf", "html", "error"
 
 _SNIFF_WINDOW = 32  # bytes; frozen spec, mirrored in fixtures.oracle_extract
-
-_PDF_RESULT = T.StructType(
-    [
-        T.StructField("pages", T.ArrayType(T.StringType())),
-        T.StructField("error", T.StringType()),
-    ]
-)
 
 
 def _ocr_hook(ocr_scanned: bool):
@@ -66,40 +65,14 @@ def _html_main_safe(data: bytes) -> tuple[str | None, str | None]:
         return None, f"unexpected:{type(e).__name__}"
 
 
-def make_pdf_pages_udf(ocr_scanned: bool = False):
-    """binary → (ordered page texts, error) for the per-page table.
-    SURVEY M1/M2/M5: deterministic text-object decode replaces
-    rasterize+OCR. Errors (including unexpected exceptions on
-    malformed-but-magic-valid input) become rows, never task failures."""
-    hook = _ocr_hook(ocr_scanned)
-
-    @F.pandas_udf(_PDF_RESULT)
-    def pdf_pages_udf(html: pd.Series) -> pd.DataFrame:
-        pages_out, err_out = [], []
-        for data in html:
-            pages, err = extract_pdf_pages_safe(bytes(data), b"", hook)
-            pages_out.append(pages)
-            err_out.append(err)
-        return pd.DataFrame({"pages": pages_out, "error": err_out})
-
-    return pdf_pages_udf
-
-
-pdf_pages_udf = make_pdf_pages_udf()
-
-
 def _is_pdf_magic(html: Column) -> Column:
     return F.substring(html, 1, 5) == F.lit(b"%PDF-")
 
 
-# internal page sentinel — guaranteed absent from page text because
-# extract_pdf_pages strips \x02 as part of the frozen spec (a PDF string
-# could otherwise inject it via an octal escape)
-PAGE_SEP = "\x02"
-
 _PARSE_RESULT = T.StructType(
     [
         T.StructField("raw", T.StringType()),
+        T.StructField("pages", T.ArrayType(T.StringType())),
         T.StructField("error", T.StringType()),
         T.StructField("route", T.StringType()),
         T.StructField("ms", T.DoubleType()),
@@ -107,12 +80,12 @@ _PARSE_RESULT = T.StructType(
 )
 
 
-def make_parse_any_udf(password: bytes | str = b"", ocr_scanned: bool = False):
+def make_parse_any_udf(ocr_scanned: bool = False):
     """Single-pass routed parse (SURVEY §7.2 decision record): one Arrow
-    round trip per row, whatever its route. PDF pages are joined on
-    PAGE_SEP so normalization can stay Catalyst. ``password`` is
-    threaded to the PDF decryptor (round-5 item 6) — wrong or missing
-    passwords stay disclosed error rows; ``ocr_scanned`` enables the
+    round trip per row, whatever its route. A PDF row returns its page
+    texts as the ``pages`` array and leaves ``raw`` null; every other
+    row returns its text in ``raw``. An error row carries neither.
+    Normalization stays Catalyst. ``ocr_scanned`` enables the
     scanned-page OCR fallback."""
     hook = _ocr_hook(ocr_scanned)
 
@@ -120,10 +93,10 @@ def make_parse_any_udf(password: bytes | str = b"", ocr_scanned: bool = False):
     def parse_any_udf(html: pd.Series, text: pd.Series) -> pd.DataFrame:
         from pdf_to_text_spark.core.textnorm import text_layer_sufficient as _suff
 
-        raws, errs, routes, mss = [], [], [], []
+        raws, pages_out, errs, routes, mss = [], [], [], [], []
         for h, t in zip(html, text):
             t0 = time.perf_counter()
-            raw = err = None
+            raw = pages = err = None
             if _suff(t):
                 raw, route = t, ROUTE_TEXT
             else:
@@ -132,11 +105,9 @@ def make_parse_any_udf(password: bytes | str = b"", ocr_scanned: bool = False):
                     err, route = "empty_payload", ROUTE_ERROR
                 elif data.startswith(b"%PDF-"):
                     route = ROUTE_PDF
-                    pages, perr = extract_pdf_pages_safe(data, password, hook)
+                    pages, perr = extract_pdf_pages_safe(data, page_ocr=hook)
                     if perr is not None:
                         err = f"pdf:{perr}"
-                    else:
-                        raw = PAGE_SEP.join(pages)
                 elif data[:_SNIFF_WINDOW].lstrip()[:1] == b"<":
                     route = ROUTE_HTML
                     raw, herr = _html_main_safe(data)
@@ -145,10 +116,13 @@ def make_parse_any_udf(password: bytes | str = b"", ocr_scanned: bool = False):
                 else:
                     err, route = "unknown_format", ROUTE_ERROR
             raws.append(raw)
+            pages_out.append(pages)
             errs.append(err)
             routes.append(route)
             mss.append((time.perf_counter() - t0) * 1000.0)
-        return pd.DataFrame({"raw": raws, "error": errs, "route": routes, "ms": mss})
+        return pd.DataFrame(
+            {"raw": raws, "pages": pages_out, "error": errs, "route": routes, "ms": mss}
+        )
 
     return parse_any_udf
 
@@ -156,11 +130,33 @@ def make_parse_any_udf(password: bytes | str = b"", ocr_scanned: bool = False):
 parse_any_udf = make_parse_any_udf()
 
 
-def extract_documents(
-    pages_df: DataFrame,
-    pdf_password: bytes | str = b"",
-    ocr_scanned: bool = False,
-) -> DataFrame:
+def _parse(ocr_scanned: bool):
+    return parse_any_udf if not ocr_scanned else make_parse_any_udf(ocr_scanned=True)
+
+
+def _normalized_pages(pages: Column) -> Column:
+    """The PDF route's page array, each page normalized once; the doc
+    text and the page table both read it."""
+    return F.transform(pages, normalize_extracted)
+
+
+def _pages_to_doc(pages: Column) -> Column:
+    """Doc text from normalized pages, equal to the frozen spec's
+    ``normalize_extracted("\\n\\n".join(pages))`` in 4 passes, not 6.
+
+    A normalized page has no outer whitespace, no ``-[H]*\\n``, no
+    ``\\n{3,}`` and no horizontal whitespace but single spaces, so on
+    the join the doc-level chain acts only at the seams: de-hyphenation
+    takes a page-final ``-`` with the whole ``\\n`` run after it (empty
+    pages included), the blank collapse shortens the runs empty pages
+    leave, and the outer strip takes leading and trailing runs; the
+    horizontal collapse and line trim find nothing. A seeded property
+    test pins the equality (tests/test_textnorm_parity.py)."""
+    doc = F.regexp_replace(F.array_join(pages, "\n\n"), "-\n+", "")
+    return strip_outer(F.regexp_replace(doc, RE_BLANKS, "\n\n"))
+
+
+def extract_documents(pages_df: DataFrame, ocr_scanned: bool = False) -> DataFrame:
     """The headline operator: pages table → (url, extracted_text, error,
     route, bytes_in, extract_ms).
 
@@ -168,23 +164,13 @@ def extract_documents(
     Catalyst projection — audited in tests/test_plans.py. The text-layer
     threshold is the frozen spec's 250, baked into the Python router.
     ``bytes_in`` is 0 on the text-layer route (its html is never parsed).
+    Error rows carry neither ``raw`` nor ``pages``, so their text is null.
     """
-    parse = (
-        parse_any_udf
-        if not pdf_password and not ocr_scanned
-        else make_parse_any_udf(pdf_password, ocr_scanned)
-    )
-    parsed = pages_df.withColumn("r", parse("html", "text"))
+    parsed = pages_df.withColumn("r", _parse(ocr_scanned)("html", "text"))
     r = F.col("r")
-    pages_arr = F.split(r["raw"], PAGE_SEP)
-    pdf_doc = normalize_extracted(
-        F.array_join(F.transform(pages_arr, lambda p: normalize_extracted(p)), "\n\n")
-    )
-    extracted = (
-        F.when(r["error"].isNotNull() | (r["route"] == ROUTE_ERROR), F.lit(None).cast("string"))
-        .when(r["route"] == ROUTE_PDF, pdf_doc)
-        .otherwise(normalize_extracted(r["raw"]))
-    )
+    extracted = F.when(
+        r["route"] == ROUTE_PDF, _pages_to_doc(_normalized_pages(r["pages"]))
+    ).otherwise(normalize_extracted(r["raw"]))
     return parsed.select(
         "url",
         extracted.alias("extracted_text"),
@@ -207,23 +193,20 @@ def extract_pdf_page_table(
 ) -> DataFrame:
     """Per-page table for the PDF route: (url, page_num, page_text) —
     the golden_pages contract (analog of the reference's per-page
-    ``3_Extracted_Texts/*/page_N.txt`` files). Uses posexplode (M1/O2);
-    empty pages are preserved as empty strings. The UDF returns the page
-    ARRAY rather than a ``PAGE_SEP`` join, which could not tell a
-    zero-page PDF (``[]``) from one empty page (both join to ``""``).
-    ``ocr_scanned`` enables the opt-in scanned-page fallback (SPEC v1.2
-    item 4)."""
-    page_udf = pdf_pages_udf if not ocr_scanned else make_pdf_pages_udf(True)
+    ``3_Extracted_Texts/*/page_N.txt`` files). Two Catalyst pre-filters
+    keep the rows the router sends to the PDF route; the same
+    ``parse_any_udf`` parses them, and a posexplode (M1/O2) of the same
+    normalized page array as the doc text gives one row per page. Empty
+    pages are preserved as empty strings; a zero-page PDF gives no row,
+    and neither does an error row, whose page array is null. (A filter
+    on the UDF's ``error`` would be pushed below the projection and run
+    the UDF a second time.) ``ocr_scanned`` enables the opt-in
+    scanned-page fallback (SPEC v1.2 item 4)."""
     return (
         pages_df.filter(~text_layer_sufficient(F.col("text")) & _is_pdf_magic(F.col("html")))
-        .withColumn("r", page_udf("html"))
-        .filter(F.col("r.error").isNull())
-        .select("url", F.posexplode("r.pages").alias("pos", "page_text_raw"))
-        .select(
-            "url",
-            (F.col("pos") + 1).alias("page_num"),
-            normalize_extracted(F.col("page_text_raw")).alias("page_text"),
-        )
+        .withColumn("r", _parse(ocr_scanned)("html", "text"))
+        .select("url", F.posexplode(_normalized_pages(F.col("r.pages"))).alias("pos", "page_text"))
+        .select("url", (F.col("pos") + 1).alias("page_num"), "page_text")
     )
 
 

@@ -8,9 +8,11 @@
    a previous run and are filtered out (partition pruning makes the
    re-scan cheap; output is keyed by url so re-running is idempotent);
 3. **skew handling**: whale rows (html bytes above ``whale_bytes``) are
-   split off and repartitioned one-per-task, small rows get a salted
-   ``repartition(n, url, salt)`` — a single 200-page PDF never
-   serializes a whole task behind it (north rule skew clause);
+   split off and round-robined into ``max(2, n_partitions // 2)`` tasks
+   of their own (one whale per task while whales are fewer than that),
+   small rows get a salted ``repartition(n, url, salt)`` — a single
+   200-page PDF never serializes a task of small rows behind it (north
+   rule skew clause);
 4. extraction (``operators.extract.extract_documents`` — one UDF pass,
    shuffle-free), then a hash repartition of the extracted rows on the
    output bucket into ``min(n_buckets, n_partitions)`` tasks: each bucket
@@ -128,9 +130,10 @@ def size_aware_repartition(
     """Salted repartition with whale isolation (SURVEY §7.1 M4).
 
     Small rows: hash-shuffle on (url, salt) so many small docs pack
-    evenly. Whales (``html`` above ``whale_bytes``): one row per task via
-    round-robin ``repartition()`` on a whale-only frame — AQE cannot
-    split a single oversized *row*, so we place whales explicitly.
+    evenly. Whales (``html`` above ``whale_bytes``): a round-robin
+    ``repartition(max(2, n_partitions // 2))`` on a whale-only frame, so
+    up to that many whales get a task each — AQE cannot split a single
+    oversized *row*, so we place whales explicitly.
     """
     is_whale = F.octet_length("html") > F.lit(whale_bytes)
     salt = F.pmod(F.xxhash64("url", F.lit(0x5A17)), F.lit(_SALT_MOD))

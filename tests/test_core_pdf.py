@@ -1029,6 +1029,29 @@ def test_inline_image_extraction():
     assert extract_pdf_pages(pdf) == ["\n".join(LINES)]
 
 
+def test_inline_image_exact_span_and_payload():
+    """The span of ``BI .. ID <data> EI`` is exact when the payload holds
+    an ``EI`` without delimiters: ID starts where it is written, data one
+    byte after it, EI at the delimited one; the extracted payload is the
+    data bytes with nothing of EI in them."""
+    from pdf_to_text_spark.core.pdfparse import _inline_image_span, extract_pdf_images
+
+    payload = b"aEIbc"  # 5x1 8-bpc gray, an undelimited EI inside
+    img = b"BI /W 5 /H 1 /BPC 8 /CS /G ID " + payload + b" EI\n"
+    content = page_content_stream(LINES) + b"\n" + img
+    id_start = content.index(b"ID ")
+    data_start = id_start + 3
+    ei = data_start + len(payload) + 1
+    assert content[ei : ei + 2] == b"EI"
+    bi_end = content.index(b"BI /W") + 2
+    assert _inline_image_span(content, bi_end) == (id_start, data_start, ei)
+    pdf = build_pdf([content], flate=True)
+    (im,) = extract_pdf_images(pdf)
+    assert (im["obj"], im["width"], im["height"], im["codec"]) == (0, 5, 1, "raw")
+    assert im["data"] == payload
+    assert extract_pdf_pages(pdf) == ["\n".join(LINES)]
+
+
 def test_inline_scan_ignores_bi_in_text():
     """A page whose TEXT contains the standalone word 'BI' must not
     trip the inline-image scan in either the tokenizer or the image

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from pdf_to_text_spark.operators import dedup as D
@@ -18,6 +19,49 @@ DOCS = [
 
 def _docs(spark):
     return spark.createDataFrame(DOCS, "doc_id long, text string")
+
+
+# ------------------------------------------- q33 jaccard kernel (pyarrow only)
+
+_KERNEL_DOCS = pa.list_(pa.struct([("i", pa.int64()), ("s", pa.list_(pa.int64()))]))
+
+
+def _kernel_corpus(base: int) -> list[dict]:
+    return [
+        {"i": base * 10 + j, "s": sorted({(j + t) % 7 + base for t in range(4)})}
+        for j in range(5)
+    ]
+
+
+def _kernel_batch(rows: list[tuple[int, list[dict]]]) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays(
+        [pa.array([r[0] for r in rows], pa.int32()), pa.array([r[1] for r in rows], _KERNEL_DOCS)],
+        names=["slice", "docs"],
+    )
+
+
+def _kernel_pairs(batch: pa.RecordBatch) -> list[tuple]:
+    kernel = D._jaccard_count_kernel(2, 0.3, pa.int64())
+    return [tuple(r.values()) for out in kernel([batch]) for r in out.to_pylist()]
+
+
+_KERNEL_ROWS = [(0, _kernel_corpus(0)), (1, _kernel_corpus(3))]
+
+
+def test_jaccard_kernel_multi_row_batch():
+    """A batch of two (slice, corpus) rows gives the pairs of each row's
+    own 1-row batch: list offsets index the whole child array, so every
+    row but the first sits at a nonzero offset into it."""
+    singles = [_kernel_pairs(_kernel_batch([row])) for row in _KERNEL_ROWS]
+    assert all(singles)
+    assert _kernel_pairs(_kernel_batch(_KERNEL_ROWS)) == singles[0] + singles[1]
+
+
+def test_jaccard_kernel_sliced_batch():
+    """A 1-row slice of a larger batch gives that row's own pairs."""
+    batch = _kernel_batch(_KERNEL_ROWS)
+    for k, row in enumerate(_KERNEL_ROWS):
+        assert _kernel_pairs(batch.slice(k, 1)) == _kernel_pairs(_kernel_batch([row]))
 
 
 def test_exact_dedup(spark):

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from pdf_to_text_spark.operators.extract import extract_documents
+from pdf_to_text_spark.operators.extract import extract_documents, extract_pdf_page_table
 
 
 def _plan(df) -> str:
@@ -25,6 +25,17 @@ def test_extraction_is_shuffle_free(pages_df):
     assert "Exchange" not in plan
     assert plan.count("FileScan parquet") == 1, plan
     assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def test_page_table_is_one_udf_pass(pages_df):
+    """The per-page table reuses the doc operator's parse UDF: one scan,
+    one ``ArrowEvalPython``, no shuffle — a second PDF-only UDF cannot
+    come back unnoticed."""
+    plan = _plan(extract_pdf_page_table(pages_df))
+    assert "Exchange" not in plan
+    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "parse_any_udf" in plan, plan
 
 
 def test_filter_pushdown_reaches_scan(pages_df):

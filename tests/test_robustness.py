@@ -79,9 +79,9 @@ def test_all_paths_agree_with_oracle(spark, adversarial_df):
 
 
 def test_page_sep_injection_stays_byte_identical(spark):
-    """A PDF string containing a raw \\x02 (the operator's page
-    sentinel) must not split a page: frozen spec strips \\x02 from page
-    text, so operator == oracle, with the sentinel gone."""
+    """A PDF string containing a raw \\x02 stays one page: the frozen
+    spec strips \\x02 from page text, so operator == oracle, with the
+    byte gone."""
     pdf = build_pdf([page_content_stream(["ab\x02cd", "second line"])])
     df = spark.createDataFrame([("u_sep", None, pdf, None, "en")], PAGES_SCHEMA)
     o_text, o_err, o_route, _ = oracle_extract(pdf, None)
