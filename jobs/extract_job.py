@@ -5,10 +5,11 @@
         jobs/extract_job.py --in <pages.parquet path> --out <out_dir> \
         [--buckets 4096] [--partitions N] [--no-resume] [--ocr-scanned]
 
-Reads the Common-Crawl-style pages table, runs the routed extraction
-pipeline with salted/whale-aware partitioning, writes bucket-partitioned
-results + lineage metrics + completion manifests; re-running after a
-failure resumes from the last committed bucket.
+Reads the Common-Crawl-style pages table once, places its rows with one
+whale-aware input exchange (small rows and whale rows in separate
+tasks), runs the routed extraction, writes bucket-partitioned results +
+lineage metrics + completion manifests; re-running after a failure
+resumes from the last committed bucket.
 """
 
 from __future__ import annotations

@@ -220,12 +220,14 @@ def _bucket_norm_projection(
                 for j in range(p):
                     s += X[:, j] * X[:, j]
                 nrm = np.sqrt(s)
-                VN = X / nrm[:, None]
-                vn_rows = VN.tolist()
-                for k, r in enumerate(rows):
+                nz = nrm != 0
+                vn_rows = (X[nz] / nrm[nz, None]).tolist()
+                for k, r in enumerate(rows[nz]):
                     vn_out[r] = vn_rows[k]
             # odd rows: null vec → vn None; off-width → bucket 0 (the
-            # zip_with null-padding poisons every dot), vn from own width
+            # zip_with null-padding poisons every dot), vn from own width.
+            # Zero-norm → vn None on both paths: NULL scores fail the
+            # threshold, where NaN (ordered above every number) passed.
             for r in np.flatnonzero(~ok):
                 if nulls[r]:
                     continue
@@ -233,8 +235,9 @@ def _bucket_norm_projection(
                 s = 0.0
                 for x in row:
                     s += x * x
-                nrm = s**0.5
-                vn_out[r] = [x / nrm for x in row]
+                if s != 0:
+                    nrm = s**0.5
+                    vn_out[r] = [x / nrm for x in row]
             yield pa.RecordBatch.from_arrays(
                 [
                     ids,
@@ -344,9 +347,10 @@ def pairwise_topk_per_label(
 
     v = F.col(vec_col).cast("array<double>")
     norm = df.select(F.col(label_col).alias("label"), F.col(id_col).alias("_id"), v.alias("_v"))
+    # drop zero-norm rows before the divide (ANSI x / 0 raises), as centrality does
     norm = norm.withColumn(
         "_n", F.sqrt(F.aggregate(F.col("_v"), F.lit(0.0), lambda acc, x: acc + x * x))
-    ).select(
+    ).filter(~F.col("_n").eqNullSafe(0.0)).select(
         "label", "_id", F.transform(F.col("_v"), lambda x: x / F.col("_n")).alias("_vn")
     )
     a = norm.select("label", F.col("_id").alias("id_a"), F.col("_vn").alias("va"))

@@ -7,12 +7,12 @@
 2. **resume**: buckets listed in ``out_dir/_manifest`` are complete from
    a previous run and are filtered out (partition pruning makes the
    re-scan cheap; output is keyed by url so re-running is idempotent);
-3. **skew handling**: whale rows (html bytes above ``whale_bytes``) are
-   split off and round-robined into ``max(2, n_partitions // 2)`` tasks
-   of their own (one whale per task while whales are fewer than that),
-   small rows get a salted ``repartition(n, url, salt)`` — a single
-   200-page PDF never serializes a task of small rows behind it (north
-   rule skew clause);
+3. **skew handling**: one ``repartitionById`` places every row by a url
+   hash seeded apart from the bucket's: small rows into ``n_partitions``
+   tasks, whale rows (html bytes above ``WHALE_BYTES``) into
+   ``max(2, n_partitions // 2)`` tasks after them — a single 200-page PDF
+   never serializes a task of small rows behind it (north rule skew
+   clause), and the input is scanned once;
 4. extraction (``operators.extract.extract_documents`` — one UDF pass,
    shuffle-free), then a hash repartition of the extracted rows on the
    output bucket into ``min(n_buckets, n_partitions)`` tasks: each bucket
@@ -32,9 +32,9 @@
    mid-job kill leaves the bucket uncommitted and it is redone whole.
 
 At 100 TB: n_buckets scales to ~#cores×4 of the cluster; everything
-here is per-bucket-parallel with two shuffles (the input and output-bucket
-repartition), no driver-side collect of data rows (only the tiny
-per-bucket/metric aggregates, O(n_buckets)).
+here is per-bucket-parallel with one scan and two shuffles (the input
+placement and the output-bucket repartition), no driver-side collect of
+data rows (only the tiny per-bucket/metric aggregates, O(n_buckets)).
 """
 
 from __future__ import annotations
@@ -49,8 +49,7 @@ from pyspark.sql import functions as F
 
 from pdf_to_text_spark.operators.extract import extract_documents
 
-DEFAULT_WHALE_BYTES = 1 << 20  # 1 MiB: above this a row is a "whale"
-_SALT_MOD = 8  # salt values per url-hash slot of the input shuffle
+WHALE_BYTES = 1 << 20  # 1 MiB: above this a row is a "whale"
 
 
 def bucket_of(url_col, n_buckets: int):
@@ -122,26 +121,21 @@ def _write_metrics(out_dir: str, run_id: str, mrows) -> None:
     pq.write_table(table, os.path.join(mdir, f"metrics-{run_id}.parquet"))
 
 
-def size_aware_repartition(
-    df: DataFrame,
-    n_partitions: int,
-    whale_bytes: int = DEFAULT_WHALE_BYTES,
-) -> DataFrame:
-    """Salted repartition with whale isolation (SURVEY §7.1 M4).
+def size_aware_repartition(df: DataFrame, n_partitions: int) -> DataFrame:
+    """Whale-aware input placement in one exchange (SURVEY §7.1 M4).
 
-    Small rows: hash-shuffle on (url, salt) so many small docs pack
-    evenly. Whales (``html`` above ``whale_bytes``): a round-robin
-    ``repartition(max(2, n_partitions // 2))`` on a whale-only frame, so
-    up to that many whales get a task each — AQE cannot split a single
-    oversized *row*, so we place whales explicitly.
+    Small rows (``html`` up to ``WHALE_BYTES``, or null) hash into
+    partitions ``[0, n)``, whales into the ``max(2, n // 2)`` after them:
+    AQE cannot split one oversized *row*, so a whale never shares a task
+    with small rows. The hash is not ``bucket_of``'s, else a resume with
+    only odd buckets pending would leave the even partitions empty.
     """
-    is_whale = F.octet_length("html") > F.lit(whale_bytes)
-    salt = F.pmod(F.xxhash64("url", F.lit(0x5A17)), F.lit(_SALT_MOD))
-    small = df.filter(~is_whale | is_whale.isNull()).repartition(
-        n_partitions, F.col("url"), salt
-    )
-    whales = df.filter(is_whale).repartition(max(2, n_partitions // 2))
-    return small.unionByName(whales)
+    n_whale = max(2, n_partitions // 2)
+    spread = F.xxhash64("url", F.lit(0x5A17))
+    pid = F.when(
+        F.octet_length("html") > WHALE_BYTES, n_partitions + F.pmod(spread, F.lit(n_whale))
+    ).otherwise(F.pmod(spread, F.lit(n_partitions)))
+    return df.repartitionById(n_partitions + n_whale, pid.cast("int"))
 
 
 def run_extraction(
@@ -151,7 +145,6 @@ def run_extraction(
     *,
     n_buckets: int = 64,
     n_partitions: int | None = None,
-    whale_bytes: int = DEFAULT_WHALE_BYTES,
     resume: bool = True,
     ocr_scanned: bool = False,
 ) -> dict:
@@ -175,7 +168,7 @@ def run_extraction(
     if done:
         pages = pages.filter(F.col("bucket").isin(pending))
 
-    staged = size_aware_repartition(pages, n_partitions, whale_bytes=whale_bytes)
+    staged = size_aware_repartition(pages, n_partitions)
     # re-derive bucket after extraction (a projection — rows never move),
     # then hash-partition on it: every bucket lands in exactly one task,
     # so the write stays at one file per bucket, never O(n_tasks ×

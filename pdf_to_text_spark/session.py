@@ -24,7 +24,8 @@ ARROW_BATCH_CONF = {
 
 
 def _default_heap() -> str:
-    """1.5 GB per core, capped at half of physical RAM, floor 8 GB.
+    """1.5 GB per core with a floor of 8 GB, then capped at half of
+    physical RAM (at least 2 GB), so physical memory always bounds it.
 
     In ``local[N]`` the single JVM hosts the driver plus N task slots,
     so per-task execution memory is roughly ``heap * 0.6 / N``; sizing
@@ -39,7 +40,7 @@ def _default_heap() -> str:
         half_ram_gb = total_kb // (2 * 1024 * 1024)
     except (OSError, ValueError, IndexError):
         half_ram_gb = 16
-    return f"{max(8, min(cores * 3 // 2, half_ram_gb))}g"
+    return f"{min(max(8, cores * 3 // 2), max(2, half_ram_gb))}g"
 
 
 def get_spark(

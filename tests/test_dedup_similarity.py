@@ -133,6 +133,29 @@ def test_pairwise_topk_per_label(spark):
     assert len([r for r in got if r["label"] == 1]) == 0
 
 
+def test_zero_norm_vectors_pair_with_nothing(spark):
+    """An all-zero embedding has no direction: neither near-dup operator
+    pairs it with anything (a NaN score would pass any threshold, since
+    Spark orders NaN above every number), and neither raises (ANSI
+    divide-by-zero). Ids 4 and 5 are zero vectors of the planes' width,
+    6 is an off-width zero vector (the kernel's per-row path)."""
+    rows = [
+        (1, 0, [1.0, 1.0]),
+        (2, 0, [1.0, 0.99]),
+        (3, 0, [-1.0, -1.0]),
+        (4, 0, [0.0, 0.0]),
+        (5, 0, [0.0, 0.0]),
+        (6, 0, [0.0, 0.0, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, label int, embedding array<float>")
+    zero = {4, 5, 6}
+    lsh = S.lsh_near_dup_pairs(df, [[1.0, 1.0]], threshold=0.9, cache=False).collect()
+    assert [(r["id_a"], r["id_b"]) for r in lsh] == [(1, 2)], lsh
+    top = S.pairwise_topk_per_label(df, k=10).collect()
+    assert {(r["id_a"], r["id_b"]) for r in top} == {(1, 2), (1, 3), (2, 3)}, top
+    assert not any({r["id_a"], r["id_b"]} & zero for r in lsh + top)
+
+
 # ------------------------------------------------- hot-key caps (scale guard)
 
 

@@ -60,3 +60,21 @@ def test_timezone_and_partitioning_invariance(spark, qname):
         conf.set("spark.sql.session.timeZone", base_tz)
         conf.set("spark.sql.shuffle.partitions", base_sp)
     assert h_utc == h_la
+
+
+@pytest.mark.parametrize(
+    "cores, mem_kb, heap",
+    [(4, 8 * 1024 * 1024, "4g"), (4, 64 * 1024 * 1024, "8g"), (32, 256 * 1024 * 1024, "48g")],
+)
+def test_default_heap_is_bounded_by_ram(monkeypatch, cores, mem_kb, heap):
+    """The 8 GB heap floor applies before the half-of-RAM cap, so a
+    small host never gets a heap it cannot back with memory."""
+    import io
+
+    from pdf_to_text_spark import session
+
+    monkeypatch.setattr(session.os, "cpu_count", lambda: cores)
+    monkeypatch.setattr(
+        session, "open", lambda *_a, **_k: io.StringIO(f"MemTotal: {mem_kb} kB\n"), raising=False
+    )
+    assert session._default_heap() == heap

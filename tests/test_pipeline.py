@@ -7,6 +7,8 @@ import os
 from pyspark.sql import functions as F
 
 from pdf_to_text_spark.plans.pipeline import (
+    WHALE_BYTES,
+    bucket_of,
     committed_buckets,
     run_extraction,
     size_aware_repartition,
@@ -95,19 +97,47 @@ def test_resume_equals_fresh(spark, corpus_dir, tmp_path):
     assert s3["buckets_run"] == 0
 
 
-def test_size_aware_repartition_isolates_whales(spark, pages_df):
-    df = size_aware_repartition(pages_df, 8, whale_bytes=50_000)
-    n_whales = pages_df.filter(F.octet_length("html") > 50_000).count()
-    assert n_whales >= 1
-    # whales spread across partitions: no partition holds 2+ whales
-    per_part = (
-        df.filter(F.octet_length("html") > 50_000)
+def test_size_aware_repartition_isolates_whales(spark):
+    """Small rows (a null ``html`` among them) land only in partitions
+    ``[0, n)``, whales only in the ``n_whale`` partitions after them,
+    and no row is lost or duplicated."""
+    n, n_whale = 4, 2
+    rows = [(f"https://s.example/{i}", bytearray(b"<p>%d</p>" % i), None) for i in range(40)]
+    rows.append(("https://s.example/null", None, "text layer"))
+    rows += [
+        (f"https://w.example/{i}", bytearray(b"%" * (WHALE_BYTES + 1 + i)), None)
+        for i in range(3)
+    ]
+    df = spark.createDataFrame(rows, "url string, html binary, text string")
+    placed = (
+        size_aware_repartition(df, n)
+        .select(
+            "url",
+            F.spark_partition_id().alias("pid"),
+            (F.octet_length("html") > WHALE_BYTES).alias("whale"),
+        )
+        .collect()
+    )
+    assert sorted(r["url"] for r in placed) == sorted(r[0] for r in rows)
+    whale_pids = {r["pid"] for r in placed if r["whale"]}
+    small_pids = {r["pid"] for r in placed if not r["whale"]}
+    assert len([r for r in placed if r["whale"]]) == 3
+    assert whale_pids <= set(range(n, n + n_whale)), whale_pids
+    assert small_pids <= set(range(n)), small_pids
+    assert next(r["pid"] for r in placed if r["url"].endswith("/null")) < n
+
+
+def test_size_aware_repartition_spreads_resumed_buckets(spark, pages_df):
+    """A resume with only the odd buckets pending still fills every
+    small-row partition: the placement hash is not ``bucket_of``'s."""
+    odd = pages_df.filter(bucket_of(F.col("url"), 64) % 2 == 1)
+    counts = (
+        size_aware_repartition(odd, 4)
         .groupBy(F.spark_partition_id().alias("pid"))
         .count()
+        .collect()
     )
-    assert per_part.filter(F.col("count") > 1).count() == 0
-    # no rows lost or duplicated
-    assert df.count() == pages_df.count()
+    assert {r["pid"] for r in counts} == {0, 1, 2, 3}, counts
 
 
 def test_colocate_modes_byte_identical(spark, corpus_dir, golden_extracted, tmp_path):

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from pdf_to_text_spark.operators.extract import extract_documents, extract_pdf_page_table
+from pdf_to_text_spark.plans.pipeline import size_aware_repartition
 
 
 def _plan(df) -> str:
@@ -24,6 +25,16 @@ def test_extraction_is_shuffle_free(pages_df):
     plan = _plan(extract_documents(pages_df))
     assert "Exchange" not in plan
     assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def test_extraction_input_is_one_scan_one_exchange(pages_df):
+    """The whale-aware input placement adds exactly one exchange and no
+    second scan: a filter/union split of the input (one scan and one UDF
+    per branch) cannot come back unnoticed."""
+    plan = _plan(extract_documents(size_aware_repartition(pages_df, 4)))
+    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("Exchange") == 1, plan
     assert plan.count("ArrowEvalPython") == 1, plan
 
 
