@@ -718,6 +718,69 @@ def _q27_pdf_sink(spark, sf):
     return p.select("doc_id", F.length("pdf").cast("long").alias("n_bytes"), "pdf")
 
 
+def _rows(s: str, n: int, w: int, at: int = 0) -> list[str]:
+    """``n`` consecutive ``w``-char lines of ``s``, starting at ``at``."""
+    return [s[at + i * w : at + (i + 1) * w] for i in range(n)]
+
+
+def _pdf_pages_query(spark, sf, make_pdfs, key: Column | None = None) -> DataFrame:
+    """The PDF-roundtrip page frame (q55–q57, q59–q61): each doc's text,
+    sanitized to printable ASCII so the layout is SQL-replicable, goes
+    through ``make_pdfs(s)``; every PDF it returns is parsed back by the
+    engine's parser (``core/pdfparse.py``), the page texts concatenated
+    in order, one row per page. ``key`` is the column the 0-based
+    ``pos`` maps to (default: 1-based ``page_no``). ``make_pdfs`` is a
+    closure, so cloudpickle ships it to the workers by value; the
+    workers import ``_rows`` from this file, as they import the
+    package."""
+    d = _par(spark, _t(spark, sf, "documents"))
+
+    @F.pandas_udf("array<string>")
+    def roundtrip(texts: pd.Series) -> pd.Series:
+        import re as _re
+
+        from pdf_to_text_spark.core.pdfparse import extract_pdf_pages
+
+        def rt(t):
+            s = _re.sub(r"[^ -~]", "", t or "")
+            return [p for pdf in make_pdfs(s) for p in extract_pdf_pages(pdf)]
+
+        return texts.map(rt)
+
+    if key is None:
+        key = (F.col("pos") + 1).cast("int").alias("page_no")
+    return d.select("doc_id", F.posexplode(roundtrip(F.col("text")))).select(
+        "doc_id", key, F.col("col").alias("page_text")
+    )
+
+
+def _pdf_images_query(spark, sf, make_pdf) -> DataFrame:
+    """The embedded-image frame (q58, q62): ``make_pdf(s)`` builds one
+    PDF per doc from its printable-ASCII-sanitized text, and the REAL
+    extraction operator (``operators/multimodal.pdf_embedded_images``)
+    reads its images back as ``(doc_id, image_no, width, height,
+    mean_luma)``."""
+    from pdf_to_text_spark.operators.multimodal import pdf_embedded_images
+
+    d = _par(spark, _t(spark, sf, "documents"))
+
+    @F.pandas_udf("binary")
+    def doc_pdf(texts: pd.Series) -> pd.Series:
+        import re as _re
+
+        return texts.map(lambda t: make_pdf(_re.sub(r"[^ -~]", "", t or "")))
+
+    pdfs = d.select(F.col("doc_id").cast("string").alias("doc_key"), doc_pdf("text").alias("pdf"))
+    out = pdf_embedded_images(pdfs, bin_col="pdf", id_col="doc_key")
+    return out.select(
+        F.col("url").cast("bigint").alias("doc_id"),
+        "image_no",
+        "width",
+        "height",
+        "mean_luma",
+    )
+
+
 def _q55_pdf_widened_roundtrip(spark, sf):
     """Round-4 widened PDF subset, end-to-end through REAL bytes: each
     doc's text (sanitized to printable ASCII so the layout is SQL-
@@ -731,37 +794,15 @@ def _q55_pdf_widened_roundtrip(spark, sf):
     parser loop is byte-faithful on every doc. Reference parity: accepts
     uploads beyond the single-level fixture shape
     (``core_document_generator.py:122`` ``fitz.open(stream=...)``)."""
-    d = _par(spark, _t(spark, sf, "documents"))
 
-    @F.pandas_udf("array<string>")
-    def widened_roundtrip(texts: pd.Series) -> pd.Series:
-        import re as _re
-
+    def make(s):
         from pdf_to_text_spark.core.pdfgen import build_pdf, page_content_stream
-        from pdf_to_text_spark.core.pdfparse import extract_pdf_pages
 
-        def rt(t):
-            s = _re.sub(r"[^ -~]", "", t or "")
-            lines = [s[0:40], s[40:80], s[80:120], s[120:160]]
-            pdf = build_pdf(
-                [
-                    page_content_stream(lines[:2], style="hex"),
-                    page_content_stream(lines[2:], style="hex"),
-                ],
-                filter_array=True,
-                nested=True,
-            )
-            return extract_pdf_pages(pdf)
+        lines = _rows(s, 4, 40)
+        pages = [page_content_stream(lines[i : i + 2], style="hex") for i in (0, 2)]
+        return [build_pdf(pages, filter_array=True, nested=True)]
 
-        return texts.map(rt)
-
-    return d.select(
-        "doc_id", F.posexplode(widened_roundtrip(F.col("text")))
-    ).select(
-        "doc_id",
-        (F.col("pos") + 1).cast("int").alias("page_no"),
-        F.col("col").alias("page_text"),
-    )
+    return _pdf_pages_query(spark, sf, make)
 
 
 def _q56_pdf_notch2_roundtrip(spark, sf):
@@ -778,39 +819,17 @@ def _q56_pdf_notch2_roundtrip(spark, sf):
     proves generator→CMap→parser is byte-faithful per doc. Reference
     parity: modern real-world uploads (PDF 1.5+ compressed xref,
     Identity-H text) accepted by ``core_document_generator.py:122``."""
-    d = _par(spark, _t(spark, sf, "documents"))
 
-    @F.pandas_udf("array<string>")
-    def notch2_roundtrip(texts: pd.Series) -> pd.Series:
-        import re as _re
-
+    def make(s):
         from pdf_to_text_spark.core.pdfgen import build_pdf, page_content_stream
-        from pdf_to_text_spark.core.pdfparse import extract_pdf_pages
 
-        def rt(t):
-            s = _re.sub(r"[^ -~]", "", t or "")
-            lines = [s[i * 30 : (i + 1) * 30] for i in range(6)]
-            pdf = build_pdf(
-                [
-                    page_content_stream(lines[:3], style="cid"),
-                    page_content_stream(lines[3:], style="cid"),
-                ],
-                flate=True,
-                cid_font=True,
-                split_content=True,
-                objstm=True,
-            )
-            return extract_pdf_pages(pdf)
+        lines = _rows(s, 6, 30)
+        pages = [page_content_stream(lines[i : i + 3], style="cid") for i in (0, 3)]
+        return [
+            build_pdf(pages, flate=True, cid_font=True, split_content=True, objstm=True)
+        ]
 
-        return texts.map(rt)
-
-    return d.select(
-        "doc_id", F.posexplode(notch2_roundtrip(F.col("text")))
-    ).select(
-        "doc_id",
-        (F.col("pos") + 1).cast("int").alias("page_no"),
-        F.col("col").alias("page_text"),
-    )
+    return _pdf_pages_query(spark, sf, make)
 
 
 def _q57_pdf_filter_chain_roundtrip(spark, sf):
@@ -824,34 +843,18 @@ def _q57_pdf_filter_chain_roundtrip(spark, sf):
     text with SQL string ops; a hash match proves both decode paths are
     byte-faithful per doc. Reference parity: pdfminer/fitz accept these
     legacy encodings routinely (``core_document_generator.py:122``)."""
-    d = _par(spark, _t(spark, sf, "documents"))
 
-    @F.pandas_udf("array<string>")
-    def filter_roundtrip(texts: pd.Series) -> pd.Series:
-        import re as _re
-
+    def make(s):
         from pdf_to_text_spark.core.pdfgen import build_pdf, page_content_stream
-        from pdf_to_text_spark.core.pdfparse import extract_pdf_pages
 
-        def rt(t):
-            s = _re.sub(r"[^ -~]", "", t or "")
-            lines = [s[i * 25 : (i + 1) * 25] for i in range(4)]
-            content = page_content_stream(lines)
-            a85 = build_pdf([content], filters=["ASCII85Decode", "FlateDecode"])
-            lzw = build_pdf([content], filters=["LZWDecode"])
-            return extract_pdf_pages(a85) + extract_pdf_pages(lzw)
+        content = page_content_stream(_rows(s, 4, 25))
+        return [
+            build_pdf([content], filters=["ASCII85Decode", "FlateDecode"]),
+            build_pdf([content], filters=["LZWDecode"]),
+        ]
 
-        return texts.map(rt)
-
-    return d.select(
-        "doc_id", F.posexplode(filter_roundtrip(F.col("text")))
-    ).select(
-        "doc_id",
-        F.when(F.col("pos") == 0, F.lit("a85_flate"))
-        .otherwise(F.lit("lzw"))
-        .alias("variant"),
-        F.col("col").alias("page_text"),
-    )
+    variant = F.when(F.col("pos") == 0, F.lit("a85_flate")).otherwise(F.lit("lzw"))
+    return _pdf_pages_query(spark, sf, make, key=variant.alias("variant"))
 
 
 def _q58_pdf_embedded_image(spark, sf):
@@ -870,42 +873,22 @@ def _q58_pdf_embedded_image(spark, sf):
     ``length()`` alone. Reference parity: fitz surfaces page pixmaps
     but never embedded images (``core_document_processing.py:60-66``);
     this is the Spark-first generalization."""
-    from pdf_to_text_spark.operators.multimodal import pdf_embedded_images
 
-    d = _par(spark, _t(spark, sf, "documents"))
-
-    @F.pandas_udf("binary")
-    def doc_pdf(texts: pd.Series) -> pd.Series:
-        import re as _re
-
+    def make(s):
         from pdf_to_text_spark.core.jpegcodec import encode_jpeg
         from pdf_to_text_spark.core.pdfgen import build_pdf, page_content_stream
 
-        def mk(t):
-            s = _re.sub(r"[^ -~]", "", t or "")
-            L = len(s)
-            g = 2 * (10 + L % 100)
-            w, h = 8 * (1 + L % 4), 8 * (1 + L % 3)
-            jpeg = encode_jpeg(w, h, 1, bytes([g]) * (w * h), quality=50)
-            content = (
-                page_content_stream([s[:30], s[30:60]])
-                + f"\nq {w} 0 0 {h} 72 600 cm /Im0 Do Q".encode()
-            )
-            return build_pdf(
-                [content], predictor=12, pred_columns=48, images=[(w, h, jpeg)]
-            )
+        L = len(s)
+        g = 2 * (10 + L % 100)
+        w, h = 8 * (1 + L % 4), 8 * (1 + L % 3)
+        jpeg = encode_jpeg(w, h, 1, bytes([g]) * (w * h), quality=50)
+        content = (
+            page_content_stream(_rows(s, 2, 30))
+            + f"\nq {w} 0 0 {h} 72 600 cm /Im0 Do Q".encode()
+        )
+        return build_pdf([content], predictor=12, pred_columns=48, images=[(w, h, jpeg)])
 
-        return texts.map(mk)
-
-    pdfs = d.select(F.col("doc_id").cast("string").alias("doc_key"), doc_pdf("text").alias("pdf"))
-    out = pdf_embedded_images(pdfs, bin_col="pdf", id_col="doc_key")
-    return out.select(
-        F.col("url").cast("bigint").alias("doc_id"),
-        "image_no",
-        "width",
-        "height",
-        "mean_luma",
-    )
+    return _pdf_images_query(spark, sf, make)
 
 
 def _q59_pdf_encrypted_roundtrip(spark, sf):
@@ -921,37 +904,15 @@ def _q59_pdf_encrypted_roundtrip(spark, sf):
     proves handler→RC4→parser is byte-faithful per doc. Reference
     parity: fitz transparently opens empty-user-password uploads
     (``core_document_generator.py:122``)."""
-    d = _par(spark, _t(spark, sf, "documents"))
 
-    @F.pandas_udf("array<string>")
-    def enc_roundtrip(texts: pd.Series) -> pd.Series:
-        import re as _re
-
+    def make(s):
         from pdf_to_text_spark.core.pdfgen import build_pdf, page_content_stream
-        from pdf_to_text_spark.core.pdfparse import extract_pdf_pages
 
-        def rt(t):
-            s = _re.sub(r"[^ -~]", "", t or "")
-            lines = [s[i * 35 : (i + 1) * 35] for i in range(4)]
-            pdf = build_pdf(
-                [
-                    page_content_stream(lines[:2]),
-                    page_content_stream(lines[2:]),
-                ],
-                flate=True,
-                encrypt=3,
-            )
-            return extract_pdf_pages(pdf)
+        lines = _rows(s, 4, 35)
+        pages = [page_content_stream(lines[i : i + 2]) for i in (0, 2)]
+        return [build_pdf(pages, flate=True, encrypt=3)]
 
-        return texts.map(rt)
-
-    return d.select(
-        "doc_id", F.posexplode(enc_roundtrip(F.col("text")))
-    ).select(
-        "doc_id",
-        (F.col("pos") + 1).cast("int").alias("page_no"),
-        F.col("col").alias("page_text"),
-    )
+    return _pdf_pages_query(spark, sf, make)
 
 
 def _q60_pdf_modern_structure_roundtrip(spark, sf):
@@ -967,42 +928,23 @@ def _q60_pdf_modern_structure_roundtrip(spark, sf):
     byte-faithful per doc. The oracle recomputes the UPDATED text with
     SQL string ops. Reference parity: fitz opens 1.5 xref-stream files
     and honors incremental saves (``core_document_generator.py:122``)."""
-    d = _par(spark, _t(spark, sf, "documents"))
 
-    @F.pandas_udf("array<string>")
-    def modern_roundtrip(texts: pd.Series) -> pd.Series:
-        import re as _re
-
+    def make(s):
         from pdf_to_text_spark.core.pdfgen import (
             append_incremental,
             build_pdf,
             content_stream_obj,
             page_content_stream,
         )
-        from pdf_to_text_spark.core.pdfparse import extract_pdf_pages
 
-        def rt(t):
-            s = _re.sub(r"[^ -~]", "", t or "")
-            v1 = [s[i * 30 : (i + 1) * 30] for i in range(3)]
-            v2 = [s[90 + i * 30 : 90 + (i + 1) * 30] for i in range(3)]
-            pdf = build_pdf(
-                [page_content_stream(v1)], flate=True, objstm=True, xref_stream=True
-            )
-            # content object number is stable for a 1-page build (obj 4)
-            upd = append_incremental(
-                pdf, {4: content_stream_obj(page_content_stream(v2), flate=True)}
-            )
-            return extract_pdf_pages(upd)
+        pdf = build_pdf(
+            [page_content_stream(_rows(s, 3, 30))], flate=True, objstm=True, xref_stream=True
+        )
+        # content object number is stable for a 1-page build (obj 4)
+        v2 = page_content_stream(_rows(s, 3, 30, at=90))
+        return [append_incremental(pdf, {4: content_stream_obj(v2, flate=True)})]
 
-        return texts.map(rt)
-
-    return d.select(
-        "doc_id", F.posexplode(modern_roundtrip(F.col("text")))
-    ).select(
-        "doc_id",
-        (F.col("pos") + 1).cast("int").alias("page_no"),
-        F.col("col").alias("page_text"),
-    )
+    return _pdf_pages_query(spark, sf, make)
 
 
 def _q61_pdf_aes_roundtrip(spark, sf):
@@ -1017,30 +959,13 @@ def _q61_pdf_aes_roundtrip(spark, sf):
     The oracle recomputes expected text with SQL string ops. Reference
     parity: fitz opens AES empty-user-password uploads transparently
     (``core_document_generator.py:122``)."""
-    d = _par(spark, _t(spark, sf, "documents"))
 
-    @F.pandas_udf("array<string>")
-    def aes_roundtrip(texts: pd.Series) -> pd.Series:
-        import re as _re
-
+    def make(s):
         from pdf_to_text_spark.core.pdfgen import build_pdf, page_content_stream
-        from pdf_to_text_spark.core.pdfparse import extract_pdf_pages
 
-        def rt(t):
-            s = _re.sub(r"[^ -~]", "", t or "")
-            lines = [s[i * 30 : (i + 1) * 30] for i in range(3)]
-            pdf = build_pdf([page_content_stream(lines)], flate=True, encrypt=4)
-            return extract_pdf_pages(pdf)
+        return [build_pdf([page_content_stream(_rows(s, 3, 30))], flate=True, encrypt=4)]
 
-        return texts.map(rt)
-
-    return d.select(
-        "doc_id", F.posexplode(aes_roundtrip(F.col("text")))
-    ).select(
-        "doc_id",
-        (F.col("pos") + 1).cast("int").alias("page_no"),
-        F.col("col").alias("page_text"),
-    )
+    return _pdf_pages_query(spark, sf, make)
 
 
 def _q62_pdf_g4_image(spark, sf):
@@ -1056,43 +981,23 @@ def _q62_pdf_g4_image(spark, sf):
     alone. Reference parity: fitz decodes CCITTFax transparently
     (``core_document_generator.py:122``); G4 is the dominant
     scanned-PDF bitonal codec."""
-    from pdf_to_text_spark.operators.multimodal import pdf_embedded_images
 
-    d = _par(spark, _t(spark, sf, "documents"))
-
-    @F.pandas_udf("binary")
-    def doc_pdf(texts: pd.Series) -> pd.Series:
-        import re as _re
-
+    def make(s):
         from pdf_to_text_spark.core.ccittfax import encode_g4
         from pdf_to_text_spark.core.pdfgen import build_pdf, page_content_stream
 
-        def mk(t):
-            s = _re.sub(r"[^ -~]", "", t or "")
-            L = len(s)
-            h = (3, 5, 15, 17)[L % 4]
-            k = L % (h + 1)
-            w = 8 * (1 + L % 4)
-            bm = [[1] * w if i < k else [0] * w for i in range(h)]
-            content = (
-                page_content_stream([s[:30], s[30:60]])
-                + f"\nq {w} 0 0 {h} 72 600 cm /Im0 Do Q".encode()
-            )
-            return build_pdf(
-                [content], flate=True, images=[(w, h, encode_g4(bm, w), "g4")]
-            )
+        L = len(s)
+        h = (3, 5, 15, 17)[L % 4]
+        k = L % (h + 1)
+        w = 8 * (1 + L % 4)
+        bm = [[1] * w if i < k else [0] * w for i in range(h)]
+        content = (
+            page_content_stream(_rows(s, 2, 30))
+            + f"\nq {w} 0 0 {h} 72 600 cm /Im0 Do Q".encode()
+        )
+        return build_pdf([content], flate=True, images=[(w, h, encode_g4(bm, w), "g4")])
 
-        return texts.map(mk)
-
-    pdfs = d.select(F.col("doc_id").cast("string").alias("doc_key"), doc_pdf("text").alias("pdf"))
-    out = pdf_embedded_images(pdfs, bin_col="pdf", id_col="doc_key")
-    return out.select(
-        F.col("url").cast("bigint").alias("doc_id"),
-        "image_no",
-        "width",
-        "height",
-        "mean_luma",
-    )
+    return _pdf_images_query(spark, sf, make)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

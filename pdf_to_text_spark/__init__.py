@@ -11,7 +11,8 @@ core/        pure-Python deterministic extraction spec (PDF text-object
 functions/   the Catalyst expression library (SURVEY.md §2.4 F1–F14).
 operators/   DataFrame-level operators: extraction routing/explode/
              reassembly, dedup (exact/minhash/simhash), similarity
-             search, text analytics, multimodal plumbing.
+             search, text analytics, and the page-image tier (page
+             rasterize, OCR, PDF embedded-image extraction).
 plans/       end-to-end jobs: the extraction pipeline with salting,
              per-partition lineage, partition-completion manifests and
              idempotent resume.

@@ -8,16 +8,15 @@ multi-query job) orphaned caches accumulate storage memory until
 executors start evicting.
 
 The registry makes the lifetime explicit without changing operator
-signatures: operators register their internal caches here; pipelines
-and jobs call :func:`release_caches` after their terminal action (or
-wrap phases in :func:`cached_scope`). At 100 TB these intermediates are
+signatures: operators register their internal caches here; a pipeline
+takes :func:`mark_caches` before a phase and calls
+:func:`release_caches_since` after its terminal action
+(``plans/corpus_pipeline.py`` does). At 100 TB these intermediates are
 materialized scratch tables, not caches — the registry is the local
 analog of dropping the scratch dataset when the job finishes.
 """
 
 from __future__ import annotations
-
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -31,24 +30,10 @@ def register_cache(df: DataFrame) -> DataFrame:
     return df
 
 
-def release_caches() -> int:
-    """Unpersist every registered cache (non-blocking); returns how
-    many were released. Safe to call repeatedly; plans that still
-    reference a released frame simply recompute."""
-    n = len(_LIVE)
-    for df in _LIVE:
-        try:
-            df.unpersist()
-        except Exception:  # noqa: BLE001 — session may already be stopped
-            pass
-    _LIVE.clear()
-    return n
-
-
 def mark_caches() -> int:
     """Snapshot the registry position; pair with
     :func:`release_caches_since` to release only what a pipeline phase
-    registered (imperative twin of :func:`cached_scope`)."""
+    registered."""
     return len(_LIVE)
 
 
@@ -63,19 +48,3 @@ def release_caches_since(mark: int) -> int:
             pass
     del _LIVE[mark:]
     return max(0, n)
-
-
-@contextmanager
-def cached_scope():
-    """Release every cache registered inside the ``with`` block on exit
-    — the pattern for a self-contained pipeline phase."""
-    mark = len(_LIVE)
-    try:
-        yield
-    finally:
-        for df in _LIVE[mark:]:
-            try:
-                df.unpersist()
-            except Exception:  # noqa: BLE001
-                pass
-        del _LIVE[mark:]

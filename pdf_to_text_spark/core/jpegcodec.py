@@ -19,7 +19,7 @@ so the codec is implemented from the public spec):
   prove only self-consistency — the opposite of the repo's
   independent-sides rule; it is also rare in the wild (most decoders
   never shipped it for patent-era reasons). The boundary is pinned by
-  tests/test_mediacodec.py (SOF9 → clean MediaError row).
+  tests/test_mediacodec.py (SOF9 → clean MediaError).
 - **encoder**: minimal baseline writer so fixtures are self-generated
   (no external data): grayscale or RGB (4:4:4), Annex-K quant tables
   scaled by the libjpeg quality formula, one DC + one AC Huffman table
@@ -545,32 +545,6 @@ def _reconstruct(frame, coefs, qtables) -> tuple[int, int, int, bytes]:
     b = y + 1.772 * (cb - 128.0)
     rgb = np.stack([r, g, b], axis=-1)
     return w, h, 3, np.clip(np.round(rgb), 0, 255).astype(np.uint8).tobytes()
-
-
-def jpeg_dims(data: bytes) -> tuple[int, int, int]:
-    """Header-only (width, height, channels) from any SOFn marker —
-    the cheap metadata path (no entropy decode); works for progressive
-    streams too. Raises MediaError when no frame header exists."""
-    if data[:2] != b"\xff\xd8":
-        raise MediaError("not a jpeg")
-    pos = 2
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise MediaError("bad marker alignment")
-        marker = data[pos + 1]
-        if marker == 0xD9:
-            break
-        (seglen,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-        if marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            body = data[pos + 4 : pos + 2 + seglen]
-            if len(body) < 6:
-                raise MediaError("truncated SOF")
-            h, w = struct.unpack(">HH", body[1:5])
-            return w, h, body[5]
-        if marker == 0xDA:
-            break  # scan before any SOF = malformed
-        pos += 2 + seglen
-    raise MediaError("no SOF header")
 
 
 # ------------------------------------------------------------------ encoder

@@ -1,19 +1,15 @@
-"""Pure-Python media codecs for the multimodal tier.
+"""Pure-Python PNG codec for the page-image tier.
 
-The container ships no PIL/ffmpeg, but two real formats are fully
-decodable with the standard library alone, which upgrades the
-multimodal tier's decode step from "deterministic fake" to REAL for:
+The container ships no PIL, but PNG is fully decodable with the
+standard library alone: non-interlaced, 8-bit gray / gray+alpha / RGB /
+RGBA (the shapes our own encoder and most screenshot/render pipelines
+emit) — chunk walk, zlib inflate, all five scanline filters (None/Sub/
+Up/Average/Paeth) inverted per the PNG spec. The encoder writes the
+rasterized pages (``core.raster``) and the test fixtures.
 
-- **PNG** (non-interlaced, 8-bit gray / gray+alpha / RGB / RGBA — the
-  shapes our own encoder and most screenshot/render pipelines emit):
-  chunk walk, zlib inflate, all five scanline filters (None/Sub/Up/
-  Average/Paeth) inverted per the PNG spec.
-- **WAV** (RIFF PCM16): header walk + struct-unpacked samples.
-
-JPEG has its own real baseline codec in ``core.jpegcodec`` (pure
-Python + numpy Huffman/DCT). Only MP4 stays honestly faked in
-operators/multimodal.py (an ISOBMFF+H.264 stack is out of scope). The
-encoders exist so fixtures are self-generated — no external data.
+JPEG has its own real baseline/progressive codec in ``core.jpegcodec``
+(pure Python + numpy Huffman/DCT); both raise :class:`MediaError` on a
+malformed or unsupported payload.
 """
 
 from __future__ import annotations
@@ -156,76 +152,4 @@ def encode_png(w: int, h: int, channels: int, pixels: bytes, row_filter: int = 0
         + _chunk(b"IHDR", ihdr)
         + _chunk(b"IDAT", zlib.compress(bytes(raw)))
         + _chunk(b"IEND", b"")
-    )
-
-
-def gray_thumbnail(w: int, h: int, ch: int, pixels: bytes, dim: int = 4) -> list[float]:
-    """Nearest-pixel-free REAL downsample: mean luma over a dim×dim
-    grid of cells → length dim² feature vector in [0, 255]. The image
-    analog of a document embedding — feeds the cosine near-dup tier."""
-    out: list[float] = []
-    for cy in range(dim):
-        y0, y1 = (h * cy) // dim, max((h * (cy + 1)) // dim, (h * cy) // dim + 1)
-        for cx in range(dim):
-            x0, x1 = (w * cx) // dim, max((w * (cx + 1)) // dim, (w * cx) // dim + 1)
-            acc = n = 0
-            for y in range(y0, min(y1, h)):
-                base = y * w * ch
-                for x in range(x0, min(x1, w)):
-                    px = base + x * ch
-                    if ch >= 3:
-                        # integer BT.601-ish luma, deterministic
-                        acc += (299 * pixels[px] + 587 * pixels[px + 1] + 114 * pixels[px + 2]) // 1000
-                    else:
-                        acc += pixels[px]
-                    n += 1
-            out.append(acc / n if n else 0.0)
-    return out
-
-
-def decode_wav(data: bytes) -> tuple[int, int, int, float, float]:
-    """RIFF PCM16 WAV → (channels, sample_rate, n_samples, duration_s,
-    rms). Raises MediaError on malformed/unsupported."""
-    if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise MediaError("not a wav")
-    pos = 12
-    fmt = None
-    samples = None
-    while pos + 8 <= len(data):
-        cid = data[pos : pos + 4]
-        (length,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        body = data[pos + 8 : pos + 8 + length]
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"data":
-            samples = body
-        pos += 8 + length + (length & 1)
-    if fmt is None or samples is None or len(fmt) < 16:
-        raise MediaError("missing fmt/data chunk")
-    audio_fmt, n_ch, rate, _br, _ba, bits = struct.unpack("<HHIIHH", fmt[:16])
-    if audio_fmt != 1 or bits != 16:
-        raise MediaError(f"unsupported wav (fmt={audio_fmt} bits={bits})")
-    n = len(samples) // 2
-    if n == 0:
-        return n_ch, rate, 0, 0.0, 0.0
-    vals = struct.unpack(f"<{n}h", samples[: n * 2])
-    rms = (sum(v * v for v in vals) / n) ** 0.5
-    frames = n // max(n_ch, 1)
-    return n_ch, rate, n, frames / rate if rate else 0.0, rms
-
-
-def encode_wav(rate: int, samples: list[int], channels: int = 1) -> bytes:
-    """Minimal PCM16 WAV writer (fixture generator)."""
-    body = struct.pack(f"<{len(samples)}h", *samples)
-    fmt = struct.pack("<HHIIHH", 1, channels, rate, rate * channels * 2, channels * 2, 16)
-    return (
-        b"RIFF"
-        + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(body))
-        + b"WAVE"
-        + b"fmt "
-        + struct.pack("<I", len(fmt))
-        + fmt
-        + b"data"
-        + struct.pack("<I", len(body))
-        + body
     )

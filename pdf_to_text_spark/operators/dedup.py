@@ -62,15 +62,6 @@ def _shingles_of_words(words: Column, n: int) -> Column:
     )
 
 
-def word_shingles(c: Column, n: int = 3, max_words: int = MAX_SHINGLE_WORDS) -> Column:
-    """Distinct word n-gram shingles of a text column (array<string>).
-    Only the first ``max_words`` words participate. NOTE: fine for
-    one-off expressions on short text; for table-scale shingling use
-    ``shingle_table`` (projects the word array once — see
-    ``_shingles_of_words`` for why that matters)."""
-    return _shingles_of_words(_words_col(c, max_words), n)
-
-
 def shingle_table(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
     words_df = df.select(F.col(id_col), _words_col(F.col(text_col)).alias("_words"))
     return words_df.select(

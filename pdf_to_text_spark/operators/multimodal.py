@@ -1,207 +1,28 @@
-"""Multimodal column plumbing (task brief): image/audio/video as opaque
-``binary`` columns with typed metadata.
+"""Image columns of the PDF → page image → OCR → text pipeline, as
+Arrow-batched ``mapInPandas``/pandas-UDF operators with row-level error
+tolerance (a bad payload becomes an error row, never a task failure):
 
-Decode status by format (honest inventory):
-- **PNG**: REAL full pixel decode (``core.mediacodec`` — zlib inflate +
-  all five scanline filters), feeding real luma-thumbnail signatures
-  into the cosine near-dup tier (``image_signatures``).
-- **WAV** (PCM16): REAL decode — channels/rate/duration/RMS.
-- **JPEG**: REAL decode, baseline AND progressive (``core.jpegcodec`` —
-  Huffman entropy decode incl. spectral-selection/successive-
-  approximation scans, dequant + vectorized IDCT, any sampling factors,
-  restart markers); arithmetic/lossless raise and land in
-  ``decode_error``.
-- **MP4**: REAL container demux (``core.mp4codec`` — box-tree walk,
-  movie/track metadata, full stsc/stco/stsz/stss sample index); rows
-  are labeled ``decoder='demux'`` (the metadata tier does not decode
-  pixels; the frame tier below does, for the I_PCM subset).
-- video frame sampling: REAL (``sample_video_frames`` emits every-Nth
-  sample's actual byte range + NAL payload from the demux index);
-  NAL→pixels: REAL for the H.264 I_PCM subset (``core.h264`` — NAL/
-  exp-Golomb/SPS/PPS/slice parse, multi-slice, cropping, raw 4:2:0
-  recovery); predicted-MB/CABAC streams raise a disclosed
-  ``MediaError`` → ``decode_error`` rows (``decode_video_frames``).
-
-The Spark-side plumbing — schema, ``mapInPandas`` batch shape,
-partition behavior, row-level error tolerance — is identical for real
-and fake paths; swapping the fakes for PIL/ffmpeg changes one function
-inside the batch loop.
+- ``rasterize_pages`` / ``rasterize_col``: text → page PNG bytes
+  (``core.raster``, real PNG encode via ``core.mediacodec``).
+- ``ocr_pages``: page PNG → text by inverse glyph match
+  (``core.raster.ocr_png``).
+- ``pdf_embedded_images``: every ``/Subtype /Image`` XObject of a PDF
+  payload becomes a row; JPEG payloads are pixel-decoded by the repo's
+  own baseline/progressive codec (``core.jpegcodec``) and CCITT bitonal
+  scans by ``core.ccittfax``, giving a mean luma. An undecodable JPEG
+  (arithmetic/lossless: ``MediaError``) keeps its row with a null
+  ``mean_luma``; an unparseable PDF or unsupported image codec (JPX,
+  JBIG2) becomes one ``extract_error`` row.
 """
 
 from __future__ import annotations
 
-import struct
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_META_SCHEMA = (
-    "media_id long, kind string, width int, height int, n_bytes long, decode_error string"
-)
-
-
-def _sniff_kind(data: bytes) -> str:
-    if data[:8] == b"\x89PNG\r\n\x1a\n":
-        return "png"
-    if data[:3] == b"\xff\xd8\xff":
-        return "jpeg"
-    if data[4:12] in (b"ftypisom", b"ftypmp42"):
-        return "mp4"
-    if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-        return "wav"
-    return "unknown"
-
-
-def _png_dims(data: bytes) -> tuple[int, int]:
-    # IHDR is always the first chunk: width/height at bytes 16..24
-    w, h = struct.unpack(">II", data[16:24])
-    return w, h
-
-
-def decode_image_meta(df: DataFrame, bin_col: str = "media", id_col: str = "media_id") -> DataFrame:
-    """binary column → typed metadata via mapInPandas (Arrow batches),
-    header-only parses throughout (REAL, no pixel work): PNG IHDR,
-    JPEG SOF (``core.jpegcodec.jpeg_dims`` — works for progressive
-    too), MP4 tkhd (``core.mp4codec.parse_mp4``). Unknown formats get
-    0×0, not an error — sniffing isn't decoding.
-
-    Row-level error tolerance: decode failures land in ``decode_error``,
-    the job continues (reference analog: main.py:77-78)."""
-    from pdf_to_text_spark.core.jpegcodec import jpeg_dims
-    from pdf_to_text_spark.core.mp4codec import parse_mp4
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"media_id": [], "kind": [], "width": [], "height": [], "n_bytes": [], "decode_error": []}
-            for mid, data in zip(pdf[id_col], pdf[bin_col]):
-                data = bytes(data) if data is not None else b""
-                out["media_id"].append(mid)
-                out["n_bytes"].append(len(data))
-                try:
-                    kind = _sniff_kind(data)
-                    if kind == "png":
-                        w, h = _png_dims(data)
-                    elif kind == "jpeg":
-                        w, h, _ch = jpeg_dims(data)
-                    elif kind == "mp4":
-                        meta = parse_mp4(data)
-                        vid = next((t for t in meta["tracks"] if t["kind"] == "vide"), None)
-                        w, h = (vid["width"], vid["height"]) if vid else (0, 0)
-                    else:
-                        w, h = 0, 0
-                    out["kind"].append(kind)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["decode_error"].append(None)
-                except Exception as e:  # noqa: BLE001 — row-level tolerance
-                    out["kind"].append("error")
-                    out["width"].append(0)
-                    out["height"].append(0)
-                    out["decode_error"].append(str(e))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, bin_col).mapInPandas(batches, schema=MEDIA_META_SCHEMA)
-
-
-MEDIA_FEATURES_SCHEMA = (
-    "media_id long, kind string, decoder string, width int, height int, channels int, "
-    "sample_rate int, duration_s double, rms double, n_bytes long, decode_error string"
-)
-
-
-def decode_media_features(
-    df: DataFrame, bin_col: str = "media", id_col: str = "media_id"
-) -> DataFrame:
-    """Real decode + feature extraction where the format allows
-    (PNG + baseline-JPEG pixels, WAV samples, MP4 container metadata)
-    — one mapInPandas pass, row-level error tolerance throughout."""
-    from pdf_to_text_spark.core.jpegcodec import decode_jpeg
-    from pdf_to_text_spark.core.mediacodec import decode_png, decode_wav
-    from pdf_to_text_spark.core.mp4codec import parse_mp4
-
-    cols = [c.split(" ")[0] for c in MEDIA_FEATURES_SCHEMA.split(", ")]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bin_col]):
-                data = bytes(data) if data is not None else b""
-                kind = _sniff_kind(data)
-                r = dict.fromkeys(cols)
-                r.update(media_id=mid, kind=kind, n_bytes=len(data), decoder="none")
-                try:
-                    if kind == "png":
-                        w, h, ch, _px = decode_png(data)
-                        r.update(decoder="real", width=w, height=h, channels=ch)
-                    elif kind == "wav":
-                        ch, rate, _n, dur, rms = decode_wav(data)
-                        r.update(
-                            decoder="real", channels=ch, sample_rate=rate,
-                            duration_s=dur, rms=rms,
-                        )
-                    elif kind == "jpeg":
-                        w, h, ch, _px = decode_jpeg(data)
-                        r.update(decoder="real", width=w, height=h, channels=ch)
-                    elif kind == "mp4":
-                        meta = parse_mp4(data)
-                        vid = next(
-                            (t for t in meta["tracks"] if t["kind"] == "vide"), None
-                        )
-                        r.update(
-                            decoder="demux",  # container real, pixels not decoded
-                            duration_s=meta["duration_s"],
-                            width=vid["width"] if vid else 0,
-                            height=vid["height"] if vid else 0,
-                        )
-                except Exception as e:  # noqa: BLE001 — row tolerance (MediaError et al.)
-                    r.update(kind="error", decoder="none", decode_error=str(e))
-                rows.append(r)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(id_col, bin_col).mapInPandas(batches, schema=MEDIA_FEATURES_SCHEMA)
-
-
-def image_signatures(
-    df: DataFrame, bin_col: str = "media", id_col: str = "media_id", dim: int = 4
-) -> DataFrame:
-    """PNG/JPEG binary → REAL luma-thumbnail signature
-    (``array<double>``, length dim²) — the image analog of a text
-    embedding; feed it to the similarity tier
-    (``pairwise_topk_per_label``/``brute_force_topk``) for
-    embedding-cosine near-dup over IMAGES. Undecodable/unknown-format
-    rows are dropped (they carry no real signal)."""
-    from pdf_to_text_spark.core.jpegcodec import decode_jpeg
-    from pdf_to_text_spark.core.mediacodec import decode_png, gray_thumbnail
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, sigs = [], []
-            for mid, data in zip(pdf[id_col], pdf[bin_col]):
-                if data is None:
-                    continue
-                raw = bytes(data)
-                try:
-                    if _sniff_kind(raw) == "jpeg":
-                        w, h, ch, px = decode_jpeg(raw)
-                    else:
-                        w, h, ch, px = decode_png(raw)
-                except Exception:  # noqa: BLE001 — row tolerance
-                    continue
-                ids.append(mid)
-                sigs.append(gray_thumbnail(w, h, ch, px, dim))
-            # dtype=object: pandas would otherwise infer a 2-D numeric
-            # block for equal-length lists, which Arrow can't convert
-            # to list<double>
-            yield pd.DataFrame(
-                {"media_id": ids, "signature": pd.Series(sigs, dtype=object)}
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(
-        batches, schema="media_id long, signature array<double>"
-    )
 
 
 def rasterize_pages(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -276,125 +97,6 @@ def ocr_pages(df: DataFrame, png_col: str = "page_png", id_col: str = "doc_id") 
     )
 
 
-FRAME_SAMPLE_SCHEMA = (
-    "media_id long, frame_no int, byte_offset long, n_bytes long, "
-    "keyframe boolean, frame_bytes binary, demux_error string"
-)
-
-
-def sample_video_frames(
-    df: DataFrame, bin_col: str = "media", id_col: str = "media_id", every_n: int = 30
-) -> DataFrame:
-    """REAL video frame sampling via the MP4 demuxer: every ``every_n``-th
-    sample of the video track becomes a row carrying its 1-based
-    frame_no, absolute byte range, keyframe flag (stss) and the actual
-    sample payload bytes (the H.264 NAL units) sliced from mdat — the
-    Spark-side shape of a frame pipeline that ships byte-ranges to a
-    decoder fleet. NAL→pixel decode is NOT performed here (see
-    ``decode_video_frame``). Row-level tolerance: undemuxable rows emit
-    one (frame_no=0, demux_error) row instead of failing the task."""
-    from pdf_to_text_spark.core.mp4codec import frame_index
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in FRAME_SAMPLE_SCHEMA.split(", ")]
-        for pdf in it:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bin_col]):
-                data = bytes(data) if data is not None else b""
-                try:
-                    idx = frame_index(data)
-                except Exception as e:  # noqa: BLE001 — row tolerance
-                    rows.append(
-                        dict.fromkeys(cols) | {"media_id": mid, "frame_no": 0,
-                                               "demux_error": str(e)}
-                    )
-                    continue
-                for sno, off, size, key in idx:
-                    if (sno - 1) % every_n:
-                        continue
-                    if off < 0 or size < 0 or off + size > len(data):
-                        # stco/stsz range outside the file (truncated or
-                        # malformed mp4): an error row, never silently
-                        # short frame_bytes (ADVICE r3)
-                        rows.append(
-                            dict.fromkeys(cols)
-                            | {"media_id": mid, "frame_no": sno,
-                               "demux_error": f"sample {sno} range "
-                               f"[{off}, {off + size}) outside file of {len(data)} bytes"}
-                        )
-                        continue
-                    rows.append({
-                        "media_id": mid, "frame_no": sno, "byte_offset": off,
-                        "n_bytes": size, "keyframe": key,
-                        "frame_bytes": data[off : off + size], "demux_error": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(id_col, bin_col).mapInPandas(batches, schema=FRAME_SAMPLE_SCHEMA)
-
-
-def decode_video_frame(frame_bytes: bytes) -> dict:
-    """NAL payload → pixels for the H.264 **I_PCM subset** (round 5,
-    ``core/h264.py``): real NAL/RBSP framing (Annex-B and AVCC length
-    prefixes), exp-Golomb, SPS/PPS/slice-header parse, multi-slice
-    pictures, frame cropping, and raw 4:2:0 sample recovery from I_PCM
-    macroblocks (ITU-T H.264 §7.3.5 — the spec's uncompressed-MB
-    escape). Returns ``{"width","height","y","cb","cr"}``.
-
-    Predicted/transform-coded macroblocks (CAVLC residuals + intra
-    prediction) and CABAC raise a disclosed ``MediaError`` — CABAC's
-    arithmetic-coder state tables are the same cannot-validate-offline
-    class as arithmetic JPEG (see ``core/jpegcodec.py``); a production
-    swap-in is a native decoder inside this one function."""
-    from pdf_to_text_spark.core.h264 import decode_ipcm_frame
-
-    return decode_ipcm_frame(frame_bytes)
-
-
-VIDEO_FRAME_PIXELS_SCHEMA = (
-    "media_id long, frame_no int, width int, height int, mean_luma int, "
-    "decode_error string"
-)
-
-
-def decode_video_frames(frames: DataFrame) -> DataFrame:
-    """Pixel-decode the frames emitted by ``sample_video_frames``:
-    per-frame width/height/mean-luma via the I_PCM-subset H.264 decoder,
-    with row-level tolerance (out-of-subset or damaged payloads become a
-    ``decode_error`` row, never a task failure). Arrow-batched
-    ``mapInPandas``; no shuffle — frame rows decode where they sit."""
-    from pdf_to_text_spark.core.h264 import decode_ipcm_frame
-
-    cols = ["media_id", "frame_no", "width", "height", "mean_luma", "decode_error"]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, fno, payload, demux_err in zip(
-                pdf["media_id"], pdf["frame_no"], pdf["frame_bytes"], pdf["demux_error"]
-            ):
-                if demux_err is not None or payload is None:
-                    rows.append({"media_id": mid, "frame_no": fno, "width": None,
-                                 "height": None, "mean_luma": None,
-                                 "decode_error": demux_err or "no frame bytes"})
-                    continue
-                try:
-                    fr = decode_ipcm_frame(bytes(payload))
-                    rows.append({"media_id": mid, "frame_no": fno,
-                                 "width": fr["width"], "height": fr["height"],
-                                 "mean_luma": int(fr["y"].mean().round()),
-                                 "decode_error": None})
-                except Exception as e:  # noqa: BLE001 — row tolerance
-                    rows.append({"media_id": mid, "frame_no": fno, "width": None,
-                                 "height": None, "mean_luma": None,
-                                 "decode_error": str(e)})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return frames.select(
-        "media_id", "frame_no", "frame_bytes", "demux_error"
-    ).mapInPandas(batches, schema=VIDEO_FRAME_PIXELS_SCHEMA)
-
-
 PDF_IMAGE_SCHEMA = (
     "url string, image_no int, obj int, width int, height int, "
     "colorspace string, codec string, image_bytes binary, mean_luma int, "
@@ -413,12 +115,10 @@ def pdf_embedded_images(
     /Image`` XObject becomes a row — 1-based image_no, dimensions,
     colorspace, codec ('jpeg' for /DCTDecode, 'raw' for fully-decoded
     chains) and the image bytes, via one Arrow-batched ``mapInPandas``
-    pass (embarrassingly parallel, no shuffle — the same 100 TB shape as
-    ``decode_media_features``). With ``decode=True``, JPEG payloads are
-    pixel-decoded by the repo's own baseline/progressive codec
-    (``core/jpegcodec.py``) and ``mean_luma`` carries the rounded mean
-    luminance — the hook the image near-dup tier consumes; CCITT bitonal
-    scans (G4, G3 1-D, G3 mixed /K>0) decode to packed 1-bpc rows
+    pass (embarrassingly parallel, no shuffle). With ``decode=True``,
+    JPEG payloads are pixel-decoded by the repo's own baseline/
+    progressive codec (``core/jpegcodec.py``) and ``mean_luma`` carries
+    the rounded mean luminance; CCITT bitonal scans (G4, G3 1-D, G3 mixed /K>0) decode to packed 1-bpc rows
     (``core/ccittfax.py``) and get a bit-mean luma. Row-level
     tolerance: unparseable PDFs or unsupported image codecs (JPX,
     JBIG2) emit one (image_no=0, extract_error) row.

@@ -85,13 +85,10 @@ def token_count_bpe_ish(c: Column) -> Column:
 
 
 def fingerprint_of_words(words: Column) -> Column:
+    """Document fingerprint: md5 of the lowercased word sequence
+    (``words_of``) — stable under whitespace/punct noise (portable:
+    DuckDB md5 matches)."""
     return F.md5(F.array_join(words, " "))
-
-
-def fingerprint(c: Column) -> Column:
-    """Document fingerprint: md5 of the lowercased word sequence —
-    stable under whitespace/punct noise (portable: DuckDB md5 matches)."""
-    return fingerprint_of_words(words_of(c))
 
 
 def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -1,21 +1,12 @@
-"""Real PNG/WAV codecs + multimodal feature operators."""
+"""Real PNG and JPEG (baseline + progressive) codecs."""
 
 from __future__ import annotations
 
-import math
 import random
 
 import pytest
 
-from pdf_to_text_spark.core.mediacodec import (
-    MediaError,
-    decode_png,
-    decode_wav,
-    encode_png,
-    encode_wav,
-    gray_thumbnail,
-)
-from pdf_to_text_spark.operators.multimodal import decode_media_features, image_signatures
+from pdf_to_text_spark.core.mediacodec import MediaError, decode_png, encode_png
 
 
 def _img(w, h, ch, seed=3):
@@ -40,72 +31,6 @@ def test_png_rejects_malformed():
     good = encode_png(4, 4, 3, _img(4, 4, 3))
     with pytest.raises(MediaError):
         decode_png(good[:40])  # truncated
-
-
-def test_wav_roundtrip_rms():
-    samples = [int(10000 * math.sin(i / 5)) for i in range(8000)]
-    ch, rate, n, dur, rms = decode_wav(encode_wav(8000, samples))
-    assert (ch, rate, n) == (1, 8000, 8000)
-    assert abs(dur - 1.0) < 1e-9
-    expected = math.sqrt(sum(v * v for v in samples) / len(samples))
-    assert abs(rms - expected) < 1e-6
-
-
-def test_decode_media_features_real_vs_fake(spark):
-    from pdf_to_text_spark.core.jpegcodec import encode_jpeg
-    from pdf_to_text_spark.core.mp4codec import build_mp4
-
-    rows = [
-        (1, encode_png(20, 10, 3, _img(20, 10, 3))),
-        (2, encode_wav(16000, [0, 100, -100, 50] * 100)),
-        (3, encode_jpeg(12, 7, 1, _img(12, 7, 1))),
-        (4, b"\x89PNG\r\n\x1a\ntruncated"),
-        (5, b"\xff\xd8\xff\xe0 truncated jpeg body"),
-        (6, build_mp4([b"nal" * 5] * 6, width=32, height=24, timescale=600, sample_delta=60)),
-        (7, b"\x00\x00\x00\x18ftypisom truncated mp4 body"),
-    ]
-    df = spark.createDataFrame(rows, "media_id long, media binary")
-    got = {r["media_id"]: r.asDict() for r in decode_media_features(df).collect()}
-    assert got[1]["decoder"] == "real" and (got[1]["width"], got[1]["height"]) == (20, 10)
-    assert got[2]["decoder"] == "real" and got[2]["sample_rate"] == 16000 and got[2]["rms"] > 0
-    # jpeg is REAL baseline decode, not a fake
-    assert got[3]["decoder"] == "real" and (got[3]["width"], got[3]["height"]) == (12, 7)
-    assert got[4]["kind"] == "error" and got[4]["decode_error"]
-    assert got[5]["kind"] == "error" and got[5]["decode_error"]  # bad jpeg → row error
-    # mp4 container demux is real (dimensions + duration from moov);
-    # the 'demux' label discloses that pixels are not decoded
-    assert got[6]["decoder"] == "demux"
-    assert (got[6]["width"], got[6]["height"]) == (32, 24)
-    assert abs(got[6]["duration_s"] - 6 * 60 / 600) < 1e-9
-    assert got[7]["kind"] == "error" and got[7]["decode_error"]  # no moov → row error
-
-
-def test_image_signatures_find_near_dup(spark):
-    """Real-pixel near-dup: a one-pixel perturbation stays ~identical
-    in signature space; a different image does not."""
-    w, h = 16, 16
-    base = bytearray(_img(w, h, 3, seed=5))
-    near = bytearray(base)
-    near[0] = (near[0] + 9) % 256  # single-pixel change
-    other = _img(w, h, 3, seed=99)
-    df = spark.createDataFrame(
-        [
-            (1, encode_png(w, h, 3, bytes(base))),
-            (2, encode_png(w, h, 3, bytes(near))),
-            (3, encode_png(w, h, 3, other)),
-        ],
-        "media_id long, media binary",
-    )
-    sigs = {r["media_id"]: r["signature"] for r in image_signatures(df).collect()}
-    # verify against the pure-python reference thumbnail
-    assert sigs[1] == gray_thumbnail(w, h, 3, bytes(base), 4)
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        return d / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(x * x for x in b)))
-
-    assert cos(sigs[1], sigs[2]) > 0.999
-    assert cos(sigs[1], sigs[2]) > cos(sigs[1], sigs[3])
 
 
 def test_jpeg_roundtrip_gray_lossless_at_q100():
@@ -177,14 +102,13 @@ def test_jpeg_progressive_decodes_identical_to_baseline():
     import numpy as np
 
     from pdf_to_text_spark.core.jpegcodec import (
-        decode_jpeg, encode_jpeg, encode_jpeg_progressive, jpeg_dims)
+        decode_jpeg, encode_jpeg, encode_jpeg_progressive)
 
     rng = np.random.default_rng(11)
     for (w, h, ch) in [(16, 16, 1), (24, 17, 3), (33, 9, 3)]:
         px = rng.integers(0, 256, size=(h, w, ch), dtype=np.uint8).tobytes()
         for q in (50, 90):
             prog = encode_jpeg_progressive(w, h, ch, px, quality=q)
-            assert jpeg_dims(prog) == (w, h, ch)
             assert decode_jpeg(prog) == decode_jpeg(encode_jpeg(w, h, ch, px, quality=q))
 
 
@@ -213,23 +137,3 @@ def test_jpeg_multiscan_baseline_and_fill_bytes():
     trunc = multi[: multi.rfind(b"\xff\xda")] + b"\xff\xd9"
     with pytest.raises(MediaError, match="incomplete scans"):
         decode_jpeg(trunc)
-
-
-def test_image_signatures_accept_jpeg(spark):
-    """The image near-dup tier decodes JPEG rows for real: a PNG and a
-    q100 JPEG of the SAME image produce near-identical signatures."""
-    from pdf_to_text_spark.core.jpegcodec import encode_jpeg
-
-    w, h = 16, 16
-    base = _img(w, h, 3, seed=5)
-    df = spark.createDataFrame(
-        [(1, encode_png(w, h, 3, base)), (2, encode_jpeg(w, h, 3, base, quality=100))],
-        "media_id long, media binary",
-    )
-    sigs = {r["media_id"]: r["signature"] for r in image_signatures(df).collect()}
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        return d / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(x * x for x in b)))
-
-    assert cos(sigs[1], sigs[2]) > 0.9999

@@ -1,154 +1,8 @@
-"""Multimodal plumbing + incremental streaming extraction."""
+"""Incremental streaming extraction + the PDF embedded-image operator."""
 
 from __future__ import annotations
 
-import struct
-import zlib
-
-import pytest
 from pyspark.sql import functions as F
-
-from pdf_to_text_spark.operators.multimodal import (
-    decode_image_meta,
-    decode_video_frame,
-    sample_video_frames,
-)
-
-
-def _png(w: int, h: int) -> bytes:
-    ihdr = struct.pack(">II", w, h) + b"\x08\x02\x00\x00\x00"
-    chunk = b"IHDR" + ihdr
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + struct.pack(">I", len(ihdr))
-        + chunk
-        + struct.pack(">I", zlib.crc32(chunk))
-    )
-
-
-def test_decode_image_meta(spark):
-    from pdf_to_text_spark.core.jpegcodec import encode_jpeg
-
-    rows = [
-        (1, _png(640, 480)),
-        (2, encode_jpeg(30, 20, 1, bytes(600))),
-        (3, b"garbage bytes here"),
-        (4, None),
-        (5, b"\xff\xd8\xff\xe0 headerless jpeg body"),
-    ]
-    df = spark.createDataFrame(rows, "media_id long, media binary")
-    got = {r["media_id"]: r.asDict() for r in decode_image_meta(df).collect()}
-    assert got[1]["kind"] == "png" and (got[1]["width"], got[1]["height"]) == (640, 480)
-    # jpeg dims come from the real SOF header parse now
-    assert got[2]["kind"] == "jpeg" and (got[2]["width"], got[2]["height"]) == (30, 20)
-    assert got[3]["kind"] == "unknown" and got[3]["width"] == 0
-    assert got[4]["n_bytes"] == 0
-    assert got[5]["kind"] == "error" and got[5]["decode_error"]  # no SOF → row error
-    again = {r["media_id"]: r.asDict() for r in decode_image_meta(df).collect()}
-    assert again == got
-
-
-def test_sample_video_frames_real_demux(spark):
-    """Frame sampling is REAL demux now: every-Nth sample row carries
-    the actual NAL payload bytes + keyframe flag from the MP4 sample
-    tables; undemuxable rows degrade to a demux_error row; only
-    NAL→pixels remains an explicit stub."""
-    from pdf_to_text_spark.core.mp4codec import build_mp4
-
-    samples = [bytes([i]) * (8 + i) for i in range(10)]
-    rows = [
-        (1, build_mp4(samples, keyframe_every=4)),
-        (2, b"\x00\x00\x00\x18ftypisom truncated"),
-    ]
-    df = spark.createDataFrame(rows, "media_id long, media binary")
-    out = {}
-    for r in sample_video_frames(df, every_n=3).collect():
-        out.setdefault(r["media_id"], []).append(r.asDict())
-    got1 = sorted(out[1], key=lambda r: r["frame_no"])
-    assert [r["frame_no"] for r in got1] == [1, 4, 7, 10]
-    # the emitted bytes ARE the sample payloads
-    for r in got1:
-        assert r["frame_bytes"] == samples[r["frame_no"] - 1]
-    assert [r["keyframe"] for r in got1] == [True, False, False, False]  # stss: 1,5,9
-    assert out[2][0]["demux_error"] and out[2][0]["frame_no"] == 0
-
-    # fake payloads are not valid H.264 → disclosed MediaError (r5:
-    # the I_PCM subset decodes for real; garbage never decodes silently)
-    from pdf_to_text_spark.core.mediacodec import MediaError
-
-    with pytest.raises(MediaError):
-        decode_video_frame(got1[0]["frame_bytes"])
-
-
-def test_decode_video_frames_ipcm_end_to_end(spark):
-    """MP4 built from real I_PCM H.264 access units (AVCC length
-    prefixes, the MP4 sample shape) → demux-sample → pixel decode:
-    mean luma recovers each frame's known value; a non-H.264 payload
-    degrades to a decode_error row, not a task failure."""
-    import numpy as np
-
-    from pdf_to_text_spark.core.h264 import encode_ipcm
-    from pdf_to_text_spark.core.mp4codec import build_mp4
-    from pdf_to_text_spark.operators.multimodal import decode_video_frames
-
-    lumas = [17, 80, 133, 200]
-    samples = [
-        encode_ipcm(np.full((30, 44), v, np.uint8), length_prefixed=True)
-        for v in lumas
-    ] + [b"not an access unit"]
-    df = spark.createDataFrame(
-        [(1, build_mp4(samples, width=44, height=30))], "media_id long, media binary"
-    )
-    rows = {
-        r["frame_no"]: r.asDict()
-        for r in decode_video_frames(sample_video_frames(df, every_n=1)).collect()
-    }
-    assert len(rows) == 5
-    for i, v in enumerate(lumas, start=1):
-        assert rows[i]["decode_error"] is None
-        assert (rows[i]["width"], rows[i]["height"]) == (44, 30)
-        assert rows[i]["mean_luma"] == v
-    assert rows[5]["mean_luma"] is None and rows[5]["decode_error"]
-
-
-def test_sample_video_frames_out_of_range_is_error_row(spark):
-    """ADVICE r3: a file whose sample index points past EOF (truncated
-    or malformed stco) must emit demux_error rows for the out-of-range
-    samples — never silently short/empty frame_bytes. Built by patching
-    the LAST chunk's stco offset to near-EOF so its samples overrun."""
-    import struct
-
-    from pdf_to_text_spark.core.mp4codec import build_mp4
-
-    samples = [bytes([65 + i]) * 40 for i in range(6)]
-    full = build_mp4(samples, keyframe_every=3)
-    # chunks of 3 → patch the second chunk's stco offset to 10 bytes
-    # before EOF (search inside moov, i.e. past mdat, so a coincidental
-    # byte pattern in payloads/box sizes can't be hit)
-    moov_start = full.index(samples[3][:8]) + sum(len(s) for s in samples[3:])
-    second_off = full.index(
-        struct.pack(">I", full.index(samples[3][:8])), moov_start
-    )
-    patched = (
-        full[:second_off]
-        + struct.pack(">I", len(full) - 10)
-        + full[second_off + 4 :]
-    )
-    df = spark.createDataFrame([(1, patched)], "media_id long, media binary")
-    rows = sorted(
-        (r.asDict() for r in sample_video_frames(df, every_n=1).collect()),
-        key=lambda r: r["frame_no"],
-    )
-    assert len(rows) == 6
-    ok = [r for r in rows if r["demux_error"] is None]
-    bad = [r for r in rows if r["demux_error"] is not None]
-    assert [r["frame_no"] for r in ok] == [1, 2, 3]
-    assert [r["frame_no"] for r in bad] == [4, 5, 6]
-    for r in ok:  # in-range rows still carry exact payloads
-        assert r["frame_bytes"] == samples[r["frame_no"] - 1]
-    for r in bad:
-        assert r["frame_bytes"] is None
-        assert "outside file" in r["demux_error"]
 
 
 def test_incremental_streaming_extraction(spark, corpus_dir, golden_extracted, tmp_path):

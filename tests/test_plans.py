@@ -116,6 +116,22 @@ def _assert_no_key_exchange(name: str, plan: str) -> None:
             assert "RoundRobinPartitioning" in line, (name, line, plan)
 
 
+def test_oracle_sql_is_frozen():
+    """``oracle_sql()`` is the correctness gate every query is checked
+    against, so its text is frozen: a refactor of the query side must
+    leave it byte-identical and declare the same 56 names."""
+    import hashlib
+    import json
+
+    import __spark_entry__ as E
+
+    oracle = E.oracle_sql()
+    digest = hashlib.sha256(json.dumps(oracle, sort_keys=True).encode()).hexdigest()
+    assert digest == "0b6ae9a712fdbf16476c7ca2ab656c7466a84653efcdbe5ed3ac1583317d5857"
+    assert set(E.queries()) == set(oracle)
+    assert len(oracle) == 56
+
+
 def test_sink_queries_are_shuffle_free(spark):
     """The artifact sinks (PDF/DOCX/PPTX-slides/raster-OCR/topic-route)
     are per-row projections — at 100 TB they must compile to
@@ -137,8 +153,8 @@ def test_sink_queries_are_shuffle_free(spark):
 
 def test_new_sink_queries_are_shuffle_free(spark):
     """Round-3/4 sinks: chart parts (q50), image-placeholder DOCX
-    (q51), and the PDF roundtrips (q55/q56) are per-row projections —
-    zero key-based Exchanges."""
+    (q51), and every query on the two PDF-roundtrip frames (q55–q62)
+    are per-row projections — zero key-based Exchanges."""
     import __spark_entry__ as E
 
     qs = E.queries()
@@ -147,6 +163,12 @@ def test_new_sink_queries_are_shuffle_free(spark):
         "q51_image_placeholder",
         "q55_pdf_widened_roundtrip",
         "q56_pdf_notch2_roundtrip",
+        "q57_pdf_filter_chain_roundtrip",
+        "q58_pdf_embedded_image",
+        "q59_pdf_encrypted_roundtrip",
+        "q60_pdf_modern_structure_roundtrip",
+        "q61_pdf_aes_roundtrip",
+        "q62_pdf_g4_image",
     ):
         plan = _plan(qs[name](spark, "/root/testdata/sf0.001"))
         _assert_no_key_exchange(name, plan)

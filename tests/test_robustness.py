@@ -126,12 +126,3 @@ def test_chart_routing_null_and_empty_content(spark):
     rows = {r["i"]: r for r in df.select("i", parts.alias("p")).collect()}
     assert rows[1]["p"]["charts"] == [None]
     assert rows[2]["p"] is None or rows[2]["p"]["slides"] is None
-
-
-def test_sample_video_frames_null_media(spark):
-    """Null binary degrades to a demux_error row, never a task failure."""
-    from pdf_to_text_spark.operators.multimodal import sample_video_frames
-
-    df = spark.createDataFrame([(1, None)], "media_id long, media binary")
-    rows = sample_video_frames(df).collect()
-    assert len(rows) == 1 and rows[0]["demux_error"]
