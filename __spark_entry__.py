@@ -24,7 +24,7 @@ from pdf_to_text_spark.functions.pdfsink import text_to_pdf
 from pdf_to_text_spark.operators import dedup as D
 from pdf_to_text_spark.operators import similarity as S
 from pdf_to_text_spark.operators import textstats as TS
-from pdf_to_text_spark.operators.extract import extract_documents
+from pdf_to_text_spark.operators.extract import extract_documents, reassemble_documents
 from pdf_to_text_spark.streaming.stream import windowed_event_counts
 
 SF0001 = "/root/testdata/sf0.001"
@@ -301,44 +301,31 @@ def _q17_reassembly_lex(spark, sf):
         F.lit("\n\n---- doc_"), F.col("doc_id").cast("string"), F.lit(" ----\n\n"),
         F.substring("text", 1, 40),
     )
-    named = F.struct(
-        F.concat(F.lit("doc_"), F.col("doc_id").cast("string")).alias("k"), part.alias("p")
-    )
-    return (
-        d.groupBy("source")
-        .agg(
-            F.array_join(
-                F.transform(F.array_sort(F.collect_list(named)), lambda s: s["p"]),
-                "\n" + "=" * 50 + "\n",
-            ).alias("combined")
-        )
-    )
+    key = F.concat(F.lit("doc_"), F.col("doc_id").cast("string"))
+    return reassemble_documents(
+        d, "source", key, part, "\n" + "=" * 50 + "\n"
+    ).withColumnRenamed("combined_text", "combined")
 
 
 def _q18_chunk_concat(spark, sf):
     d = _t(spark, sf, "documents")
-    named = F.struct(
-        F.lpad(F.col("doc_id").cast("string"), 9, "0").alias("k"),
-        F.substring("text", 1, 30).alias("p"),
-    )
-    return (
-        d.groupBy((F.floor(F.col("doc_id") / 5)).cast("long").alias("chunk_id"))
-        .agg(
-            F.array_join(
-                F.transform(F.array_sort(F.collect_list(named)), lambda s: s["p"]),
-                "\n\n---\n\n",
-            ).alias("chunk_text")
-        )
-    )
+    chunk = F.floor(F.col("doc_id") / 5).cast("long").alias("chunk_id")
+    key = F.lpad(F.col("doc_id").cast("string"), 9, "0")
+    return reassemble_documents(
+        d, chunk, key, F.substring("text", 1, 30), "\n\n---\n\n"
+    ).withColumnRenamed("combined_text", "chunk_text")
 
 
 def _q19_line_paging(spark, sf):
+    from pdf_to_text_spark.operators.blueprint import paginate_slides
+
     d = _par(spark, _t(spark, sf, "documents"))
     s = d.select(
         "doc_id", F.posexplode(X.sentences_strict(_punctuated(F.col("text")))).alias("pos", "s")
     )
     return (
-        s.groupBy("doc_id", F.floor(F.col("pos") / 12).cast("long").alias("page_no"))
+        paginate_slides(s, "pos")
+        .groupBy("doc_id", F.col("slide_no").alias("page_no"))
         .agg(F.count("*").alias("n_lines"))
     )
 
@@ -457,13 +444,14 @@ def _q44_stopword_removal(spark, sf):
 def _q22_blueprint(spark, sf):
     """Deterministic restructure (M7/M10 analog): synthesize markdown
     from each doc (heading + bullet per sentence), build the blueprint
-    struct, explode to (doc_id, slide_no, title, n_points) — all flat
-    scalars, so the DuckDB twin replays the same split/trim steps."""
-    from pdf_to_text_spark.operators.blueprint import text_to_blueprint
+    and read it back through its JSON form (F13), explode to (doc_id,
+    slide_no, title, n_points) — all flat scalars, so the DuckDB twin
+    replays the same split/trim steps."""
+    from pdf_to_text_spark.operators.blueprint import blueprint_json_roundtrip
 
-    d = _t(spark, sf, "documents")
-    bp = d.select(
-        "doc_id", F.posexplode(text_to_blueprint(_md_src())).alias("slide_no", "slide")
+    d = _t(spark, sf, "documents").select("doc_id", _md_src().alias("md"))
+    bp = blueprint_json_roundtrip(d, "md").select(
+        "doc_id", F.posexplode("blueprint").alias("slide_no", "slide")
     )
     return bp.select(
         "doc_id", "slide_no", F.col("slide.title").alias("title"),
@@ -567,8 +555,9 @@ def _q48_pptx_slides(spark, sf):
     """K5 PPTX sink (basic variant), slide part: blueprint →
     PresentationML slide XML per slide, first slide on the title
     layout (O4). Container packaging (`functions.pptxsink.
-    pptx_package`) is pinned by pytest (zip/rels/content-type
-    consistency); the XML itself is hash-checked here."""
+    pptx_package_with_charts`, null charts for a text-only deck) is
+    pinned by pytest (zip/rels/content-type consistency); the XML
+    itself is hash-checked here."""
     from pdf_to_text_spark.functions.pptxsink import blueprint_to_slide_xml
     from pdf_to_text_spark.operators.blueprint import text_to_blueprint
 
@@ -1259,13 +1248,6 @@ with w0 as (
 )
 select doc_id, {assemble} as simhash from b
 """
-
-
-def _planes_sql() -> str:
-    return ", ".join(
-        "[" + ",".join(str(v) for v in p) + "]::DOUBLE[] as p" + str(i)
-        for i, p in enumerate(PLANES)
-    )
 
 
 def oracle_sql() -> dict[str, str]:

@@ -13,9 +13,9 @@ operators/   DataFrame-level operators: extraction routing/explode/
              reassembly, dedup (exact/minhash/simhash), similarity
              search, text analytics, and the page-image tier (page
              rasterize, OCR, PDF embedded-image extraction).
-plans/       end-to-end jobs: the extraction pipeline with salting,
-             per-partition lineage, partition-completion manifests and
-             idempotent resume.
+plans/       end-to-end jobs: the extraction pipeline with whale-aware
+             placement, per-partition lineage, partition-completion
+             manifests and idempotent resume.
 streaming/   Structured Streaming wrapper (availableNow incremental runs).
 """
 

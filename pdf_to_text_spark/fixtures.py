@@ -396,7 +396,7 @@ def write_corpus(
         # bounded row groups (r6): pyarrow's default wrote the whole
         # corpus as ONE row group, and Spark's byte-range splitting
         # cannot split inside a row group — an 892 MB bench corpus
-        # scanned (and fed the salted repartition's shuffle write) on a
+        # scanned (and fed the input repartition's shuffle write) on a
         # single task. ~16 MB groups give the reader real splits; the
         # logical content is unchanged (same rows, same order).
         row_group_size=4096,

@@ -1,14 +1,9 @@
 from pdf_to_text_spark.functions.text import (  # noqa: F401
-    blank_collapse,
     charset_clean,
-    code_fence_strip,
     deep_clean,
     extract_image_tag,
-    heading_level,
-    is_bullet,
     meaningful_len,
     normalize_extracted,
-    sentence_split,
     strip_outer,
     text_layer_sufficient,
     token_count,

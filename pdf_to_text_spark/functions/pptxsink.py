@@ -8,10 +8,11 @@ The reference ships four PPTX writers (plain lines
 share — one slide per blueprint entry, title placeholder + one bullet
 paragraph per content point, first slide on the title layout (O4,
 ``core_document_processing.py:314-326``) — as a pure-Catalyst
-slide-XML builder (hash-checkable in DuckDB) plus an Arrow-UDF zip
-packager mirroring ``functions.udfs.docx_package``. Theming/charts
-remain out of scope (they are presentation styling, not data
-processing). Packages are structurally valid OPC (zip + rels +
+slide-XML builder (hash-checkable in DuckDB) plus one Arrow-UDF zip
+packager, ``pptx_package_with_charts``, mirroring
+``functions.udfs.docx_package`` (a text-only deck is its null-chart
+case); ``pptx_package_from_template`` repacks the same slides inside an
+uploaded template. Packages are structurally valid OPC (zip + rels +
 content types all consistent, pinned by tests); no Office install
 exists here to certify rendering.
 """
@@ -534,13 +535,6 @@ def _pack_pptx(slides, charts=None) -> bytes | None:
     return opc_zip(members)
 
 
-@F.pandas_udf(T.BinaryType())
-def pptx_package(slide_xmls: pd.Series) -> pd.Series:
-    """``array<string>`` of slide XMLs → one deterministic .pptx
-    (shared ``functions.udfs.opc_zip`` container contract)."""
-    return slide_xmls.map(_pack_pptx)
-
-
 _LAYOUT_CT = (
     '<Override PartName="/{n}" ContentType='
     '"application/vnd.openxmlformats-officedocument.presentationml.slideLayout+xml"/>'
@@ -718,9 +712,11 @@ def pptx_package_from_template(slide_xmls: pd.Series, template: pd.Series) -> pd
 
 @F.pandas_udf(T.BinaryType())
 def pptx_package_with_charts(slide_xmls: pd.Series, chart_xmls: pd.Series) -> pd.Series:
-    """Chart-bearing variant: second arg is a same-length array where
+    """``array<string>`` of slide XMLs + a same-length array where
     element i is slide i's ``c:chartSpace`` part XML (null = text-only
-    slide, same as ``pptx_package``). The reference counterpart is
+    slide; a null array is a text-only deck) → one deterministic .pptx
+    (shared ``functions.udfs.opc_zip`` container contract). The
+    reference counterpart is
     ``create_pptx_with_style``'s chart branch
     (pptx_designer.py:177-290 + _add_chart_slide:131-172)."""
     return pd.Series(

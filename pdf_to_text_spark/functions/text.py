@@ -35,12 +35,6 @@ def strip_outer(c: Column) -> Column:
     return F.regexp_replace(F.regexp_replace(c, RE_LSTRIP, ""), RE_RSTRIP, "")
 
 
-def blank_collapse(c: Column) -> Column:
-    """F3: per-line trim + collapse runs of blank lines to one
-    (core_document_processing.py:185-194)."""
-    return F.regexp_replace(F.regexp_replace(c, RE_LINETRIM, "\n"), RE_BLANKS, "\n\n")
-
-
 def normalize_extracted(c: Column) -> Column:
     """Frozen normalization chain v1 — Catalyst twin of
     ``core.textnorm.normalize_extracted`` (same patterns, same order)."""
@@ -80,19 +74,12 @@ def deep_clean(c: Column) -> Column:
     return strip_outer(F.regexp_replace(c, r"[ \t\n\r\f\x0b]+", " "))
 
 
-def sentence_split(c: Column) -> Column:
-    """M8 deterministic sentence split: break after . ! ? followed by
-    whitespace (rule-based replacement for spaCy/nltk,
-    5_NLP/nlp/sentence_splitter.py:12-17). Returns array<string> with
-    empties removed."""
-    arr = F.split(c, r"(?<=[.!?])[ \t\n]+")
-    return F.filter(F.transform(arr, lambda s: F.trim(s)), lambda s: F.length(s) > 0)
-
-
 def sentences_strict(c: Column) -> Column:
-    """M8 variant with an RE2-safe pattern (no lookbehind) so the
-    DuckDB oracle can run the identical regex: a sentence is a maximal
-    run of non-terminators followed by ≥1 terminator."""
+    """M8 deterministic sentence split (rule-based replacement for
+    spaCy/nltk, 5_NLP/nlp/sentence_splitter.py:12-17) with an RE2-safe
+    pattern (no lookbehind) so the DuckDB oracle can run the identical
+    regex: a sentence is a maximal run of non-terminators followed by
+    ≥1 terminator; empties are removed."""
     arr = F.regexp_extract_all(c, F.lit(r"[^.!?]+[.!?]+"), 0)
     return F.filter(F.transform(arr, lambda s: F.trim(s)), lambda s: F.length(s) > 0)
 
@@ -112,17 +99,6 @@ def is_topic(c: Column, max_words: int = 10) -> Column:
 
 
 # -------------------------------------------------- markdown / blueprint ops
-
-
-def heading_level(c: Column) -> Column:
-    """F9: markdown heading level = count of leading '#' (0 = not a
-    heading) (core_document_processing.py:320-323)."""
-    return F.length(F.regexp_extract(c, r"^(#+)[ ]", 1))
-
-
-def is_bullet(c: Column) -> Column:
-    """F9: bullet-line predicate (^[*•-] + space)."""
-    return F.regexp_extract(c, r"^([*•\-])[ ]", 1) != F.lit("")
 
 
 def extract_image_tag(c: Column) -> Column:
@@ -145,12 +121,6 @@ def render_image_placeholder(pt: Column) -> Column:
     return F.when(
         tag != F.lit(""), F.concat(F.lit("🖼️ [PROMPT: "), tag, F.lit("]"))
     ).otherwise(pt)
-
-
-def code_fence_strip(c: Column) -> Column:
-    """F12: strip ```json fences (ai_presentation generator.py:47-52)."""
-    c = F.regexp_replace(c, r"^```[a-zA-Z]*\n", "")
-    return F.regexp_replace(c, r"\n?```$", "")
 
 
 # ----------------------------------------------------------- F11 chart parse

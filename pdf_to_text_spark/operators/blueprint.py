@@ -14,7 +14,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql import Window as W
 
 # the reference's response_schema (core_document_generator.py:239-254)
 BLUEPRINT_SCHEMA = T.ArrayType(
@@ -68,13 +67,11 @@ def text_to_blueprint(c: Column) -> Column:
 def blueprint_json_roundtrip(df: DataFrame, text_col: str = "text") -> DataFrame:
     """F13: blueprint → JSON string → parsed struct (the reference's
     materialized IR is the JSON string; user edits re-enter via parse,
-    ui.py:180-187). Emits both for round-trip testing."""
-    bp = text_to_blueprint(F.col(text_col))
-    return df.select(
-        "*",
-        F.to_json(bp).alias("blueprint_json"),
-        F.from_json(F.to_json(bp), BLUEPRINT_SCHEMA).alias("blueprint"),
-    )
+    ui.py:180-187). Adds ``blueprint_json`` and the ``blueprint`` parsed
+    back from it; q22 reads the parsed side."""
+    return df.withColumn(
+        "blueprint_json", F.to_json(text_to_blueprint(F.col(text_col)))
+    ).withColumn("blueprint", F.from_json("blueprint_json", BLUEPRINT_SCHEMA))
 
 
 def blueprint_to_markdown(bp: Column) -> Column:
@@ -156,20 +153,10 @@ def blueprint_to_docx_xml(bp: Column) -> Column:
     return F.concat(F.lit(DOCX_XML_HEAD), F.array_join(slides, ""), F.lit(DOCX_XML_TAIL))
 
 
-def paginate_slides(df: DataFrame, id_col: str, line_col: str, max_lines: int = 12) -> DataFrame:
-    """A7: accumulate lines, flush every ``max_lines`` (12/slide in
-    ppt_formation.py:98) — window row_number → page group."""
-    w = W.partitionBy(id_col).orderBy(line_col)
-    return (
-        df.withColumn("rn", F.row_number().over(w) - 1)
-        .withColumn("slide_no", (F.col("rn") / max_lines).cast("long"))
-        .drop("rn")
-    )
-
-
-def first_slide_is_title(df: DataFrame, id_col: str, slide_no_col: str = "slide_no") -> DataFrame:
-    """O4: slide 0 uses the title layout, the rest content layout
-    (core_document_processing.py:314-326)."""
+def paginate_slides(df: DataFrame, pos_col: str, max_lines: int = 12) -> DataFrame:
+    """A7: flush a slide every ``max_lines`` lines (12/slide in
+    ppt_formation.py:98) — ``slide_no = floor(pos / max_lines)`` over a
+    0-based line position such as a posexplode's ``pos``."""
     return df.withColumn(
-        "layout", F.when(F.col(slide_no_col) == 0, "title").otherwise("content")
+        "slide_no", F.floor(F.col(pos_col) / max_lines).cast("long")
     )

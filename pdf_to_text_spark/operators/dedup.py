@@ -12,6 +12,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T  # noqa: F401
 
+from pdf_to_text_spark.core.caching import register_cache
+
 # ------------------------------------------------------------------ exact
 
 
@@ -103,7 +105,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     shingle_n: int = 3,
     max_bucket: int | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """LSH candidate pairs: split the signature into ``bands`` bands of
     ``num_hashes/bands`` rows; docs colliding on any full band are
@@ -125,10 +126,10 @@ def minhash_lsh_pairs(
     so the shingle explode (interpreted higher-order exprs — the
     expensive part) evaluates once. At 100 TB the signature table is a
     materialized intermediate dataset, not a cache. The cached frame is
-    NOT unpersisted here (the returned plan still reads it lazily); a
-    long-lived session making repeated calls should pass
-    ``cache=False`` or ``spark.catalog.clearCache()`` after
-    materializing each result — storage-memory leak otherwise.
+    NOT unpersisted here (the returned plan still reads it lazily); it
+    is registered with ``core.caching``, so a long-lived session takes
+    ``mark_caches()`` before a call and ``release_caches_since(mark)``
+    after materializing the result.
     """
     if num_hashes % bands != 0:
         raise ValueError(
@@ -136,11 +137,7 @@ def minhash_lsh_pairs(
             "a remainder would silently drop trailing signature rows and weaken recall"
         )
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
-    if cache:
-        from pdf_to_text_spark.core.caching import register_cache
-
-        sigs = register_cache(sigs)
+    sigs = register_cache(minhash_signatures(df, text_col, id_col, num_hashes, shingle_n))
     band_cols = [
         F.md5(
             F.concat_ws("|", *[F.col(f"sig_{b * rows_per_band + r}") for r in range(rows_per_band)])
@@ -294,7 +291,6 @@ def ngram_jaccard_pairs(
     shingle_n: int = 3,
     threshold: float = 0.8,
     max_df: int | None = None,
-    cache: bool = True,
     strategy: str = "kernel",
 ) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs sharing ≥1 shingle.
@@ -341,13 +337,8 @@ def ngram_jaccard_pairs(
     # exprs — the expensive part) runs once; the hot-list groupBy and
     # the downstream consumers all read the cache, and the broadcast
     # anti-join applied per consumer is cheap by comparison. Same
-    # unpersist caveat as minhash_lsh_pairs: cache=False for repeated
-    # calls in a long-lived session.
-    sh = shingle_table(df, text_col, id_col, shingle_n)
-    if cache:
-        from pdf_to_text_spark.core.caching import register_cache
-
-        sh = register_cache(sh)
+    # lifetime as minhash_lsh_pairs' signature cache (``core.caching``).
+    sh = register_cache(shingle_table(df, text_col, id_col, shingle_n))
     if max_df is not None:
         hot = (
             sh.groupBy("shingle")

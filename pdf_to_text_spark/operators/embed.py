@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
+from pdf_to_text_spark.core.caching import register_cache
+
 EMBED_DIM = 16
 
 _TOKEN_RE = re.compile(r"[^a-z0-9]+")
@@ -115,7 +117,6 @@ def centrality_topk_from_text(
     group_col: str = "source",
     k: int = 3,
     dim: int = EMBED_DIM,
-    cache: bool = True,
     model_fn=None,
 ) -> DataFrame:
     """The reference's extractive-summarizer chain run from RAW TEXT
@@ -160,12 +161,9 @@ def centrality_topk_from_text(
     # both sides of the self-join read this frame: cache so the embed
     # UDF evaluates once per doc, not once per join side (at production
     # scale the embedding table is a materialized intermediate instead).
-    # Not unpersisted here — the returned plan reads it lazily; repeated
-    # callers in a long-lived session pass cache=False or clearCache()
-    if cache:
-        from pdf_to_text_spark.core.caching import register_cache
-
-        e = register_cache(e)
+    # Not unpersisted here — the returned plan reads it lazily; it is
+    # registered with ``core.caching`` for the caller's release.
+    e = register_cache(e)
     if unpack:
         a_cols = [F.col(f"vn_{i}").alias(f"va_{i}") for i in range(dim)]
         b_cols = [F.col(f"vn_{i}").alias(f"vb_{i}") for i in range(dim)]

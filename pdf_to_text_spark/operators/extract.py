@@ -211,44 +211,20 @@ def extract_pdf_page_table(
 
 
 def reassemble_documents(
-    page_df: DataFrame,
-    order: str = "numeric",
-    header_fmt: str = "\n\n---- {name} ----\n\n",
-    separator: str = "\n" + "=" * 50 + "\n",
+    df: DataFrame, group: str | Column, key: Column, part: Column, sep: str
 ) -> DataFrame:
-    """A4/A5: per-document ordered concat of page texts with headers —
-    the reference's ``combine_texts.py:17-30`` (lexicographic) and
-    ``core_document_generator.py:185-187`` (numeric) variants, one
-    parameterized operator.
+    """K2/A4/A5: per-group ordered concat — ``groupBy(group)``, sort the
+    ``(key, part)`` structs, join the parts with ``sep``. Output: the
+    group column(s) and ``combined_text``.
 
-    Input: (url, page_num, page_text). Output: (url, combined_text).
-    One shuffle on url; map-side partial aggregation applies since
-    collect_list is partial-izable.
+    The caller's ``key`` sets the order. A string key such as
+    ``"page_" || page_num`` sorts lexicographically, so page_10 comes
+    before page_2: the reference's ``combine_texts.py:17-30`` quirk. A
+    zero-padded key gives numeric order
+    (``core_document_generator.py:185-187``). One shuffle on the group;
+    collect_list aggregates partially on the map side.
     """
-    if order == "lexicographic":
-        # page_10 sorts before page_2 — the reference's quirk, preserved
-        sort_key = F.concat(F.lit("page_"), F.col("page_num").cast("string"))
-    elif order == "numeric":
-        sort_key = F.lpad(F.col("page_num").cast("string"), 9, "0")
-    else:
-        raise ValueError(order)
-    named = F.struct(
-        sort_key.alias("k"),
-        F.concat(F.lit("page_"), F.col("page_num").cast("string")).alias("name"),
-        F.col("page_text").alias("t"),
-    )
-    pre, post = header_fmt.split("{name}")
-    return (
-        page_df.groupBy("url")
-        .agg(F.array_sort(F.collect_list(named)).alias("parts"))
-        .select(
-            "url",
-            F.array_join(
-                F.transform(
-                    F.col("parts"),
-                    lambda p: F.concat(F.lit(pre), p["name"], F.lit(post), p["t"]),
-                ),
-                separator,
-            ).alias("combined_text"),
-        )
+    parts = F.array_sort(F.collect_list(F.struct(key.alias("k"), part.alias("p"))))
+    return df.groupBy(group).agg(
+        F.array_join(F.transform(parts, lambda s: s["p"]), sep).alias("combined_text")
     )

@@ -104,6 +104,30 @@ PDF_IMAGE_SCHEMA = (
 )
 
 
+def _mean_luma(im: dict) -> int | None:
+    """Rounded mean luminance of one extracted image, or None for a
+    kind that is not pixel-decoded here. JPEG goes through the repo's
+    own codec; raw 8-bpc gray is averaged as is; packed 1-bpc rows
+    (e.g. CCITT G4), byte-aligned per row with 1 bits white (§7.4.6
+    BlackIs1 default), are averaged over the real pixels only, the
+    row-padding bits excluded. A decode failure raises."""
+    import numpy as np
+
+    if im["codec"] == "jpeg":
+        from pdf_to_text_spark.core.jpegcodec import decode_jpeg
+
+        _, _, _, px = decode_jpeg(im["data"])
+        return int(round(float(np.frombuffer(px, np.uint8).mean())))
+    if im["codec"] == "raw" and im["bpc"] == 8:
+        return int(round(sum(im["data"]) / len(im["data"]))) if im["data"] else None
+    if im["codec"] == "raw" and im["bpc"] == 1:
+        w, h = im["width"], im["height"]
+        rb = (w + 7) // 8
+        arr = np.unpackbits(np.frombuffer(im["data"], np.uint8).reshape(h, rb), axis=1)[:, :w]
+        return int(round(float(arr.mean()) * 255))
+    return None
+
+
 def pdf_embedded_images(
     df: DataFrame,
     bin_col: str = "html",
@@ -121,7 +145,10 @@ def pdf_embedded_images(
     the rounded mean luminance; CCITT bitonal scans (G4, G3 1-D, G3 mixed /K>0) decode to packed 1-bpc rows
     (``core/ccittfax.py``) and get a bit-mean luma. Row-level
     tolerance: unparseable PDFs or unsupported image codecs (JPX,
-    JBIG2) emit one (image_no=0, extract_error) row.
+    JBIG2) emit one (image_no=0, extract_error) row; an image whose
+    pixels fail to decode (e.g. an arithmetic-coded SOF9 JPEG) keeps
+    its row with a null ``mean_luma`` and the codec's message in
+    ``extract_error``, prefixed with the codec (``jpeg:…``, ``raw:…``).
 
     Reference parity: generalizes the reference's page-level rasterize
     hop (``core_document_processing.py:60-66``) to first-class image
@@ -144,45 +171,18 @@ def pdf_embedded_images(
                     )
                     continue
                 for i, im in enumerate(imgs, start=1):
-                    luma = None
-                    if decode and im["codec"] == "jpeg":
+                    luma = err = None
+                    if decode:
                         try:
-                            import numpy as np
-
-                            from pdf_to_text_spark.core.jpegcodec import decode_jpeg
-
-                            _, _, _, px = decode_jpeg(im["data"])
-                            luma = int(round(float(np.frombuffer(px, np.uint8).mean())))
-                        except Exception:  # noqa: BLE001 — meta survives
-                            luma = None
-                    elif decode and im["codec"] == "raw" and im["bpc"] == 8:
-                        luma = (
-                            int(round(sum(im["data"]) / len(im["data"])))
-                            if im["data"] else None
-                        )
-                    elif decode and im["codec"] == "raw" and im["bpc"] == 1:
-                        # packed bitonal rows (e.g. CCITT G4), byte-
-                        # aligned per row; 1 bits are white (§7.4.6
-                        # BlackIs1 default) — mean over REAL pixels only,
-                        # the row-padding bits are excluded
-                        try:
-                            import numpy as np
-
-                            w, h = im["width"], im["height"]
-                            rb = (w + 7) // 8
-                            arr = np.unpackbits(
-                                np.frombuffer(im["data"], np.uint8).reshape(h, rb),
-                                axis=1,
-                            )[:, :w]
-                            luma = int(round(float(arr.mean()) * 255))
-                        except Exception:  # noqa: BLE001 — meta survives
-                            luma = None
+                            luma = _mean_luma(im)
+                        except Exception as e:  # noqa: BLE001 — meta survives
+                            err = f"{im['codec']}:{e}"
                     rows.append({
                         "url": uid, "image_no": i, "obj": im["obj"],
                         "width": im["width"], "height": im["height"],
                         "colorspace": im["colorspace"], "codec": im["codec"],
                         "image_bytes": im["data"], "mean_luma": luma,
-                        "extract_error": None,
+                        "extract_error": err,
                     })
             yield pd.DataFrame(rows, columns=cols)
 

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pdf_to_text_spark.core.caching import register_cache
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -259,7 +261,6 @@ def lsh_near_dup_pairs(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     n_docs: int | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-dup at scale: the blocking key is a
     sign-LSH bucket, not a label — the global self-join becomes an
@@ -303,11 +304,7 @@ def lsh_near_dup_pairs(
     # off-width vectors reproduce the expression semantics in-kernel
     # (zip_with null-padding poisons every dot → bucket 0; vn from the
     # row's own width).
-    with_b = _bucket_norm_projection(df, planes, vec_col, id_col)
-    if cache:
-        from pdf_to_text_spark.core.caching import register_cache
-
-        with_b = register_cache(with_b)
+    with_b = register_cache(_bucket_norm_projection(df, planes, vec_col, id_col))
     if max_bucket is not None:
         hot = (
             with_b.groupBy("bucket")

@@ -1,16 +1,14 @@
-"""Ingest sources: build the pages table from raw inputs (SURVEY §2.1).
+"""Ingest source: build the pages table from a document folder (SURVEY §2.1).
 
 The reference walks directories one file at a time
 (``main.py:28-35``, ``convert_pdfs_pymupdf.py:38``); the Spark-native
-equivalents are declarative scans that parallelize and prune for free.
+equivalent is a declarative scan that parallelizes and prunes for free.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 
 def scan_document_dir(
@@ -38,24 +36,3 @@ def scan_document_dir(
         F.lit(None).cast("string").alias("lang"),
     )
 
-
-def pages_from_bytes(
-    spark: SparkSession, rows: list[tuple[str, bytes]]
-) -> DataFrame:
-    """S3/S4: in-memory uploads → pages rows (upload-source analog)."""
-    data = [(u, None, b, None, None) for u, b in rows]
-    return spark.createDataFrame(data, PAGES_SCHEMA)
-
-
-def scan_text_dir(spark: SparkSession, path: str) -> DataFrame:
-    """S5: whole-file text source with filename (text-file ingest,
-    ``ppt_formation.py:20-22``)."""
-    return (
-        spark.read.format("text")
-        .option("wholetext", "true")
-        .load(path)
-        .select(
-            F.input_file_name().alias("url"),
-            F.col("value").alias("text"),
-        )
-    )

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from pdf_to_text_spark.functions.udfs import nfkc_lower, remove_stopwords
 from pdf_to_text_spark.operators.blueprint import (
     blueprint_json_roundtrip,
-    first_slide_is_title,
     paginate_slides,
     text_to_blueprint,
 )
@@ -40,13 +39,12 @@ def test_blueprint_json_roundtrip(spark):
     assert '"title":"Intro"' in row["blueprint_json"]
 
 
-def test_paginate_and_title_layout(spark):
+def test_paginate_slides(spark):
     rows = [("d", i, f"line{i:02d}") for i in range(30)]
     df = spark.createDataFrame(rows, "doc string, line_no int, line string")
-    out = first_slide_is_title(paginate_slides(df, "doc", "line_no", max_lines=12), "doc")
-    got = {(r["line_no"]): (r["slide_no"], r["layout"]) for r in out.collect()}
-    assert got[0] == (0, "title") and got[11] == (0, "title")
-    assert got[12] == (1, "content") and got[29] == (2, "content")
+    got = {r["line_no"]: r["slide_no"] for r in paginate_slides(df, "line_no").collect()}
+    assert got[0] == 0 and got[11] == 0
+    assert got[12] == 1 and got[23] == 1 and got[24] == 2 and got[29] == 2
 
 
 def test_nfkc_lower_udf(spark):

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import functions as F
 
+from pdf_to_text_spark.core.caching import mark_caches, release_caches_since
 from pdf_to_text_spark.operators import dedup as D
 from pdf_to_text_spark.operators import similarity as S
 
@@ -149,7 +150,9 @@ def test_zero_norm_vectors_pair_with_nothing(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, label int, embedding array<float>")
     zero = {4, 5, 6}
-    lsh = S.lsh_near_dup_pairs(df, [[1.0, 1.0]], threshold=0.9, cache=False).collect()
+    mark = mark_caches()
+    lsh = S.lsh_near_dup_pairs(df, [[1.0, 1.0]], threshold=0.9).collect()
+    assert release_caches_since(mark) == 1
     assert [(r["id_a"], r["id_b"]) for r in lsh] == [(1, 2)], lsh
     top = S.pairwise_topk_per_label(df, k=10).collect()
     assert {(r["id_a"], r["id_b"]) for r in top} == {(1, 2), (1, 3), (2, 3)}, top

@@ -6,6 +6,7 @@ import hashlib
 
 from pyspark.sql import functions as F
 
+from pdf_to_text_spark.core.caching import mark_caches, release_caches_since
 from pdf_to_text_spark.operators.embed import centrality_topk_from_text, with_embedding
 
 
@@ -78,9 +79,9 @@ def test_model_fn_injection(spark):
         [("g", 1, "aaa"), ("g", 2, "aae"), ("g", 3, None)],
         "source string, doc_id long, text string",
     )
-    out = centrality_topk_from_text(
-        cdf, "text", "doc_id", "source", k=3, cache=False, model_fn=_tiny_model
-    ).collect()
+    mark = mark_caches()
+    out = centrality_topk_from_text(cdf, "text", "doc_id", "source", k=3, model_fn=_tiny_model).collect()
+    assert release_caches_since(mark) == 1
     assert {r["doc_id"] for r in out} == {1, 2}
 
 

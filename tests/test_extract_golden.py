@@ -52,10 +52,16 @@ def test_order_invariance_under_shuffled_input(pages_df, golden_extracted, spark
 def test_reassemble_lexicographic_vs_numeric(spark):
     rows = [("u", i, f"t{i}") for i in (1, 2, 10)]
     df = spark.createDataFrame(rows, "url string, page_num int, page_text string")
-    lex = reassemble_documents(df, order="lexicographic").collect()[0]["combined_text"]
-    num = reassemble_documents(df, order="numeric").collect()[0]["combined_text"]
-    # lexicographic: page_1 < page_10 < page_2 (the reference's quirk,
-    # visible in 3_Extracted_Texts/Synopsis/Synopsis_combined.txt)
+    name = F.concat(F.lit("page_"), F.col("page_num").cast("string"))
+    part = F.concat(F.lit("\n\n---- "), name, F.lit(" ----\n\n"), F.col("page_text"))
+    sep = "\n" + "=" * 50 + "\n"
+    numeric_key = F.lpad(F.col("page_num").cast("string"), 9, "0")
+    lex = reassemble_documents(df, "url", name, part, sep).collect()[0]["combined_text"]
+    num = reassemble_documents(df, "url", numeric_key, part, sep).collect()[0]["combined_text"]
+    # the caller's key carries the order: a "page_N" string key sorts
+    # page_1 < page_10 < page_2 (the reference's quirk, visible in
+    # 3_Extracted_Texts/Synopsis/Synopsis_combined.txt); a zero-padded
+    # key sorts numerically
     assert lex.index("---- page_10 ----") < lex.index("---- page_2 ----")
     assert num.index("---- page_2 ----") < num.index("---- page_10 ----")
     assert "=" * 50 in lex

@@ -1,13 +1,33 @@
 """Engine-wide lint (SURVEY §7.3.5): no per-row Python in the hot path —
 no row-at-a-time ``F.udf``/``@udf``, no ``rdd.`` usage, no ``collect()``
-inside engine operators (driver-side loops)."""
+inside engine operators (driver-side loops) — and no public function
+that only tests call."""
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
-PKG = Path(__file__).resolve().parent.parent / "pdf_to_text_spark"
+ROOT = Path(__file__).resolve().parent.parent
+PKG = ROOT / "pdf_to_text_spark"
+
+# Public functions with no caller outside tests, each kept for the
+# contract its tests pin.
+CONTRACT_ONLY = {
+    "extract_pdf_page_table": "K1 per-page sink, the golden_pages byte-identity contract",
+    "run_incremental_extraction": "§2.8 availableNow incremental extraction: batch resume "
+    "skips committed buckets, so rows appended to them later are never extracted",
+    "stream_dedup_urls": "§2.8 streaming stateful dedup (applyInPandasWithState)",
+    "stream_windowed_counts": "§2.8 watermarked windows with pinned late-data semantics",
+    "build_training_corpus": "training-data tier: extract → stats → dedup in one job",
+    "scan_document_dir": "S1/S2/P1: the reference's PDF-folder ingest",
+    "pptx_package_from_template": "K5 template reuse",
+    "generate_planes": "the plane-sizing path lsh_near_dup_pairs' under-planed error names",
+    "encode_jpeg_progressive": "the progressive (SOF2) writer the JPEG decoder is checked against",
+    "ocr_expected": "the raster→OCR fixpoint the q29 oracle and the scanned fixtures encode",
+    "decrypt_block": "the FIPS-197 decryption vector of the AES core",
+}
 
 
 def _sources():
@@ -32,3 +52,52 @@ def test_no_collect_in_operators():
         if "/plans/" in str(p) or "/core/" in str(p):
             continue
         assert ".collect()" not in src, p
+
+
+def _caller_sources():
+    yield from PKG.rglob("*.py")
+    yield from (ROOT / "jobs").rglob("*.py")
+    yield ROOT / "__spark_entry__.py"
+    yield from ROOT.glob("bench*.py")
+    yield from (p for p in (ROOT / "perfbench").rglob("*.py") if "tests" not in p.relative_to(ROOT).parts)
+    yield from (ROOT / "tools").rglob("*.py")
+
+
+def _public_defs():
+    for p in PKG.rglob("*.py"):
+        for node in ast.parse(p.read_text()).body:
+            if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
+                yield node.name, p
+
+
+def _referenced_names():
+    """Names used as code (``Name``/``Attribute`` nodes, so docstrings,
+    comments and import lines do not count) in the non-test sources; a
+    function's references to itself do not count."""
+    used = set()
+    for p in _caller_sources():
+        tree = ast.parse(p.read_text())
+        own = {}
+        for node in tree.body:
+            if isinstance(node, ast.FunctionDef):
+                own.update((id(n), node.name) for n in ast.walk(node))
+        for n in ast.walk(tree):
+            name = n.id if isinstance(n, ast.Name) else getattr(n, "attr", None)
+            if name and own.get(id(n)) != name:
+                used.add(name)
+    return used
+
+
+def test_public_functions_have_a_non_test_caller():
+    """Every public top-level function in the package is called from the
+    package, ``jobs/``, ``__spark_entry__.py``, ``bench*.py``,
+    ``perfbench/`` or ``tools/``, or is listed in CONTRACT_ONLY with its
+    contract. A listed function that gains a caller leaves the list."""
+    used = _referenced_names()
+    defs = dict(_public_defs())
+    orphans = sorted(
+        f"{p.relative_to(ROOT)}::{n}" for n, p in defs.items() if n not in used | CONTRACT_ONLY.keys()
+    )
+    assert not orphans, f"public functions only tests call: {orphans}"
+    stale = sorted(n for n in CONTRACT_ONLY if n not in defs or n in used)
+    assert not stale, f"CONTRACT_ONLY entries that are gone or now have a caller: {stale}"

@@ -114,3 +114,23 @@ def test_pdf_embedded_images_password_and_g4(spark):
     # with password → decrypt + G4 decode + exact luma (3/5 white = 153)
     ok = pdf_embedded_images(df, password=b"pw").collect()[0]
     assert (ok["codec"], ok["mean_luma"]) == ("raw", 153)
+
+
+def test_pdf_embedded_images_reports_jpeg_decode_error(spark):
+    """An embedded JPEG the codec cannot decode (SOF0 flipped to SOF9,
+    arithmetic-coded) keeps its image row, with a null mean_luma and the
+    codec's message in extract_error, so it never reads like an image
+    that was simply not decoded."""
+    from pdf_to_text_spark.core.jpegcodec import encode_jpeg
+    from pdf_to_text_spark.core.pdfgen import build_pdf, page_content_stream
+    from pdf_to_text_spark.operators.multimodal import pdf_embedded_images
+
+    jpeg = bytearray(encode_jpeg(8, 8, 1, bytes(range(64)), quality=90))
+    jpeg[jpeg.find(b"\xff\xc0") + 1] = 0xC9
+    pdf = build_pdf([page_content_stream(["x"])], flate=True, images=[(8, 8, bytes(jpeg))])
+    df = spark.createDataFrame([("u1", pdf)], "url string, html binary")
+    row = pdf_embedded_images(df).collect()[0]
+    assert (row["image_no"], row["codec"], row["mean_luma"]) == (1, "jpeg", None)
+    assert row["extract_error"].startswith("jpeg:") and "non-baseline" in row["extract_error"]
+    plain = pdf_embedded_images(df, decode=False).collect()[0]
+    assert (plain["mean_luma"], plain["extract_error"]) == (None, None)

@@ -10,7 +10,7 @@ import zipfile
 
 from pyspark.sql import functions as F
 
-from pdf_to_text_spark.functions.pptxsink import blueprint_to_slide_xml, pptx_package
+from pdf_to_text_spark.functions.pptxsink import blueprint_to_slide_xml, pptx_package_with_charts
 from pdf_to_text_spark.operators.blueprint import text_to_blueprint
 
 P_NS = "{http://schemas.openxmlformats.org/presentationml/2006/main}"
@@ -33,6 +33,13 @@ def _slides_for(spark, text: str) -> list[str]:
     ).collect()[0]["s"]
 
 
+def _text_deck(t):
+    """Text-only deck: the export packager with no chart parts."""
+    return pptx_package_with_charts(
+        blueprint_to_slide_xml(text_to_blueprint(t)), F.lit(None).cast("array<string>")
+    )
+
+
 def test_slide_xml_semantics(spark):
     slides = _slides_for(spark, SAMPLE)
     assert len(slides) == 3
@@ -49,9 +56,7 @@ def test_slide_xml_semantics(spark):
 
 def test_pptx_package_consistent_and_deterministic(spark):
     df = spark.createDataFrame([(SAMPLE,), (SAMPLE,)], "t string")
-    out = df.select(
-        pptx_package(blueprint_to_slide_xml(text_to_blueprint(F.col("t")))).alias("p")
-    ).collect()
+    out = df.select(_text_deck(F.col("t")).alias("p")).collect()
     assert out[0]["p"] == out[1]["p"]
     z = zipfile.ZipFile(io.BytesIO(out[0]["p"]))
     assert z.testzip() is None
@@ -83,11 +88,7 @@ def test_pptx_package_with_charts(spark):
     pptx_designer.py:131-172/236-290): the parsed chart string becomes a
     real c:chartSpace part wired through per-slide rels + content-type
     override, with a graphicFrame on the hosting slide."""
-    from pdf_to_text_spark.functions.pptxsink import (
-        chart_slide_xml,
-        chart_to_chart_xml,
-        pptx_package_with_charts,
-    )
+    from pdf_to_text_spark.functions.pptxsink import chart_slide_xml, chart_to_chart_xml
     from pdf_to_text_spark.functions.text import parse_chart_string
 
     df = spark.createDataFrame([(SAMPLE, CHART_STR)], "t string, cs string")
@@ -156,10 +157,7 @@ def test_blueprint_to_pptx_parts_chart_routing(spark):
     dropped — while an unparseable chart string (<3 parts) falls back
     to a text slide (disclosed deviation) so the package stays
     consistent."""
-    from pdf_to_text_spark.functions.pptxsink import (
-        blueprint_to_pptx_parts,
-        pptx_package_with_charts,
-    )
+    from pdf_to_text_spark.functions.pptxsink import blueprint_to_pptx_parts
 
     df = spark.createDataFrame([(CHART_DECK,)], "t string")
     parts = blueprint_to_pptx_parts(text_to_blueprint(F.col("t")))
@@ -284,18 +282,12 @@ def test_pptx_package_from_template(spark):
     branch): the rebuilt deck carries the TEMPLATE's masters/layouts/
     theme verbatim while all slides come from the blueprint; malformed
     templates degrade to a null package (row tolerance)."""
-    from pdf_to_text_spark.functions.pptxsink import (
-        _THEME_XML,
-        pptx_package,
-        pptx_package_from_template,
-    )
+    from pdf_to_text_spark.functions.pptxsink import _THEME_XML, pptx_package_from_template
 
     # the "uploaded template": one of our own decks, re-zipped with a
     # marker baked into its theme part so provenance is checkable
     tpl_df = spark.createDataFrame([("# tpl slide",)], "t string")
-    template = tpl_df.select(
-        pptx_package(blueprint_to_slide_xml(text_to_blueprint(F.col("t")))).alias("p")
-    ).collect()[0]["p"]
+    template = tpl_df.select(_text_deck(F.col("t")).alias("p")).collect()[0]["p"]
     zin = zipfile.ZipFile(io.BytesIO(template))
     buf = io.BytesIO()
     with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as zo:

@@ -153,5 +153,5 @@ def test_routing_threshold_parity(spark):
 def test_sentence_split(spark, n):
     s = " ".join(f"Sentence number {i} ends here." for i in range(n))
     df = spark.createDataFrame([(s,)], "s string")
-    out = df.select(cat.sentence_split(F.col("s")).alias("a")).collect()[0][0]
+    out = df.select(cat.sentences_strict(F.col("s")).alias("a")).collect()[0][0]
     assert len(out) == n
