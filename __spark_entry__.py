@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from pdf_to_text_spark.core import sizing
 from pdf_to_text_spark.core.textnorm import CLS_A
 from pdf_to_text_spark.functions import text as X
 from pdf_to_text_spark.functions.pdfsink import text_to_pdf
@@ -41,37 +42,17 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _par(spark: SparkSession, df: DataFrame, min_bytes: int = 4 * 1024 * 1024) -> DataFrame:
-    """CPU-parallelism guard for compute-bound per-row stages (round-4
-    q29 finding): the sf test tables are SINGLE-ROW-GROUP parquet
-    files, so Spark's byte-based file splitting hands them ONE task no
-    matter how many cores exist — a heavy Arrow-UDF or Catalyst string
-    stage then runs single-core (q29 measured 10.8 s single-task vs
-    3.4 s repartitioned at local[32]) and its bench time tracks host
-    noise 1:1. At 100 TB inputs arrive as thousands of files and this
-    is automatic; the explicit repartition (a ~KB-per-row shuffle,
-    trivial next to the compute it unlocks) makes compute-bound stages
-    scale with cores instead of with input-file layout.
-
-    r6: SIZE-GATED — below ~4 MiB of input the exchange's fixed cost
-    exceeds the single-core compute it parallelizes (measured at
-    sf0.1: q14 1.2 s ungated vs 1.9 s with the shuffle; at sf1.0 the
-    same query is 11.4 s without vs 1.3 s with). The gate derives from
-    the actual input bytes, not a scale-factor constant, so it is the
-    guide's "partitioning from input size" rule rather than local-mode
-    tuning."""
-    import os
-
-    try:
-        n_bytes = sum(
-            os.path.getsize(f[7:] if f.startswith("file:") else f)
-            for f in df.inputFiles()
-        )
-    except OSError:
-        n_bytes = None
+def _par(spark: SparkSession, sf: str, min_bytes: int = sizing.SPREAD_MIN_BYTES) -> DataFrame:
+    """The ``documents`` table, spread round-robin over every core unless
+    the size probe puts it below ``min_bytes``. The sf tables are
+    single-row-group parquet files, which Spark reads in ONE task however
+    many cores exist (q29: 10.8 s in one task vs 3.4 s spread at
+    local[32]); inputs of thousands of files spread by themselves."""
+    d = _t(spark, sf, "documents")
+    n_bytes = sizing.plan_bytes(d)
     if n_bytes is not None and n_bytes < min_bytes:
-        return df
-    return df.repartition(spark.sparkContext.defaultParallelism)
+        return d
+    return d.repartition(spark.sparkContext.defaultParallelism)
 
 
 def _dsum(c: Column, scale: int, prec: str = "decimal(28,6)") -> Column:
@@ -240,12 +221,12 @@ def _q11_charset_clean(spark, sf):
 
 
 def _q12_deep_clean(spark, sf):
-    d = _par(spark, _t(spark, sf, "documents"))
+    d = _par(spark, sf)
     return d.select("doc_id", X.deep_clean(F.col("text")).alias("cleaned"))
 
 
 def _q13_normalize(spark, sf):
-    d = _par(spark, _t(spark, sf, "documents"))
+    d = _par(spark, sf)
     return d.select("doc_id", X.normalize_extracted(F.col("text")).alias("norm"))
 
 
@@ -269,14 +250,14 @@ def _md_src() -> Column:
 
 
 def _q14_sentences(spark, sf):
-    d = _par(spark, _t(spark, sf, "documents"))
+    d = _par(spark, sf)
     return d.select(
         "doc_id", F.explode(X.sentences_strict(_punctuated(F.col("text")))).alias("sentence")
     )
 
 
 def _q15_sentence_topk(spark, sf):
-    d = _par(spark, _t(spark, sf, "documents"))
+    d = _par(spark, sf)
     s = d.select(
         "doc_id", F.explode(X.sentences_strict(_punctuated(F.col("text")))).alias("sentence")
     )
@@ -319,7 +300,7 @@ def _q18_chunk_concat(spark, sf):
 def _q19_line_paging(spark, sf):
     from pdf_to_text_spark.operators.blueprint import paginate_slides
 
-    d = _par(spark, _t(spark, sf, "documents"))
+    d = _par(spark, sf)
     s = d.select(
         "doc_id", F.posexplode(X.sentences_strict(_punctuated(F.col("text")))).alias("pos", "s")
     )
@@ -331,7 +312,7 @@ def _q19_line_paging(spark, sf):
 
 
 def _q20_text_stats(spark, sf):
-    d = _par(spark, _t(spark, sf, "documents"))
+    d = _par(spark, sf)
     return TS.with_text_stats(d, "text").select(
         "doc_id", "n_len", "n_tokens", "n_subtokens", "stop_ratio", "punct_ratio",
         "lang_guess", "quality", "fp",
@@ -339,7 +320,7 @@ def _q20_text_stats(spark, sf):
 
 
 def _q21_lang_counts(spark, sf):
-    d = _par(spark, _t(spark, sf, "documents"))
+    d = _par(spark, sf)
     return d.groupBy(TS.lang_id(F.col("text")).alias("lang_guess")).agg(F.count("*").alias("n"))
 
 
@@ -348,25 +329,23 @@ def _q30_exact_dedup(spark, sf):
 
 
 def _q31_minhash_sigs(spark, sf):
-    # md5-per-shingle cost amortizes the shuffle far below the texty
-    # default gate (measured 0.68 s vs 1.6 s at sf0.1)
-    return D.minhash_signatures(_par(spark, _t(spark, sf, "documents"), min_bytes=1 << 18), num_hashes=8)
+    return D.minhash_signatures(_par(spark, sf, sizing.SPREAD_MIN_BYTES_HASHING), num_hashes=8)
 
 
 def _q32_lsh_pairs(spark, sf):
     return D.minhash_lsh_pairs(
-        _par(spark, _t(spark, sf, "documents"), min_bytes=1 << 18), num_hashes=8, bands=4, max_bucket=200
+        _par(spark, sf, sizing.SPREAD_MIN_BYTES_HASHING), num_hashes=8, bands=4, max_bucket=200
     )
 
 
 def _q33_ngram_jaccard(spark, sf):
     return D.ngram_jaccard_pairs(
-        _par(spark, _t(spark, sf, "documents"), min_bytes=1 << 18), threshold=0.3, max_df=1000
+        _par(spark, sf, sizing.SPREAD_MIN_BYTES_HASHING), threshold=0.3, max_df=1000
     )
 
 
 def _q34_simhash(spark, sf):
-    return D.simhash_table(_par(spark, _t(spark, sf, "documents"), min_bytes=1 << 18))
+    return D.simhash_table(_par(spark, sf, sizing.SPREAD_MIN_BYTES_HASHING))
 
 
 def _q52_near_dup_components(spark, sf):
@@ -379,7 +358,7 @@ def _q52_near_dup_components(spark, sf):
     from pdf_to_text_spark.plans.components import connected_components
 
     pairs = D.minhash_lsh_pairs(
-        _par(spark, _t(spark, sf, "documents"), min_bytes=1 << 18), num_hashes=8, bands=4, max_bucket=200
+        _par(spark, sf, sizing.SPREAD_MIN_BYTES_HASHING), num_hashes=8, bands=4, max_bucket=200
     )
     return connected_components(pairs)
 
@@ -437,7 +416,7 @@ def _q43_centrality_topk(spark, sf):
 def _q44_stopword_removal(spark, sf):
     from pdf_to_text_spark.functions.udfs import remove_stopwords
 
-    d = _par(spark, _t(spark, sf, "documents"))
+    d = _par(spark, sf)
     return d.select("doc_id", remove_stopwords(F.col("text")).alias("kept"))
 
 
@@ -530,7 +509,7 @@ def _q28_docx_xml(spark, sf):
     CRC32 isn't SQL-expressible, the XML is."""
     from pdf_to_text_spark.operators.blueprint import blueprint_to_docx_xml, text_to_blueprint
 
-    d = _par(spark, _t(spark, sf, "documents"))
+    d = _par(spark, sf)
     md_src = _md_src()
     return d.select(
         "doc_id", blueprint_to_docx_xml(text_to_blueprint(md_src)).alias("docx_xml")
@@ -545,7 +524,7 @@ def _q29_raster_ocr(spark, sf):
     through actual pixel data."""
     from pdf_to_text_spark.operators.multimodal import ocr_pages, rasterize_pages
 
-    d = _par(spark, _t(spark, sf, "documents"))
+    d = _par(spark, sf)
     return ocr_pages(rasterize_pages(d)).select(
         "doc_id", F.col("ocr_text").alias("recovered")
     )
@@ -561,7 +540,7 @@ def _q48_pptx_slides(spark, sf):
     from pdf_to_text_spark.functions.pptxsink import blueprint_to_slide_xml
     from pdf_to_text_spark.operators.blueprint import text_to_blueprint
 
-    d = _par(spark, _t(spark, sf, "documents"))
+    d = _par(spark, sf)
     md_src = _md_src()
     return d.select(
         "doc_id",
@@ -582,7 +561,7 @@ def _q51_image_placeholder(spark, sf):
     hash-checked."""
     from pdf_to_text_spark.operators.blueprint import blueprint_to_docx_xml, text_to_blueprint
 
-    d = _par(spark, _t(spark, sf, "documents"))
+    d = _par(spark, sf)
     md = F.concat(
         F.lit("# doc "), F.col("doc_id").cast("string"),
         F.lit("\n- intro point\n- [Image of pipeline "),
@@ -602,7 +581,7 @@ def _q50_chart_xml(spark, sf):
     tests/test_pptxsink.py."""
     from pdf_to_text_spark.functions.pptxsink import chart_to_chart_xml
 
-    d = _par(spark, _t(spark, sf, "documents"))
+    d = _par(spark, sf)
     return d.select(
         "doc_id", chart_to_chart_xml(X.parse_chart_string(_chart_src())).alias("chart_xml")
     )
@@ -618,7 +597,7 @@ def _q54_themed_slides(spark, sf):
     from pdf_to_text_spark.functions.pptxsink import blueprint_to_slide_xml
     from pdf_to_text_spark.operators.blueprint import text_to_blueprint
 
-    d = _par(spark, _t(spark, sf, "documents"))
+    d = _par(spark, sf)
     return d.select(
         "doc_id",
         F.posexplode(
@@ -638,7 +617,7 @@ def _q53_chart_routed_deck(spark, sf):
     from pdf_to_text_spark.functions.pptxsink import blueprint_to_pptx_parts
     from pdf_to_text_spark.operators.blueprint import text_to_blueprint
 
-    d = _par(spark, _t(spark, sf, "documents"))
+    d = _par(spark, sf)
     cs = F.concat(
         F.lit("Report "), F.col("doc_id").cast("string"),
         F.lit(", series_"), (F.col("doc_id") % 3).cast("string"),
@@ -661,7 +640,7 @@ def _q46_embed_centrality(spark, sf):
     chain is hash-checked."""
     from pdf_to_text_spark.operators.embed import centrality_topk_from_text
 
-    d = _par(spark, _t(spark, sf, "documents"))
+    d = _par(spark, sf)
     return centrality_topk_from_text(d, "text", "doc_id", "source", k=3, dim=16)
 
 
@@ -700,7 +679,7 @@ def _q27_pdf_sink(spark, sf):
     final_output_generator.py:11-19). The DuckDB twin rebuilds the
     byte-exact document — xref offsets included — so the sink is
     hash-checked; tests additionally pin writer→parser roundtrip."""
-    d = _par(spark, _t(spark, sf, "documents"))
+    d = _par(spark, sf)
     # build the (large) PDF expression tree once; derive n_bytes from
     # the materialized column in a second projection
     p = d.select("doc_id", text_to_pdf(F.col("text")).alias("pdf"))
@@ -722,7 +701,7 @@ def _pdf_pages_query(spark, sf, make_pdfs, key: Column | None = None) -> DataFra
     closure, so cloudpickle ships it to the workers by value; the
     workers import ``_rows`` from this file, as they import the
     package."""
-    d = _par(spark, _t(spark, sf, "documents"))
+    d = _par(spark, sf)
 
     @F.pandas_udf("array<string>")
     def roundtrip(texts: pd.Series) -> pd.Series:
@@ -751,7 +730,7 @@ def _pdf_images_query(spark, sf, make_pdf) -> DataFrame:
     mean_luma)``."""
     from pdf_to_text_spark.operators.multimodal import pdf_embedded_images
 
-    d = _par(spark, _t(spark, sf, "documents"))
+    d = _par(spark, sf)
 
     @F.pandas_udf("binary")
     def doc_pdf(texts: pd.Series) -> pd.Series:

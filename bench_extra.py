@@ -26,6 +26,7 @@ sys.path.insert(0, REPO)
 
 import __spark_entry__ as E  # noqa: E402
 
+from pdf_to_text_spark.core.caching import mark_caches, release_caches_since  # noqa: E402
 from pdf_to_text_spark.session import get_spark  # noqa: E402
 
 SCRATCH = os.environ.get(
@@ -63,7 +64,10 @@ def main() -> None:
     out: dict[str, dict] = {}
     for name in names:
         fn = qs[name]
+        # every query runs between mark_caches and release_caches_since,
+        # so the caches its operators register do not outlive it
         if args.plan:
+            mark = mark_caches()
             df = fn(spark, args.sf)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
@@ -71,10 +75,11 @@ def main() -> None:
             os.makedirs(os.path.dirname(args.plan) or ".", exist_ok=True)
             with open(args.plan, "w") as f:
                 f.write(plan)
-            spark.catalog.clearCache()
+            release_caches_since(mark)
         samples = []
         for _ in range(args.repeats):
             spark.sparkContext.setJobDescription(name)
+            mark = mark_caches()
             t0 = time.perf_counter()
             df = fn(spark, args.sf)
             if args.bench_materialize:
@@ -89,7 +94,7 @@ def main() -> None:
             else:
                 noop(df)
             samples.append(round(time.perf_counter() - t0, 3))
-            spark.catalog.clearCache()
+            release_caches_since(mark)
         out[name] = {
             "median": round(statistics.median(samples), 3),
             "min": min(samples),

@@ -102,7 +102,7 @@ def _filter_chain(head: bytes) -> list[bytes]:
 
 # ------------------------------------------------- stream filters (§7.4)
 
-_WS_SET = frozenset(b" \t\r\n\f\x00")
+_WS_BYTES = frozenset(b" \t\r\n\f\x00")
 
 
 def _ascii_hex_decode(data: bytes) -> bytes:
@@ -111,7 +111,7 @@ def _ascii_hex_decode(data: bytes) -> bytes:
     eod = data.find(b">")
     if eod != -1:
         data = data[:eod]
-    hx = bytes(b for b in data if b not in _WS_SET)
+    hx = bytes(b for b in data if b not in _WS_BYTES)
     if not re.fullmatch(rb"[0-9A-Fa-f]*", hx):
         raise PdfError("bad ASCIIHex data")
     if len(hx) % 2:
@@ -130,7 +130,7 @@ def _ascii85_decode(data: bytes) -> bytes:
     out = bytearray()
     group: list[int] = []
     for b in data:
-        if b in _WS_SET:
+        if b in _WS_BYTES:
             continue
         if b == 0x7A:  # 'z'
             if group:
@@ -856,7 +856,6 @@ def _unescape(raw: bytes) -> bytes:
     return bytes(out)
 
 
-_WS_BYTES = frozenset(b" \t\r\n\f\x00")
 # inside a literal string only escape pairs and parens move the depth
 _STR_DELIM_RE = re.compile(rb"\\.|[()]", re.S)
 _INLINE_ID_RE = re.compile(rb"\bID[\r\n ]")

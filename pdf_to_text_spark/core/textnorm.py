@@ -32,6 +32,7 @@ RE_LSTRIP = f"^{CLS_A}+"
 # before a final U+0085/U+2028/U+2029, so Spark would strip whitespace
 # that Python keeps
 RE_RSTRIP = f"{CLS_A}+(?![\\s\\S])"
+TEXT_LAYER_MIN_CHARS = 250  # P3 routing: a sufficient text layer is longer
 
 _steps = [
     (re.compile(RE_DEHYPH), ""),
@@ -93,8 +94,8 @@ def nfkc_lower(s: str) -> str:
     return unicodedata.normalize("NFKC", s).lower()
 
 
-def text_layer_sufficient(text: str | None, threshold: int = 250) -> bool:
+def text_layer_sufficient(text: str | None) -> bool:
     """P3 routing predicate: digital text layer is sufficient when its
-    whitespace-free length exceeds the threshold
+    whitespace-free length exceeds ``TEXT_LAYER_MIN_CHARS``
     (core_document_processing.py:71-83 variant, pinned per SURVEY §7.3.4)."""
-    return text is not None and meaningful_len(text) > threshold
+    return text is not None and meaningful_len(text) > TEXT_LAYER_MIN_CHARS

@@ -25,6 +25,7 @@ from pdf_to_text_spark.core.textnorm import (
     RE_LINETRIM,
     RE_LSTRIP,
     RE_RSTRIP,
+    TEXT_LAYER_MIN_CHARS,
 )
 
 # ---------------------------------------------------------------- golden path
@@ -53,9 +54,9 @@ def meaningful_len(c: Column) -> Column:
     return F.length(F.regexp_replace(c, f"{CLS_A}+", ""))
 
 
-def text_layer_sufficient(c: Column, threshold: int = 250) -> Column:
+def text_layer_sufficient(c: Column) -> Column:
     """P3 routing predicate — pure Catalyst, no UDF."""
-    return c.isNotNull() & (meaningful_len(c) > F.lit(threshold))
+    return c.isNotNull() & (meaningful_len(c) > F.lit(TEXT_LAYER_MIN_CHARS))
 
 
 def charset_clean(c: Column) -> Column:
@@ -89,13 +90,13 @@ def token_count(c: Column) -> Column:
     return F.size(F.filter(F.split(c, f"{CLS_A}+"), lambda s: F.length(s) > 0))
 
 
-def is_topic(c: Column, max_words: int = 10) -> Column:
+def is_topic(c: Column) -> Column:
     """P8: topic-vs-text routing predicate — an input of fewer than 10
     whitespace-separated words is a *topic* (a title to expand), else
     body text (core_document_generator.py:270-274 ``len(input.split())
     < 10``). Python ``str.split()`` drops empty tokens, so an
     empty/blank string counts 0 words → topic; token_count matches."""
-    return token_count(c) < F.lit(max_words)
+    return token_count(c) < F.lit(10)
 
 
 # -------------------------------------------------- markdown / blueprint ops

@@ -82,12 +82,11 @@ def docx_package(xml: pd.Series) -> pd.Series:
     return xml.map(pack)
 
 
-def remove_stopwords(c: Column, stopwords: list[str] | None = None) -> Column:
-    """F8: stopword removal (5_NLP/nlp/cleaning.py:26-29) — native
-    Catalyst (array_except-style filter keeps order + duplicates)."""
+def remove_stopwords(c: Column) -> Column:
+    """F8: stopword removal of ``EN_STOPWORDS`` (5_NLP/nlp/cleaning.py:26-29)
+    — native Catalyst (array_except-style filter keeps order + duplicates)."""
     from pdf_to_text_spark.operators.textstats import EN_STOPWORDS
 
-    sw = stopwords or EN_STOPWORDS
     words = F.filter(F.split(c, "[ ]+"), lambda w: F.length(w) > 0)
-    kept = F.filter(words, lambda w: ~F.lower(w).isin(sw))
+    kept = F.filter(words, lambda w: ~F.lower(w).isin(EN_STOPWORDS))
     return F.array_join(kept, " ")

@@ -153,10 +153,8 @@ def blueprint_to_docx_xml(bp: Column) -> Column:
     return F.concat(F.lit(DOCX_XML_HEAD), F.array_join(slides, ""), F.lit(DOCX_XML_TAIL))
 
 
-def paginate_slides(df: DataFrame, pos_col: str, max_lines: int = 12) -> DataFrame:
-    """A7: flush a slide every ``max_lines`` lines (12/slide in
-    ppt_formation.py:98) — ``slide_no = floor(pos / max_lines)`` over a
-    0-based line position such as a posexplode's ``pos``."""
-    return df.withColumn(
-        "slide_no", F.floor(F.col(pos_col) / max_lines).cast("long")
-    )
+def paginate_slides(df: DataFrame, pos_col: str) -> DataFrame:
+    """A7: flush a slide every 12 lines (ppt_formation.py:98) —
+    ``slide_no = floor(pos / 12)`` over a 0-based line position such as
+    a posexplode's ``pos``."""
+    return df.withColumn("slide_no", F.floor(F.col(pos_col) / 12).cast("long"))

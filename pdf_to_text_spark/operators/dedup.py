@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T  # noqa: F401
 
+from pdf_to_text_spark.core import sizing
 from pdf_to_text_spark.core.caching import register_cache
 
 # ------------------------------------------------------------------ exact
@@ -192,16 +193,15 @@ def minhash_lsh_pairs(
 
 
 def _jaccard_count_kernel(n_slices: int, threshold: float, id_type):
-    """Build the mapInArrow postings kernel for ``ngram_jaccard_pairs``
-    (strategy="kernel"). Each row is (slice, docs) where ``docs`` is
-    the full corpus as (id, sorted-int shingle ids). It
-    builds CSR postings with numpy and counts pair intersections via
-    ``bincount`` — the 127M pair-instances that cost the join path a
-    114M-key hash aggregate become vectorized integer adds (guide §4.2:
-    hand whole batches to native code). Emits (id_a, id_b, n_common,
-    n_a, n_b) for pairs whose UNROUNDED jaccard clears
-    ``threshold - 1e-6``; the exact rounded filter runs in Spark so
-    half-up rounding at the boundary matches the oracle bit-for-bit.
+    """Build the mapInArrow postings kernel for ``ngram_jaccard_pairs``.
+    Each row is (slice, docs) where ``docs`` is the full corpus as (id,
+    sorted-int shingle ids). It builds CSR postings with numpy and
+    counts pair intersections via ``bincount`` — the 127M pair-instances
+    that cost the join path a 114M-key hash aggregate become vectorized
+    integer adds (guide §4.2: hand whole batches to native code). Emits
+    (id_a, id_b, n_common, n_a, n_b) for pairs whose UNROUNDED jaccard
+    clears ``threshold - 1e-6``; the exact rounded filter runs in Spark
+    so half-up rounding at the boundary matches the oracle bit-for-bit.
     """
     import pyarrow as pa
 
@@ -291,28 +291,21 @@ def ngram_jaccard_pairs(
     shingle_n: int = 3,
     threshold: float = 0.8,
     max_df: int | None = None,
-    strategy: str = "kernel",
 ) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs sharing ≥1 shingle.
     Output: (id_a, id_b, jaccard) for pairs ≥ threshold.
 
-    ``strategy`` (r6 optimization, results identical either way):
+    The size probe on ``df`` picks one of two plans; results match:
 
-    * ``"kernel"`` (default): dictionary-encode shingles, gather the
-      corpus as (id, shingle-id array) once, and count pair
+    * up to ``KERNEL_MAX_BYTES``: dictionary-encode shingles, gather
+      the corpus as (id, shingle-id array) once, and count pair
       intersections with a numpy ``bincount`` postings kernel inside
-      ``mapInArrow`` — the candidate-pair blow-up (sum of df(df−1)/2,
-      quadratic in per-shingle document frequency: measured 127M pair
-      rows / 114M distinct pairs from 50k docs at sf1.0) never
-      materializes as Spark rows. Measured 90 s → ~8 s at sf1.0.
-      Memory shape: every task holds the encoded corpus (~12 bytes per
-      shingle instance — ~1.2 GB per 10⁸ shingle rows), so this is the
-      right strategy up to corpora of a few hundred million shingle
-      instances per similarity block; beyond that, block the corpus
-      (LSH/IVF partitioning, as q32/q49 do) or fall back to "join".
-    * ``"join"``: the classic inverted-index self-join — one shuffle
-      per side, fully distributed, no per-task corpus copy; the 100 TB
-      shape when a single block exceeds worker memory.
+      ``mapInArrow`` — the candidate-pair blow-up (sum of df(df−1)/2:
+      127M pair rows / 114M distinct pairs from 50k docs at sf1.0) never
+      materializes as Spark rows (90 s → ~8 s at sf1.0). Every kernel
+      task holds the encoded corpus.
+    * above it, or unsized: the inverted-index self-join — one shuffle
+      per side, no per-task corpus copy; the kernel's test reference.
 
     Scale: the shingle self-join is the classic inverted-index pattern.
     **Document-frequency cap** (``max_df``): a shingle shared by D docs
@@ -347,7 +340,8 @@ def ngram_jaccard_pairs(
             .select("shingle")
         )
         sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    if strategy == "kernel":
+    n_bytes = sizing.plan_bytes(df)
+    if n_bytes is not None and n_bytes <= sizing.KERNEL_MAX_BYTES:
         return _ngram_jaccard_kernel(sh, id_col, threshold)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     # The self-join OUTPUT is quadratic in per-shingle df (sum of

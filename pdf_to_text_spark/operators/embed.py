@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
+from pdf_to_text_spark.core import sizing
 from pdf_to_text_spark.core.caching import register_cache
 
 EMBED_DIM = 16
@@ -172,15 +173,11 @@ def centrality_topk_from_text(
         b_cols = [F.col("vn_arr").alias("vb")]
     a = e.select(F.col(group_col).alias("grp"), F.col(id_col).alias("id_a"), *a_cols)
     b = e.select(F.col(group_col).alias("grp"), F.col(id_col).alias("id_b"), *b_cols)
-    # broadcast the build side: the join key is the (low-cardinality)
-    # blocking group, so a shuffle join collapses to ≤ n_groups busy
-    # partitions — and AQE coalesces the few-MB input further — while
-    # the join OUTPUT is quadratic per group. Broadcasting keeps the
-    # streamed side's scan partitioning (full parallelism, no exchange)
-    # and the broadcast is n_docs·dim scalars, negligible next to the
-    # pairwise compute it unlocks. At crawl scale the group-blocked
-    # frame fed here is already bounded per block (see q43's filter /
-    # the LSH-blocked q49 path), so the broadcast stays bounded too.
+    # broadcast the build side up to BROADCAST_MAX_BYTES: the join key
+    # is the (low-cardinality) blocking group, so a shuffle join
+    # collapses to ≤ n_groups busy partitions while the join OUTPUT is
+    # quadratic per group; a broadcast keeps the streamed side's full
+    # parallelism. Above it a plain join keeps the vectors off the driver.
     # each UNORDERED pair is computed once (id_a < id_b) and its decimal
     # addend credited to both endpoints: dot(va, vb) and dot(vb, va) are
     # bit-identical (IEEE multiplication commutes and the addition order
@@ -188,7 +185,10 @@ def centrality_topk_from_text(
     # same addend multiset per endpoint reproduces the two-sided join's
     # result while halving the join output, the dot products and the
     # double→decimal casts.
-    pairs = a.join(F.broadcast(b), ["grp"]).filter(F.col("id_a") < F.col("id_b"))
+    n_bytes = sizing.plan_bytes(b)
+    if n_bytes is not None and n_bytes <= sizing.BROADCAST_MAX_BYTES:
+        b = F.broadcast(b)
+    pairs = a.join(b, ["grp"]).filter(F.col("id_a") < F.col("id_b"))
     if unpack:
         prod = F.lit(0.0)
         for i in range(dim):

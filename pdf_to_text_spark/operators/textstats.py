@@ -42,14 +42,14 @@ def stopword_ratio(c: Column) -> Column:
     return stopword_ratio_of_words(words_of(c))
 
 
-def lang_id_from_ratio(sr: Column, threshold: float = 0.08) -> Column:
-    return F.when(sr >= F.lit(threshold), "en").otherwise("other")
+def lang_id_from_ratio(sr: Column) -> Column:
+    return F.when(sr >= F.lit(0.08), "en").otherwise("other")
 
 
-def lang_id(c: Column, threshold: float = 0.08) -> Column:
-    """Heuristic language ID: english iff stopword-hit ratio ≥ threshold.
+def lang_id(c: Column) -> Column:
+    """Heuristic language ID: english iff stopword-hit ratio ≥ 0.08.
     (n-gram-free variant; deterministic and SQL-portable.)"""
-    return lang_id_from_ratio(stopword_ratio(c), threshold)
+    return lang_id_from_ratio(stopword_ratio(c))
 
 
 def punct_ratio(c: Column) -> Column:

@@ -36,35 +36,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf_to_text_spark.core import sizing
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    out_id: str = "doc_id",
-    max_iter: int = 25,
-    broadcast_labels: int = 5_000_000,
-) -> DataFrame:
-    """Candidate-pair table → (out_id, component) where ``component`` is
-    the minimum id in the node's connected component. Only ids that
-    appear in ``pairs`` are emitted (isolated docs are their own
-    trivial component and need no row). Deterministic under any
-    partitioning — min is order-free.
+MAX_ROUNDS = 25  # pointer jumping needs ~log(diameter): q52's 22 take 6
 
-    ``broadcast_labels`` (r6): a ``localCheckpoint``ed frame carries no
-    size statistics, so the planner can never pick a broadcast join for
-    the per-round edges⋈labels join and every round pays a full
-    sort-merge shuffle of two tiny tables. The node count is known
-    after seeding (one extra scalar to the driver); when it is at most
-    this threshold the label side is broadcast explicitly and a round
-    costs one small aggregate instead of three shuffles (measured ~2×
-    on the q52 graph: 17k nodes / 101k directed edges). Above the
-    threshold — label tables that would strain executor memory — the
-    shuffle join stays, unchanged. Results are identical either way."""
-    sym = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+
+def connected_components(pairs: DataFrame, out_id: str = "doc_id") -> DataFrame:
+    """Candidate-pair table (``id_a``, ``id_b``) → (out_id, component)
+    where ``component`` is the minimum id in the node's connected
+    component. Only ids that appear in ``pairs`` are emitted (isolated
+    docs are their own trivial component and need no row).
+    Deterministic under any partitioning — min is order-free.
+
+    The per-round edges⋈labels join broadcasts the label side while the
+    size probe puts the checkpointed seed labels at most
+    ``BROADCAST_MAX_BYTES``: a round then costs one small aggregate
+    instead of three shuffles (~2× on the q52 graph: 17k nodes / 101k
+    directed edges). Above it the shuffle join stays; results match."""
+    sym = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     edges = (
         sym.unionByName(
-            pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
+            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         )
         .distinct()
         .cache()
@@ -75,8 +67,9 @@ def connected_components(
         .select("node", F.col("node").alias("label"))
         .localCheckpoint(eager=True)
     )
-    use_bcast = broadcast_labels > 0 and lab.count() <= broadcast_labels
-    for _ in range(max_iter):
+    n_bytes = sizing.plan_bytes(lab)
+    use_bcast = n_bytes is not None and n_bytes <= sizing.BROADCAST_MAX_BYTES
+    for _ in range(MAX_ROUNDS):
         lab_dst = lab.select(F.col("node").alias("dst"), "label")
         if use_bcast:
             lab_dst = F.broadcast(lab_dst)
@@ -127,9 +120,9 @@ def connected_components(
             break
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds — "
-            "component diameter exceeds max_iter; raise it or switch to "
-            "star-contraction for this graph"
+            f"connected_components did not converge in MAX_ROUNDS={MAX_ROUNDS} "
+            "rounds — the component diameter exceeds it; raise it or switch "
+            "to star-contraction for this graph"
         )
     edges.unpersist()
     return lab.select(F.col("node").alias(out_id), F.col("label").alias("component"))

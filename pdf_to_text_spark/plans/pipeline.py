@@ -47,9 +47,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pdf_to_text_spark.core.sizing import WHALE_BYTES
 from pdf_to_text_spark.operators.extract import extract_documents
-
-WHALE_BYTES = 1 << 20  # 1 MiB: above this a row is a "whale"
 
 
 def bucket_of(url_col, n_buckets: int):

@@ -271,3 +271,24 @@ def test_lsh_near_dup_plane_sizing(spark):
     assert any(a % 2 == 0 and b == a + 1 for a, b in got)
     # planes are deterministic across calls
     assert generate_planes(3, 8) == generate_planes(3, 8)
+
+
+def test_oracle_gate_releases_operator_caches(spark):
+    """``tools/check_oracle.collect_query`` runs each query between
+    ``mark_caches`` and ``release_caches_since``: after q32, q33 and q32
+    again the registry is back at its mark and no cached RDD is left."""
+    import os
+
+    import __spark_entry__ as E
+    from pdf_to_text_spark.core import caching
+    from tools.check_oracle import collect_query
+
+    sf = os.path.join(os.path.dirname(E.SF0001), "sf0.01")
+    qs = E.queries()
+    jsc = spark.sparkContext._jsc
+    mark, baseline = mark_caches(), jsc.getPersistentRDDs().size()
+    for name in ("q32_minhash_lsh_pairs", "q33_ngram_jaccard", "q32_minhash_lsh_pairs"):
+        _, rows = collect_query(spark, qs[name], sf)
+        assert rows, name
+    assert len(caching._LIVE) == mark
+    assert jsc.getPersistentRDDs().size() == baseline

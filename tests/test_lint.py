@@ -6,6 +6,7 @@ that only tests call."""
 from __future__ import annotations
 
 import ast
+import inspect
 import re
 from pathlib import Path
 
@@ -101,3 +102,22 @@ def test_public_functions_have_a_non_test_caller():
     assert not orphans, f"public functions only tests call: {orphans}"
     stale = sorted(n for n in CONTRACT_ONLY if n not in defs or n in used)
     assert not stale, f"CONTRACT_ONLY entries that are gone or now have a caller: {stale}"
+
+
+def test_size_decisions_read_the_one_probe():
+    """Every size-driven plan choice reads ``core.sizing.plan_bytes``: no
+    other file lists input files, stats them or reads Catalyst
+    statistics, and the operators whose plan the probe picks take no
+    option that overrides it."""
+    for p in [*PKG.rglob("*.py"), ROOT / "__spark_entry__.py"]:
+        if p == PKG / "core" / "sizing.py":
+            continue
+        src = p.read_text()
+        for pat in (r"\.inputFiles\(", r"\bgetsize\(", r"\.stats\(\)"):
+            assert re.search(pat, src) is None, (p, pat)
+    from pdf_to_text_spark.operators.dedup import ngram_jaccard_pairs
+    from pdf_to_text_spark.plans.components import connected_components
+
+    for fn in (ngram_jaccard_pairs, connected_components):
+        params = set(inspect.signature(fn).parameters)
+        assert not params & {"strategy", "broadcast_labels"}, (fn.__name__, params)

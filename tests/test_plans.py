@@ -7,8 +7,11 @@ A regression here means a 100× scale-up silently gets slower.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import functions as F
 
+from pdf_to_text_spark.core import sizing
+from pdf_to_text_spark.core.caching import mark_caches, release_caches_since
 from pdf_to_text_spark.operators.extract import extract_documents, extract_pdf_page_table
 from pdf_to_text_spark.plans.pipeline import size_aware_repartition
 
@@ -106,9 +109,9 @@ def test_embed_centrality_caches_vectors(spark):
 
 def _assert_no_key_exchange(name: str, plan: str) -> None:
     """Sinks are per-row projections: no KEY-based shuffle is allowed.
-    The one permitted Exchange is the deliberate round-robin input
-    split (``__spark_entry__._par``, round-4 q29 finding) that frees
-    compute-bound stages from single-row-group file layout — it moves
+    The one permitted Exchange is ``__spark_entry__._par``'s round-robin
+    spread of the documents table, planned when the size probe puts it
+    at or above ``SPREAD_MIN_BYTES`` (it never is at sf0.001): it moves
     input bytes once and partitions by NOTHING, so hash/range
     partitioning must still never appear."""
     for line in plan.splitlines():
@@ -221,3 +224,103 @@ def test_bucketed_tables_join_and_agg_without_shuffle(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("drop table if exists sg_buck_a")
         spark.sql("drop table if exists sg_buck_b")
+
+
+def test_plan_bytes_starts_no_job(spark):
+    """The size probe reads Catalyst's estimate: sizing a join of two
+    scans runs no Spark job."""
+    import __spark_entry__ as E
+
+    li = spark.read.parquet(f"{E.SF0001}/lineitem.parquet")
+    o = spark.read.parquet(f"{E.SF0001}/orders.parquet")
+    df = li.join(o, li.l_orderkey == o.o_orderkey).filter(F.col("l_quantity") > 10)
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup(None), default=-1)
+    assert sizing.plan_bytes(df) > 0
+    assert max(tracker.getJobIdsForGroup(None), default=-1) == before
+
+
+def test_par_spreads_at_or_above_its_threshold(spark):
+    """``_par`` plans a round-robin spread of the documents table exactly
+    when the probe's size reaches ``min_bytes``."""
+    import __spark_entry__ as E
+
+    n = sizing.plan_bytes(spark.read.parquet(f"{E.SF0001}/documents.parquet"))
+    assert "RoundRobinPartitioning" in _plan(E._par(spark, E.SF0001, n))
+    assert "Exchange" not in _plan(E._par(spark, E.SF0001, n + 1))
+
+
+def _with_small_broadcasts(spark, monkeypatch, max_bytes):
+    """Set ``BROADCAST_MAX_BYTES``; below the input size also turn off
+    Catalyst's own size-based broadcast, which would pick the same tiny
+    side the hint no longer names."""
+    monkeypatch.setattr(sizing, "BROADCAST_MAX_BYTES", max_bytes)
+    if max_bytes < 0:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+
+
+def test_q46_broadcast_follows_the_size_probe(spark, monkeypatch):
+    """Above ``BROADCAST_MAX_BYTES`` the centrality pair join plans no
+    broadcast and returns the same rows."""
+    from pdf_to_text_spark.operators.embed import centrality_topk_from_text
+
+    # from pandas: a local relation, which Catalyst can size
+    docs = spark.createDataFrame(
+        pd.DataFrame(
+            [("g", i, f"some words {i} alpha") for i in range(10)],
+            columns=["source", "doc_id", "text"],
+        )
+    )
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    mark = mark_caches()
+    try:
+        got = {}
+        for max_bytes in (sizing.BROADCAST_MAX_BYTES, -1):
+            _with_small_broadcasts(spark, monkeypatch, max_bytes)
+            out = centrality_topk_from_text(docs)
+            got[max_bytes] = ("BroadcastExchange" in _plan(out), sorted(out.collect()))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        release_caches_since(mark)
+    (b_big, rows_big), (b_small, rows_small) = got.values()
+    assert b_big and not b_small
+    assert rows_big == rows_small and rows_big
+
+
+def test_components_broadcast_follows_the_size_probe(spark, monkeypatch):
+    """Above ``BROADCAST_MAX_BYTES`` no connected-components round plans
+    a broadcast join of the label table, and the components are the
+    same. The rounds run inside the call, so their plans are read from
+    the SQL executions it recorded."""
+    from pdf_to_text_spark.plans.components import connected_components
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        it = store.executionsList().iterator()
+        while it.hasNext():
+            yield it.next()
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)] + [(10, 11)], "id_a long, id_b long"
+    )
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    got = {}
+    try:
+        for max_bytes in (sizing.BROADCAST_MAX_BYTES, -1):
+            _with_small_broadcasts(spark, monkeypatch, max_bytes)
+            last = max((e.executionId() for e in executions()), default=-1)
+            rows = sorted(connected_components(pairs).collect())
+            plans = [e.physicalPlanDescription() for e in executions() if e.executionId() > last]
+            got[max_bytes] = (
+                sum("BroadcastHashJoin" in p for p in plans),
+                sum("SortMergeJoin" in p for p in plans),
+                rows,
+            )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    (bhj_big, _, rows_big), (bhj_small, smj_small, rows_small) = got.values()
+    assert bhj_big > 0 and bhj_small == 0 and smj_small > 0
+    assert rows_big == rows_small
+    assert {r["component"] for r in rows_big} == {0, 10}

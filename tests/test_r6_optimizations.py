@@ -4,7 +4,7 @@ Each optimization that rewrote an operator's internals must prove the
 rewrite computes the SAME values as the reference path it replaced:
 
 - ``ngram_jaccard_pairs``: numpy postings kernel vs the inverted-index
-  self-join (strategy="kernel" vs "join");
+  self-join (each forced through ``core.sizing.KERNEL_MAX_BYTES``);
 - the fused PDF content-stream scanner + interpreter vs the reference
   tokenizer + interpreter kept in ``tests/content_reference.py``
   (including nested, unterminated and malformed strings, which the
@@ -19,6 +19,7 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -26,7 +27,10 @@ from tests.conftest import *  # noqa: F401,F403 — spark fixture
 from tests.content_reference import mismatches
 
 
-def test_ngram_jaccard_kernel_matches_join_strategy(spark):
+def test_ngram_jaccard_kernel_matches_join_by_size(spark, monkeypatch):
+    """The size probe picks the plan: at or below ``KERNEL_MAX_BYTES``
+    the numpy kernel (a ``MapInArrow`` node), above it the join (none);
+    both yield the same pairs and scores."""
     rows = []
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     for i in range(40):
@@ -38,16 +42,23 @@ def test_ngram_jaccard_kernel_matches_join_strategy(spark):
         rows.append((i, " ".join(words * 3)))
     rows.append((100, "completely different text with other words entirely here now"))
     rows.append((101, ""))  # empty doc → single empty-string shingle
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    # from pandas: a local relation, which Catalyst can size
+    docs = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
 
+    from pdf_to_text_spark.core import sizing
     from pdf_to_text_spark.operators.dedup import ngram_jaccard_pairs
 
-    def key(df):
-        return {(r["id_a"], r["id_b"]): r["jaccard"] for r in df.collect()}
+    def run(max_bytes, thr, mdf):
+        monkeypatch.setattr(sizing, "KERNEL_MAX_BYTES", max_bytes)
+        df = ngram_jaccard_pairs(docs, threshold=thr, max_df=mdf)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return "MapInArrow" in plan, {(r["id_a"], r["id_b"]): r["jaccard"] for r in df.collect()}
 
+    n_bytes = sizing.plan_bytes(docs)
     for thr, mdf in [(0.2, None), (0.5, 30)]:
-        k = key(ngram_jaccard_pairs(docs, threshold=thr, max_df=mdf, strategy="kernel"))
-        j = key(ngram_jaccard_pairs(docs, threshold=thr, max_df=mdf, strategy="join"))
+        k_arrow, k = run(n_bytes, thr, mdf)
+        j_arrow, j = run(n_bytes - 1, thr, mdf)
+        assert k_arrow and not j_arrow
         assert k == j, f"kernel != join at threshold={thr} max_df={mdf}"
         assert k, f"degenerate test: no pairs produced at threshold={thr} max_df={mdf}"
 

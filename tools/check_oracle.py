@@ -14,6 +14,7 @@ import duckdb
 sys.path.insert(0, ".")
 import __spark_entry__ as E  # noqa: E402
 
+from pdf_to_text_spark.core.caching import mark_caches, release_caches_since  # noqa: E402
 from pdf_to_text_spark.session import get_spark  # noqa: E402
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -29,6 +30,18 @@ def _norm_cell(v):
             return str(int(v))
         return f"{v:.9g}"
     return str(v)
+
+
+def collect_query(spark, fn, sf_dir: str) -> tuple[list[str], list[tuple]]:
+    """Columns and rows of one query. The caches its operators register
+    (``core.caching``) are released once the rows are collected, so a
+    session running every query does not keep each one's caches."""
+    mark = mark_caches()
+    try:
+        sdf = fn(spark, sf_dir)
+        return sdf.columns, [tuple(r) for r in sdf.collect()]
+    finally:
+        release_caches_since(mark)
 
 
 def value_hash(rows, colnames) -> str:
@@ -55,9 +68,7 @@ def main() -> int:
         if only and not name.startswith(only):
             continue
         try:
-            sdf = fn(spark, sf_dir)
-            srows = [tuple(r) for r in sdf.collect()]
-            scols = sdf.columns
+            scols, srows = collect_query(spark, fn, sf_dir)
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error {type(e).__name__}: {str(e)[:300]}")
             failures += 1
