@@ -10,6 +10,12 @@ Usage::
     python bench_extra.py --sf /root/testdata/sf1.0 --queries q33_ngram_jaccard
     python bench_extra.py --sf /root/testdata/sf0.1 --all --repeats 3
     python bench_extra.py --sf /root/testdata/sf1.0 --queries q33_ngram_jaccard --plan plans/r06/q33_before.txt
+    python bench_extra.py --task-floor --cores 2 --repeats 5
+
+``--task-floor`` measures the fixed cost of a Python task: an empty
+6-partition stage through the extraction UDF, timed per task from
+Spark's status store after two warm-up runs (the first starts the
+workers, the second is their first task with the package imported).
 """
 
 from __future__ import annotations
@@ -38,6 +44,36 @@ def noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def task_floor(spark, repeats: int) -> dict:
+    """Min and median task ms of an empty 6-partition pandas-UDF stage
+    that calls ``parse_any_udf``, pooled over ``repeats`` warm runs."""
+    from pyspark.sql import functions as F
+
+    from pdf_to_text_spark.operators.extract import parse_any_udf
+    from perfbench.stages import read_group
+
+    sc = spark.sparkContext
+    df = (
+        spark.range(0, 6, 1, 6)
+        .filter(F.col("id") < 0)
+        .select(parse_any_udf(F.lit(None).cast("binary"), F.lit(None).cast("string")))
+    )
+    task_ms = []
+    for i in range(2 + repeats):
+        group = f"task-floor-{i}"
+        sc.setJobGroup(group, group)
+        noop(df)
+        if i >= 2:
+            task_ms += [t for s in read_group(sc, group)[1] for t in s["task_ms"]]
+    return {
+        "min_ms": min(task_ms),
+        "median_ms": statistics.median(task_ms),
+        "tasks": len(task_ms),
+        "repeats": repeats,
+        "load1": os.getloadavg()[0],
+    }
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
@@ -51,6 +87,11 @@ def main() -> None:
         action="store_true",
         help="materialize like bench.py (count + xxhash64 collect) instead of the noop sink",
     )
+    ap.add_argument(
+        "--task-floor",
+        action="store_true",
+        help="time the tasks of an empty pandas-UDF stage (at least 5 repeats) instead of queries",
+    )
     args = ap.parse_args()
 
     spark = get_spark(
@@ -59,6 +100,10 @@ def main() -> None:
         shuffle_partitions=args.cores,
         extra_conf={"spark.local.dir": f"{SCRATCH}/sg_spark_local_{os.getpid()}"},
     )
+    if args.task_floor:
+        print(json.dumps({"cores": args.cores, "task_floor": task_floor(spark, max(5, args.repeats))}))
+        spark.stop()
+        return
     qs = E.queries()
     names = list(qs) if args.all else (args.queries or [])
     out: dict[str, dict] = {}

@@ -10,6 +10,13 @@ whale-aware input exchange (small rows and whale rows in separate
 tasks), runs the routed extraction, writes bucket-partitioned results +
 lineage metrics + completion manifests; re-running after a failure
 resumes from the last committed bucket.
+
+Every subpackage a worker imports from ``engine.zip`` is one more
+zipimporter next to those of ``pyspark.zip`` and the Spark jar. pyspark
+invalidates the import caches before every task, and on CPython
+3.10–3.12 each zipimporter then re-reads its whole archive directory;
+importing the package makes a reused worker re-read an archive only when
+the archive changed.
 """
 
 from __future__ import annotations

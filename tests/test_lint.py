@@ -121,3 +121,12 @@ def test_size_decisions_read_the_one_probe():
     for fn in (ngram_jaccard_pairs, connected_components):
         params = set(inspect.signature(fn).parameters)
         assert not params & {"strategy", "broadcast_labels"}, (fn.__name__, params)
+
+
+def test_import_machinery_is_touched_in_one_place():
+    """Only the package ``__init__`` (its zip-directory stamp check)
+    names ``zipimport`` or ``invalidate_caches``."""
+    for p, src in _sources():
+        if p == PKG / "__init__.py":
+            continue
+        assert re.search(r"\bzipimport\b|\binvalidate_caches\b", src) is None, p
