@@ -522,12 +522,11 @@ def _q29_raster_ocr(spark, sf):
     raster→OCR fixpoint (ASCII-project, clip to the 64x48 grid,
     rstrip) directly, so the whole render/decode loop is hash-checked
     through actual pixel data."""
-    from pdf_to_text_spark.operators.multimodal import ocr_pages, rasterize_pages
+    from pdf_to_text_spark.operators.multimodal import ocr_pages, rasterize_col
 
     d = _par(spark, sf)
-    return ocr_pages(rasterize_pages(d)).select(
-        "doc_id", F.col("ocr_text").alias("recovered")
-    )
+    pages = d.select("doc_id", rasterize_col(F.col("text")).alias("page_png"))
+    return ocr_pages(pages).select("doc_id", F.col("ocr_text").alias("recovered"))
 
 
 def _q48_pptx_slides(spark, sf):

@@ -44,6 +44,7 @@ from __future__ import annotations
 import re
 import unicodedata as _ud
 import zlib
+from typing import NamedTuple
 
 LINE_Y_TOL = 2.0  # runs within this many points of a line's y are one line
 TJ_SPACE_KERN = -180.0  # TJ kerning beyond this inserts a word gap
@@ -903,33 +904,25 @@ def _skip_inline_dict(content: bytes, j: int) -> int:
     return j
 
 
-def _string_end(content: bytes, i: int) -> tuple[int, bool]:
-    """Literal string (§7.3.4.2) opening with the ``(`` at ``i``:
-    returns the position after its balancing ``)`` and True, or
-    ``(len(content), False)`` when it never closes. Nested parens count
-    depth; a backslash escapes the byte after it."""
-    depth = 1
-    for m in _STR_DELIM_RE.finditer(content, i + 1):
-        c = content[m.start()]
-        if c == 0x28:
-            depth += 1
-        elif c == 0x29:
-            depth -= 1
-            if not depth:
-                return m.end(), True
-    return len(content), False
-
-
 def _off_grammar_token(content: bytes, pos: int) -> tuple[bytes, int]:
     """Read what starts at ``pos``, a byte only the catch-all group 10
     of ``_SCAN_RE`` matched. A literal string with nested parens, or one
     that never closes (its body then runs to EOF), returns its
     unescaped bytes and the position after it; a bad or unterminated
-    hex string or any other byte raises."""
+    hex string or any other byte raises. In a string (§7.3.4.2) nested
+    parens count depth and a backslash escapes the byte after it."""
     c = content[pos]
     if c == 0x28:
-        end, closed = _string_end(content, pos)
-        return _unescape(content[pos + 1 : end - 1 if closed else end]), end
+        depth = 1
+        for m in _STR_DELIM_RE.finditer(content, pos + 1):
+            d = content[m.start()]
+            if d == 0x28:
+                depth += 1
+            elif d == 0x29:
+                depth -= 1
+                if not depth:
+                    return _unescape(content[pos + 1 : m.start()]), m.end()
+        return _unescape(content[pos + 1 :]), len(content)
     if c == 0x3C:  # not "<<" and not a valid hex string
         if content.find(b">", pos + 1) == -1:
             raise PdfError("unterminated hex string")
@@ -1240,22 +1233,27 @@ def _font_encoding(
     return None
 
 
-def _page_fonts(
-    objs: dict[int, bytes], page_body: bytes
-) -> dict[bytes, tuple[int, dict[int, str]] | None]:
-    """Page dict → font-name → (width, cmap) | None map.
-
-    ``/Resources`` may be inline or an indirect ref; the ``/Font``
-    sub-dict in our subset holds only ``Name → obj R`` entries (no
-    nested dicts), so a non-greedy ``<< ... >>`` match is exact.
-    """
+def _page_resources(objs: dict[int, bytes], page_body: bytes) -> bytes:
+    """The bytes holding a page's ``/Resources`` entries: the referenced
+    object when it is an indirect ref, else the page dict itself."""
     rm = _RES_REF_RE.search(page_body)
-    if rm is not None:
-        res = objs.get(int(rm.group(1)))
-        if res is None:
-            raise PdfError("dangling resources ref")
-    else:
-        res = page_body
+    if rm is None:
+        return page_body
+    res = objs.get(int(rm.group(1)))
+    if res is None:
+        raise PdfError("dangling resources ref")
+    return res
+
+
+def _page_fonts(
+    objs: dict[int, bytes], res: bytes
+) -> dict[bytes, tuple[int, dict[int, str]] | None]:
+    """Page resources → font-name → (width, cmap) | None map.
+
+    The ``/Font`` sub-dict in our subset holds only ``Name → obj R``
+    entries (no nested dicts), so a non-greedy ``<< ... >>`` match is
+    exact.
+    """
     fm = _FONT_DICT_RE.search(res)
     if fm is None:
         return {}
@@ -1277,20 +1275,35 @@ def _page_fonts(
     return fonts
 
 
-def _runs_from_content(
+class ContentScan(NamedTuple):
+    """What one pass of ``_scan_content`` reads from a content stream."""
+
+    runs: list[tuple[float, float, str]]  # (y, x, text) per show operator
+    inline: list[tuple[int, int, int, int]]  # (bi_end, id_start, data_start, ei)
+    painted: list[bytes]  # the name operand of each Do, in paint order
+
+
+def _scan_content(
     content: bytes,
     fonts: dict[bytes, tuple[int, dict[int, str]] | None] | None = None,
-) -> list[tuple[float, float, str]]:
-    """Interpret text operators → (y, x, text) runs.
+) -> ContentScan:
+    """The one reader of content streams: interpret the text operators
+    into (y, x, text) runs, and record the span of every inline image
+    (``_inline_image_span``) and the ``/Name`` operand of every ``Do``
+    in operator position.
 
     One loop fuses the regex scanner (``_SCAN_RE``, one C-level match
-    per token) with the text-operator interpreter: no token list, no
+    per token) with the operator interpreter: no token list, no
     second dispatch pass. Operands go on ``stack`` and array items on
     ``arr_stack`` as ``(kind, value)`` pairs; an operator consumes the
     stack. A byte only the catch-all branch reads (a nested or
     unterminated string, a malformed token) goes through
-    ``_off_grammar_token`` and the scan resumes after what it read."""
+    ``_off_grammar_token`` and the scan resumes after what it read.
+    Strings, dictionaries and inline-image data are never read as
+    operators, so a ``/Im0 Do`` or ``BI`` inside them paints nothing."""
     runs: list[tuple[float, float, str]] = []
+    inline: list[tuple[int, int, int, int]] = []
+    painted: list[bytes] = []
     x = y = 0.0
     leading = 0.0
     stack: list = []
@@ -1331,7 +1344,8 @@ def _runs_from_content(
                 elif g == 9:
                     opb = m.group(9)
                     if opb == b"BI":
-                        pos = _inline_image_span(content, pos)[2] + 2
+                        inline.append((pos, *_inline_image_span(content, pos)))
+                        pos = inline[-1][3] + 2
                         break
                     arr_stack[-1].append(("op", opb))
                 elif g == 3:  # inline dict
@@ -1372,8 +1386,12 @@ def _runs_from_content(
                 elif val == b"Tf":
                     if len(stack) >= 2 and stack[-2][0] == "name":
                         cur_font = (fonts or {}).get(stack[-2][1])
+                elif val == b"Do":
+                    if stack and stack[-1][0] == "name":
+                        painted.append(stack[-1][1])
                 elif val == b"BI":
-                    pos = _inline_image_span(content, pos)[2] + 2
+                    inline.append((pos, *_inline_image_span(content, pos)))
+                    pos = inline[-1][3] + 2
                     break
                 # ET and anything else: no text-position effect
                 stack.clear()
@@ -1402,7 +1420,7 @@ def _runs_from_content(
             tok, pos = _off_grammar_token(content, m.start())
             stack.append(("str", tok))
             break
-    return runs
+    return ContentScan(runs, inline, painted)
 
 
 def _tj_text(items: list, cur_font) -> str:
@@ -1583,11 +1601,12 @@ def extract_pdf_pages(
         if content is None:
             texts.append("")
             continue
-        fonts = _page_fonts(objs, page)
+        res = _page_resources(objs, page)
+        scan = _scan_content(content, _page_fonts(objs, res))
         # frozen spec (SPEC item 2): \x02 is stripped from page text
-        text = _runs_to_text(_runs_from_content(content, fonts)).replace("\x02", "")
+        text = _runs_to_text(scan.runs).replace("\x02", "")
         if page_ocr is not None and not text:
-            imgs = _page_painted_images(objs, page, content)
+            imgs = _page_painted_images(objs, res, scan.painted)
             if imgs:
                 ocr_text = page_ocr(imgs)
                 if ocr_text:
@@ -1618,82 +1637,111 @@ def extract_pdf_pages_safe(
 
 
 _IMG_INT_RE = {
-    k: re.compile(rb"/" + k + rb"\s+(\d+)")
-    for k in (b"Width", b"Height", b"BitsPerComponent")
+    "width": re.compile(rb"/Width\s+(\d+)"),
+    "height": re.compile(rb"/Height\s+(\d+)"),
+    "bpc": re.compile(rb"/BitsPerComponent\s+(\d+)"),
 }
 _COLORSPACE_RE = re.compile(rb"/ColorSpace\s*/(\w+)")
 
 
+def _image_ints(head: bytes, int_res: dict) -> dict[str, int]:
+    """The integer entries ``int_res`` finds in an image dict ``head``."""
+    return {k: int(m.group(1)) for k, r in int_res.items() if (m := r.search(head))}
+
+
+def _image_row(
+    obj: int, head: bytes, raw: bytes, chain: list[bytes], meta: dict, colorspace: str
+) -> dict:
+    """One ``extract_pdf_images`` row. A ``/DCTDecode`` last in the
+    chain is left undone (``codec='jpeg'``, the JPEG bytes); any other
+    chain decodes fully (``codec='raw'``)."""
+    # slice parms WITH the chain: array-form /DecodeParms is
+    # index-aligned to the full /Filter array (round-4 advice)
+    parms = _decode_parms(head, len(chain))
+    codec = "jpeg" if chain and chain[-1] == b"DCTDecode" else "raw"
+    n = len(chain) - (codec == "jpeg")
+    return {
+        "obj": obj,
+        "width": meta["width"],
+        "height": meta["height"],
+        "bpc": meta.get("bpc", 8),
+        "colorspace": colorspace,
+        "codec": codec,
+        "data": _apply_filters(head, raw, chain=chain[:n], parms=parms[:n]),
+    }
+
+
 def _image_row_from_body(num: int, body: bytes) -> dict | None:
-    """Decoded object body → image row dict (the ``extract_pdf_images``
-    row shape), or None when the object is not a /Subtype /Image
-    XObject. Shared by the document-wide image sweep and the
-    scanned-page OCR fallback's painted-image lookup."""
+    """Decoded object body → image row, or None when the object is not
+    a /Subtype /Image XObject. Shared by the document-wide image sweep
+    and the scanned-page OCR fallback's painted-image lookup."""
     sm = re.search(rb"stream\r?\n", body)
     head = body[: sm.start()] if sm else body
     if b"/Image" not in head or not re.search(rb"/Subtype\s*/Image\b", head):
         return None
-    meta = {
-        k.decode().lower(): int(r.search(head).group(1))
-        for k, r in _IMG_INT_RE.items()
-        if r.search(head)
-    }
+    meta = _image_ints(head, _IMG_INT_RE)
     if "width" not in meta or "height" not in meta:
         raise PdfError(f"image object {num}: missing /Width or /Height")
     cs = _COLORSPACE_RE.search(head)
     chain = _filter_chain(head)
-    parms = _decode_parms(head, len(chain))
     _, raw = _raw_stream(body)
-    if chain and chain[-1] == b"DCTDecode":
-        # slice parms WITH the chain: array-form /DecodeParms is
-        # index-aligned to the full /Filter array (round-4 advice)
-        payload = _apply_filters(head, raw, chain=chain[:-1], parms=parms[:-1])
-        codec = "jpeg"
-    else:
-        payload = _apply_filters(head, raw, chain=chain, parms=parms)
-        codec = "raw"
-    return {
-        "obj": num,
-        "width": meta["width"],
-        "height": meta["height"],
-        "bpc": meta.get("bitspercomponent", 8),
-        "colorspace": cs.group(1).decode() if cs else "DeviceGray",
-        "codec": codec,
-        "data": payload,
-    }
+    return _image_row(num, head, raw, chain, meta, cs.group(1).decode() if cs else "DeviceGray")
+
+
+# §8.9.7 Table 93: inline-image dictionary key + value abbreviations
+_BI_INT_RE = {
+    "width": re.compile(rb"/(?:W|Width)\s+(\d+)"),
+    "height": re.compile(rb"/(?:H|Height)\s+(\d+)"),
+    "bpc": re.compile(rb"/(?:BPC|BitsPerComponent)\s+(\d+)"),
+}
+_BI_CS_RE = re.compile(rb"/(?:CS|ColorSpace)\s*/(\w+)")
+_BI_F_RE = re.compile(rb"/(?:F|Filter)\s*(\[[^\]]*\]|/[A-Za-z0-9]+)")
+_BI_CS_MAP = {b"G": "DeviceGray", b"RGB": "DeviceRGB", b"CMYK": "DeviceCMYK"}
+_BI_F_MAP = {
+    b"AHx": b"ASCIIHexDecode", b"A85": b"ASCII85Decode", b"LZW": b"LZWDecode",
+    b"Fl": b"FlateDecode", b"RL": b"RunLengthDecode", b"CCF": b"CCITTFaxDecode",
+    b"DCT": b"DCTDecode",
+}
+
+
+def _inline_image_row(content: bytes, span: tuple[int, int, int, int]) -> dict:
+    """The image row (obj=0) of one ``BI … ID <data> EI`` whose
+    ``_scan_content`` span is ``span``. The abbreviated dict keys and
+    values of §8.9.7 Table 93/94 are expanded to their full forms so the
+    one filter pipeline (``_apply_filters``, incl. CCITT G4/G3-1D and
+    predictor handling) serves XObjects and inline images alike."""
+    bi_end, id_start, data_start, ei = span
+    head = content[bi_end:id_start]
+    meta = _image_ints(head, _BI_INT_RE)
+    if "width" not in meta or "height" not in meta:
+        raise PdfError("inline image missing /W or /H")
+    fm = _BI_F_RE.search(head)
+    chain = [_BI_F_MAP.get(f, f) for f in _FILTER_NAME_RE.findall(fm.group(1))] if fm else []
+    # binary payload convention: one whitespace after ID, one before
+    # EI — strip the trailing separator the span includes
+    raw = content[data_start:ei]
+    if raw[-1:] in (b" ", b"\r", b"\n", b"\t"):
+        raw = raw[:-1]
+    csm = _BI_CS_RE.search(head)
+    cs = csm.group(1) if csm else b"G"
+    return _image_row(0, head, raw, chain, meta, _BI_CS_MAP.get(cs, cs.decode()))
 
 
 _XOBJ_DICT_RE = re.compile(rb"/XObject\s*<<(.*?)>>", re.S)
-_DO_RE = re.compile(rb"/([^\s/<>\[\]()]+)\s+Do(?![A-Za-z])")
 
 
-def _page_painted_images(
-    objs: dict[int, bytes], page_body: bytes, content: bytes
-) -> list[dict]:
-    """Image XObjects a page actually PAINTS (``/Name Do`` in its
-    decoded content stream), as image rows in first-paint order — the
-    candidate set for the scanned-page OCR fallback. Resources may be
-    inline or an indirect ref (same resolution as ``_page_fonts``);
-    names painted but absent from /XObject, and non-image XObjects,
-    are skipped."""
-    rm = _RES_REF_RE.search(page_body)
-    if rm is not None:
-        res = objs.get(int(rm.group(1)))
-        if res is None:
-            raise PdfError("dangling resources ref")
-    else:
-        res = page_body
+def _page_painted_images(objs: dict[int, bytes], res: bytes, painted: list[bytes]) -> list[dict]:
+    """Image XObjects a page actually PAINTS (``painted``: the ``Do``
+    operands ``_scan_content`` read from its content stream), as image
+    rows in first-paint order — the candidate set for the scanned-page
+    OCR fallback. ``res``: the page's ``_page_resources``; names painted
+    but absent from /XObject, and non-image XObjects, are skipped."""
     xm = _XOBJ_DICT_RE.search(res)
     if xm is None:
         return []
-    names = {m.group(1): int(m.group(2)) for m in _FONT_ENTRY_RE.finditer(xm.group(1))}
+    names = {b"/" + m.group(1): int(m.group(2)) for m in _FONT_ENTRY_RE.finditer(xm.group(1))}
     rows: list[dict] = []
-    seen: set[bytes] = set()
-    for dm in _DO_RE.finditer(content):
-        nm = dm.group(1)
-        if nm in seen:
-            continue
-        seen.add(nm)
+    for nm in dict.fromkeys(painted):
         num = names.get(nm)
         body = objs.get(num) if num is not None else None
         if body is None:
@@ -1705,9 +1753,17 @@ def _page_painted_images(
 
 
 def extract_pdf_images(data: bytes, password: bytes | str = b"") -> list[dict]:
-    """All ``/Subtype /Image`` XObjects in the document → list of
-    ``{"obj", "width", "height", "bpc", "colorspace", "codec", "data"}``
-    in object-number order.
+    """All ``/Subtype /Image`` XObjects in the document, in object-number
+    order, then every inline image (§8.9.7 ``BI … ID <data> EI``) of the
+    page content streams, in page and stream order (``obj=0`` marks
+    the inline origin) → list of ``{"obj", "width", "height", "bpc",
+    "colorspace", "codec", "data"}``.
+
+    Inline images are found by ``_scan_content``, the one content-stream
+    reader the text path uses (run without fonts), so a ``BI`` inside a
+    string, a dictionary or a name such as ``/BI`` is never read as an
+    image, and a content stream that reader rejects raises the same
+    error ``extract_pdf_pages`` raises on it.
 
     ``/DCTDecode`` (embedded JPEG — the dominant real-world case, PDF
     32000 §7.4.8) must be last in the chain; any preceding transport
@@ -1739,113 +1795,12 @@ def extract_pdf_images(data: bytes, password: bytes | str = b"") -> list[dict]:
         row = _image_row_from_body(num, objs[num])
         if row is not None:
             out.append(row)
-    # inline images (§8.9.7 BI/ID/EI) from page content streams, in
-    # page order after all XObjects; obj=0 marks the inline origin
     root = _root_pages_num(objs)
     if root is not None:
         for pnum in _collect_leaf_pages(objs, root, set(), 0):
             content = _page_content(objs, objs[pnum])
             if content:
-                out.extend(_inline_images(content))
-    return out
-
-
-# §8.9.7 Table 93: inline-image dictionary key + value abbreviations
-_BI_DELIMS = frozenset(b" \t\r\n\f\x00()<>[]{}/%")
-_BI_INT_RE = {
-    "width": re.compile(rb"/(?:W|Width)\s+(\d+)"),
-    "height": re.compile(rb"/(?:H|Height)\s+(\d+)"),
-    "bpc": re.compile(rb"/(?:BPC|BitsPerComponent)\s+(\d+)"),
-}
-_BI_CS_RE = re.compile(rb"/(?:CS|ColorSpace)\s*/(\w+)")
-_BI_F_RE = re.compile(rb"/(?:F|Filter)\s*(\[[^\]]*\]|/[A-Za-z0-9]+)")
-_BI_CS_MAP = {b"G": "DeviceGray", b"RGB": "DeviceRGB", b"CMYK": "DeviceCMYK"}
-_BI_F_MAP = {
-    b"AHx": b"ASCIIHexDecode", b"A85": b"ASCII85Decode", b"LZW": b"LZWDecode",
-    b"Fl": b"FlateDecode", b"RL": b"RunLengthDecode", b"CCF": b"CCITTFaxDecode",
-    b"DCT": b"DCTDecode",
-}
-
-
-def _inline_images(content: bytes) -> list[dict]:
-    """All BI/ID/EI inline images in one decoded content stream, in
-    stream order — same row shape as the XObject path (obj=0). The
-    abbreviated dict keys/values of §8.9.7 Table 93/94 are expanded to
-    their full forms so the ONE filter pipeline (``_apply_filters``,
-    incl. CCITT G4/G3-1D and predictor handling) serves both paths.
-    The scan is CONTEXT-AWARE — string literals, dictionaries and hex
-    strings are skipped, and BI must sit in operator position — so a
-    page whose TEXT contains the word "BI" never false-positives."""
-    out: list[dict] = []
-    i, n = 0, len(content)
-    while i < n:
-        c = content[i]
-        if c == 0x28:  # ( string — skip with escapes + nesting
-            i = _string_end(content, i)[0]
-            continue
-        if c == 0x3C:  # < : dict or hex string — skip
-            if content[i + 1 : i + 2] == b"<":
-                depth, j = 1, i + 2
-                while j < n and depth:
-                    if content[j : j + 2] == b"<<":
-                        depth += 1
-                        j += 2
-                    elif content[j : j + 2] == b">>":
-                        depth -= 1
-                        j += 2
-                    else:
-                        j += 1
-                i = j
-            else:
-                j = content.find(b">", i + 1)
-                i = n if j == -1 else j + 1
-            continue
-        if not (
-            content[i : i + 2] == b"BI"
-            and (i == 0 or content[i - 1] in _BI_DELIMS)
-            and (i + 2 >= n or content[i + 2] in _BI_DELIMS)
-        ):
-            i += 1
-            continue
-        id_start, data_start, ei = _inline_image_span(content, i + 2)
-        head = content[i + 2 : id_start]
-        raw = content[data_start:ei]
-        i = ei + 2
-        meta = {
-            k: int(r.search(head).group(1))
-            for k, r in _BI_INT_RE.items()
-            if r.search(head)
-        }
-        if "width" not in meta or "height" not in meta:
-            raise PdfError("inline image missing /W or /H")
-        fm = _BI_F_RE.search(head)
-        chain = [
-            _BI_F_MAP.get(n, n) for n in _FILTER_NAME_RE.findall(fm.group(1))
-        ] if fm else []
-        # binary payload convention: one whitespace after ID, one before
-        # EI — strip the trailing separator our scan included
-        if raw[-1:] in (b" ", b"\r", b"\n", b"\t"):
-            raw = raw[:-1]
-        parms = _decode_parms(head, len(chain))
-        if chain and chain[-1] == b"DCTDecode":
-            payload = _apply_filters(head, raw, chain=chain[:-1], parms=parms[:-1])
-            codec = "jpeg"
-        else:
-            payload = _apply_filters(head, raw, chain=chain, parms=parms)
-            codec = "raw"
-        csm = _BI_CS_RE.search(head)
-        cs = csm.group(1) if csm else b"G"
-        out.append(
-            {
-                "obj": 0,
-                "width": meta["width"],
-                "height": meta["height"],
-                "bpc": meta.get("bpc", 8),
-                "colorspace": _BI_CS_MAP.get(cs, cs.decode()),
-                "codec": codec,
-                "data": payload,
-            }
-        )
+                out.extend(_inline_image_row(content, sp) for sp in _scan_content(content).inline)
     return out
 
 

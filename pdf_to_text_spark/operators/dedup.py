@@ -14,6 +14,7 @@ from pyspark.sql import types as T  # noqa: F401
 
 from pdf_to_text_spark.core import sizing
 from pdf_to_text_spark.core.caching import register_cache
+from pdf_to_text_spark.operators.textstats import words_of
 
 # ------------------------------------------------------------------ exact
 
@@ -40,14 +41,6 @@ MAX_SHINGLE_WORDS = 10_000  # cap: fingerprint the head of huge docs
 # shingles per row through interpreted higher-order exprs)
 
 
-def _words_col(c: Column, max_words: int = MAX_SHINGLE_WORDS) -> Column:
-    return F.slice(
-        F.filter(F.split(F.lower(c), "[^a-z0-9]+"), lambda w: F.length(w) > 0),
-        1,
-        max_words,
-    )
-
-
 def _shingles_of_words(words: Column, n: int) -> Column:
     """``words`` MUST be a bound attribute (a projected column), never
     an inline expression: Catalyst re-evaluates expressions referenced
@@ -66,7 +59,8 @@ def _shingles_of_words(words: Column, n: int) -> Column:
 
 
 def shingle_table(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    words_df = df.select(F.col(id_col), _words_col(F.col(text_col)).alias("_words"))
+    words = F.slice(words_of(F.col(text_col)), 1, MAX_SHINGLE_WORDS)
+    words_df = df.select(F.col(id_col), words.alias("_words"))
     return words_df.select(
         F.col(id_col), F.explode(_shingles_of_words(F.col("_words"), n)).alias("shingle")
     )
@@ -459,9 +453,7 @@ def simhash_table(
     partial sums (map-side combine) → bit assembly in a projection.
     Single traversal, no UDF; the shuffle carries one row per
     (doc, word)."""
-    words = F.array_distinct(
-        F.filter(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda w: F.length(w) > 0)
-    )
+    words = F.array_distinct(words_of(F.col(text_col)))
     exploded = df.select(F.col(id_col), F.explode(words).alias("w")).withColumn(
         "h", F.conv(F.substring(F.md5("w"), 1, 8), 16, 10).cast("long")
     )

@@ -2,17 +2,18 @@
 Arrow-batched ``mapInPandas``/pandas-UDF operators with row-level error
 tolerance (a bad payload becomes an error row, never a task failure):
 
-- ``rasterize_pages`` / ``rasterize_col``: text → page PNG bytes
-  (``core.raster``, real PNG encode via ``core.mediacodec``).
+- ``rasterize_col``: text → page PNG bytes (``core.raster``, real PNG
+  encode via ``core.mediacodec``).
 - ``ocr_pages``: page PNG → text by inverse glyph match
   (``core.raster.ocr_png``).
-- ``pdf_embedded_images``: every ``/Subtype /Image`` XObject of a PDF
-  payload becomes a row; JPEG payloads are pixel-decoded by the repo's
-  own baseline/progressive codec (``core.jpegcodec``) and CCITT bitonal
-  scans by ``core.ccittfax``, giving a mean luma. An undecodable JPEG
-  (arithmetic/lossless: ``MediaError``) keeps its row with a null
-  ``mean_luma``; an unparseable PDF or unsupported image codec (JPX,
-  JBIG2) becomes one ``extract_error`` row.
+- ``pdf_embedded_images``: every ``/Subtype /Image`` XObject and inline
+  image of a PDF payload becomes a row; JPEG payloads are pixel-decoded
+  by the repo's own baseline/progressive codec (``core.jpegcodec``) and
+  CCITT bitonal scans by ``core.ccittfax``, giving a mean luma. An
+  undecodable JPEG (arithmetic/lossless: ``MediaError``) keeps its row
+  with a null ``mean_luma``; an unparseable PDF, a content stream the
+  text scanner rejects, or an unsupported image codec (JPX, JBIG2)
+  becomes one ``extract_error`` row.
 """
 
 from __future__ import annotations
@@ -25,38 +26,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def rasterize_pages(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def rasterize_col(text: Column) -> Column:
     """M2 page rasterize: text → fixed-grid grayscale PNG page bytes
     (``core.raster`` frozen spec — deterministic injective 5x7 font,
-    real PNG encode). The Spark shape of the reference's
+    real PNG encode), the Spark shape of the reference's
     ``page.get_pixmap`` hop (convert_pdfs_pymupdf.py:18,
-    core_document_processing.py:60-66): Arrow-batched mapInPandas,
-    binary out, one row per page."""
-    from pdf_to_text_spark.core.raster import rasterize_text
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "page_png": pdf[text_col].map(
-                        lambda t: rasterize_text(t) if t is not None else None
-                    ),
-                }
-            )
-
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(id_col, text_col).mapInPandas(
-        batches, schema=f"{id_col} {id_type}, page_png binary"
-    )
-
-
-def rasterize_col(text: Column) -> Column:
-    """Column-shaped M2 variant: text → page-PNG bytes as a scalar
-    Arrow UDF, for composing the raster into a wider projection (e.g.
-    the artifact-export job) without the frame-join a ``mapInPandas``
-    transform would force — keeps the whole artifact row one
-    shuffle-free select."""
+    core_document_processing.py:60-66). A scalar Arrow UDF, so the
+    raster composes into any projection (the artifact-export job's
+    row, ``ocr_pages``' input) in one shuffle-free select."""
 
     @F.pandas_udf(T.BinaryType())
     def _r(s: pd.Series) -> pd.Series:
@@ -136,7 +113,8 @@ def pdf_embedded_images(
     password: bytes | str = b"",
 ) -> DataFrame:
     """Embedded-image extraction from PDF payloads: every ``/Subtype
-    /Image`` XObject becomes a row — 1-based image_no, dimensions,
+    /Image`` XObject, then every inline image (``obj`` 0) of the page
+    content streams, becomes a row — 1-based image_no, dimensions,
     colorspace, codec ('jpeg' for /DCTDecode, 'raw' for fully-decoded
     chains) and the image bytes, via one Arrow-batched ``mapInPandas``
     pass (embarrassingly parallel, no shuffle). With ``decode=True``,
@@ -144,11 +122,14 @@ def pdf_embedded_images(
     progressive codec (``core/jpegcodec.py``) and ``mean_luma`` carries
     the rounded mean luminance; CCITT bitonal scans (G4, G3 1-D, G3 mixed /K>0) decode to packed 1-bpc rows
     (``core/ccittfax.py``) and get a bit-mean luma. Row-level
-    tolerance: unparseable PDFs or unsupported image codecs (JPX,
-    JBIG2) emit one (image_no=0, extract_error) row; an image whose
-    pixels fail to decode (e.g. an arithmetic-coded SOF9 JPEG) keeps
-    its row with a null ``mean_luma`` and the codec's message in
-    ``extract_error``, prefixed with the codec (``jpeg:…``, ``raw:…``).
+    tolerance: unparseable PDFs, content streams the text scanner
+    rejects (inline images are found by the same scan that reads the
+    text, so such a PDF's text row is a ``pdf:`` error too) and
+    unsupported image codecs (JPX, JBIG2) emit one (image_no=0,
+    extract_error) row; an image whose pixels fail to decode (e.g. an
+    arithmetic-coded SOF9 JPEG) keeps its row with a null ``mean_luma``
+    and the codec's message in ``extract_error``, prefixed with the
+    codec (``jpeg:…``, ``raw:…``).
 
     Reference parity: generalizes the reference's page-level rasterize
     hop (``core_document_processing.py:60-66``) to first-class image

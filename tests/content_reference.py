@@ -1,14 +1,14 @@
 """Reference content-stream tokenizer and text-operator interpreter.
 
-The differential oracle for ``pdfparse._runs_from_content``, the fused
-scanner that is the only production path: ``_tokenize_slow`` reads a
-content stream with a per-token branch ladder and ``_runs_interpret``
-dispatches the text operators over its token stream, as two separate
-passes. It keeps its own inline-image skip, so the scanner's
-``_inline_image_span`` is checked too. Tests compare the two
-implementations' outcome (runs, ``PdfError`` message, or exception
-class) stream by stream; see ``mismatches``. This module is not
-collected by pytest.
+The differential oracle for ``pdfparse._scan_content``, the fused
+scanner that is the only production reader of content streams:
+``_tokenize_slow`` reads a content stream with a per-token branch
+ladder and ``_runs_interpret`` dispatches the operators over its token
+stream, as two separate passes. It keeps its own inline-image skip, so
+the scanner's ``_inline_image_span`` is checked too. Tests compare the
+two implementations' outcome (the runs, inline-image spans and ``Do``
+operands, or the ``PdfError`` message, or the exception class) stream
+by stream; see ``mismatches``. This module is not collected by pytest.
 """
 
 from __future__ import annotations
@@ -32,12 +32,13 @@ _WS_RUN_RE = re.compile(rb"[ \t\r\n\f\x00]+")
 _STR_SPECIAL_RE = re.compile(rb"[\\()]")
 
 
-def _skip_inline_image(content: bytes, end_of_bi: int) -> int:
-    """§8.9.7 inline image: skip ``<pairs> ID <binary> EI`` starting
-    after the BI operator; returns the position after EI. The binary
-    payload is NOT token syntax — without this skip it would tokenize
-    as garbage (or fake text). Data starts one whitespace byte after
-    ID; EI must be delimiter-bounded on both sides."""
+def _inline_image(content: bytes, end_of_bi: int) -> tuple[int, int, int, int]:
+    """§8.9.7 inline image ``<pairs> ID <binary> EI`` starting after the
+    BI operator: returns its span, ``(end_of_bi, start of ID, start of
+    the binary data, start of EI)``. The binary payload is NOT token
+    syntax — without this skip it would tokenize as garbage (or fake
+    text). Data starts one whitespace byte after ID; EI must be
+    delimiter-bounded on both sides."""
     idm = re.compile(rb"\bID[\r\n ]").search(content, end_of_bi)
     if idm is None:
         raise PdfError("inline image missing ID")
@@ -54,15 +55,16 @@ def _skip_inline_image(content: bytes, end_of_bi: int) -> int:
         ):
             break
         j += 2
-    return j + 2
+    return end_of_bi, idm.start(), idm.end(), j
 
 
-def _tokenize_slow(content: bytes):
-    """Yield ('str', raw bytes) | ('num', f) | ('name', b) | ('op', b) | ('arr', list).
+def _tokenize_slow(content: bytes, inline: list):
+    """Yield ('str', raw bytes) | ('num', f) | ('name', b) | ('op', b) | ('arr', list),
+    appending the span of each inline image it skips to ``inline``.
 
     String tokens stay RAW BYTES here — the byte→text decode depends on
     the current font's ToUnicode CMap, which only the interpreter
-    (``_runs_from_content``) knows at show time.
+    knows at show time.
 
     Positional matching throughout (no ``content[i:]`` slices) — the
     tokenizer must stay O(n) on multi-MB whale content streams.
@@ -170,7 +172,8 @@ def _tokenize_slow(content: bytes):
                 if not m:
                     raise PdfError(f"bad content token at {i}")
                 if m.group(0) == b"BI":
-                    i = _skip_inline_image(content, m.end())
+                    inline.append(_inline_image(content, m.end()))
+                    i = inline[-1][3] + 2
                     continue
                 tok = emit(("op", m.group(0)))
                 if tok:
@@ -181,9 +184,11 @@ def _tokenize_slow(content: bytes):
 def _runs_interpret(
     tokens,
     fonts: dict[bytes, tuple[int, dict[int, str]] | None] | None = None,
-) -> list[tuple[float, float, str]]:
-    """Reference interpreter over a token stream (fallback path)."""
+) -> tuple[list[tuple[float, float, str]], list[bytes]]:
+    """Reference interpreter over a token stream: the text runs, and
+    the name operand of each ``Do``."""
     runs: list[tuple[float, float, str]] = []
+    painted: list[bytes] = []
     x = y = 0.0
     leading = 0.0
     stack: list = []
@@ -224,22 +229,28 @@ def _runs_interpret(
             # subset; the name selects the CMap for later show ops
             if len(stack) >= 2 and stack[-2][0] == "name":
                 cur_font = (fonts or {}).get(stack[-2][1])
+        elif val == b"Do":
+            if stack and stack[-1][0] == "name":
+                painted.append(stack[-1][1])
         # ET and anything else: no text-position effect in our subset
         stack.clear()
-    return runs
+    return runs, painted
 
 
-def reference_runs(content: bytes, fonts=None) -> list[tuple[float, float, str]]:
-    """Runs of ``content`` through the reference tokenizer + interpreter."""
-    return _runs_interpret(_tokenize_slow(content), fonts)
+def reference_scan(content: bytes, fonts=None) -> pdfparse.ContentScan:
+    """``content`` read by the reference tokenizer + interpreter."""
+    inline: list[tuple[int, int, int, int]] = []
+    runs, painted = _runs_interpret(_tokenize_slow(content, inline), fonts)
+    return pdfparse.ContentScan(runs, inline, painted)
 
 
 def outcome(fn, content: bytes, fonts=None):
     """What ``fn(content, fonts)`` produces, in a comparable form: its
-    runs, the message of the ``PdfError`` it raises, or the class name
-    of any other exception (the ``unexpected:<class>`` error column)."""
+    scan (runs, inline-image spans and ``Do`` operands), the message of
+    the ``PdfError`` it raises, or the class name of any other
+    exception (the ``unexpected:<class>`` error column)."""
     try:
-        return ("runs", fn(content, fonts))
+        return ("scan", fn(content, fonts))
     except PdfError as e:
         return ("PdfError", str(e))
     except Exception as e:  # noqa: BLE001 — the class is the outcome
@@ -248,10 +259,11 @@ def outcome(fn, content: bytes, fonts=None):
 
 def mismatches(cases) -> list[bytes]:
     """The head of each ``(content, fonts)`` case on which
-    ``pdfparse._runs_from_content`` and the reference differ in outcome."""
+    ``pdfparse._scan_content`` and the reference differ in outcome: in
+    the runs, the inline-image spans or the ``Do`` operands."""
     return [
         content[:80]
         for content, fonts in cases
-        if outcome(pdfparse._runs_from_content, content, fonts)
-        != outcome(reference_runs, content, fonts)
+        if outcome(pdfparse._scan_content, content, fonts)
+        != outcome(reference_scan, content, fonts)
     ]

@@ -1,9 +1,10 @@
 """Differential test of the production content-stream scanner.
 
-``pdfparse._runs_from_content`` (the fused regex scanner + text-operator
+``pdfparse._scan_content`` (the fused regex scanner + operator
 interpreter) against the reference tokenizer + interpreter in
 ``tests/content_reference.py``, compared by outcome: the runs, the
-``PdfError`` message, or the class of any other exception.
+inline-image spans and the ``Do`` operands, or the ``PdfError``
+message, or the class of any other exception.
 
 - Harvested: every content stream, with its fonts, that the parser
   interprets for the PDF rows of one cycle of the extended fixture mix
@@ -12,7 +13,8 @@ interpreter) against the reference tokenizer + interpreter in
 - Fuzzed: windows of those streams with one or two grammar-hostile
   tokens spliced in at seeded positions (nested and unterminated
   strings, bad hex, unbalanced brackets, stray delimiters, inline-image
-  markers).
+  markers and a whole inline image, a ``/BI`` name, and ``Do``
+  operators in operator position, in a string and in a dictionary).
 """
 
 from __future__ import annotations
@@ -28,6 +30,7 @@ from tests.content_reference import mismatches, outcome
 HOSTILE = [
     b"(a(b)c)", b"(x\\", b"<4G>", b"]", b"{", b"%", b"BI", b" ID ", b" EI ",
     b".", b"-", b"[", b"(", b"<", b"<<", b")",
+    b"/BI", b"(/Im0 Do)", b"/Im0 Do", b"<< /A (/Im0 Do) >>", b" BI /W 2 /H 1 ID \x00) EI ",
 ]
 FUZZ_STREAMS = 4000
 
@@ -35,9 +38,9 @@ FUZZ_STREAMS = 4000
 @pytest.fixture(scope="module")
 def harvested():
     """(content, fonts) of every page the parser interprets, recorded
-    by wrapping ``_runs_from_content`` during ``extract_pdf_pages``."""
+    by wrapping ``_scan_content`` during ``extract_pdf_pages``."""
     seen: list[tuple[bytes, dict | None]] = []
-    real = P._runs_from_content
+    real = P._scan_content
 
     def record(content, fonts=None):
         seen.append((content, fonts))
@@ -45,7 +48,7 @@ def harvested():
 
     rows = make_corpus(sum(w for _, w in ROW_CLASSES_EXTENDED), 41, ROW_CLASSES_EXTENDED)
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(P, "_runs_from_content", record)
+        mp.setattr(P, "_scan_content", record)
         for row in rows:
             if row["cls"].startswith("pdf"):
                 P.extract_pdf_pages_safe(row["html"])
@@ -56,6 +59,7 @@ def harvested():
 def test_scanner_matches_reference_on_harvested_streams(harvested):
     assert len(harvested) > 400
     assert any(fonts and any(fonts.values()) for _, fonts in harvested)
+    assert any(P._scan_content(c, f).painted for c, f in harvested)
     assert mismatches(harvested) == []
 
 
@@ -71,6 +75,9 @@ def test_scanner_matches_reference_on_splice_fuzz(harvested):
             at = rng.randint(0, len(window))
             window[at:at] = rng.choice(HOSTILE)
         cases.append((bytes(window), fonts))
-    kinds = {outcome(P._runs_from_content, c, f)[0] for c, f in cases}
-    assert kinds == {"runs", "PdfError", "exception"}, kinds
+    outs = [outcome(P._scan_content, c, f) for c, f in cases]
+    kinds = {kind for kind, _ in outs}
+    assert kinds == {"scan", "PdfError", "exception"}, kinds
+    scans = [scan for kind, scan in outs if kind == "scan"]
+    assert any(s.inline for s in scans) and any(s.painted for s in scans)
     assert mismatches(cases) == []

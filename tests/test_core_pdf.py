@@ -1064,6 +1064,49 @@ def test_inline_scan_ignores_bi_in_text():
     assert extract_pdf_images(pdf) == []
 
 
+def test_inline_images_beside_bi_names():
+    """A name ``/BI`` (a font selected with ``Tf``, an XObject painted
+    with ``Do``) is not an inline image: the page's one real inline
+    image is extracted and the text path reads the same page."""
+    from pdf_to_text_spark.core.pdfparse import extract_pdf_images
+
+    gray = bytes(range(12))  # 4x3 8-bpc
+    content = (
+        b"BI /W 4 /H 3 /BPC 8 /CS /G ID " + gray + b" EI\n"
+        + b"BT /BI 12 Tf 72 720 Td (named font) Tj ET\nq 1 0 0 1 0 0 cm /BI Do Q\n"
+    )
+    pdf = build_pdf([content], flate=True)
+    (im,) = extract_pdf_images(pdf)
+    assert (im["obj"], im["width"], im["height"], im["data"]) == (0, 4, 3, gray)
+    assert extract_pdf_pages(pdf) == ["named font"]
+
+
+@pytest.mark.parametrize(
+    "content",
+    [
+        b"BT (a) Tj ET <4G> Tj",
+        b"BT (a) Tj ET BI /W 1 /H 1 EI",
+        b"BT 5 Td ET",
+        b"BT (a) Tj ET ] Tj",
+    ],
+    ids=["bad_hex", "inline_without_id", "missing_operand", "unopened_array"],
+)
+def test_rejected_content_stream_same_error_for_text_and_images(content):
+    """Text and image extraction read a content stream with the one
+    scanner, so a stream it rejects fails both with the same error."""
+    from pdf_to_text_spark.core.pdfparse import extract_pdf_images
+
+    pdf = build_pdf([content])
+    with pytest.raises(Exception) as text_err:
+        extract_pdf_pages(pdf)
+    with pytest.raises(Exception) as image_err:
+        extract_pdf_images(pdf)
+    assert (type(image_err.value), str(image_err.value)) == (
+        type(text_err.value),
+        str(text_err.value),
+    )
+
+
 # ------------------------------------------------- round-5: /Encoding
 
 

@@ -130,3 +130,25 @@ def test_import_machinery_is_touched_in_one_place():
         if p == PKG / "__init__.py":
             continue
         assert re.search(r"\bzipimport\b|\binvalidate_caches\b", src) is None, p
+
+
+def test_content_stream_operators_are_read_in_one_function():
+    """In ``core/pdfparse.py`` the operator literals ``b"BI"`` and
+    ``b"Do"`` appear only inside ``_scan_content``, the one reader of
+    content streams, so no second reader grows back beside it."""
+    tree = ast.parse((PKG / "core" / "pdfparse.py").read_text())
+    (scanner,) = (
+        n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "_scan_content"
+    )
+
+    def op_literals(node):
+        return [
+            n for n in ast.walk(node)
+            if isinstance(n, ast.Constant) and isinstance(n.value, bytes)
+            and n.value in (b"BI", b"Do")
+        ]
+
+    inside = {id(n) for n in op_literals(scanner)}
+    assert {n.value for n in op_literals(scanner)} == {b"BI", b"Do"}
+    stray = [n.lineno for n in op_literals(tree) if id(n) not in inside]
+    assert not stray, f"content-stream operators read outside _scan_content, lines {stray}"

@@ -64,7 +64,7 @@ def test_ngram_jaccard_kernel_matches_join_by_size(spark, monkeypatch):
 
 
 def test_tokenizer_fast_matches_slow_on_adversarial_streams():
-    """The scanner (``_runs_from_content``) must read adversarial
+    """The scanner (``_scan_content``) must read adversarial
     tokenizer streams exactly as the reference tokenizer does: the same
     runs, the same ``PdfError`` message or the same exception class,
     also on streams outside the scanner's token branches."""
@@ -111,7 +111,7 @@ def test_fused_run_interpreter_matches_reference():
         b"BT ((nested) parens) Tj ET",
     ]
     assert mismatches((c, None) for c in cases) == []
-    assert P._runs_from_content(cases[-1]) == [(0.0, 0.0, "(nested) parens")]
+    assert P._scan_content(cases[-1]).runs == [(0.0, 0.0, "(nested) parens")]
 
 
 @pytest.mark.parametrize(

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from pdf_to_text_spark.core.raster import GLYPHS, ocr_expected, ocr_png, rasterize_text
-from pdf_to_text_spark.operators.multimodal import ocr_pages, rasterize_pages
+from pdf_to_text_spark.operators.multimodal import ocr_pages, rasterize_col
 
 
 def test_glyph_table_injective_and_space_blank():
@@ -24,10 +24,8 @@ def test_raster_ocr_spark_chain(spark):
         (5, "trailing spaces   \n\n\n"),
     ]
     df = spark.createDataFrame(cases, "doc_id long, text string")
-    out = {
-        r["doc_id"]: (r["ocr_text"], r["ocr_error"])
-        for r in ocr_pages(rasterize_pages(df)).collect()
-    }
+    pages = df.select("doc_id", rasterize_col(F.col("text")).alias("page_png"))
+    out = {r["doc_id"]: (r["ocr_text"], r["ocr_error"]) for r in ocr_pages(pages).collect()}
     for i, t in cases:
         assert out[i] == (ocr_expected(t), None), (i, t, out[i])
 

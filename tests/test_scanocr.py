@@ -128,6 +128,32 @@ def test_unsupported_scan_codec_is_disclosed_error():
     assert pages is None and err is not None
 
 
+@pytest.mark.parametrize(
+    "content",
+    [
+        b"/Span << /ActualText (/Im0 Do) >> BDC EMC",
+        b"(/Im0 Do) Tz",
+        b"BI /W 7 /H 1 /BPC 8 /CS /G ID /Im0 Do EI",
+    ],
+    ids=["bdc_string", "string_operand", "inline_image_data"],
+)
+def test_do_outside_operator_position_paints_nothing(content):
+    """Only a ``Do`` in operator position paints: a page whose one
+    ``/Im0 Do`` sits in a marked-content string, a string operand or
+    inline-image data paints nothing, so with OCR on it stays "" even
+    though /Im0 is a readable scan."""
+    from pdf_to_text_spark.core.mediacodec import decode_png
+    from pdf_to_text_spark.core.raster import rasterize_text
+    from pdf_to_text_spark.fixtures import oracle_extract
+
+    w, h, _, px = decode_png(rasterize_text("SECRET"))
+    pdf = build_pdf([content], images=[(w, h, px, "gray")])
+    assert extract_pdf_pages(pdf, page_ocr=ocr_scanned_images) == [""]
+    assert oracle_extract(pdf, None, ocr=True)[3] == [""]
+    painted = build_pdf([content + b"\n/Im0 Do"], images=[(w, h, px, "gray")])
+    assert extract_pdf_pages(painted, page_ocr=ocr_scanned_images) == ["SECRET"]
+
+
 def test_scanned_composes_with_encryption():
     pdf = build_scanned_pdf([TEXT], kind="g4", encrypt=4, user_pw=b"swordfish")
     with pytest.raises(PdfError):
