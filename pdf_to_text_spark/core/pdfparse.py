@@ -103,17 +103,20 @@ def _filter_chain(head: bytes) -> list[bytes]:
 
 # ------------------------------------------------- stream filters (§7.4)
 
-_WS_BYTES = frozenset(b" \t\r\n\f\x00")
+_WS = b" \t\r\n\f\x00"
+_WS_BYTES = frozenset(_WS)
+_HEX_DIGITS_RE = re.compile(rb"[0-9A-Fa-f]*")
 
 
 def _ascii_hex_decode(data: bytes) -> bytes:
-    """§7.4.2 ASCIIHexDecode: hex pairs, whitespace ignored, '>' is EOD,
-    odd length pads a zero nibble."""
+    """§7.4.2 ASCIIHexDecode, and the one reader of hex strings
+    (§7.3.4.3): hex pairs, whitespace ignored, '>' is EOD, odd length
+    pads a zero nibble."""
     eod = data.find(b">")
     if eod != -1:
         data = data[:eod]
-    hx = bytes(b for b in data if b not in _WS_BYTES)
-    if not re.fullmatch(rb"[0-9A-Fa-f]*", hx):
+    hx = data.translate(None, _WS)
+    if not _HEX_DIGITS_RE.fullmatch(hx):
         raise PdfError("bad ASCIIHex data")
     if len(hx) % 2:
         hx += b"0"
@@ -250,20 +253,30 @@ _INT_PARM_RE = {
 _BLACKIS1_RE = re.compile(rb"/BlackIs1\s+(true|false)")
 
 
+_DICT_DELIM_RE = re.compile(rb"<<|>>|[(<]")
+
+
 def _scan_dict(data: bytes, start: int) -> tuple[bytes, int]:
-    """Return (dict bytes incl. << >>, end index); ``start`` at '<<'."""
+    """The one reader of dictionaries (§7.3.7): (dict bytes incl. << >>,
+    end index) of the balanced dictionary at ``start`` ('<<'). Literal
+    and hex strings inside are skipped whole, so a ``>>`` in a string,
+    or the ``>`` that ends a hex string, never closes it."""
     depth, i = 0, start
-    while i < len(data) - 1:
-        if data[i : i + 2] == b"<<":
+    while m := _DICT_DELIM_RE.search(data, i):
+        i = m.end()
+        d = m.group()
+        if d == b"<<":
             depth += 1
-            i += 2
-        elif data[i : i + 2] == b">>":
+        elif d == b">>":
             depth -= 1
-            i += 2
-            if depth == 0:
+            if not depth:
                 return data[start:i], i
-        else:
-            i += 1
+        elif d == b"(":
+            i = _literal_string(data, m.start())[1]
+        else:  # hex string: skip to its '>'
+            i = data.find(b">", i) + 1
+            if not i:
+                break
     raise PdfError("unterminated dictionary")
 
 
@@ -374,17 +387,27 @@ def _unpredict(data: bytes, parms: dict) -> bytes:
     raise PdfError(f"unsupported predictor {pred}")
 
 
-def _raw_stream(body: bytes) -> tuple[bytes, bytes]:
-    """(dict head, undecoded stream payload) of an object body."""
+def _stream_split(body: bytes) -> tuple[bytes, int, int] | None:
+    """The one reader of stream objects (§7.3.8): (dict head, payload
+    start, payload end) of an object body, or None when it has no
+    stream or its head no /Length."""
     sm = re.search(rb"stream\r?\n", body)
     if sm is None:
-        raise PdfError("contents object has no stream")
+        return None
     head = body[: sm.start()]
     lm = _LENGTH_RE.search(head)
     if lm is None:
-        raise PdfError("stream missing /Length")
-    start = sm.end()
-    return head, body[start : start + int(lm.group(1))]
+        return None
+    return head, sm.end(), sm.end() + int(lm.group(1))
+
+
+def _raw_stream(body: bytes) -> tuple[bytes, bytes]:
+    """(dict head, undecoded stream payload) of an object body."""
+    split = _stream_split(body)
+    if split is None:
+        raise PdfError("object has no stream with a /Length")
+    head, start, end = split
+    return head, body[start:end]
 
 
 def _apply_filters(
@@ -458,7 +481,6 @@ _PAD = bytes(
 )
 _ENCRYPT_REF_RE = re.compile(rb"/Encrypt\s+(\d+)\s+\d+\s+R")
 _ID_RE = re.compile(rb"/ID\s*\[\s*<([0-9A-Fa-f]*)>")
-_HEXSTR_RE = re.compile(rb"<([0-9A-Fa-f \r\n]*)>")
 
 
 def rc4(key: bytes, data: bytes) -> bytes:
@@ -519,24 +541,13 @@ def _compute_u(key: bytes, id0: bytes, r: int) -> bytes:
     return u  # first 16 bytes significant; /U pads to 32 arbitrarily
 
 
-def _object_key(key: bytes, num: int, gen: int = 0) -> bytes:
-    """§7.6.2 Algorithm 1: per-object RC4 key."""
+def _object_key(key: bytes, num: int, aes: bool) -> bytes:
+    """§7.6.2 Algorithm 1: the per-object key of generation-0 object
+    ``num``; for AESV2 the md5 also absorbs the constant ``sAlT``."""
     import hashlib
 
-    h = hashlib.md5(
-        key + num.to_bytes(3, "little") + gen.to_bytes(2, "little")
-    ).digest()
-    return h[: min(len(key) + 5, 16)]
-
-
-def _object_key_aes(key: bytes, num: int, gen: int = 0) -> bytes:
-    """§7.6.2 Algorithm 1 for AESV2: the per-object md5 additionally
-    absorbs the spec constant ``sAlT`` (0x73416C54)."""
-    import hashlib
-
-    h = hashlib.md5(
-        key + num.to_bytes(3, "little") + gen.to_bytes(2, "little") + b"sAlT"
-    ).digest()
+    salt = b"sAlT" if aes else b""
+    h = hashlib.md5(key + num.to_bytes(3, "little") + b"\0\0" + salt).digest()
     return h[: min(len(key) + 5, 16)]
 
 
@@ -555,44 +566,8 @@ def _str_entry(body: bytes, name: bytes) -> bytes:
     if m is None:
         raise PdfError(f"encrypt dict missing /{name.decode()}")
     if m.group(1) == b"<":
-        hm = _HEXSTR_RE.match(body, m.end() - 1)
-        if hm is None:
-            raise PdfError(f"bad hex string for /{name.decode()}")
-        hx = re.sub(rb"\s", b"", hm.group(1))
-        return bytes.fromhex(hx.decode("ascii"))
-    # literal string with PDF escapes
-    i = m.end()
-    depth, out = 1, bytearray()
-    while i < len(body) and depth:
-        c = body[i]
-        if c == 0x5C and i + 1 < len(body):  # backslash escape
-            nxt = body[i + 1]
-            esc = {0x6E: 10, 0x72: 13, 0x74: 9, 0x62: 8, 0x66: 12,
-                   0x28: 40, 0x29: 41, 0x5C: 92}
-            if nxt in esc:
-                out.append(esc[nxt])
-                i += 2
-                continue
-            if 0x30 <= nxt <= 0x37:  # octal
-                oct_s = body[i + 1 : i + 4]
-                k = 1
-                while k < 3 and k < len(oct_s) and 0x30 <= oct_s[k] <= 0x37:
-                    k += 1
-                out.append(int(oct_s[:k], 8) & 0xFF)
-                i += 1 + k
-                continue
-            out.append(nxt)
-            i += 2
-            continue
-        if c == 0x28:
-            depth += 1
-        elif c == 0x29:
-            depth -= 1
-            if depth == 0:
-                break
-        out.append(c)
-        i += 1
-    return bytes(out)
+        return _ascii_hex_decode(body[m.end() :])
+    return _literal_string(body, m.start(1))[0]
 
 
 def _encrypt_ref_num(data: bytes, objs: dict[int, bytes]) -> int | None:
@@ -617,8 +592,8 @@ def _encrypt_ref_num(data: bytes, objs: dict[int, bytes]) -> int | None:
         if em is not None:
             return int(em.group(1))
     for body in objs.values():
-        head_end = body.find(b"stream")
-        head = body if head_end < 0 else body[:head_end]
+        split = _stream_split(body)
+        head = body if split is None else split[0]
         if b"/XRef" in head and re.search(rb"/Type\s*/XRef\b", head):
             em = _ENCRYPT_REF_RE.search(head)
             if em is not None:
@@ -676,30 +651,21 @@ def _decrypt_in_place(data: bytes, objs: dict[int, bytes], password: bytes = b""
         u_entry = _str_entry(enc, b"U")
         if len(u_entry) < 48:
             raise PdfError("AES-256 /U entry too short")
-        vsalt, ksalt = u_entry[32:40], u_entry[40:48]
-        if hfn(password, vsalt, b"") == u_entry[:32]:
-            ue = _str_entry(enc, b"UE")
-            if len(ue) < 32:
-                raise PdfError("AES-256 /UE entry too short")
-            file_key = cbc_decrypt_nopad(hfn(password, ksalt, b""), bytes(16), ue[:32])
-            _decrypt_streams(objs, enc_num, file_key, aes=True, per_object=False)
-            return
-        # §7.6.4.4.10/11: the same supplied password may be the OWNER
-        # password — /O = hash || validation salt || key salt, with the
-        # full 48-byte /U absorbed as udata; /OE wraps the same file key
-        # (round-5: closes the owner-password-only boundary).
-        o_entry = _str_entry(enc, b"O")
-        if len(o_entry) >= 48 and hfn(
-            password, o_entry[32:40], u_entry[:48]
-        ) == o_entry[:32]:
-            oe = _str_entry(enc, b"OE")
-            if len(oe) < 32:
-                raise PdfError("AES-256 /OE entry too short")
-            file_key = cbc_decrypt_nopad(
-                hfn(password, o_entry[40:48], u_entry[:48]), bytes(16), oe[:32]
-            )
-            _decrypt_streams(objs, enc_num, file_key, aes=True, per_object=False)
-            return
+        # /U (then /O, §7.6.4.4.10/11: the same supplied password may be
+        # the OWNER password, with the full 48-byte /U absorbed as udata)
+        # = hash || validation salt || key salt; /UE (/OE) wraps the file
+        # key (round-5: closes the owner-password-only boundary)
+        for name, udata in ((b"U", b""), (b"O", u_entry[:48])):
+            entry = _str_entry(enc, name)
+            if len(entry) >= 48 and hfn(password, entry[32:40], udata) == entry[:32]:
+                wrapped = _str_entry(enc, name + b"E")
+                if len(wrapped) < 32:
+                    raise PdfError(f"AES-256 /{name.decode()}E entry too short")
+                file_key = cbc_decrypt_nopad(
+                    hfn(password, entry[40:48], udata), bytes(16), wrapped[:32]
+                )
+                _decrypt_streams(objs, enc_num, file_key, aes=True, per_object=False)
+                return
         raise PdfError(
             "encrypted document requires a password"
             if not password else "wrong password"
@@ -740,7 +706,7 @@ def _decrypt_in_place(data: bytes, objs: dict[int, bytes], password: bytes = b""
     o_entry = _str_entry(enc, b"O")
     p = _int_entry(enc, b"P")
     idm = _ID_RE.search(data)
-    id0 = bytes.fromhex(idm.group(1).decode("ascii")) if idm else b""
+    id0 = _ascii_hex_decode(idm.group(1)) if idm else b""
     u_entry = _str_entry(enc, b"U")
     sig = 32 if r == 2 else 16
 
@@ -787,21 +753,17 @@ def _decrypt_streams(
     for num, body in objs.items():
         if num == enc_num:
             continue
-        sm = re.search(rb"stream\r?\n", body)
-        if sm is None:
+        split = _stream_split(body)
+        if split is None:
             continue
-        head = body[: sm.start()]
+        head, start, end = split
         if re.search(rb"/Type\s*/XRef\b", head):
             continue  # §7.5.8.2: cross-reference streams are never encrypted
-        lm = _LENGTH_RE.search(head)
-        if lm is None:
-            continue
-        start, ln = sm.end(), int(lm.group(1))
-        payload = body[start : start + ln]
+        payload = body[start:end]
         if aes:
             from pdf_to_text_spark.core.aescipher import cbc_decrypt
 
-            okey = _object_key_aes(key, num) if per_object else key
+            okey = _object_key(key, num, aes=True) if per_object else key
             if len(payload) < 32:
                 raise PdfError(f"object {num}: AES stream too short")
             try:
@@ -811,13 +773,9 @@ def _decrypt_streams(
             new_head = _LENGTH_RE.sub(
                 b"/Length " + str(len(plain)).encode(), head, count=1
             )
-            objs[num] = (
-                new_head + body[sm.start() : start] + plain + body[start + ln :]
-            )
+            objs[num] = new_head + body[len(head) : start] + plain + body[end:]
         else:
-            objs[num] = (
-                body[:start] + rc4(_object_key(key, num), payload) + body[start + ln :]
-            )
+            objs[num] = body[:start] + rc4(_object_key(key, num, aes=False), payload) + body[end:]
 
 
 def _unescape(raw: bytes) -> bytes:
@@ -859,6 +817,26 @@ def _unescape(raw: bytes) -> bytes:
 
 # inside a literal string only escape pairs and parens move the depth
 _STR_DELIM_RE = re.compile(rb"\\.|[()]", re.S)
+
+
+def _literal_string(data: bytes, pos: int) -> tuple[bytes, int]:
+    """The one reader of literal strings (§7.3.4.2): the unescaped bytes
+    of the string whose ``(`` is at ``pos``, and the position after its
+    closing ``)``. Nested parens count depth and a backslash escapes the
+    byte after it; a string that never closes runs to the end of
+    ``data``."""
+    depth = 1
+    for m in _STR_DELIM_RE.finditer(data, pos + 1):
+        d = data[m.start()]
+        if d == 0x28:
+            depth += 1
+        elif d == 0x29:
+            depth -= 1
+            if not depth:
+                return _unescape(data[pos + 1 : m.start()]), m.end()
+    return _unescape(data[pos + 1 :]), len(data)
+
+
 _INLINE_ID_RE = re.compile(rb"\bID[\r\n ]")
 
 
@@ -886,43 +864,15 @@ _SCAN_RE = re.compile(
 )
 
 
-def _skip_inline_dict(content: bytes, j: int) -> int:
-    """Skip a balanced ``<< … >>`` starting just after the opening
-    ``<<`` at ``j``; returns the position after the closing ``>>``."""
-    depth, n = 1, len(content)
-    while j < n and depth:
-        if content[j : j + 2] == b"<<":
-            depth += 1
-            j += 2
-        elif content[j : j + 2] == b">>":
-            depth -= 1
-            j += 2
-        else:
-            j += 1
-    if depth:
-        raise PdfError("unterminated inline dictionary")
-    return j
-
-
 def _off_grammar_token(content: bytes, pos: int) -> tuple[bytes, int]:
     """Read what starts at ``pos``, a byte only the catch-all group 10
     of ``_SCAN_RE`` matched. A literal string with nested parens, or one
     that never closes (its body then runs to EOF), returns its
     unescaped bytes and the position after it; a bad or unterminated
-    hex string or any other byte raises. In a string (§7.3.4.2) nested
-    parens count depth and a backslash escapes the byte after it."""
+    hex string or any other byte raises."""
     c = content[pos]
     if c == 0x28:
-        depth = 1
-        for m in _STR_DELIM_RE.finditer(content, pos + 1):
-            d = content[m.start()]
-            if d == 0x28:
-                depth += 1
-            elif d == 0x29:
-                depth -= 1
-                if not depth:
-                    return _unescape(content[pos + 1 : m.start()]), m.end()
-        return _unescape(content[pos + 1 :]), len(content)
+        return _literal_string(content, pos)
     if c == 0x3C:  # not "<<" and not a valid hex string
         if content.find(b">", pos + 1) == -1:
             raise PdfError("unterminated hex string")
@@ -1337,10 +1287,7 @@ def _scan_content(
                 elif g == 7:
                     arr_stack[-1].append(("name", m.group(7)))
                 elif g == 4:
-                    hx = bytes(b for b in m.group(4)[1:-1] if b not in _WS_BYTES)
-                    if len(hx) % 2:
-                        hx += b"0"
-                    arr_stack[-1].append(("str", bytes.fromhex(hx.decode("ascii"))))
+                    arr_stack[-1].append(("str", _ascii_hex_decode(m.group(4)[1:])))
                 elif g == 9:
                     opb = m.group(9)
                     if opb == b"BI":
@@ -1349,7 +1296,7 @@ def _scan_content(
                         break
                     arr_stack[-1].append(("op", opb))
                 elif g == 3:  # inline dict
-                    pos = _skip_inline_dict(content, pos)
+                    pos = _scan_dict(content, m.start())[1]
                     break
                 else:  # g == 10
                     tok, pos = _off_grammar_token(content, m.start())
@@ -1408,13 +1355,10 @@ def _scan_content(
             if g == 6:
                 raise IndexError("']' with no open array")
             if g == 4:
-                hx = bytes(b for b in m.group(4)[1:-1] if b not in _WS_BYTES)
-                if len(hx) % 2:
-                    hx += b"0"
-                stack.append(("str", bytes.fromhex(hx.decode("ascii"))))
+                stack.append(("str", _ascii_hex_decode(m.group(4)[1:])))
                 continue
             if g == 3:  # inline dict
-                pos = _skip_inline_dict(content, pos)
+                pos = _scan_dict(content, m.start())[1]
                 break
             # g == 10
             tok, pos = _off_grammar_token(content, m.start())
@@ -1535,6 +1479,19 @@ _ROOT_PAGES_RE = re.compile(rb"/Pages\s+(\d+)\s+\d+\s+R")
 _MAX_TREE_DEPTH = 64
 
 
+def _open_document(data: bytes, password: bytes | str) -> dict[int, bytes]:
+    """The objects of a PDF, decrypted with ``password`` (str is encoded
+    UTF-8) and with its object streams expanded."""
+    if not data.startswith(b"%PDF-"):
+        raise PdfError("not a PDF (magic bytes)")
+    if isinstance(password, str):
+        password = password.encode("utf-8")
+    objs, obj_pos = _parse_objects(data)
+    _decrypt_in_place(data, objs, password)
+    _expand_object_streams(objs, obj_pos)
+    return objs
+
+
 def _collect_leaf_pages(objs: dict[int, bytes], num: int, visited: set, depth: int) -> list[int]:
     """Depth-first walk of a (possibly nested) page tree: /Pages nodes
     recurse into /Kids in order, anything else is a leaf page. Cycle
@@ -1582,13 +1539,7 @@ def extract_pdf_pages(
     (JPX/JBIG2) raises PdfError — the honest disclosed boundary.
     Default ``None`` is bit-identical to the frozen goldens.
     """
-    if isinstance(password, str):
-        password = password.encode("utf-8")
-    if not data.startswith(b"%PDF-"):
-        raise PdfError("not a PDF (magic bytes)")
-    objs, obj_pos = _parse_objects(data)
-    _decrypt_in_place(data, objs, password)
-    _expand_object_streams(objs, obj_pos)
+    objs = _open_document(data, password)
     # root: the Catalog's /Pages ref; fallback to the first /Type /Pages
     # object for catalog-less fragments
     root_num = _root_pages_num(objs)
@@ -1630,10 +1581,15 @@ def extract_pdf_pages_safe(
     """
     try:
         return extract_pdf_pages(data, password, page_ocr), None
-    except PdfError as e:
-        return None, str(e)
     except Exception as e:  # noqa: BLE001 — row-level tolerance by design
-        return None, f"unexpected:{type(e).__name__}"
+        return None, pdf_error_text(e)
+
+
+def pdf_error_text(e: Exception) -> str:
+    """The error text of a rejected PDF: a ``PdfError``'s message, else
+    ``unexpected:<class>`` (malformed-but-magic-valid input, e.g. an
+    operator missing its operands)."""
+    return str(e) if isinstance(e, PdfError) else f"unexpected:{type(e).__name__}"
 
 
 _IMG_INT_RE = {
@@ -1675,8 +1631,8 @@ def _image_row_from_body(num: int, body: bytes) -> dict | None:
     """Decoded object body → image row, or None when the object is not
     a /Subtype /Image XObject. Shared by the document-wide image sweep
     and the scanned-page OCR fallback's painted-image lookup."""
-    sm = re.search(rb"stream\r?\n", body)
-    head = body[: sm.start()] if sm else body
+    split = _stream_split(body)
+    head = body if split is None else split[0]
     if b"/Image" not in head or not re.search(rb"/Subtype\s*/Image\b", head):
         return None
     meta = _image_ints(head, _IMG_INT_RE)
@@ -1783,13 +1739,7 @@ def extract_pdf_images(data: bytes, password: bytes | str = b"") -> list[dict]:
     this is the Spark-first generalization that feeds them to
     ``operators/multimodal.py`` as first-class binary columns.
     """
-    if not data.startswith(b"%PDF-"):
-        raise PdfError("not a PDF (magic bytes)")
-    if isinstance(password, str):
-        password = password.encode("utf-8")
-    objs, obj_pos = _parse_objects(data)
-    _decrypt_in_place(data, objs, password)
-    _expand_object_streams(objs, obj_pos)
+    objs = _open_document(data, password)
     out: list[dict] = []
     for num in sorted(objs):
         row = _image_row_from_body(num, objs[num])

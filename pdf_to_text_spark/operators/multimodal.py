@@ -126,16 +126,17 @@ def pdf_embedded_images(
     rejects (inline images are found by the same scan that reads the
     text, so such a PDF's text row is a ``pdf:`` error too) and
     unsupported image codecs (JPX, JBIG2) emit one (image_no=0,
-    extract_error) row; an image whose pixels fail to decode (e.g. an
-    arithmetic-coded SOF9 JPEG) keeps its row with a null ``mean_luma``
-    and the codec's message in ``extract_error``, prefixed with the
-    codec (``jpeg:…``, ``raw:…``).
+    extract_error) row whose error is the text row's, ``pdf:`` prefix
+    included (``pdfparse.pdf_error_text``); an image whose pixels fail
+    to decode (e.g. an arithmetic-coded SOF9 JPEG) keeps its row with a
+    null ``mean_luma`` and the codec's message in ``extract_error``,
+    prefixed with the codec (``jpeg:…``, ``raw:…``).
 
     Reference parity: generalizes the reference's page-level rasterize
     hop (``core_document_processing.py:60-66``) to first-class image
     columns; the reference never surfaces embedded images at all.
     """
-    from pdf_to_text_spark.core.pdfparse import extract_pdf_images
+    from pdf_to_text_spark.core.pdfparse import extract_pdf_images, pdf_error_text
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [c.split(" ")[0] for c in PDF_IMAGE_SCHEMA.split(", ")]
@@ -146,9 +147,9 @@ def pdf_embedded_images(
                 try:
                     imgs = extract_pdf_images(data, password)
                 except Exception as e:  # noqa: BLE001 — row tolerance
+                    err = f"pdf:{pdf_error_text(e)}"
                     rows.append(
-                        dict.fromkeys(cols)
-                        | {"url": uid, "image_no": 0, "extract_error": str(e)}
+                        dict.fromkeys(cols) | {"url": uid, "image_no": 0, "extract_error": err}
                     )
                     continue
                 for i, im in enumerate(imgs, start=1):

@@ -20,7 +20,7 @@ from pdf_to_text_spark.core.pdfparse import (
     PdfError,
     _WS_BYTES,
     _decode_shown,
-    _skip_inline_dict,
+    _scan_dict,
     _tj_text,
     _unescape,
 )
@@ -129,7 +129,7 @@ def _tokenize_slow(content: bytes, inline: list):
         elif c == b"<":
             if content[i + 1 : i + 2] == b"<":  # inline dict (e.g. BDC
                 # property list): skip the balanced << ... >> — no text
-                i = _skip_inline_dict(content, i + 2)
+                i = _scan_dict(content, i)[1]
             else:  # hex string <48656C6C6F>; whitespace legal, odd pads 0
                 j = content.find(b">", i + 1)
                 if j == -1:

@@ -13,8 +13,10 @@ message, or the class of any other exception.
 - Fuzzed: windows of those streams with one or two grammar-hostile
   tokens spliced in at seeded positions (nested and unterminated
   strings, bad hex, unbalanced brackets, stray delimiters, inline-image
-  markers and a whole inline image, a ``/BI`` name, and ``Do``
-  operators in operator position, in a string and in a dictionary).
+  markers and a whole inline image, a ``/BI`` name, ``Do``
+  operators in operator position, in a string and in a dictionary,
+  marked-content dictionaries holding strings, and a literal string
+  with line continuations).
 """
 
 from __future__ import annotations
@@ -31,6 +33,7 @@ HOSTILE = [
     b"(a(b)c)", b"(x\\", b"<4G>", b"]", b"{", b"%", b"BI", b" ID ", b" EI ",
     b".", b"-", b"[", b"(", b"<", b"<<", b")",
     b"/BI", b"(/Im0 Do)", b"/Im0 Do", b"<< /A (/Im0 Do) >>", b" BI /W 2 /H 1 ID \x00) EI ",
+    b"/Span<</ActualText<FEFF0041>>> BDC", b"<< /A (x>>y) >> BDC", b"(con\\\ntin\\\r\nued)",
 ]
 FUZZ_STREAMS = 4000
 

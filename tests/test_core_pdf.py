@@ -36,6 +36,19 @@ def test_hex_string_oddity_and_whitespace():
     assert extract_pdf_pages(build_pdf([content])) == ["Hello "]
 
 
+@pytest.mark.parametrize(
+    "props",
+    [b"/Span<</ActualText<FEFF0041>>>", b"/Span << /A (x>>y) >>"],
+    ids=["hex_string_before_close", "close_inside_string"],
+)
+def test_marked_content_dict_skips_its_strings(props):
+    """A BDC property list is read as a dictionary whose strings are
+    skipped whole: neither a hex string's '>' right before the closing
+    '>>' nor a '>>' inside a literal string ends it."""
+    content = props + b" BDC BT /F1 12 Tf 72 700 Td (Hi) Tj ET EMC"
+    assert extract_pdf_pages(build_pdf([content])) == ["Hi"]
+
+
 def test_widened_errors_stay_pdferror():
     good = build_pdf([page_content_stream(LINES)], flate=True)
     # unsupported filter name → subset boundary, not a crash
@@ -55,7 +68,7 @@ def test_widened_errors_stay_pdferror():
         extract_pdf_pages(single.replace(b"/Kids [3 0 R]", b"/Kids [2 0 R]"))
     with pytest.raises(PdfError, match="unterminated hex"):
         extract_pdf_pages(build_pdf([b"BT <48656C ET"]))
-    with pytest.raises(PdfError, match="unterminated inline"):
+    with pytest.raises(PdfError, match="unterminated dictionary"):
         extract_pdf_pages(build_pdf([b"BT /Span << /A (b) BDC ET"]))
 
 
@@ -353,6 +366,46 @@ def test_notch5_encrypted_roundtrip(r):
     # ciphertext really differs from plaintext (the stream is not a no-op)
     clear = build_pdf([page_content_stream(LINES)], flate=True)
     assert pdf != clear
+
+
+def _escaped_literal(data: bytes) -> bytes:
+    """``data`` as the body of a §7.3.4.2 literal string: printable
+    bytes as they are, ``(``, ``)`` and ``\\`` backslash-escaped, every
+    other byte a three-digit octal escape, and a backslash-LF and a
+    backslash-CRLF line continuation (which add no bytes) after the
+    4th and the 12th byte."""
+    out = b""
+    for i, b in enumerate(data):
+        if i in (4, 12):
+            out += b"\\\n" if i == 4 else b"\\\r\n"
+        if b in b"()\\":
+            out += b"\\" + bytes([b])
+        elif 0x20 <= b < 0x7F:
+            out += bytes([b])
+        else:
+            out += b"\\%03o" % b
+    return out
+
+
+def test_literal_string_reads_every_escape():
+    from pdf_to_text_spark.core.pdfparse import _literal_string
+
+    lit = b"(" + _escaped_literal(bytes(range(256))) + b")"
+    assert _literal_string(lit + b" (next)", 0) == (bytes(range(256)), len(lit))
+
+
+@pytest.mark.parametrize("r", [2, 3, 4], ids=["rc4_40", "rc4_128", "aesv2"])
+def test_encrypt_o_entry_as_escaped_literal(r):
+    """An encryption dictionary's /O written as a literal string with
+    escapes and line continuations opens like its hex form."""
+    import re
+
+    pdf = build_pdf([page_content_stream(LINES)], flate=True, encrypt=r)
+    hexed = re.search(rb"/O <([0-9a-f]+)>", pdf)
+    lit = _escaped_literal(bytes.fromhex(hexed.group(1).decode()))
+    assert b"\\\n" in lit and b"\\\r\n" in lit
+    literal_pdf = pdf.replace(hexed.group(0), b"/O (" + lit + b")")
+    assert extract_pdf_pages(literal_pdf) == extract_pdf_pages(pdf) == ["\n".join(LINES)]
 
 
 def test_notch5_encrypted_composes_with_all_notches():

@@ -132,23 +132,55 @@ def test_import_machinery_is_touched_in_one_place():
         assert re.search(r"\bzipimport\b|\binvalidate_caches\b", src) is None, p
 
 
+def _pdfparse_hits(hit) -> dict[str, list[int]]:
+    """Line numbers of the ``core/pdfparse.py`` AST nodes ``hit``
+    accepts, keyed by the top-level function that holds them ('' for
+    module level)."""
+    tree = ast.parse((PKG / "core" / "pdfparse.py").read_text())
+    owner = {}
+    for f in tree.body:
+        if isinstance(f, ast.FunctionDef):
+            owner.update((id(n), f.name) for n in ast.walk(f))
+    hits: dict[str, list[int]] = {}
+    for n in ast.walk(tree):
+        if hit(n):
+            hits.setdefault(owner.get(id(n), ""), []).append(n.lineno)
+    return hits
+
+
+def _bytes_literal(node, accept) -> bool:
+    return isinstance(node, ast.Constant) and isinstance(node.value, bytes) and accept(node.value)
+
+
 def test_content_stream_operators_are_read_in_one_function():
     """In ``core/pdfparse.py`` the operator literals ``b"BI"`` and
     ``b"Do"`` appear only inside ``_scan_content``, the one reader of
     content streams, so no second reader grows back beside it."""
-    tree = ast.parse((PKG / "core" / "pdfparse.py").read_text())
-    (scanner,) = (
-        n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "_scan_content"
-    )
+    for op in (b"BI", b"Do"):
+        hits = _pdfparse_hits(lambda n: _bytes_literal(n, lambda v: v == op))
+        assert list(hits) == ["_scan_content"], f"{op!r} read at {hits}"
 
-    def op_literals(node):
-        return [
-            n for n in ast.walk(node)
-            if isinstance(n, ast.Constant) and isinstance(n.value, bytes)
-            and n.value in (b"BI", b"Do")
-        ]
 
-    inside = {id(n) for n in op_literals(scanner)}
-    assert {n.value for n in op_literals(scanner)} == {b"BI", b"Do"}
-    stray = [n.lineno for n in op_literals(tree) if id(n) not in inside]
-    assert not stray, f"content-stream operators read outside _scan_content, lines {stray}"
+def test_pdf_syntax_elements_are_read_in_one_function():
+    """In ``core/pdfparse.py`` each object-syntax element has one reader:
+    ``bytes.fromhex`` runs only in ``_ascii_hex_decode`` (hex strings)
+    and ``parse_tounicode`` (CMap code units), the ``stream`` keyword
+    with its end of line is searched only in ``_stream_split``, and
+    only ``_literal_string`` walks a literal string's delimiters."""
+    rules = {
+        "fromhex": (
+            lambda n: isinstance(n, ast.Attribute) and n.attr == "fromhex",
+            ["_ascii_hex_decode", "parse_tounicode"],
+        ),
+        "stream keyword": (
+            lambda n: _bytes_literal(n, lambda v: v.startswith(b"stream") and v != b"stream"),
+            ["_stream_split"],
+        ),
+        "literal-string delimiters": (
+            lambda n: isinstance(n, ast.Name) and n.id == "_STR_DELIM_RE",
+            ["", "_literal_string"],
+        ),
+    }
+    for what, (hit, readers) in rules.items():
+        hits = _pdfparse_hits(hit)
+        assert sorted(hits) == readers, f"{what} read at {hits}"

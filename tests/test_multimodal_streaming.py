@@ -134,3 +134,21 @@ def test_pdf_embedded_images_reports_jpeg_decode_error(spark):
     assert row["extract_error"].startswith("jpeg:") and "non-baseline" in row["extract_error"]
     plain = pdf_embedded_images(df, decode=False).collect()[0]
     assert (plain["mean_luma"], plain["extract_error"]) == (None, None)
+
+
+def test_rejected_pdf_same_error_in_text_and_image_rows(spark):
+    """A PDF whose content stream the scanner rejects with a non-PdfError
+    (``Td`` with one operand: an IndexError) carries the same error in
+    its text row and its image error row."""
+    from pdf_to_text_spark.core.pdfgen import build_pdf
+    from pdf_to_text_spark.operators.extract import extract_documents
+    from pdf_to_text_spark.operators.multimodal import pdf_embedded_images
+
+    pages = spark.createDataFrame(
+        [("u1", None, build_pdf([b"BT 5 Td ET"]), None, "en")],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    (text_row,) = extract_documents(pages).collect()
+    (image_row,) = pdf_embedded_images(pages).collect()
+    assert image_row["image_no"] == 0
+    assert image_row["extract_error"] == text_row["error"] == "pdf:unexpected:IndexError"
