@@ -11,11 +11,16 @@ Usage::
     python bench_extra.py --sf /root/testdata/sf0.1 --all --repeats 3
     python bench_extra.py --sf /root/testdata/sf1.0 --queries q33_ngram_jaccard --plan plans/r06/q33_before.txt
     python bench_extra.py --task-floor --cores 2 --repeats 5
+    python bench_extra.py --parse --workload resume_half --seed 41 --repeats 12
 
 ``--task-floor`` measures the fixed cost of a Python task: an empty
 6-partition stage through the extraction UDF, timed per task from
 Spark's status store after two warm-up runs (the first starts the
 workers, the second is their first task with the package imported).
+
+``--parse`` runs no Spark: it times ``extract_pdf_pages_safe`` over the
+PDF rows of a perfbench workload's fixture corpus, in process CPU time,
+once per repeat, and prints the row count and the min/median ms.
 """
 
 from __future__ import annotations
@@ -74,6 +79,35 @@ def task_floor(spark, repeats: int) -> dict:
     }
 
 
+def parse_cpu(workload: str, seed: int, repeats: int) -> dict:
+    """Min and median process-CPU ms of one ``extract_pdf_pages_safe``
+    pass over the PDF rows (``%PDF-`` payloads) of ``workload``'s
+    corpus for ``seed``, over ``repeats`` passes."""
+    from pdf_to_text_spark.core.pdfparse import extract_pdf_pages_safe
+    from pdf_to_text_spark.fixtures import make_corpus
+    from perfbench.inputs import WORKLOADS
+
+    w = WORKLOADS[workload]
+    pdfs = [
+        r["html"] for r in make_corpus(w.rows, seed, classes=w.classes)
+        if r["html"] and r["html"].startswith(b"%PDF-")
+    ]
+    cpu_ms = []
+    for _ in range(repeats):
+        t0 = time.process_time()
+        for data in pdfs:
+            extract_pdf_pages_safe(data)
+        cpu_ms.append(round((time.process_time() - t0) * 1000, 1))
+    return {
+        "workload": workload,
+        "seed": seed,
+        "pdf_rows": len(pdfs),
+        "min_ms": min(cpu_ms),
+        "median_ms": statistics.median(cpu_ms),
+        "samples_ms": cpu_ms,
+    }
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
@@ -92,7 +126,17 @@ def main() -> None:
         action="store_true",
         help="time the tasks of an empty pandas-UDF stage (at least 5 repeats) instead of queries",
     )
+    ap.add_argument(
+        "--parse",
+        action="store_true",
+        help="time extract_pdf_pages_safe over a workload's PDF rows (no Spark)",
+    )
+    ap.add_argument("--workload", default="resume_half", help="perfbench workload for --parse")
+    ap.add_argument("--seed", type=int, default=41, help="corpus seed for --parse")
     args = ap.parse_args()
+    if args.parse:
+        print(json.dumps(parse_cpu(args.workload, args.seed, args.repeats)))
+        return
 
     spark = get_spark(
         app_name="bench-extra",

@@ -7,33 +7,28 @@ reconstruct reading order by y-then-x sort — the deterministic
 equivalent the reference itself prefers when a text layer exists
 (``/root/reference/2_OpenCV_OCR/core_document_processing.py:71-79``).
 
-Supported subset (defined by ``pdfgen``, SURVEY.md §7.3.2, widened in
-round 4 toward the reference's accept-any-upload behavior,
-``core_document_generator.py:122``): Tj/TJ/' show operators with
-literal AND hex strings (``<48656C6C6F> Tj``), Td/TD/Tm/T*/TL
-positioning (translation-only matrices), FlateDecode or identity
-content streams with ``/Filter`` given as a name OR a filter array
-(``/Filter [/FlateDecode]``), recursive page trees (nested ``/Kids``
-with cycle + depth guards), inline dictionaries in content streams
-(skipped, e.g. BDC property lists).
-
-Round-4 notch 2 (the three features that dominate real-world uploads
-beyond notch 1):
-- ``/Contents`` ARRAYS (``/Contents [4 0 R 9 0 R]``, PDF 32000
-  §7.7.3.3): the parts are decoded independently and logically
-  concatenated with a newline — token boundaries between parts are
-  the emitter's responsibility, as in the spec.
-- OBJECT STREAMS (``/Type /ObjStm``, §7.5.7): compressed containers
-  holding non-stream objects (catalog, page dicts, fonts). Expanded
-  eagerly before the page-tree walk; a top-level definition of the
-  same object number wins (classic-xref precedence in hybrid files).
-- ``/ToUnicode`` CMAPS with ``Tf`` font tracking (§9.10.3): show
-  strings are decoded through the CURRENT font's CMap —
-  ``begincodespacerange`` fixes the code width (1 or 2 bytes),
-  ``beginbfchar`` pairs and ``beginbfrange`` (increment AND array
-  dst forms) populate the map; unmapped codes become U+FFFD. Fonts
-  without a CMap keep the frozen latin-1 byte semantics, so notch-0/1
-  fixtures are bit-identical.
+Supported subset (defined by ``pdfgen``, SURVEY.md §7.3.2, widened
+toward the reference's accept-any-upload behavior):
+- content streams: Tj/TJ/' show operators with literal and hex strings,
+  Td/TD/Tm/T*/TL positioning (translation-only matrices), inline
+  dictionaries (skipped, e.g. BDC property lists);
+- objects: a dictionary is read by its own top-level entries
+  (``<</Type/Page>>`` spacing or none), and a value may be an indirect
+  reference — a stream's ``/Length`` (§7.3.8.2), ``/Resources``,
+  ``/Font``, ``/Contents`` and ``/Kids`` included;
+- the filters of §7.4 as a ``/Filter`` name or array; recursive page
+  trees (nested ``/Kids`` with cycle + depth guards);
+- ``/Contents`` arrays (§7.7.3.3): the parts are decoded independently
+  and joined with a newline (token boundaries are the emitter's);
+- object streams (§7.5.7), expanded before the page-tree walk in
+  revision order with the top-level definitions;
+- ``/ToUnicode`` CMaps with ``Tf`` font tracking (§9.10.3), for fonts
+  that are objects of their own or written directly in the page's
+  ``/Font`` dictionary: ``begincodespacerange`` fixes the code width,
+  ``beginbfchar`` and ``beginbfrange`` (increment and array forms)
+  fill the map, unmapped codes become U+FFFD; a font with no CMap
+  keeps the frozen latin-1 byte semantics (or its simple-font
+  ``/Encoding``, §9.6.6).
 
 Raises ``PdfError`` on malformed input; callers map that to an
 ``error`` column (row-level tolerance, ``main.py:77-78`` analog).
@@ -61,10 +56,8 @@ class PdfError(ValueError):
 _MAX_DECODE_BYTES = 256 << 20
 
 _OBJ_RE = re.compile(rb"(\d+)\s+\d+\s+obj\b", re.S)
-_KIDS_RE = re.compile(rb"/Kids\s*\[([^\]]*)\]")
 _REF_RE = re.compile(rb"(\d+)\s+\d+\s+R")
-_CONTENTS_RE = re.compile(rb"/Contents\s+(\d+)\s+\d+\s+R")
-_LENGTH_RE = re.compile(rb"/Length\s+(\d+)")
+_ENDSTREAM_RE = re.compile(rb"[ \t\r\n\f\x00]*endstream")
 
 
 def _parse_objects(data: bytes) -> tuple[dict[int, bytes], dict[int, int]]:
@@ -72,33 +65,68 @@ def _parse_objects(data: bytes) -> tuple[dict[int, bytes], dict[int, int]]:
     plus object number → file offset of its WINNING (last) definition.
     Later definitions win — the saved-over-file semantics of
     incremental updates (§7.5.6); offsets let ObjStm expansion apply
-    the same revision ordering (round-4 advice)."""
+    the same revision ordering (round-4 advice). An object ends at the
+    first ``endobj`` after its stream payload, when a direct /Length
+    ends that payload at an ``endstream``, else at its first ``endobj``
+    (an indirect /Length is not known yet)."""
     objs: dict[int, bytes] = {}
     pos: dict[int, int] = {}
     for m in _OBJ_RE.finditer(data):
-        num = int(m.group(1))
-        end = data.find(b"endobj", m.end())
+        num, start = int(m.group(1)), m.end()
+        end = data.find(b"endobj", start)
+        body = data[start:end]
+        split = _stream_split(body, None) if end != -1 and b"stream" in body else None
+        if split and split[3] > len(body) and _ENDSTREAM_RE.match(data, start + split[3]):
+            end = data.find(b"endobj", start + split[3])  # the payload holds the word
+            body = data[start:end]
         if end == -1:
             raise PdfError(f"object {num}: missing endobj")
-        objs[num] = data[m.end() : end]
+        objs[num] = body
         pos[num] = m.start()
     if not objs:
         raise PdfError("no objects found")
     return objs, pos
 
 
-_FILTER_RE = re.compile(rb"/Filter\s*(\[[^\]]*\]|/[A-Za-z0-9]+)")
-_FILTER_NAME_RE = re.compile(rb"/([A-Za-z0-9]+)")
+# §8.9.7 Tables 93 and 94: an inline image's abbreviated dictionary
+# keys, and the abbreviated filter and colour-space names, which are
+# read as their full forms wherever they occur
+_ABBREVIATED_KEYS = {
+    b"W": b"Width", b"H": b"Height", b"BPC": b"BitsPerComponent",
+    b"CS": b"ColorSpace", b"F": b"Filter", b"DP": b"DecodeParms",
+}
+_ABBREVIATED_NAMES = {
+    b"AHx": b"ASCIIHexDecode", b"A85": b"ASCII85Decode", b"LZW": b"LZWDecode",
+    b"Fl": b"FlateDecode", b"RL": b"RunLengthDecode", b"CCF": b"CCITTFaxDecode",
+    b"DCT": b"DCTDecode", b"G": b"DeviceGray", b"RGB": b"DeviceRGB",
+    b"CMYK": b"DeviceCMYK",
+}
 
 
-def _filter_chain(head: bytes) -> list[bytes]:
+def _filter_chain(head: dict[bytes, bytes]) -> list[bytes]:
     """The stream's filter names in application order — handles both the
     name form (``/Filter /FlateDecode``) and the array form
     (``/Filter [/FlateDecode]``, PDF 32000 §7.3.8)."""
-    fm = _FILTER_RE.search(head)
-    if fm is None:
-        return []
-    return _FILTER_NAME_RE.findall(fm.group(1))
+    names = map(_name, _items(head.get(b"Filter")))
+    return [_ABBREVIATED_NAMES.get(n, n) for n in names if n is not None]
+
+
+_INT_PARMS = (b"Predictor", b"Columns", b"Colors", b"BitsPerComponent", b"K", b"Rows")
+
+
+def _decode_parms(head: dict[bytes, bytes], n_filters: int) -> list[dict | None]:
+    """Per-filter decode-parameter dicts from ``/DecodeParms`` — scalar
+    dict form applies to the single filter; array form is index-aligned
+    with the /Filter array, with ``null`` entries for filters that take
+    none (§7.3.8.2)."""
+    out: list[dict | None] = [None] * n_filters
+    for i, item in enumerate(_items(head.get(b"DecodeParms"))[:n_filters]):
+        d = _read_dict(item)
+        parms = {k.decode(): n for k in _INT_PARMS if (n := _int(d.get(k))) is not None}
+        if d.get(b"BlackIs1") in (b"true", b"false"):
+            parms["BlackIs1"] = int(d[b"BlackIs1"] == b"true")
+        out[i] = parms or None
+    return out
 
 
 # ------------------------------------------------- stream filters (§7.4)
@@ -244,23 +272,39 @@ _FILTER_DECODERS = {
 }
 
 
-# ------------------------------------------- predictors (§7.4.4.4)
-
-_INT_PARM_RE = {
-    k: re.compile(rb"/" + k + rb"\s+(-?\d+)")
-    for k in (b"Predictor", b"Columns", b"Colors", b"BitsPerComponent", b"K", b"Rows")
-}
-_BLACKIS1_RE = re.compile(rb"/BlackIs1\s+(true|false)")
-
+# ------------------------------------------- object syntax (§7.3)
 
 _DICT_DELIM_RE = re.compile(rb"<<|>>|[(<]")
+_WSP = rb"[ \t\r\n\f\x00]"  # §7.2.3 white-space characters
+_REGULAR = rb"[^ \t\r\n\f\x00()<>\[\]{}/%]"  # neither white space nor delimiter
+_SIMPLE_VALUE = (  # an indirect reference, a name, a hex string, a number or a keyword
+    rb"\d+" + _WSP + rb"+\d+" + _WSP + rb"+R(?!" + _REGULAR + rb")"
+    + rb"|/" + _REGULAR + rb"*|<[^<>]*>|" + _REGULAR + rb"+"
+)
+# one token of object syntax after any white space: 1 ``<<``, 2 ``>>``,
+# 3 ``[``, 4 ``]``, 5 a simple value, 6 any other byte (the ``(`` of a
+# literal string, or a delimiter that starts no token)
+_TOKEN_RE = re.compile(
+    _WSP + rb"*(?:(<<)|(>>)|(\[)|(\])|(" + _SIMPLE_VALUE + rb")|(.))", re.S
+)
+# one dictionary entry — key, then a value read in one match (group 2:
+# a simple value, an array holding no container or string, or a
+# dictionary holding no string and no dictionary but flat ones) or the
+# first byte of any other dictionary, array or literal string (group 3)
+# — or the end of the dictionary (group 4)
+_ENTRY_RE = re.compile(
+    _WSP + rb"*(?:/(" + _REGULAR + rb"*)" + _WSP + rb"*(?:(" + _SIMPLE_VALUE
+    + rb"|\[[^\[\]()<>{}%]*\]|<<[^<>(){}%]*(?:<<[^<>(){}%]*>>[^<>(){}%]*)*>>)"
+    + rb"|(<<|[\[(]))|(>>))"
+)
 
 
 def _scan_dict(data: bytes, start: int) -> tuple[bytes, int]:
-    """The one reader of dictionaries (§7.3.7): (dict bytes incl. << >>,
-    end index) of the balanced dictionary at ``start`` ('<<'). Literal
-    and hex strings inside are skipped whole, so a ``>>`` in a string,
-    or the ``>`` that ends a hex string, never closes it."""
+    """The one reader of a dictionary's extent (§7.3.7): (dict bytes
+    incl. << >>, end index) of the balanced dictionary at ``start``
+    ('<<'); ``_read_dict`` reads its entries. Literal and hex strings
+    inside are skipped whole, so a ``>>`` in a string, or the ``>``
+    that ends a hex string, never closes it."""
     depth, i = 0, start
     while m := _DICT_DELIM_RE.search(data, i):
         i = m.end()
@@ -280,50 +324,144 @@ def _scan_dict(data: bytes, start: int) -> tuple[bytes, int]:
     raise PdfError("unterminated dictionary")
 
 
-def _decode_parms(head: bytes, n_filters: int) -> list[dict | None]:
-    """Per-filter decode-parameter dicts from ``/DecodeParms`` (or the
-    ``/DP`` abbreviation) — scalar dict form applies to the single
-    filter; array form is index-aligned with the /Filter array, with
-    ``null`` entries for filters that take none (§7.3.8.2)."""
-    m = re.search(rb"/(?:DecodeParms|DP)\b", head)
-    out: list[dict | None] = [None] * n_filters
-    if m is None:
-        return out
-    i = m.end()
-    while i < len(head) and head[i : i + 1] in b" \t\r\n":
-        i += 1
-    def parse_one(d: bytes) -> dict:
-        out = {
-            k.decode(): int(r.search(d).group(1))
-            for k, r in _INT_PARM_RE.items()
-            if r.search(d)
-        }
-        bm = _BLACKIS1_RE.search(d)
-        if bm is not None:
-            out["BlackIs1"] = 1 if bm.group(1) == b"true" else 0
-        return out
-    if head[i : i + 2] == b"<<":
-        d, _ = _scan_dict(head, i)
-        if n_filters:
-            out[0] = parse_one(d)
-        return out
-    if head[i : i + 1] == b"[":
-        idx = 0
-        i += 1
-        while i < len(head) and idx < n_filters:
-            if head[i : i + 2] == b"<<":
-                d, i = _scan_dict(head, i)
-                out[idx] = parse_one(d)
-                idx += 1
-            elif head[i : i + 4] == b"null":
-                idx += 1
-                i += 4
-            elif head[i : i + 1] == b"]":
-                break
-            else:
-                i += 1
-    return out
+def _value_end(data: bytes, start: int) -> int:
+    """The end of the value whose first byte is at ``start``: a
+    dictionary, array or string is read whole, anything else is its one
+    token."""
+    c = data[start : start + 2]
+    if c == b"<<":
+        try:
+            return _scan_dict(data, start)[1]
+        except PdfError:  # a dictionary that never closes ends with data
+            return len(data)
+    if c[:1] == b"[":
+        return _read_array(data, start)[1]
+    if c[:1] == b"(":
+        return _literal_string(data, start)[1]
+    return _TOKEN_RE.match(data, start).end()
 
+
+def _read_array(data: bytes, start: int) -> tuple[list[bytes], int]:
+    """The one reader of arrays (§7.3.6): the raw bytes of each item of
+    the array whose ``[`` is at ``start``, and the end index. A nested
+    array is one item (its depth is counted, not recursed into);
+    dictionaries and strings are read whole; an array that never closes
+    ends with ``data``."""
+    items: list[bytes] = []
+    depth, i, item_start = 0, start, start
+    while (m := _TOKEN_RE.match(data, i)) is not None:
+        g = m.lastindex
+        if g == 3:
+            depth += 1
+            if depth == 2:
+                item_start = m.start(3)
+            i = m.end()
+        elif g == 4:
+            depth -= 1
+            i = m.end()
+            if depth == 1:
+                items.append(data[item_start:i])
+            elif depth <= 0:
+                return items, i
+        else:
+            i = m.end() if g == 5 else _value_end(data, m.start(g))
+            if depth == 1:
+                items.append(data[m.start(g) : i])
+    return items, len(data)
+
+
+def _read_dict(data: bytes | None, pos: int = 0) -> dict[bytes, bytes]:
+    """The one reader of a dictionary's entries (§7.3.7): key (the name
+    without its slash) → raw value bytes of each TOP-LEVEL entry of the
+    dictionary whose ``<<`` is the first token at ``pos`` ({} when none
+    starts there). A value is one token, an indirect reference
+    ``N G R``, or a dictionary, array or string read whole, so no key
+    inside a value is ever read as the dictionary's own. The first of
+    two equal keys wins; a key with no value, and a value in key
+    position, are skipped; a dictionary that never closes ends with
+    ``data``."""
+    m = None if data is None else _TOKEN_RE.match(data, pos)
+    if m is None or m.lastindex != 1:
+        return {}
+    entries: dict[bytes, bytes] = {}
+    i = m.end()
+    while True:
+        e = _ENTRY_RE.match(data, i)
+        g = 0 if e is None else e.lastindex
+        if g == 2:
+            value, i = e.group(2), e.end()
+        elif g == 3:
+            i = _value_end(data, e.start(3))
+            value = data[e.start(3) : i]
+        elif g == 4:
+            return entries
+        elif (m := _TOKEN_RE.match(data, i)) is None:
+            return entries
+        else:
+            i = _value_end(data, m.start(m.lastindex))
+            continue
+        entries.setdefault(e.group(1), value)
+
+
+# typed accessors of a value read by _read_dict or _read_array, or of a
+# whole object body; each returns None when the value is absent or of
+# another type
+
+
+def _array(v: bytes | None) -> list[bytes] | None:
+    m = None if v is None else _TOKEN_RE.match(v)
+    return None if m is None or m.lastindex != 3 else _read_array(v, m.start(3))[0]
+
+
+def _items(v: bytes | None) -> list[bytes]:
+    """The items of an array value, or the one value of any other (the
+    "a name or an array" of /Filter, §7.3.8.2); [] when absent."""
+    items = _array(v)
+    return items if items is not None else [] if v is None else [v]
+
+
+def _int(v: bytes | None) -> int | None:
+    try:
+        return int(v)
+    except (TypeError, ValueError):
+        return None
+
+
+def _name(v: bytes | None) -> bytes | None:
+    """A name value without its slash."""
+    v = (v or b"").strip(_WS)
+    return v[1:] if v[:1] == b"/" else None
+
+
+def _string(v: bytes | None) -> bytes | None:
+    """A literal or hex string value (§7.3.4), decoded."""
+    v = (v or b"").strip(_WS)
+    if v[:1] == b"(":
+        return _literal_string(v, 0)[0]
+    if v[:1] == b"<" and v[:2] != b"<<":
+        return _ascii_hex_decode(v[1:])
+    return None
+
+
+def _ref(v: bytes | None) -> int | None:
+    """The object number of an indirect reference ``N G R``."""
+    m = None if v is None else _REF_RE.fullmatch(v)
+    return None if m is None else int(m.group(1))
+
+
+def _resolve(objs: dict[int, bytes], v: bytes | None, what: str) -> bytes | None:
+    """The one resolver of indirect values (§7.3.10): the body of the
+    object ``v`` references, or ``v`` itself when it is direct; a
+    reference to a missing object raises."""
+    num = _ref(v)
+    if num is None:
+        return v
+    if (body := objs.get(num)) is None:
+        raise PdfError(f"dangling {what} ref")
+    return body
+
+
+# ------------------------------------------- predictors (§7.4.4.4)
 
 def _paeth(a: int, b: int, c: int) -> int:
     p = a + b - c
@@ -387,48 +525,39 @@ def _unpredict(data: bytes, parms: dict) -> bytes:
     raise PdfError(f"unsupported predictor {pred}")
 
 
-def _stream_split(body: bytes) -> tuple[bytes, int, int] | None:
-    """The one reader of stream objects (§7.3.8): (dict head, payload
-    start, payload end) of an object body, or None when it has no
-    stream or its head no /Length."""
+def _stream_split(
+    body: bytes, objs: dict[int, bytes] | None
+) -> tuple[dict[bytes, bytes], int, int, int] | None:
+    """The one reader of stream objects (§7.3.8): (dict entries, start of
+    the ``stream`` keyword, payload start, payload end) of an object
+    body, or None when it has no stream or its dictionary no /Length.
+    An indirect /Length is resolved in ``objs``; with ``objs`` None only
+    a direct one is read."""
     sm = re.search(rb"stream\r?\n", body)
     if sm is None:
         return None
-    head = body[: sm.start()]
-    lm = _LENGTH_RE.search(head)
-    if lm is None:
-        return None
-    return head, sm.end(), sm.end() + int(lm.group(1))
+    head = _read_dict(body[: sm.start()])
+    length = head.get(b"Length")
+    n = _int(length if objs is None else _resolve(objs, length, "Length"))
+    return None if n is None else (head, sm.start(), sm.end(), sm.end() + n)
 
 
-def _raw_stream(body: bytes) -> tuple[bytes, bytes]:
-    """(dict head, undecoded stream payload) of an object body."""
-    split = _stream_split(body)
+def _raw_stream(objs: dict[int, bytes], body: bytes) -> tuple[dict[bytes, bytes], bytes]:
+    """(dict entries, undecoded stream payload) of an object body."""
+    split = _stream_split(body, objs)
     if split is None:
         raise PdfError("object has no stream with a /Length")
-    head, start, end = split
+    head, _, start, end = split
     return head, body[start:end]
 
 
-def _apply_filters(
-    head: bytes,
-    data: bytes,
-    chain: list[bytes] | None = None,
-    parms: list[dict | None] | None = None,
-) -> bytes:
-    """Run the declared decode chain (with per-filter predictors) over
-    a raw stream payload. Callers that TRIM the chain (e.g. image
-    extraction stopping before DCTDecode) must pass the matching
-    ``parms`` slice — re-deriving alignment from the head against a
-    shortened chain would apply array-form /DecodeParms to the wrong
-    filter (round-4 advice)."""
-    if chain is None:
-        chain = _filter_chain(head)
-    if parms is None:
-        parms = _decode_parms(head, len(chain))
-    if len(parms) != len(chain):
-        raise PdfError("DecodeParms/Filter arity mismatch")
-    for name, parm in zip(chain, parms):
+def _apply_filters(head: dict[bytes, bytes], data: bytes, n_filters: int | None = None) -> bytes:
+    """Run the first ``n_filters`` (default: all) of the declared decode
+    chain, with per-filter predictors, over a raw stream payload (image
+    extraction stops before a DCTDecode). Array-form /DecodeParms is
+    aligned to the whole /Filter array before the chain is cut."""
+    chain = _filter_chain(head)
+    for name, parm in list(zip(chain, _decode_parms(head, len(chain))))[:n_filters]:
         if name == b"FlateDecode":
             try:
                 d = zlib.decompressobj()
@@ -465,9 +594,9 @@ def _apply_filters(
     return data
 
 
-def _stream_data(body: bytes) -> bytes:
+def _stream_data(objs: dict[int, bytes], body: bytes) -> bytes:
     """Extract and decode the stream payload of an object body."""
-    head, data = _raw_stream(body)
+    head, data = _raw_stream(objs, body)
     return _apply_filters(head, data)
 
 
@@ -479,8 +608,6 @@ _PAD = bytes(
      0xFF, 0xFA, 0x01, 0x08, 0x2E, 0x2E, 0x00, 0xB6, 0xD0, 0x68, 0x3E, 0x80,
      0x2F, 0x0C, 0xA9, 0xFE, 0x64, 0x53, 0x69, 0x7A]
 )
-_ENCRYPT_REF_RE = re.compile(rb"/Encrypt\s+(\d+)\s+\d+\s+R")
-_ID_RE = re.compile(rb"/ID\s*\[\s*<([0-9A-Fa-f]*)>")
 
 
 def rc4(key: bytes, data: bytes) -> bytes:
@@ -551,53 +678,34 @@ def _object_key(key: bytes, num: int, aes: bool) -> bytes:
     return h[: min(len(key) + 5, 16)]
 
 
-def _int_entry(head: bytes, name: bytes, default: int | None = None) -> int:
-    m = re.search(rb"/" + name + rb"\s+(-?\d+)", head)
-    if m is None:
-        if default is None:
-            raise PdfError(f"encrypt dict missing /{name.decode()}")
-        return default
-    return int(m.group(1))
+def _enc_entry(enc: dict[bytes, bytes], key: bytes, read, default=None):
+    """The ``read``-typed entry ``key`` of an encryption dictionary; a
+    missing one is an error unless it has a ``default``."""
+    v = read(enc.get(key))
+    if v is None and default is None:
+        raise PdfError(f"encrypt dict missing /{key.decode()}")
+    return default if v is None else v
 
 
-def _str_entry(body: bytes, name: bytes) -> bytes:
-    """A string entry (/O or /U) in literal or hex form."""
-    m = re.search(rb"/" + name + rb"\s*(\(|<)", body)
-    if m is None:
-        raise PdfError(f"encrypt dict missing /{name.decode()}")
-    if m.group(1) == b"<":
-        return _ascii_hex_decode(body[m.end() :])
-    return _literal_string(body, m.start(1))[0]
-
-
-def _encrypt_ref_num(data: bytes, objs: dict[int, bytes]) -> int | None:
-    """Object number of the /Encrypt dictionary, or None.
+def _encryption_trailer(data: bytes, objs: dict[int, bytes]) -> dict[bytes, bytes] | None:
+    """The entries of the trailer that names /Encrypt, or None.
 
     Only TRAILER dictionaries (classic ``trailer`` keyword) and XRef
-    stream dictionary heads may carry /Encrypt (§7.5.5, §7.5.8.2) —
+    stream dictionaries may carry /Encrypt (§7.5.5, §7.5.8.2) —
     grepping the whole file would take the decrypt path on an
     unencrypted PDF whose uncompressed content stream merely contains
     the text ``/Encrypt N 0 R`` (round-4 advice)."""
     if b"/Encrypt" not in data:  # fast path: unencrypted documents
         return None
     for m in re.finditer(rb"trailer\b", data):
-        lt = data.find(b"<<", m.end(), m.end() + 64)
-        if lt < 0:
-            continue
-        try:
-            d, _ = _scan_dict(data, lt)
-        except PdfError:
-            continue
-        em = _ENCRYPT_REF_RE.search(d)
-        if em is not None:
-            return int(em.group(1))
+        trailer = _read_dict(data, m.end())
+        if b"Encrypt" in trailer:
+            return trailer
     for body in objs.values():
-        split = _stream_split(body)
-        head = body if split is None else split[0]
-        if b"/XRef" in head and re.search(rb"/Type\s*/XRef\b", head):
-            em = _ENCRYPT_REF_RE.search(head)
-            if em is not None:
-                return int(em.group(1))
+        if b"XRef" in body:
+            head = _read_dict(body)
+            if _name(head.get(b"Type")) == b"XRef" and b"Encrypt" in head:
+                return head
     return None
 
 
@@ -618,16 +726,15 @@ def _decrypt_in_place(data: bytes, objs: dict[int, bytes], password: bytes = b""
     Reference parity: fitz transparently opens empty-user-password
     files (``core_document_generator.py:122``); password prompts are
     out of scope there too."""
-    enc_num = _encrypt_ref_num(data, objs)
-    if enc_num is None:
+    trailer = _encryption_trailer(data, objs)
+    if trailer is None:
         return
-    enc = objs.get(enc_num)
-    if enc is None:
-        raise PdfError("trailer /Encrypt references a missing object")
-    if b"/Standard" not in enc:
+    enc_num = _ref(trailer[b"Encrypt"])
+    enc = _read_dict(_resolve(objs, trailer[b"Encrypt"], "Encrypt"))
+    if _name(enc.get(b"Filter")) != b"Standard":
         raise PdfError("unsupported security handler")
-    v = _int_entry(enc, b"V", 0)
-    r = _int_entry(enc, b"R")
+    v = _enc_entry(enc, b"V", _int, 0)
+    r = _enc_entry(enc, b"R", _int)
     if v == 5:
         # §7.6.4 (ISO 32000-2) AES-256: /R 6 hardened hash (Algorithm
         # 2.B), 48-byte /U = hash || validation salt || key salt, file
@@ -648,7 +755,7 @@ def _decrypt_in_place(data: bytes, objs: dict[int, bytes], password: bytes = b""
             if r == 6
             else (lambda pw, salt, udata: _hl.sha256(pw + salt + udata).digest())
         )
-        u_entry = _str_entry(enc, b"U")
+        u_entry = _enc_entry(enc, b"U", _string)
         if len(u_entry) < 48:
             raise PdfError("AES-256 /U entry too short")
         # /U (then /O, §7.6.4.4.10/11: the same supplied password may be
@@ -656,9 +763,9 @@ def _decrypt_in_place(data: bytes, objs: dict[int, bytes], password: bytes = b""
         # = hash || validation salt || key salt; /UE (/OE) wraps the file
         # key (round-5: closes the owner-password-only boundary)
         for name, udata in ((b"U", b""), (b"O", u_entry[:48])):
-            entry = _str_entry(enc, name)
+            entry = _enc_entry(enc, name, _string)
             if len(entry) >= 48 and hfn(password, entry[32:40], udata) == entry[:32]:
-                wrapped = _str_entry(enc, name + b"E")
+                wrapped = _enc_entry(enc, name + b"E", _string)
                 if len(wrapped) < 32:
                     raise PdfError(f"AES-256 /{name.decode()}E entry too short")
                 file_key = cbc_decrypt_nopad(
@@ -676,10 +783,11 @@ def _decrypt_in_place(data: bytes, objs: dict[int, bytes], password: bytes = b""
         # /Identity) names an entry of /CF; we support the universal
         # real-world shape /StdCF with /CFM /AESV2 (AES-128-CBC) or
         # /CFM /V2 (RC4 under the V4 framing)
-        cfm = re.search(rb"/CFM\s*/(\w+)", enc)
-        if cfm is None:
+        crypt_filters = _read_dict(enc.get(b"CF"))
+        stm_filter = _read_dict(crypt_filters.get(_name(enc.get(b"StmF"))))
+        method = _name(stm_filter.get(b"CFM"))
+        if method is None:
             raise PdfError("encryption /V 4 without a /CFM crypt filter")
-        method = cfm.group(1)
         if method == b"AESV2":
             aes = True
         elif method != b"V2":
@@ -688,26 +796,15 @@ def _decrypt_in_place(data: bytes, objs: dict[int, bytes], password: bytes = b""
             )
     elif v not in (1, 2):
         raise PdfError(f"unsupported encryption /V {v}")
-    # top-level /Length is in BITS; a /V 4 dict's /CF sub-dictionary may
-    # carry its own /Length IN BYTES (e.g. /StdCF << /Length 16 >>) and
-    # may precede the top-level entry — mask it out before matching so
-    # the crypt-filter byte count is never parsed as bits (round-4
-    # advice). /V 4 defaults to 128 bits when the top-level entry is
-    # absent (§7.6.1 Table 20).
-    enc_top = enc
-    cfm_dict = re.search(rb"/CF\s*<<", enc)
-    if cfm_dict is not None:
-        try:
-            d, end_i = _scan_dict(enc, cfm_dict.end() - 2)
-            enc_top = enc[: cfm_dict.start()] + b" " * (end_i - cfm_dict.start()) + enc[end_i:]
-        except PdfError:
-            pass
-    key_len = _int_entry(enc_top, b"Length", 128 if v == 4 else 40) // 8
-    o_entry = _str_entry(enc, b"O")
-    p = _int_entry(enc, b"P")
-    idm = _ID_RE.search(data)
-    id0 = _ascii_hex_decode(idm.group(1)) if idm else b""
-    u_entry = _str_entry(enc, b"U")
+    # the top-level /Length is in BITS (a crypt filter's own /Length, in
+    # bytes, is not a top-level entry); /V 4 defaults to 128 bits when
+    # it is absent (§7.6.1 Table 20)
+    key_len = _enc_entry(enc, b"Length", _int, 128 if v == 4 else 40) // 8
+    o_entry = _enc_entry(enc, b"O", _string)
+    p = _enc_entry(enc, b"P", _int)
+    ids = _array(trailer.get(b"ID"))
+    id0 = (_string(ids[0]) if ids else None) or b""
+    u_entry = _enc_entry(enc, b"U", _string)
     sig = 32 if r == 2 else 16
 
     def _user_key(user_pw: bytes) -> bytes | None:
@@ -748,16 +845,17 @@ def _decrypt_streams(
     """Decrypt every top-level stream payload in place. ``per_object``
     applies §7.6.2 Algorithm 1 key derivation (RC4/AESV2); AES-256
     (AESV3) uses the file key directly. XRef streams are exempt
-    (§7.5.8.2); AES payloads are 16-byte IV || CBC ciphertext and the
-    head's /Length is rewritten since the plaintext is shorter."""
+    (§7.5.8.2); AES payloads are 16-byte IV || CBC ciphertext, and since
+    the plaintext is shorter the head is rewritten with a direct /Length
+    (which also replaces an indirect one)."""
     for num, body in objs.items():
         if num == enc_num:
             continue
-        split = _stream_split(body)
+        split = _stream_split(body, objs)
         if split is None:
             continue
-        head, start, end = split
-        if re.search(rb"/Type\s*/XRef\b", head):
+        head, kw_at, start, end = split
+        if _name(head.get(b"Type")) == b"XRef":
             continue  # §7.5.8.2: cross-reference streams are never encrypted
         payload = body[start:end]
         if aes:
@@ -770,10 +868,9 @@ def _decrypt_streams(
                 plain = cbc_decrypt(okey, payload[:16], payload[16:])
             except ValueError as e:
                 raise PdfError(f"object {num}: AES decrypt failed: {e}") from e
-            new_head = _LENGTH_RE.sub(
-                b"/Length " + str(len(plain)).encode(), head, count=1
-            )
-            objs[num] = new_head + body[len(head) : start] + plain + body[end:]
+            head = {**head, b"Length": b"%d" % len(plain)}
+            new_head = b"<<" + b"".join(b" /" + k + b" " + v for k, v in head.items()) + b" >>"
+            objs[num] = new_head + body[kw_at:start] + plain + body[end:]
         else:
             objs[num] = body[:start] + rc4(_object_key(key, num, aes=False), payload) + body[end:]
 
@@ -1098,41 +1195,38 @@ def _base_encoding_map(name: bytes | None) -> dict[int, str]:
     return out
 
 
-_DIFF_RE = re.compile(rb"/Differences\s*\[(.*?)\]", re.S)
-_BASEENC_RE = re.compile(rb"/BaseEncoding\s*/([A-Za-z][A-Za-z0-9]*)")
-_DIFF_TOK_RE = re.compile(rb"(\d+)|/([^\s/\[\]<>()]+)")
-
-
 def parse_encoding(enc: bytes) -> tuple[int, dict[int, str]] | None:
-    """/Encoding value (name or dictionary body) → (1, code→str map),
-    or None when the value is not a recognized simple-font encoding
-    (e.g. /Identity-H on a Type0 font — the CMap path owns those).
+    """/Encoding value (a name, with or without its slash, or a
+    dictionary) → (1, code→str map), or None when the value is not a
+    recognized simple-font encoding (e.g. /Identity-H on a Type0 font —
+    the CMap path owns those).
 
     §9.6.6.1: the map starts from /BaseEncoding (or the font's builtin
     — modeled as latin-1 identity, this subset's frozen default), then
     /Differences entries override: an integer sets the next code, each
     following name assigns that glyph to the code and increments."""
-    enc = enc.strip()
+    enc = enc.strip(_WS)
     if not enc.startswith(b"<<"):
         # bare name form: /Encoding /WinAnsiEncoding
-        if enc in (b"WinAnsiEncoding", b"MacRomanEncoding"):
-            return 1, _base_encoding_map(enc)
+        name = _name(enc) or enc
+        if name in (b"WinAnsiEncoding", b"MacRomanEncoding"):
+            return 1, _base_encoding_map(name)
         return None
-    bm = _BASEENC_RE.search(enc)
-    mapping = _base_encoding_map(bm.group(1) if bm else None)
-    dm = _DIFF_RE.search(enc)
-    if dm is not None:
-        code = -1
-        for num, nm in _DIFF_TOK_RE.findall(dm.group(1)):
-            if num:
-                code = int(num)
-            elif code < 0 or code > 255:
-                raise PdfError("Differences name before a valid code")
-            else:
-                mapping[code] = _glyph_char(nm.decode("latin-1"))
-                code += 1
-    elif bm is None:
+    d = _read_dict(enc)
+    base = _name(d.get(b"BaseEncoding"))
+    diffs = _array(d.get(b"Differences"))
+    if diffs is None and base is None:
         return None  # dict carries neither key: nothing to apply
+    mapping = _base_encoding_map(base)
+    code = -1
+    for item in diffs or ():
+        if (n := _int(item)) is not None:
+            code = n
+        elif (glyph := _name(item)) is not None:
+            if code < 0 or code > 255:
+                raise PdfError("Differences name before a valid code")
+            mapping[code] = _glyph_char(glyph.decode("latin-1"))
+            code += 1
     return 1, mapping
 
 
@@ -1152,76 +1246,25 @@ def _decode_shown(raw: bytes, font: tuple[int, dict[int, str]] | None) -> str:
     )
 
 
-_RES_REF_RE = re.compile(rb"/Resources\s+(\d+)\s+\d+\s+R")
-_FONT_DICT_RE = re.compile(rb"/Font\s*<<(.*?)>>", re.S)
-_FONT_ENTRY_RE = re.compile(rb"/([^\s/<>\[\]()]+)\s+(\d+)\s+\d+\s+R")
-_TOUNICODE_RE = re.compile(rb"/ToUnicode\s+(\d+)\s+\d+\s+R")
-_ENC_REF_RE = re.compile(rb"/Encoding\s+(\d+)\s+\d+\s+R")
-_ENC_NAME_RE = re.compile(rb"/Encoding\s*/([A-Za-z][A-Za-z0-9-]*)")
-_ENC_DICT_RE = re.compile(rb"/Encoding\s*(?=<<)")
-
-
-def _font_encoding(
-    objs: dict[int, bytes], fbody: bytes
-) -> tuple[int, dict[int, str]] | None:
-    """Resolve a font dict's /Encoding entry (§9.6.6) in any of its
-    three syntactic forms — bare name, indirect ref, inline dict —
-    to a decode map, or None (keep frozen latin-1 semantics)."""
-    rm = _ENC_REF_RE.search(fbody)
-    if rm is not None:
-        enc_obj = objs.get(int(rm.group(1)))
-        if enc_obj is None:
-            raise PdfError("dangling Encoding ref")
-        return parse_encoding(enc_obj)
-    dm = _ENC_DICT_RE.search(fbody)
-    if dm is not None:
-        d, _ = _scan_dict(fbody, dm.end())
-        return parse_encoding(d)
-    nm = _ENC_NAME_RE.search(fbody)
-    if nm is not None:
-        return parse_encoding(nm.group(1))
-    return None
-
-
-def _page_resources(objs: dict[int, bytes], page_body: bytes) -> bytes:
-    """The bytes holding a page's ``/Resources`` entries: the referenced
-    object when it is an indirect ref, else the page dict itself."""
-    rm = _RES_REF_RE.search(page_body)
-    if rm is None:
-        return page_body
-    res = objs.get(int(rm.group(1)))
-    if res is None:
-        raise PdfError("dangling resources ref")
-    return res
-
-
 def _page_fonts(
-    objs: dict[int, bytes], res: bytes
+    objs: dict[int, bytes], res: dict[bytes, bytes]
 ) -> dict[bytes, tuple[int, dict[int, str]] | None]:
-    """Page resources → font-name → (width, cmap) | None map.
-
-    The ``/Font`` sub-dict in our subset holds only ``Name → obj R``
-    entries (no nested dicts), so a non-greedy ``<< ... >>`` match is
-    exact.
-    """
-    fm = _FONT_DICT_RE.search(res)
-    if fm is None:
-        return {}
+    """Page resources → font-name → (width, cmap) | None map. The
+    ``/Font`` dictionary, each font in it and its /Encoding may be
+    direct or indirect."""
     fonts: dict[bytes, tuple[int, dict[int, str]] | None] = {}
-    for em in _FONT_ENTRY_RE.finditer(fm.group(1)):
-        fbody = objs.get(int(em.group(2)))
-        if fbody is None:
-            raise PdfError("dangling font ref")
-        tm_ = _TOUNICODE_RE.search(fbody)
-        if tm_ is None:
+    for name, ref in _read_dict(_resolve(objs, res.get(b"Font"), "font")).items():
+        body = _resolve(objs, ref, "font")
+        # bytes prefilter: a font naming neither key keeps the frozen latin-1
+        font = _read_dict(body) if b"ToUnicode" in body or b"Encoding" in body else {}
+        tounicode, enc = font.get(b"ToUnicode"), font.get(b"Encoding")
+        if _ref(tounicode) is not None:
+            cmap = _resolve(objs, tounicode, "ToUnicode")
+            fonts[b"/" + name] = parse_tounicode(_stream_data(objs, cmap))
+        else:
             # §9.10.2 fallback order: no ToUnicode → simple-font
             # /Encoding (round-5 widening); neither → frozen latin-1
-            fonts[b"/" + em.group(1)] = _font_encoding(objs, fbody)
-        else:
-            cmap_obj = objs.get(int(tm_.group(1)))
-            if cmap_obj is None:
-                raise PdfError("dangling ToUnicode ref")
-            fonts[b"/" + em.group(1)] = parse_tounicode(_stream_data(cmap_obj))
+            fonts[b"/" + name] = enc and parse_encoding(_resolve(objs, enc, "Encoding"))
     return fonts
 
 
@@ -1395,11 +1438,6 @@ def _runs_to_text(runs: list[tuple[float, float, str]]) -> str:
     return "\n".join("".join(t for _, _, t in sorted(ln, key=lambda r: r[1])) for ln in lines)
 
 
-_OBJSTM_RE = re.compile(rb"/Type\s*/ObjStm(?![A-Za-z])")
-_OBJSTM_N_RE = re.compile(rb"/N\s+(\d+)")
-_OBJSTM_FIRST_RE = re.compile(rb"/First\s+(\d+)")
-
-
 _MAX_OBJSTM_N = 65536  # sanity cap: /N beyond this is a crafted header
 
 
@@ -1418,16 +1456,17 @@ def _expand_object_streams(objs: dict[int, bytes], obj_pos: dict[int, int]) -> N
     """
     extra: dict[int, tuple[int, bytes]] = {}  # num -> (container_pos, body)
     for cnum, body in list(objs.items()):
-        if _OBJSTM_RE.search(body) is None or b"stream" not in body:
+        if b"ObjStm" not in body or b"stream" not in body:
             continue
-        nm = _OBJSTM_N_RE.search(body)
-        fm = _OBJSTM_FIRST_RE.search(body)
-        if nm is None or fm is None:
+        head = _read_dict(body)
+        if _name(head.get(b"Type")) != b"ObjStm":
+            continue
+        n, first = _int(head.get(b"N")), _int(head.get(b"First"))
+        if n is None or first is None or min(n, first) < 0:
             raise PdfError("ObjStm missing /N or /First")
-        n, first = int(nm.group(1)), int(fm.group(1))
         if n > _MAX_OBJSTM_N:
             raise PdfError("ObjStm /N exceeds sanity cap")
-        data = _stream_data(body)
+        data = _stream_data(objs, body)
         header = data[:first].split()
         if len(header) < 2 * n:
             raise PdfError("ObjStm header shorter than /N pairs")
@@ -1450,32 +1489,18 @@ def _expand_object_streams(objs: dict[int, bytes], obj_pos: dict[int, int]) -> N
             objs[num] = body
 
 
-_CONTENTS_ARR_RE = re.compile(rb"/Contents\s*\[([^\]]*)\]")
+def _page_content(objs: dict[int, bytes], page: dict[bytes, bytes]) -> bytes | None:
+    """Resolve a page's /Contents — one stream or an array of them,
+    direct or indirect; array parts are decoded independently and joined
+    with a newline (§7.7.3.3: the division between streams happens only
+    at token boundaries)."""
+    contents = _resolve(objs, page.get(b"Contents"), "contents")
+    if contents is None:
+        return None
+    parts = [_resolve(objs, part, "contents") for part in _items(contents)]
+    return b"\n".join(_stream_data(objs, part) for part in parts)
 
 
-def _page_content(objs: dict[int, bytes], page: bytes) -> bytes | None:
-    """Resolve a page's /Contents — single ref or array of refs; array
-    parts are decoded independently and joined with a newline (§7.7.3.3:
-    the division between streams happens only at token boundaries)."""
-    am = _CONTENTS_ARR_RE.search(page)
-    if am is not None:
-        nums = [int(m.group(1)) for m in _REF_RE.finditer(am.group(1))]
-    else:
-        cm = _CONTENTS_RE.search(page)
-        if cm is None:
-            return None
-        nums = [int(cm.group(1))]
-    parts: list[bytes] = []
-    for num in nums:
-        cobj = objs.get(num)
-        if cobj is None:
-            raise PdfError("dangling contents ref")
-        parts.append(_stream_data(cobj))
-    return b"\n".join(parts)
-
-
-_TYPE_PAGES_RE = re.compile(rb"/Type\s*/Pages(?![A-Za-z])")
-_ROOT_PAGES_RE = re.compile(rb"/Pages\s+(\d+)\s+\d+\s+R")
 _MAX_TREE_DEPTH = 64
 
 
@@ -1492,11 +1517,14 @@ def _open_document(data: bytes, password: bytes | str) -> dict[int, bytes]:
     return objs
 
 
-def _collect_leaf_pages(objs: dict[int, bytes], num: int, visited: set, depth: int) -> list[int]:
-    """Depth-first walk of a (possibly nested) page tree: /Pages nodes
-    recurse into /Kids in order, anything else is a leaf page. Cycle
-    and depth guards keep adversarial trees in the error column instead
-    of hanging an executor."""
+def _collect_leaf_pages(
+    objs: dict[int, bytes], num: int, visited: set, depth: int
+) -> list[dict[bytes, bytes]]:
+    """Depth-first walk of a (possibly nested) page tree → the entries
+    of each leaf page: /Pages nodes recurse into /Kids in order,
+    anything else is a leaf page. Cycle and depth guards keep
+    adversarial trees in the error column instead of hanging an
+    executor."""
     if depth > _MAX_TREE_DEPTH:
         raise PdfError("page tree too deep")
     if num in visited:
@@ -1505,15 +1533,17 @@ def _collect_leaf_pages(objs: dict[int, bytes], num: int, visited: set, depth: i
     body = objs.get(num)
     if body is None:
         raise PdfError("dangling page ref")
-    if _TYPE_PAGES_RE.search(body):
-        km = _KIDS_RE.search(body)
-        if km is None:
-            raise PdfError("no /Kids")
-        leaves: list[int] = []
-        for rm in _REF_RE.finditer(km.group(1)):
-            leaves += _collect_leaf_pages(objs, int(rm.group(1)), visited, depth + 1)
-        return leaves
-    return [num]
+    node = _read_dict(body)
+    if _name(node.get(b"Type")) != b"Pages":
+        return [node]
+    kids = _array(_resolve(objs, node.get(b"Kids"), "Kids"))
+    if kids is None:
+        raise PdfError("no /Kids")
+    leaves: list[dict[bytes, bytes]] = []
+    for kid in kids:
+        if (kid_num := _ref(kid)) is not None:
+            leaves += _collect_leaf_pages(objs, kid_num, visited, depth + 1)
+    return leaves
 
 
 def extract_pdf_pages(
@@ -1546,13 +1576,12 @@ def extract_pdf_pages(
     if root_num is None:
         raise PdfError("no /Pages object")
     texts: list[str] = []
-    for pnum in _collect_leaf_pages(objs, root_num, set(), 0):
-        page = objs[pnum]
+    for page in _collect_leaf_pages(objs, root_num, set(), 0):
         content = _page_content(objs, page)
         if content is None:
             texts.append("")
             continue
-        res = _page_resources(objs, page)
+        res = _read_dict(_resolve(objs, page.get(b"Resources"), "resources"))
         scan = _scan_content(content, _page_fonts(objs, res))
         # frozen spec (SPEC item 2): \x02 is stripped from page text
         text = _runs_to_text(scan.runs).replace("\x02", "")
@@ -1592,117 +1621,80 @@ def pdf_error_text(e: Exception) -> str:
     return str(e) if isinstance(e, PdfError) else f"unexpected:{type(e).__name__}"
 
 
-_IMG_INT_RE = {
-    "width": re.compile(rb"/Width\s+(\d+)"),
-    "height": re.compile(rb"/Height\s+(\d+)"),
-    "bpc": re.compile(rb"/BitsPerComponent\s+(\d+)"),
-}
-_COLORSPACE_RE = re.compile(rb"/ColorSpace\s*/(\w+)")
-
-
-def _image_ints(head: bytes, int_res: dict) -> dict[str, int]:
-    """The integer entries ``int_res`` finds in an image dict ``head``."""
-    return {k: int(m.group(1)) for k, r in int_res.items() if (m := r.search(head))}
-
-
-def _image_row(
-    obj: int, head: bytes, raw: bytes, chain: list[bytes], meta: dict, colorspace: str
-) -> dict:
-    """One ``extract_pdf_images`` row. A ``/DCTDecode`` last in the
-    chain is left undone (``codec='jpeg'``, the JPEG bytes); any other
-    chain decodes fully (``codec='raw'``)."""
-    # slice parms WITH the chain: array-form /DecodeParms is
-    # index-aligned to the full /Filter array (round-4 advice)
-    parms = _decode_parms(head, len(chain))
-    codec = "jpeg" if chain and chain[-1] == b"DCTDecode" else "raw"
-    n = len(chain) - (codec == "jpeg")
+def _image_row(obj: int, head: dict[bytes, bytes], raw: bytes) -> dict:
+    """One ``extract_pdf_images`` row of the image whose dictionary
+    entries are ``head`` and whose undecoded samples are ``raw``. A
+    ``/DCTDecode`` last in the chain is left undone (``codec='jpeg'``,
+    the JPEG bytes); any other chain decodes fully (``codec='raw'``)."""
+    width, height = _int(head.get(b"Width")), _int(head.get(b"Height"))
+    if width is None or height is None:
+        raise PdfError(
+            f"image object {obj}: missing /Width or /Height" if obj
+            else "inline image missing /W or /H"
+        )
+    bpc = _int(head.get(b"BitsPerComponent"))
+    colorspace = _name(head.get(b"ColorSpace")) or b"DeviceGray"
+    chain = _filter_chain(head)
+    codec = "jpeg" if chain[-1:] == [b"DCTDecode"] else "raw"
     return {
         "obj": obj,
-        "width": meta["width"],
-        "height": meta["height"],
-        "bpc": meta.get("bpc", 8),
-        "colorspace": colorspace,
+        "width": width,
+        "height": height,
+        "bpc": 8 if bpc is None else bpc,
+        "colorspace": _ABBREVIATED_NAMES.get(colorspace, colorspace).decode("latin-1"),
         "codec": codec,
-        "data": _apply_filters(head, raw, chain=chain[:n], parms=parms[:n]),
+        "data": _apply_filters(head, raw, len(chain) - (codec == "jpeg")),
     }
 
 
-def _image_row_from_body(num: int, body: bytes) -> dict | None:
+def _image_row_from_body(objs: dict[int, bytes], num: int, body: bytes) -> dict | None:
     """Decoded object body → image row, or None when the object is not
     a /Subtype /Image XObject. Shared by the document-wide image sweep
     and the scanned-page OCR fallback's painted-image lookup."""
-    split = _stream_split(body)
-    head = body if split is None else split[0]
-    if b"/Image" not in head or not re.search(rb"/Subtype\s*/Image\b", head):
+    if b"Image" not in body:
         return None
-    meta = _image_ints(head, _IMG_INT_RE)
-    if "width" not in meta or "height" not in meta:
-        raise PdfError(f"image object {num}: missing /Width or /Height")
-    cs = _COLORSPACE_RE.search(head)
-    chain = _filter_chain(head)
-    _, raw = _raw_stream(body)
-    return _image_row(num, head, raw, chain, meta, cs.group(1).decode() if cs else "DeviceGray")
-
-
-# §8.9.7 Table 93: inline-image dictionary key + value abbreviations
-_BI_INT_RE = {
-    "width": re.compile(rb"/(?:W|Width)\s+(\d+)"),
-    "height": re.compile(rb"/(?:H|Height)\s+(\d+)"),
-    "bpc": re.compile(rb"/(?:BPC|BitsPerComponent)\s+(\d+)"),
-}
-_BI_CS_RE = re.compile(rb"/(?:CS|ColorSpace)\s*/(\w+)")
-_BI_F_RE = re.compile(rb"/(?:F|Filter)\s*(\[[^\]]*\]|/[A-Za-z0-9]+)")
-_BI_CS_MAP = {b"G": "DeviceGray", b"RGB": "DeviceRGB", b"CMYK": "DeviceCMYK"}
-_BI_F_MAP = {
-    b"AHx": b"ASCIIHexDecode", b"A85": b"ASCII85Decode", b"LZW": b"LZWDecode",
-    b"Fl": b"FlateDecode", b"RL": b"RunLengthDecode", b"CCF": b"CCITTFaxDecode",
-    b"DCT": b"DCTDecode",
-}
+    head = _read_dict(body)
+    if _name(head.get(b"Subtype")) != b"Image":
+        return None
+    return _image_row(num, head, _raw_stream(objs, body)[1])
 
 
 def _inline_image_row(content: bytes, span: tuple[int, int, int, int]) -> dict:
     """The image row (obj=0) of one ``BI … ID <data> EI`` whose
-    ``_scan_content`` span is ``span``. The abbreviated dict keys and
-    values of §8.9.7 Table 93/94 are expanded to their full forms so the
-    one filter pipeline (``_apply_filters``, incl. CCITT G4/G3-1D and
-    predictor handling) serves XObjects and inline images alike."""
+    ``_scan_content`` span is ``span``. Its key/value run is read as a
+    dictionary and the abbreviated keys of §8.9.7 Table 93 are expanded
+    to their full forms, so the one filter pipeline (``_apply_filters``,
+    incl. CCITT G4/G3-1D and predictor handling) serves XObjects and
+    inline images alike."""
     bi_end, id_start, data_start, ei = span
-    head = content[bi_end:id_start]
-    meta = _image_ints(head, _BI_INT_RE)
-    if "width" not in meta or "height" not in meta:
-        raise PdfError("inline image missing /W or /H")
-    fm = _BI_F_RE.search(head)
-    chain = [_BI_F_MAP.get(f, f) for f in _FILTER_NAME_RE.findall(fm.group(1))] if fm else []
+    head = {
+        _ABBREVIATED_KEYS.get(k, k): v
+        for k, v in _read_dict(b"<<" + content[bi_end:id_start] + b">>").items()
+    }
     # binary payload convention: one whitespace after ID, one before
     # EI — strip the trailing separator the span includes
     raw = content[data_start:ei]
     if raw[-1:] in (b" ", b"\r", b"\n", b"\t"):
         raw = raw[:-1]
-    csm = _BI_CS_RE.search(head)
-    cs = csm.group(1) if csm else b"G"
-    return _image_row(0, head, raw, chain, meta, _BI_CS_MAP.get(cs, cs.decode()))
+    return _image_row(0, head, raw)
 
 
-_XOBJ_DICT_RE = re.compile(rb"/XObject\s*<<(.*?)>>", re.S)
-
-
-def _page_painted_images(objs: dict[int, bytes], res: bytes, painted: list[bytes]) -> list[dict]:
+def _page_painted_images(
+    objs: dict[int, bytes], res: dict[bytes, bytes], painted: list[bytes]
+) -> list[dict]:
     """Image XObjects a page actually PAINTS (``painted``: the ``Do``
     operands ``_scan_content`` read from its content stream), as image
     rows in first-paint order — the candidate set for the scanned-page
-    OCR fallback. ``res``: the page's ``_page_resources``; names painted
+    OCR fallback. ``res``: the page's /Resources entries; names painted
     but absent from /XObject, and non-image XObjects, are skipped."""
-    xm = _XOBJ_DICT_RE.search(res)
-    if xm is None:
-        return []
-    names = {b"/" + m.group(1): int(m.group(2)) for m in _FONT_ENTRY_RE.finditer(xm.group(1))}
+    xobjects = _read_dict(_resolve(objs, res.get(b"XObject"), "XObject"))
     rows: list[dict] = []
     for nm in dict.fromkeys(painted):
-        num = names.get(nm)
+        num = _ref(xobjects.get(nm[1:]))
         body = objs.get(num) if num is not None else None
         if body is None:
             continue
-        row = _image_row_from_body(num, body)
+        row = _image_row_from_body(objs, num, body)
         if row is not None:
             rows.append(row)
     return rows
@@ -1742,28 +1734,29 @@ def extract_pdf_images(data: bytes, password: bytes | str = b"") -> list[dict]:
     objs = _open_document(data, password)
     out: list[dict] = []
     for num in sorted(objs):
-        row = _image_row_from_body(num, objs[num])
+        row = _image_row_from_body(objs, num, objs[num])
         if row is not None:
             out.append(row)
     root = _root_pages_num(objs)
     if root is not None:
-        for pnum in _collect_leaf_pages(objs, root, set(), 0):
-            content = _page_content(objs, objs[pnum])
+        for page in _collect_leaf_pages(objs, root, set(), 0):
+            content = _page_content(objs, page)
             if content:
                 out.extend(_inline_image_row(content, sp) for sp in _scan_content(content).inline)
     return out
 
 
 def _root_pages_num(objs: dict[int, bytes]) -> int | None:
-    """The root /Pages object number (Catalog-first, fallback scan)."""
-    for _, b in objs.items():
-        if b"/Type /Catalog" in b:
-            rm = _ROOT_PAGES_RE.search(b)
-            if rm:
-                return int(rm.group(1))
+    """The root /Pages object number: the first catalog's /Pages, else
+    (no catalog, or one without a /Pages ref) the first /Type /Pages
+    node in file order."""
+    for b in objs.values():
+        if b"Catalog" in b and _name((d := _read_dict(b)).get(b"Type")) == b"Catalog":
+            if (root := _ref(d.get(b"Pages"))) is not None:
+                return root
             break
     return next(
         (n_ for n_, b in objs.items()
-         if b.lstrip().startswith(b"<<") and _TYPE_PAGES_RE.search(b)),
+         if b"Pages" in b and _name(_read_dict(b).get(b"Type")) == b"Pages"),
         None,
     )

@@ -1256,3 +1256,137 @@ def test_r5_encoding_malformed_differences_raises():
     pdf = build_pdf([page_content_stream(["A"])], encoding=enc)
     with pytest.raises(PdfError):
         extract_pdf_pages(pdf)
+
+
+# ------------------------------------- dictionary entries (§7.3.7-7.3.10)
+
+WORDS = [f"line {i:02d} of the page" for i in range(40)]
+
+
+def _with_objects(pdf: bytes, bodies: list[bytes]) -> tuple[bytes, list[int]]:
+    """``pdf`` with ``bodies`` appended as new objects before its xref
+    table, and their object numbers."""
+    import re
+
+    first = max(int(n) for n in re.findall(rb"(\d+) 0 obj", pdf)) + 1
+    nums = list(range(first, first + len(bodies)))
+    objs = b"".join(b"%d 0 obj\n%s\nendobj\n" % (n, b) for n, b in zip(nums, bodies))
+    at = pdf.index(b"\nxref\n") + 1
+    return pdf[:at] + objs + pdf[at:], nums
+
+
+def _indirect_lengths(pdf: bytes) -> bytes:
+    """``pdf`` with every stream's ``/Length N`` written as a reference
+    to a new integer object holding N (§7.3.8.2)."""
+    import re
+
+    lengths = re.findall(rb"/Length (\d+)[^<>]*>>\nstream\n", pdf)
+    assert lengths
+    pdf, nums = _with_objects(pdf, lengths)
+    refs = iter(nums)
+    return re.sub(
+        rb"/Length \d+(?=[^<>]*>>\nstream\n)", lambda m: b"/Length %d 0 R" % next(refs), pdf
+    )
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [{}, {"flate": True}, {"filters": ["ASCII85Decode", "FlateDecode"]},
+     {"filters": ["LZWDecode"]}, {"flate": True, "encrypt": 4},
+     {"flate": True, "objstm": True, "cid_font": True}],
+    ids=["identity", "flate", "ascii85_flate", "lzw", "aesv2", "objstm"],
+)
+def test_indirect_stream_length(kw):
+    """A stream whose /Length is an indirect reference is read to the
+    length the referenced object holds, on every filter chain, through
+    AES decryption and inside an object-stream container."""
+    style = "cid" if kw.get("cid_font") else "td"
+    pdf = build_pdf([page_content_stream(WORDS, style=style)], **kw)
+    assert extract_pdf_pages(_indirect_lengths(pdf)) == extract_pdf_pages(pdf) == ["\n".join(WORDS)]
+
+
+def test_dangling_indirect_length_is_a_pdf_error():
+    from pdf_to_text_spark.core.pdfparse import extract_pdf_pages_safe
+
+    pdf = build_pdf([page_content_stream(WORDS)], flate=True)
+    dangling = _indirect_lengths(pdf).replace(b"/Length ", b"/Length 99", 1)
+    assert b"/Length 99" in dangling
+    assert extract_pdf_pages_safe(dangling) == (None, "dangling Length ref")
+
+
+def test_direct_font_dictionary():
+    """A font written inside the page's /Font dictionary (no object of
+    its own) is read with its /ToUnicode CMap."""
+    import re
+
+    pdf = build_pdf([page_content_stream(["Hello CID world"], style="cid")], cid_font=True)
+    num = re.search(rb"/Font << /F1 (\d+) 0 R >>", pdf).group(1)
+    font = re.search(rb"\n" + num + rb" 0 obj\n(<<.*?>>)\nendobj", pdf, re.S).group(1)
+    direct = pdf.replace(b"/F1 " + num + b" 0 R", b"/F1 " + font)
+    assert b"/Font << /F1 << /Type /Font" in direct
+    assert extract_pdf_pages(direct) == ["Hello CID world"]
+
+
+def test_compact_catalog_names_the_root_of_a_nested_tree():
+    """``/Type/Catalog`` with no space is the catalog: its /Pages is the
+    root even when an intermediate /Pages node comes first in the file."""
+    import re
+
+    pdf = build_pdf([page_content_stream([f"p{i}"]) for i in range(4)], nested=True)
+    moved = b""
+    for num in (1, 2):  # the catalog and the root /Pages go after the mids
+        obj = re.search(rb"\n(%d 0 obj\n.*?\nendobj\n)" % num, pdf, re.S).group(1)
+        pdf = pdf.replace(obj, b"")
+        moved += obj
+    at = pdf.index(b"\nxref\n") + 1
+    pdf = pdf[:at] + moved.replace(b"/Type /Catalog", b"/Type/Catalog") + pdf[at:]
+    assert pdf.index(b"/Type /Pages /Parent") < pdf.index(b"/Type/Catalog")
+    assert extract_pdf_pages(pdf) == ["p0", "p1", "p2", "p3"]
+
+
+@pytest.mark.parametrize("r", [2, 3, 4], ids=["rc4_40", "rc4_128", "aesv2"])
+def test_encrypt_id_as_literal_string(r):
+    """A trailer /ID written as literal strings gives the same file key
+    as its hex form (§7.3.4.2; /ID feeds Algorithm 2)."""
+    import re
+
+    pdf = build_pdf([page_content_stream(LINES)], flate=True, encrypt=r)
+    hexed = re.search(rb"/ID \[<([0-9a-f]+)> <[0-9a-f]+>\]", pdf)
+    lit = b"(" + _escaped_literal(bytes.fromhex(hexed.group(1).decode())) + b")"
+    literal_pdf = pdf.replace(hexed.group(0), b"/ID [" + lit + b" " + lit + b"]")
+    assert extract_pdf_pages(literal_pdf) == ["\n".join(LINES)]
+
+
+def test_crypt_filter_length_is_not_the_key_length():
+    """The /Length of a /V 4 crypt filter (bytes) is not the
+    encryption dictionary's own /Length (bits), whichever comes first."""
+    pdf = build_pdf([page_content_stream(LINES)], flate=True, encrypt=4)
+    moved = pdf.replace(b"/Length 128 /P", b"/P").replace(b"/StmF /StdCF", b"/StmF /StdCF /Length 128")
+    assert moved.index(b"/Length 16") < moved.index(b"/Length 128")
+    assert extract_pdf_pages(moved) == ["\n".join(LINES)]
+
+
+def test_uncompressed_stream_holding_the_word_endobj():
+    """An object ends after its stream payload: a page whose text says
+    ``endobj`` is read whole."""
+    lines = ["the word endobj ends nothing", "endstream endobj either"]
+    assert extract_pdf_pages(build_pdf([page_content_stream(lines)])) == ["\n".join(lines)]
+
+
+def test_all_compact_dictionaries():
+    """Dictionaries written with no white space around delimiters
+    (``<</Type/Page/Contents 4 0 R>>``, the form many writers emit) read
+    like the spaced ones, stream heads and trailer included."""
+    import re
+
+    pdf = build_pdf(
+        [page_content_stream(NOTCH2_LINES, style="cid") for _ in range(3)],
+        flate=True, cid_font=True, nested=True, split_content=True,
+    )
+    parts = re.split(rb"(stream\n.*?\nendstream)", pdf, flags=re.S)
+    compact = b"".join(
+        p if p.startswith(b"stream\n") else re.sub(rb"\s*(<<|>>|\[|\]|/)\s*", rb"\1", p)
+        for p in parts
+    )
+    assert b"<</Type/Page/Parent" in compact and b">>stream\n" in compact
+    assert extract_pdf_pages(compact) == extract_pdf_pages(pdf) == ["\n".join(NOTCH2_LINES)] * 3

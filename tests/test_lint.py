@@ -161,12 +161,24 @@ def test_content_stream_operators_are_read_in_one_function():
         assert list(hits) == ["_scan_content"], f"{op!r} read at {hits}"
 
 
+# Bytes literals in ``core/pdfparse.py`` that name a dictionary key
+# (``/`` then a letter), each with the reason it is not a second reader
+# of dictionary entries beside ``_read_dict``.
+PDF_KEY_LITERALS = {
+    b"/Encrypt": "whole-file fast path: a document that never names /Encrypt "
+    "skips the trailer search",
+}
+
+
 def test_pdf_syntax_elements_are_read_in_one_function():
     """In ``core/pdfparse.py`` each object-syntax element has one reader:
     ``bytes.fromhex`` runs only in ``_ascii_hex_decode`` (hex strings)
     and ``parse_tounicode`` (CMap code units), the ``stream`` keyword
-    with its end of line is searched only in ``_stream_split``, and
-    only ``_literal_string`` walks a literal string's delimiters."""
+    with its end of line is searched only in ``_stream_split``, only
+    ``_literal_string`` walks a literal string's delimiters, and no
+    bytes literal names a dictionary key (a ``/Length`` regex, say)
+    but those ``PDF_KEY_LITERALS`` allows: every ``/Key value`` lookup
+    goes through ``_read_dict``."""
     rules = {
         "fromhex": (
             lambda n: isinstance(n, ast.Attribute) and n.attr == "fromhex",
@@ -175,6 +187,12 @@ def test_pdf_syntax_elements_are_read_in_one_function():
         "stream keyword": (
             lambda n: _bytes_literal(n, lambda v: v.startswith(b"stream") and v != b"stream"),
             ["_stream_split"],
+        ),
+        "dictionary key": (
+            lambda n: _bytes_literal(
+                n, lambda v: re.search(rb"/[A-Za-z]", v) and v not in PDF_KEY_LITERALS
+            ),
+            [],
         ),
         "literal-string delimiters": (
             lambda n: isinstance(n, ast.Name) and n.id == "_STR_DELIM_RE",
