@@ -19,8 +19,9 @@ Spark's status store after two warm-up runs (the first starts the
 workers, the second is their first task with the package imported).
 
 ``--parse`` runs no Spark: it times ``extract_pdf_pages_safe`` over the
-PDF rows of a perfbench workload's fixture corpus, in process CPU time,
-once per repeat, and prints the row count and the min/median ms.
+rows of a perfbench workload's fixture corpus that the oracle routes to
+``pdf``, in process CPU time, once per repeat, and prints the row count
+and the min/median ms.
 """
 
 from __future__ import annotations
@@ -81,16 +82,19 @@ def task_floor(spark, repeats: int) -> dict:
 
 def parse_cpu(workload: str, seed: int, repeats: int) -> dict:
     """Min and median process-CPU ms of one ``extract_pdf_pages_safe``
-    pass over the PDF rows (``%PDF-`` payloads) of ``workload``'s
-    corpus for ``seed``, over ``repeats`` passes."""
+    pass over the PDF rows of ``workload``'s corpus for ``seed``, over
+    ``repeats`` passes. The rows are those the oracle routes to ``pdf``,
+    the set ``perfbench/run.py::kernel_layers`` times for
+    ``core.pdfparse.ms_per_doc``; that metric is this pass's wall time
+    divided by the row count, taken once inside a benchmark run."""
     from pdf_to_text_spark.core.pdfparse import extract_pdf_pages_safe
-    from pdf_to_text_spark.fixtures import make_corpus
+    from pdf_to_text_spark.fixtures import make_corpus, oracle_extract
     from perfbench.inputs import WORKLOADS
 
     w = WORKLOADS[workload]
     pdfs = [
         r["html"] for r in make_corpus(w.rows, seed, classes=w.classes)
-        if r["html"] and r["html"].startswith(b"%PDF-")
+        if oracle_extract(r["html"], r["text"])[2] == "pdf"
     ]
     cpu_ms = []
     for _ in range(repeats):

@@ -13,9 +13,11 @@ toward the reference's accept-any-upload behavior):
   Td/TD/Tm/T*/TL positioning (translation-only matrices), inline
   dictionaries (skipped, e.g. BDC property lists);
 - objects: a dictionary is read by its own top-level entries
-  (``<</Type/Page>>`` spacing or none), and a value may be an indirect
-  reference — a stream's ``/Length`` (§7.3.8.2), ``/Resources``,
-  ``/Font``, ``/Contents`` and ``/Kids`` included;
+  (``<</Type/Page>>`` spacing or none); these values may be indirect
+  references: a stream's ``/Length`` (§7.3.8.2), ``/Kids``,
+  ``/Contents`` and its parts, ``/Resources``, ``/Font``, each font and
+  its ``/ToUnicode`` and ``/Encoding``, ``/XObject`` and ``/Encrypt``
+  (any other entry, an image's ``/Width`` say, is read only direct);
 - the filters of §7.4 as a ``/Filter`` name or array; recursive page
   trees (nested ``/Kids`` with cycle + depth guards);
 - ``/Contents`` arrays (§7.7.3.3): the parts are decoded independently
@@ -287,15 +289,12 @@ _SIMPLE_VALUE = (  # an indirect reference, a name, a hex string, a number or a 
 _TOKEN_RE = re.compile(
     _WSP + rb"*(?:(<<)|(>>)|(\[)|(\])|(" + _SIMPLE_VALUE + rb")|(.))", re.S
 )
-# one dictionary entry — key, then a value read in one match (group 2:
-# a simple value, an array holding no container or string, or a
-# dictionary holding no string and no dictionary but flat ones) or the
-# first byte of any other dictionary, array or literal string (group 3)
-# — or the end of the dictionary (group 4)
+# one dictionary entry — key, then a simple value (group 2) or the first
+# byte of a dictionary, array or literal string, which _value_end reads
+# (group 3) — or the end of the dictionary (group 4)
 _ENTRY_RE = re.compile(
     _WSP + rb"*(?:/(" + _REGULAR + rb"*)" + _WSP + rb"*(?:(" + _SIMPLE_VALUE
-    + rb"|\[[^\[\]()<>{}%]*\]|<<[^<>(){}%]*(?:<<[^<>(){}%]*>>[^<>(){}%]*)*>>)"
-    + rb"|(<<|[\[(]))|(>>))"
+    + rb")|(<<|[\[(]))|(>>))"
 )
 
 

@@ -170,15 +170,64 @@ PDF_KEY_LITERALS = {
 }
 
 
+_RE_CALLS = {"compile", "search", "match", "fullmatch", "finditer", "findall", "sub", "split"}
+
+
+def _regex_names_a_key():
+    r"""A predicate on ``core/pdfparse.py`` AST nodes: a ``re`` call
+    whose pattern is built at run time (it uses a name that is not a
+    module-level constant, as ``rb"/" + name`` does) or whose bytes
+    literals, module-level constants followed, hold a key of three or
+    more letters that the module reads with ``.get`` (as
+    ``rb"Length\s+(\d+)"`` does)."""
+    tree = ast.parse((PKG / "core" / "pdfparse.py").read_text())
+    consts = {
+        t.id: a.value
+        for a in tree.body if isinstance(a, ast.Assign)
+        for t in a.targets if isinstance(t, ast.Name)
+    }
+    keys = {
+        n.args[0].value
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "get" and n.args
+        and _bytes_literal(n.args[0], lambda v: len(v) >= 3)
+    }
+
+    def literals(expr) -> list[bytes] | None:  # None: built at run time
+        out = []
+        for n in ast.walk(expr):
+            if isinstance(n, ast.Name):
+                if (sub := literals(consts[n.id]) if n.id in consts else None) is None:
+                    return None
+                out += sub
+            elif _bytes_literal(n, lambda v: True):
+                out.append(n.value)
+        return out
+
+    def hit(n) -> bool:
+        if not (
+            isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+            and isinstance(n.func.value, ast.Name) and n.func.value.id == "re"
+            and n.func.attr in _RE_CALLS and n.args
+        ):
+            return False
+        lits = literals(n.args[0])
+        return lits is None or any(k in v for k in keys for v in lits)
+
+    return hit
+
+
 def test_pdf_syntax_elements_are_read_in_one_function():
     """In ``core/pdfparse.py`` each object-syntax element has one reader:
     ``bytes.fromhex`` runs only in ``_ascii_hex_decode`` (hex strings)
     and ``parse_tounicode`` (CMap code units), the ``stream`` keyword
     with its end of line is searched only in ``_stream_split``, only
-    ``_literal_string`` walks a literal string's delimiters, and no
-    bytes literal names a dictionary key (a ``/Length`` regex, say)
-    but those ``PDF_KEY_LITERALS`` allows: every ``/Key value`` lookup
-    goes through ``_read_dict``."""
+    ``_literal_string`` walks a literal string's delimiters, no bytes
+    literal names a dictionary key (a ``/Length`` regex, say) but those
+    ``PDF_KEY_LITERALS`` allows, and no regex is built at run time or
+    names a key the module reads (``_regex_names_a_key``): every
+    ``/Key value`` lookup goes through ``_read_dict``."""
     rules = {
         "fromhex": (
             lambda n: isinstance(n, ast.Attribute) and n.attr == "fromhex",
@@ -194,6 +243,7 @@ def test_pdf_syntax_elements_are_read_in_one_function():
             ),
             [],
         ),
+        "regex over dictionary keys": (_regex_names_a_key(), []),
         "literal-string delimiters": (
             lambda n: isinstance(n, ast.Name) and n.id == "_STR_DELIM_RE",
             ["", "_literal_string"],
