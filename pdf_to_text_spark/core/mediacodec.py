@@ -33,6 +33,28 @@ def _paeth(a: int, b: int, c: int) -> int:
     return b if pb <= pc else c
 
 
+def png_unfilter_row(tag: int, row: bytearray, prev, bpp: int) -> bool:
+    """The one PNG row unfilter (PNG images, PDF predictors §7.4.4.4):
+    undo ``tag`` (0–4: None/Sub/Up/Average/Paeth) on ``row`` in place
+    over ``prev``, the row above; False for any other tag."""
+    if tag == 1:  # Sub
+        for i in range(bpp, len(row)):
+            row[i] = (row[i] + row[i - bpp]) & 0xFF
+    elif tag == 2:  # Up
+        for i in range(len(row)):
+            row[i] = (row[i] + prev[i]) & 0xFF
+    elif tag == 3:  # Average
+        for i in range(len(row)):
+            left = row[i - bpp] if i >= bpp else 0
+            row[i] = (row[i] + ((left + prev[i]) >> 1)) & 0xFF
+    elif tag == 4:  # Paeth
+        for i in range(len(row)):
+            left = row[i - bpp] if i >= bpp else 0
+            ul = prev[i - bpp] if i >= bpp else 0
+            row[i] = (row[i] + _paeth(left, prev[i], ul)) & 0xFF
+    return 0 <= tag <= 4
+
+
 def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
     """PNG bytes → (width, height, channels, raw pixel bytes, row-major,
     channel-interleaved). Raises MediaError on malformed/unsupported."""
@@ -71,22 +93,7 @@ def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
         base = y * (stride + 1)
         f = raw[base]
         row = bytearray(raw[base + 1 : base + 1 + stride])
-        if f == 1:  # Sub
-            for i in range(ch, stride):
-                row[i] = (row[i] + row[i - ch]) & 0xFF
-        elif f == 2:  # Up
-            for i in range(stride):
-                row[i] = (row[i] + prev[i]) & 0xFF
-        elif f == 3:  # Average
-            for i in range(stride):
-                left = row[i - ch] if i >= ch else 0
-                row[i] = (row[i] + ((left + prev[i]) >> 1)) & 0xFF
-        elif f == 4:  # Paeth
-            for i in range(stride):
-                left = row[i - ch] if i >= ch else 0
-                ul = prev[i - ch] if i >= ch else 0
-                row[i] = (row[i] + _paeth(left, prev[i], ul)) & 0xFF
-        elif f != 0:
+        if not png_unfilter_row(f, row, prev, ch):
             raise MediaError(f"bad filter {f}")
         out[y * stride : (y + 1) * stride] = row
         prev = row

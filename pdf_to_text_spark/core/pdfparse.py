@@ -12,7 +12,9 @@ toward the reference's accept-any-upload behavior):
 - content streams: Tj/TJ/' show operators with literal and hex strings,
   Td/TD/Tm/T*/TL positioning (translation-only matrices), inline
   dictionaries (skipped, e.g. BDC property lists);
-- objects: a dictionary is read by its own top-level entries
+- objects: one table (``_open_document``) holds each object split,
+  its dictionary read and its stream payload cut once (one holding
+  ``endobj`` too); a dictionary is read by its own top-level entries
   (``<</Type/Page>>`` spacing or none); these values may be indirect
   references: a stream's ``/Length`` (§7.3.8.2), ``/Kids``,
   ``/Contents`` and its parts, ``/Resources``, ``/Font``, each font and
@@ -38,10 +40,13 @@ Raises ``PdfError`` on malformed input; callers map that to an
 
 from __future__ import annotations
 
+import hashlib
 import re
 import unicodedata as _ud
 import zlib
 from typing import NamedTuple
+
+from pdf_to_text_spark.core.mediacodec import png_unfilter_row
 
 LINE_Y_TOL = 2.0  # runs within this many points of a line's y are one line
 TJ_SPACE_KERN = -180.0  # TJ kerning beyond this inserts a word gap
@@ -62,31 +67,61 @@ _REF_RE = re.compile(rb"(\d+)\s+\d+\s+R")
 _ENDSTREAM_RE = re.compile(rb"[ \t\r\n\f\x00]*endstream")
 
 
-def _parse_objects(data: bytes) -> tuple[dict[int, bytes], dict[int, int]]:
-    """Map object number → raw object body (dict + optional stream),
-    plus object number → file offset of its WINNING (last) definition.
-    Later definitions win — the saved-over-file semantics of
-    incremental updates (§7.5.6); offsets let ObjStm expansion apply
-    the same revision ordering (round-4 advice). An object ends at the
-    first ``endobj`` after its stream payload, when a direct /Length
-    ends that payload at an ``endstream``, else at its first ``endobj``
-    (an indirect /Length is not known yet)."""
-    objs: dict[int, bytes] = {}
+_NO_STREAM = "object has no stream with a /Length"
+
+
+class PdfObject(NamedTuple):
+    """One entry of the object table: an object split, and its
+    dictionary read, once for every reader after ``_open_document``."""
+
+    value: bytes  # the object's body before its ``stream`` keyword (all of it without one)
+    head: dict[bytes, bytes]  # the top-level entries of ``value``, {} when not a dictionary
+    # the raw stream payload, cut to its /Length; with ``fault`` set too,
+    # the uncut rest of the body (its /Length names no top-level object)
+    payload: bytes | None = None
+    fault: str | None = _NO_STREAM  # the error reading the payload raises; None: it is cut
+
+
+def _parse_objects(data: bytes) -> tuple[dict[int, PdfObject], dict[int, int]]:
+    """The object table (object number → ``PdfObject``), plus object
+    number → file offset of its WINNING (last) definition. Later
+    definitions win — the saved-over-file semantics of incremental
+    updates (§7.5.6); offsets let ObjStm expansion apply the same
+    revision ordering (round-4 advice). Payloads are cut once every
+    object is split, so an indirect /Length is known, and one holding
+    ``endobj`` ends its object at the ``endobj`` after it; a stream that
+    cannot be cut keeps its error in ``fault``, raised when it is read."""
+    objs: dict[int, PdfObject] = {}
     pos: dict[int, int] = {}
+    streams: dict[int, tuple[int, int]] = {}  # payload start, first endobj
     for m in _OBJ_RE.finditer(data):
         num, start = int(m.group(1)), m.end()
         end = data.find(b"endobj", start)
-        body = data[start:end]
-        split = _stream_split(body, None) if end != -1 and b"stream" in body else None
-        if split and split[3] > len(body) and _ENDSTREAM_RE.match(data, start + split[3]):
-            end = data.find(b"endobj", start + split[3])  # the payload holds the word
-            body = data[start:end]
         if end == -1:
             raise PdfError(f"object {num}: missing endobj")
-        objs[num] = body
+        body = data[start:end]
+        value, at = _stream_split(body) if b"stream" in body else (body, None)
+        objs[num] = PdfObject(value, _read_dict(value))
         pos[num] = m.start()
+        streams.pop(num, None)
+        if at is not None:
+            streams[num] = (start + at, end)
     if not objs:
         raise PdfError("no objects found")
+    for num, (at, end) in streams.items():
+        obj = objs[num]
+        try:
+            n = _int(_resolve(objs, obj.head.get(b"Length"), "Length"))
+        except PdfError as e:  # the /Length object may sit in an object stream
+            objs[num] = obj._replace(payload=data[at:end], fault=str(e))
+            continue
+        if n is None or n < 0:
+            continue
+        if at + n > end and _ENDSTREAM_RE.match(data, at + n):
+            end = data.find(b"endobj", at + n)  # the payload holds the word
+            if end == -1:
+                raise PdfError(f"object {num}: missing endobj")
+        objs[num] = obj._replace(payload=data[at : min(at + n, end)], fault=None)
     return objs, pos
 
 
@@ -448,27 +483,49 @@ def _ref(v: bytes | None) -> int | None:
     return None if m is None else int(m.group(1))
 
 
-def _resolve(objs: dict[int, bytes], v: bytes | None, what: str) -> bytes | None:
-    """The one resolver of indirect values (§7.3.10): the body of the
-    object ``v`` references, or ``v`` itself when it is direct; a
-    reference to a missing object raises."""
+def _lookup(objs: dict[int, PdfObject], v: bytes | None, what: str) -> PdfObject | None:
+    """The one resolver of indirect values (§7.3.10): the table entry of
+    the object ``v`` references, None when ``v`` is direct; a reference
+    to a missing object raises."""
     num = _ref(v)
     if num is None:
-        return v
-    if (body := objs.get(num)) is None:
+        return None
+    if (obj := objs.get(num)) is None:
         raise PdfError(f"dangling {what} ref")
-    return body
+    return obj
+
+
+def _resolve(objs: dict[int, PdfObject], v: bytes | None, what: str) -> bytes | None:
+    """A value, direct or the value of the object it references."""
+    return v if (obj := _lookup(objs, v, what)) is None else obj.value
+
+
+def _dict(objs: dict[int, PdfObject], v: bytes | None, what: str) -> dict[bytes, bytes]:
+    """The entries of a dictionary value, direct or the object it
+    references ({} when absent or not a dictionary)."""
+    return _read_dict(v) if (obj := _lookup(objs, v, what)) is None else obj.head
+
+
+def _payload(objs: dict[int, PdfObject], obj: PdfObject) -> bytes:
+    """The raw (undecoded) stream payload of a table entry; a stream
+    that cannot be cut raises its error."""
+    if obj.fault is None:
+        return obj.payload
+    if obj.payload is not None:  # its /Length object came from an object stream
+        n = _int(_resolve(objs, obj.head.get(b"Length"), "Length"))
+        if n is None or n < 0:
+            raise PdfError(_NO_STREAM)
+        return obj.payload[:n]
+    raise PdfError(obj.fault)
+
+
+def _stream(objs: dict[int, PdfObject], v: bytes | None, what: str) -> bytes:
+    """The decoded payload of the stream ``v`` references."""
+    obj = _lookup(objs, v, what) or PdfObject(v, {})  # a direct value is no stream
+    return _apply_filters(obj.head, _payload(objs, obj))
 
 
 # ------------------------------------------- predictors (§7.4.4.4)
-
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
 
 def _unpredict(data: bytes, parms: dict) -> bytes:
     """Reverse a TIFF (Predictor 2) or PNG (10–15) predictor applied
@@ -487,67 +544,40 @@ def _unpredict(data: bytes, parms: dict) -> bytes:
     if pred == 2:
         if bpc != 8:
             raise PdfError("TIFF predictor requires 8-bit components")
-        out = bytearray(data)
-        for rs in range(0, len(out), rowlen):
-            end = min(rs + rowlen, len(out))
-            for i in range(rs + bpp, end):
-                out[i] = (out[i] + out[i - bpp]) & 0xFF
-        return bytes(out)
-    if 10 <= pred <= 15:
-        out = bytearray()
-        prev = bytes(rowlen)
-        i = 0
-        while i < len(data):
-            ft = data[i]
-            row = bytearray(data[i + 1 : i + 1 + rowlen])
-            i += 1 + len(row)
-            if ft == 1:  # Sub
-                for j in range(bpp, len(row)):
-                    row[j] = (row[j] + row[j - bpp]) & 0xFF
-            elif ft == 2:  # Up
-                for j in range(len(row)):
-                    row[j] = (row[j] + prev[j]) & 0xFF
-            elif ft == 3:  # Average
-                for j in range(len(row)):
-                    left = row[j - bpp] if j >= bpp else 0
-                    row[j] = (row[j] + (left + prev[j]) // 2) & 0xFF
-            elif ft == 4:  # Paeth
-                for j in range(len(row)):
-                    left = row[j - bpp] if j >= bpp else 0
-                    c = prev[j - bpp] if j >= bpp else 0
-                    row[j] = (row[j] + _paeth(left, prev[j], c)) & 0xFF
-            elif ft != 0:
-                raise PdfError(f"bad PNG predictor filter tag {ft}")
-            out += row
-            prev = bytes(row)
-        return bytes(out)
-    raise PdfError(f"unsupported predictor {pred}")
+        # a TIFF row is a PNG row whose filter is Sub
+        data = b"".join(b"\x01" + data[rs : rs + rowlen] for rs in range(0, len(data), rowlen))
+    elif not 10 <= pred <= 15:
+        raise PdfError(f"unsupported predictor {pred}")
+    out = bytearray()
+    prev = bytes(rowlen)
+    i = 0
+    while i < len(data):
+        ft = data[i]
+        row = bytearray(data[i + 1 : i + 1 + rowlen])
+        i += 1 + len(row)
+        if not png_unfilter_row(ft, row, prev, bpp):
+            raise PdfError(f"bad PNG predictor filter tag {ft}")
+        out += row
+        prev = row
+    return bytes(out)
 
 
-def _stream_split(
-    body: bytes, objs: dict[int, bytes] | None
-) -> tuple[dict[bytes, bytes], int, int, int] | None:
-    """The one reader of stream objects (§7.3.8): (dict entries, start of
-    the ``stream`` keyword, payload start, payload end) of an object
-    body, or None when it has no stream or its dictionary no /Length.
-    An indirect /Length is resolved in ``objs``; with ``objs`` None only
-    a direct one is read."""
-    sm = re.search(rb"stream\r?\n", body)
-    if sm is None:
-        return None
-    head = _read_dict(body[: sm.start()])
-    length = head.get(b"Length")
-    n = _int(length if objs is None else _resolve(objs, length, "Length"))
-    return None if n is None else (head, sm.start(), sm.end(), sm.end() + n)
-
-
-def _raw_stream(objs: dict[int, bytes], body: bytes) -> tuple[dict[bytes, bytes], bytes]:
-    """(dict entries, undecoded stream payload) of an object body."""
-    split = _stream_split(body, objs)
-    if split is None:
-        raise PdfError("object has no stream with a /Length")
-    head, _, start, end = split
-    return head, body[start:end]
+def _stream_split(body: bytes) -> tuple[bytes, int | None]:
+    """The one reader of the ``stream`` keyword (§7.3.8): an object
+    body's value (the bytes before its keyword, all of them without
+    one) and where in the body its stream payload starts, or None. The
+    keyword follows the object's dictionary, so a name or string inside
+    it that holds the word (``/BaseFont /Mainstream``) is not taken for
+    it."""
+    keyword = re.compile(rb"stream\r?\n")
+    kw = keyword.search(body)
+    m = _TOKEN_RE.match(body)
+    if kw and m and m.lastindex == 1:
+        try:
+            kw = keyword.search(body, max(kw.start(), _scan_dict(body, m.start(1))[1]))
+        except PdfError:  # the dictionary never closes: the first keyword ends it
+            pass
+    return (body, None) if kw is None else (body[: kw.start()], kw.end())
 
 
 def _apply_filters(head: dict[bytes, bytes], data: bytes, n_filters: int | None = None) -> bytes:
@@ -593,12 +623,6 @@ def _apply_filters(head: dict[bytes, bytes], data: bytes, n_filters: int | None 
     return data
 
 
-def _stream_data(objs: dict[int, bytes], body: bytes) -> bytes:
-    """Extract and decode the stream payload of an object body."""
-    head, data = _raw_stream(objs, body)
-    return _apply_filters(head, data)
-
-
 # ------------------------- standard security handler (§7.6.3, RC4)
 
 # §7.6.3.3 Table 21 padding string (32 bytes, spec-fixed constant)
@@ -641,8 +665,6 @@ def std_security_key(
 ) -> bytes:
     """§7.6.3.3 Algorithm 2: the file encryption key from the (empty by
     default) user password."""
-    import hashlib
-
     h = hashlib.md5(
         _pw_pad(user_pw) + o_entry[:32]
         + (p & 0xFFFFFFFF).to_bytes(4, "little") + id0
@@ -656,8 +678,6 @@ def std_security_key(
 def _compute_u(key: bytes, id0: bytes, r: int) -> bytes:
     """§7.6.3.4 Algorithm 4 (R2) / 5 (R3+): the expected /U entry for a
     given key — used to VERIFY the empty user password."""
-    import hashlib
-
     if r == 2:
         return rc4(key, _PAD)
     h = hashlib.md5(_PAD + id0).digest()
@@ -670,8 +690,6 @@ def _compute_u(key: bytes, id0: bytes, r: int) -> bytes:
 def _object_key(key: bytes, num: int, aes: bool) -> bytes:
     """§7.6.2 Algorithm 1: the per-object key of generation-0 object
     ``num``; for AESV2 the md5 also absorbs the constant ``sAlT``."""
-    import hashlib
-
     salt = b"sAlT" if aes else b""
     h = hashlib.md5(key + num.to_bytes(3, "little") + b"\0\0" + salt).digest()
     return h[: min(len(key) + 5, 16)]
@@ -686,7 +704,7 @@ def _enc_entry(enc: dict[bytes, bytes], key: bytes, read, default=None):
     return default if v is None else v
 
 
-def _encryption_trailer(data: bytes, objs: dict[int, bytes]) -> dict[bytes, bytes] | None:
+def _encryption_trailer(data: bytes, objs: dict[int, PdfObject]) -> dict[bytes, bytes] | None:
     """The entries of the trailer that names /Encrypt, or None.
 
     Only TRAILER dictionaries (classic ``trailer`` keyword) and XRef
@@ -698,17 +716,15 @@ def _encryption_trailer(data: bytes, objs: dict[int, bytes]) -> dict[bytes, byte
         return None
     for m in re.finditer(rb"trailer\b", data):
         trailer = _read_dict(data, m.end())
-        if b"Encrypt" in trailer:
+        if trailer.get(b"Encrypt") is not None:
             return trailer
-    for body in objs.values():
-        if b"XRef" in body:
-            head = _read_dict(body)
-            if _name(head.get(b"Type")) == b"XRef" and b"Encrypt" in head:
-                return head
+    for obj in objs.values():
+        if _name(obj.head.get(b"Type")) == b"XRef" and obj.head.get(b"Encrypt") is not None:
+            return obj.head
     return None
 
 
-def _decrypt_in_place(data: bytes, objs: dict[int, bytes], password: bytes = b"") -> None:
+def _decrypt_in_place(data: bytes, objs: dict[int, PdfObject], password: bytes = b"") -> None:
     """If the trailer names an /Encrypt dictionary, verify the supplied
     password (EMPTY by default — the dominant web shape) and decrypt
     every top-level stream payload in place (§7.6.2; objects inside
@@ -729,7 +745,7 @@ def _decrypt_in_place(data: bytes, objs: dict[int, bytes], password: bytes = b""
     if trailer is None:
         return
     enc_num = _ref(trailer[b"Encrypt"])
-    enc = _read_dict(_resolve(objs, trailer[b"Encrypt"], "Encrypt"))
+    enc = _dict(objs, trailer[b"Encrypt"], "Encrypt")
     if _name(enc.get(b"Filter")) != b"Standard":
         raise PdfError("unsupported security handler")
     v = _enc_entry(enc, b"V", _int, 0)
@@ -745,14 +761,12 @@ def _decrypt_in_place(data: bytes, objs: dict[int, bytes], password: bytes = b""
         # Acrobat 9-era writers).
         if r not in (5, 6):
             raise PdfError(f"unsupported AES-256 revision /R {r}")
-        import hashlib as _hl
-
         from pdf_to_text_spark.core.aescipher import cbc_decrypt_nopad, pdf_hash_2b
 
         hfn = (
             pdf_hash_2b
             if r == 6
-            else (lambda pw, salt, udata: _hl.sha256(pw + salt + udata).digest())
+            else (lambda pw, salt, udata: hashlib.sha256(pw + salt + udata).digest())
         )
         u_entry = _enc_entry(enc, b"U", _string)
         if len(u_entry) < 48:
@@ -818,8 +832,6 @@ def _decrypt_in_place(data: bytes, objs: dict[int, bytes], password: bytes = b""
         # the normal /U check (round-5: closes the owner-password-only
         # boundary; Algorithm 3's KDF rehashes the FULL digest, unlike
         # Algorithm 2's first-klen-bytes rehash).
-        import hashlib
-
         h = hashlib.md5(_pw_pad(password)).digest()
         if r >= 3:
             for _ in range(50):
@@ -839,39 +851,34 @@ def _decrypt_in_place(data: bytes, objs: dict[int, bytes], password: bytes = b""
 
 
 def _decrypt_streams(
-    objs: dict[int, bytes], enc_num: int, key: bytes, *, aes: bool, per_object: bool
+    objs: dict[int, PdfObject], enc_num: int, key: bytes, *, aes: bool, per_object: bool
 ) -> None:
-    """Decrypt every top-level stream payload in place. ``per_object``
+    """Decrypt every top-level stream payload in the table. ``per_object``
     applies §7.6.2 Algorithm 1 key derivation (RC4/AESV2); AES-256
     (AESV3) uses the file key directly. XRef streams are exempt
-    (§7.5.8.2); AES payloads are 16-byte IV || CBC ciphertext, and since
-    the plaintext is shorter the head is rewritten with a direct /Length
-    (which also replaces an indirect one)."""
-    for num, body in objs.items():
-        if num == enc_num:
+    (§7.5.8.2); AES payloads are 16-byte IV || CBC ciphertext. A stream
+    whose /Length is not known cannot be decrypted: it keeps its error
+    and loses its uncut payload."""
+    for num, obj in objs.items():
+        if num == enc_num or obj.payload is None:
             continue
-        split = _stream_split(body, objs)
-        if split is None:
-            continue
-        head, kw_at, start, end = split
-        if _name(head.get(b"Type")) == b"XRef":
+        if _name(obj.head.get(b"Type")) == b"XRef":
             continue  # §7.5.8.2: cross-reference streams are never encrypted
-        payload = body[start:end]
-        if aes:
+        if obj.fault is not None:
+            objs[num] = obj._replace(payload=None)
+        elif aes:
             from pdf_to_text_spark.core.aescipher import cbc_decrypt
 
             okey = _object_key(key, num, aes=True) if per_object else key
-            if len(payload) < 32:
+            if len(obj.payload) < 32:
                 raise PdfError(f"object {num}: AES stream too short")
             try:
-                plain = cbc_decrypt(okey, payload[:16], payload[16:])
+                plain = cbc_decrypt(okey, obj.payload[:16], obj.payload[16:])
             except ValueError as e:
                 raise PdfError(f"object {num}: AES decrypt failed: {e}") from e
-            head = {**head, b"Length": b"%d" % len(plain)}
-            new_head = b"<<" + b"".join(b" /" + k + b" " + v for k, v in head.items()) + b" >>"
-            objs[num] = new_head + body[kw_at:start] + plain + body[end:]
+            objs[num] = obj._replace(payload=plain)
         else:
-            objs[num] = body[:start] + rc4(_object_key(key, num, aes=False), payload) + body[end:]
+            objs[num] = obj._replace(payload=rc4(_object_key(key, num, aes=False), obj.payload))
 
 
 def _unescape(raw: bytes) -> bytes:
@@ -1246,24 +1253,26 @@ def _decode_shown(raw: bytes, font: tuple[int, dict[int, str]] | None) -> str:
 
 
 def _page_fonts(
-    objs: dict[int, bytes], res: dict[bytes, bytes]
+    objs: dict[int, PdfObject], res: dict[bytes, bytes], known: dict[bytes, tuple | None]
 ) -> dict[bytes, tuple[int, dict[int, str]] | None]:
     """Page resources → font-name → (width, cmap) | None map. The
     ``/Font`` dictionary, each font in it and its /Encoding may be
-    direct or indirect."""
+    direct or indirect. ``known`` holds the map of every font the
+    document's earlier pages read, keyed by its value in ``/Font`` (its
+    ``N G R``, or the dictionary written there), so a font is read, and
+    its CMap parsed, once per document."""
     fonts: dict[bytes, tuple[int, dict[int, str]] | None] = {}
-    for name, ref in _read_dict(_resolve(objs, res.get(b"Font"), "font")).items():
-        body = _resolve(objs, ref, "font")
-        # bytes prefilter: a font naming neither key keeps the frozen latin-1
-        font = _read_dict(body) if b"ToUnicode" in body or b"Encoding" in body else {}
-        tounicode, enc = font.get(b"ToUnicode"), font.get(b"Encoding")
-        if _ref(tounicode) is not None:
-            cmap = _resolve(objs, tounicode, "ToUnicode")
-            fonts[b"/" + name] = parse_tounicode(_stream_data(objs, cmap))
-        else:
-            # §9.10.2 fallback order: no ToUnicode → simple-font
-            # /Encoding (round-5 widening); neither → frozen latin-1
-            fonts[b"/" + name] = enc and parse_encoding(_resolve(objs, enc, "Encoding"))
+    for name, ref in _dict(objs, res.get(b"Font"), "font").items():
+        if ref not in known:
+            font = _dict(objs, ref, "font")
+            tounicode, enc = font.get(b"ToUnicode"), font.get(b"Encoding")
+            if _ref(tounicode) is not None:
+                known[ref] = parse_tounicode(_stream(objs, tounicode, "ToUnicode"))
+            else:
+                # §9.10.2 fallback order: no ToUnicode → simple-font
+                # /Encoding (round-5 widening); neither → frozen latin-1
+                known[ref] = enc and parse_encoding(_resolve(objs, enc, "Encoding"))
+        fonts[b"/" + name] = known[ref]
     return fonts
 
 
@@ -1440,32 +1449,27 @@ def _runs_to_text(runs: list[tuple[float, float, str]]) -> str:
 _MAX_OBJSTM_N = 65536  # sanity cap: /N beyond this is a crafted header
 
 
-def _expand_object_streams(objs: dict[int, bytes], obj_pos: dict[int, int]) -> None:
-    """Unpack every /Type /ObjStm container into ``objs`` in place.
-
-    The stream starts with N (objnum, offset) integer pairs; offsets
-    are relative to /First (PDF 32000 §7.5.7). Precedence between an
-    ObjStm-compressed definition and a top-level one of the same object
-    number follows REVISION ORDER (round-4 advice): the definition
-    whose byte position in the file is later wins — for inner objects
-    that position is the CONTAINER ObjStm's — matching the
-    later-definition-wins rule q60 pins for incremental updates (an
-    update that moves an object into an ObjStm supersedes the older
-    top-level body, and vice versa).
-    """
+def _expand_object_streams(objs: dict[int, PdfObject], obj_pos: dict[int, int]) -> None:
+    """Add the objects of every /Type /ObjStm container to the table,
+    each read once (an object stream holds no streams). The stream
+    starts with N (objnum, offset) integer pairs; offsets are relative
+    to /First (PDF 32000 §7.5.7). Precedence between an ObjStm-compressed
+    definition and a top-level one of the same object number follows
+    REVISION ORDER (round-4 advice): the definition whose byte position
+    in the file is later wins — for inner objects that position is the
+    CONTAINER ObjStm's — matching the later-definition-wins rule q60
+    pins for incremental updates (an update that moves an object into
+    an ObjStm supersedes the older top-level body, and vice versa)."""
     extra: dict[int, tuple[int, bytes]] = {}  # num -> (container_pos, body)
-    for cnum, body in list(objs.items()):
-        if b"ObjStm" not in body or b"stream" not in body:
+    for cnum, obj in list(objs.items()):
+        if _name(obj.head.get(b"Type")) != b"ObjStm":
             continue
-        head = _read_dict(body)
-        if _name(head.get(b"Type")) != b"ObjStm":
-            continue
-        n, first = _int(head.get(b"N")), _int(head.get(b"First"))
+        n, first = _int(obj.head.get(b"N")), _int(obj.head.get(b"First"))
         if n is None or first is None or min(n, first) < 0:
             raise PdfError("ObjStm missing /N or /First")
         if n > _MAX_OBJSTM_N:
             raise PdfError("ObjStm /N exceeds sanity cap")
-        data = _stream_data(objs, body)
+        data = _apply_filters(obj.head, _payload(objs, obj))
         header = data[:first].split()
         if len(header) < 2 * n:
             raise PdfError("ObjStm header shorter than /N pairs")
@@ -1485,27 +1489,29 @@ def _expand_object_streams(objs: dict[int, bytes], obj_pos: dict[int, int]) -> N
                 extra[onum] = (cpos, data[first + off : end])
     for num, (cpos, body) in extra.items():
         if num not in objs or cpos > obj_pos.get(num, -1):
-            objs[num] = body
+            objs[num] = PdfObject(body, _read_dict(body))
 
 
-def _page_content(objs: dict[int, bytes], page: dict[bytes, bytes]) -> bytes | None:
+def _page_content(objs: dict[int, PdfObject], page: dict[bytes, bytes]) -> bytes | None:
     """Resolve a page's /Contents — one stream or an array of them,
     direct or indirect; array parts are decoded independently and joined
     with a newline (§7.7.3.3: the division between streams happens only
     at token boundaries)."""
-    contents = _resolve(objs, page.get(b"Contents"), "contents")
+    contents = page.get(b"Contents")
     if contents is None:
         return None
-    parts = [_resolve(objs, part, "contents") for part in _items(contents)]
-    return b"\n".join(_stream_data(objs, part) for part in parts)
+    parts = _array(_resolve(objs, contents, "contents"))
+    if parts is None:  # one stream
+        parts = [contents]
+    return b"\n".join(_stream(objs, part, "contents") for part in parts)
 
 
 _MAX_TREE_DEPTH = 64
 
 
-def _open_document(data: bytes, password: bytes | str) -> dict[int, bytes]:
-    """The objects of a PDF, decrypted with ``password`` (str is encoded
-    UTF-8) and with its object streams expanded."""
+def _open_document(data: bytes, password: bytes | str) -> dict[int, PdfObject]:
+    """The object table of a PDF, decrypted with ``password`` (str is
+    encoded UTF-8) and with its object streams expanded."""
     if not data.startswith(b"%PDF-"):
         raise PdfError("not a PDF (magic bytes)")
     if isinstance(password, str):
@@ -1517,7 +1523,7 @@ def _open_document(data: bytes, password: bytes | str) -> dict[int, bytes]:
 
 
 def _collect_leaf_pages(
-    objs: dict[int, bytes], num: int, visited: set, depth: int
+    objs: dict[int, PdfObject], num: int, visited: set, depth: int
 ) -> list[dict[bytes, bytes]]:
     """Depth-first walk of a (possibly nested) page tree → the entries
     of each leaf page: /Pages nodes recurse into /Kids in order,
@@ -1529,10 +1535,9 @@ def _collect_leaf_pages(
     if num in visited:
         raise PdfError("page tree cycle")
     visited.add(num)
-    body = objs.get(num)
-    if body is None:
+    if num not in objs:
         raise PdfError("dangling page ref")
-    node = _read_dict(body)
+    node = objs[num].head
     if _name(node.get(b"Type")) != b"Pages":
         return [node]
     kids = _array(_resolve(objs, node.get(b"Kids"), "Kids"))
@@ -1569,19 +1574,18 @@ def extract_pdf_pages(
     Default ``None`` is bit-identical to the frozen goldens.
     """
     objs = _open_document(data, password)
-    # root: the Catalog's /Pages ref; fallback to the first /Type /Pages
-    # object for catalog-less fragments
     root_num = _root_pages_num(objs)
     if root_num is None:
         raise PdfError("no /Pages object")
     texts: list[str] = []
+    fonts: dict[bytes, tuple | None] = {}  # each font's map, read once
     for page in _collect_leaf_pages(objs, root_num, set(), 0):
         content = _page_content(objs, page)
         if content is None:
             texts.append("")
             continue
-        res = _read_dict(_resolve(objs, page.get(b"Resources"), "resources"))
-        scan = _scan_content(content, _page_fonts(objs, res))
+        res = _dict(objs, page.get(b"Resources"), "resources")
+        scan = _scan_content(content, _page_fonts(objs, res, fonts))
         # frozen spec (SPEC item 2): \x02 is stripped from page text
         text = _runs_to_text(scan.runs).replace("\x02", "")
         if page_ocr is not None and not text:
@@ -1646,16 +1650,14 @@ def _image_row(obj: int, head: dict[bytes, bytes], raw: bytes) -> dict:
     }
 
 
-def _image_row_from_body(objs: dict[int, bytes], num: int, body: bytes) -> dict | None:
-    """Decoded object body → image row, or None when the object is not
-    a /Subtype /Image XObject. Shared by the document-wide image sweep
-    and the scanned-page OCR fallback's painted-image lookup."""
-    if b"Image" not in body:
+def _image_row_of(objs: dict[int, PdfObject], num: int) -> dict | None:
+    """Object ``num`` → image row, or None when it is not a /Subtype
+    /Image XObject. Shared by the document-wide image sweep and the
+    scanned-page OCR fallback's painted-image lookup."""
+    obj = objs[num]
+    if _name(obj.head.get(b"Subtype")) != b"Image":
         return None
-    head = _read_dict(body)
-    if _name(head.get(b"Subtype")) != b"Image":
-        return None
-    return _image_row(num, head, _raw_stream(objs, body)[1])
+    return _image_row(num, obj.head, _payload(objs, obj))
 
 
 def _inline_image_row(content: bytes, span: tuple[int, int, int, int]) -> dict:
@@ -1679,24 +1681,17 @@ def _inline_image_row(content: bytes, span: tuple[int, int, int, int]) -> dict:
 
 
 def _page_painted_images(
-    objs: dict[int, bytes], res: dict[bytes, bytes], painted: list[bytes]
+    objs: dict[int, PdfObject], res: dict[bytes, bytes], painted: list[bytes]
 ) -> list[dict]:
     """Image XObjects a page actually PAINTS (``painted``: the ``Do``
     operands ``_scan_content`` read from its content stream), as image
     rows in first-paint order — the candidate set for the scanned-page
     OCR fallback. ``res``: the page's /Resources entries; names painted
     but absent from /XObject, and non-image XObjects, are skipped."""
-    xobjects = _read_dict(_resolve(objs, res.get(b"XObject"), "XObject"))
-    rows: list[dict] = []
-    for nm in dict.fromkeys(painted):
-        num = _ref(xobjects.get(nm[1:]))
-        body = objs.get(num) if num is not None else None
-        if body is None:
-            continue
-        row = _image_row_from_body(objs, num, body)
-        if row is not None:
-            rows.append(row)
-    return rows
+    xobjects = _dict(objs, res.get(b"XObject"), "XObject")
+    nums = [_ref(xobjects.get(nm[1:])) for nm in dict.fromkeys(painted)]
+    rows = [_image_row_of(objs, num) for num in nums if num in objs]
+    return [row for row in rows if row is not None]
 
 
 def extract_pdf_images(data: bytes, password: bytes | str = b"") -> list[dict]:
@@ -1731,11 +1726,8 @@ def extract_pdf_images(data: bytes, password: bytes | str = b"") -> list[dict]:
     ``operators/multimodal.py`` as first-class binary columns.
     """
     objs = _open_document(data, password)
-    out: list[dict] = []
-    for num in sorted(objs):
-        row = _image_row_from_body(objs, num, objs[num])
-        if row is not None:
-            out.append(row)
+    rows = (_image_row_of(objs, num) for num in sorted(objs))
+    out = [row for row in rows if row is not None]
     root = _root_pages_num(objs)
     if root is not None:
         for page in _collect_leaf_pages(objs, root, set(), 0):
@@ -1745,17 +1737,13 @@ def extract_pdf_images(data: bytes, password: bytes | str = b"") -> list[dict]:
     return out
 
 
-def _root_pages_num(objs: dict[int, bytes]) -> int | None:
+def _root_pages_num(objs: dict[int, PdfObject]) -> int | None:
     """The root /Pages object number: the first catalog's /Pages, else
     (no catalog, or one without a /Pages ref) the first /Type /Pages
     node in file order."""
-    for b in objs.values():
-        if b"Catalog" in b and _name((d := _read_dict(b)).get(b"Type")) == b"Catalog":
-            if (root := _ref(d.get(b"Pages"))) is not None:
+    for obj in objs.values():
+        if _name(obj.head.get(b"Type")) == b"Catalog":
+            if (root := _ref(obj.head.get(b"Pages"))) is not None:
                 return root
             break
-    return next(
-        (n_ for n_, b in objs.items()
-         if b"Pages" in b and _name(_read_dict(b).get(b"Type")) == b"Pages"),
-        None,
-    )
+    return next((n for n, o in objs.items() if _name(o.head.get(b"Type")) == b"Pages"), None)

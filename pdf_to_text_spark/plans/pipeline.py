@@ -7,6 +7,7 @@
 2. **resume**: buckets listed in ``out_dir/_manifest`` are complete from
    a previous run and are filtered out (partition pruning makes the
    re-scan cheap; output is keyed by url so re-running is idempotent);
+   a resume at another ``n_buckets`` than the committed one is refused;
 3. **skew handling**: one ``repartitionById`` places every row by a url
    hash seeded apart from the bucket's: small rows into ``n_partitions``
    tasks, whale rows (html bytes above ``WHALE_BYTES``) into
@@ -55,7 +56,10 @@ def bucket_of(url_col, n_buckets: int):
     return F.pmod(F.xxhash64(url_col), F.lit(n_buckets)).cast("int")
 
 
-def committed_buckets(out_dir: str) -> set[int]:
+def committed_buckets(out_dir: str, n_buckets: int | None = None) -> set[int]:
+    """The buckets ``out_dir/_manifest`` lists as committed. A committed
+    line naming another ``n_buckets`` raises ``ValueError``: its buckets
+    hash other urls. A line without the count is read as before."""
     mdir = os.path.join(out_dir, "_manifest")
     done: set[int] = set()
     if not os.path.isdir(mdir):
@@ -65,12 +69,15 @@ def committed_buckets(out_dir: str) -> set[int]:
             with open(os.path.join(mdir, name)) as f:
                 for line in f:
                     rec = json.loads(line)
-                    if rec.get("status") == "committed":
-                        done.add(int(rec["bucket"]))
+                    if rec.get("status") != "committed":
+                        continue
+                    if n_buckets is not None and rec.get("n_buckets", n_buckets) != n_buckets:
+                        raise ValueError(f"{out_dir} is committed at {rec['n_buckets']} buckets")
+                    done.add(int(rec["bucket"]))
     return done
 
 
-def _write_manifest(out_dir: str, run_id: str, buckets: list[int]) -> None:
+def _write_manifest(out_dir: str, run_id: str, buckets: list[int], n_buckets: int) -> None:
     mdir = os.path.join(out_dir, "_manifest")
     os.makedirs(mdir, exist_ok=True)
     path = os.path.join(mdir, f"{run_id}.json")
@@ -78,12 +85,8 @@ def _write_manifest(out_dir: str, run_id: str, buckets: list[int]) -> None:
     now = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
     with open(tmp, "w") as f:
         for b in sorted(buckets):
-            f.write(
-                json.dumps(
-                    {"run_id": run_id, "bucket": b, "status": "committed", "committed_at": now}
-                )
-                + "\n"
-            )
+            rec = {"run_id": run_id, "bucket": b, "n_buckets": n_buckets, "status": "committed"}
+            f.write(json.dumps({**rec, "committed_at": now}) + "\n")
     os.replace(tmp, path)  # atomic: manifest appears whole or not at all
 
 
@@ -159,7 +162,7 @@ def run_extraction(
     pages = spark.read.parquet(in_path).select("url", "html", "text")
     pages = pages.withColumn("bucket", bucket_of(F.col("url"), n_buckets))
 
-    done = committed_buckets(out_dir) if resume else set()
+    done = committed_buckets(out_dir, n_buckets) if resume else set()
     all_buckets = set(range(n_buckets))
     pending = sorted(all_buckets - done)
     if not pending:
@@ -209,7 +212,7 @@ def run_extraction(
     n_rows = sum(r["doc_count"] for r in mrows)
     _write_metrics(out_dir, run_id, mrows)
 
-    _write_manifest(out_dir, run_id, pending)
+    _write_manifest(out_dir, run_id, pending, n_buckets)
     return {
         "run_id": run_id,
         "buckets_done": len(done),

@@ -1368,9 +1368,64 @@ def test_crypt_filter_length_is_not_the_key_length():
 
 def test_uncompressed_stream_holding_the_word_endobj():
     """An object ends after its stream payload: a page whose text says
-    ``endobj`` is read whole."""
+    ``endobj`` is read whole, whether its /Length is direct or an
+    indirect reference."""
     lines = ["the word endobj ends nothing", "endstream endobj either"]
-    assert extract_pdf_pages(build_pdf([page_content_stream(lines)])) == ["\n".join(lines)]
+    pdf = build_pdf([page_content_stream(lines)])
+    assert extract_pdf_pages(pdf) == extract_pdf_pages(_indirect_lengths(pdf)) == ["\n".join(lines)]
+
+
+def test_tounicode_cmap_is_parsed_once_per_document(monkeypatch):
+    """A font object that three pages share is read, and its CMap
+    parsed, once per document."""
+    from pdf_to_text_spark.core import pdfparse
+
+    calls = []
+    parse = pdfparse.parse_tounicode
+    monkeypatch.setattr(pdfparse, "parse_tounicode", lambda data: calls.append(1) or parse(data))
+    pdf = build_pdf(
+        [page_content_stream([f"page {i}"], style="cid") for i in range(3)], cid_font=True
+    )
+    assert extract_pdf_pages(pdf) == ["page 0", "page 1", "page 2"]
+    assert len(calls) == 1
+
+
+def test_stream_length_held_in_an_object_stream():
+    """A stream's indirect /Length may be an object inside an object
+    stream (§7.5.7 forbids that only for an object stream's own
+    /Length): it is read once the object streams are expanded."""
+    content = b"BT 72 700 Td (held) Tj ET"
+    inner = b"6 0 %d" % len(content)
+    objs = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>",
+        b"<< /Length 6 0 R >>\nstream\n" + content + b"\nendstream",
+        b"<< /Type /ObjStm /N 1 /First 4 /Length %d >>\nstream\n%s\nendstream"
+        % (len(inner), inner),
+    ]
+    pdf = b"%PDF-1.5\n" + b"".join(
+        b"%d 0 obj\n%s\nendobj\n" % (i, body) for i, body in enumerate(objs, 1)
+    )
+    assert extract_pdf_pages(pdf) == ["held"]
+
+
+def test_word_stream_inside_a_dictionary_is_no_stream_keyword():
+    """A name ending a line with the word ``stream`` inside a font's
+    dictionary neither ends the dictionary nor starts a payload."""
+    pdf = build_pdf([page_content_stream(["Hello CID world"], style="cid")], cid_font=True)
+    renamed = pdf.replace(b"/BaseFont /Synthetic ", b"/BaseFont /Mainstream\n")
+    assert b"/Mainstream\n/Encoding" in renamed
+    assert extract_pdf_pages(renamed) == ["Hello CID world"]
+
+
+def test_unused_stream_that_cannot_be_cut_fails_no_document():
+    """A stream whose /Length names no object fails only the page that
+    reads it: an encrypted document holding one that no page uses reads
+    whole."""
+    pdf = build_pdf([page_content_stream(LINES)], flate=True, encrypt=3)
+    broken, _ = _with_objects(pdf, [b"<< /Length 99 0 R >>\nstream\nxx\nendstream"])
+    assert extract_pdf_pages(broken) == ["\n".join(LINES)]
 
 
 def test_all_compact_dictionaries():

@@ -170,6 +170,25 @@ PDF_KEY_LITERALS = {
 }
 
 
+# Substring tests (``b"word" in body``) in ``core/pdfparse.py`` of a
+# bytes literal that names a key or keyword, each with the reason it is
+# not a second, approximate reader of an object beside the object table.
+PDF_SUBSTRING_TESTS = {
+    b"/Encrypt": "whole-file fast path (PDF_KEY_LITERALS)",
+    b"stream": "the table builder asks _stream_split for the keyword only in "
+    "a body that holds the word",
+}
+
+
+def _substring_test(words):
+    """A predicate on AST nodes: an ``in`` or ``not in`` test whose left
+    operand is a bytes literal in ``words`` (a bare word, or a name)."""
+    return lambda n: (
+        isinstance(n, ast.Compare) and isinstance(n.ops[0], (ast.In, ast.NotIn))
+        and _bytes_literal(n.left, lambda v: re.fullmatch(rb"/?[A-Za-z]+", v) and words(v))
+    )
+
+
 _RE_CALLS = {"compile", "search", "match", "fullmatch", "finditer", "findall", "sub", "split"}
 
 
@@ -222,12 +241,16 @@ def test_pdf_syntax_elements_are_read_in_one_function():
     """In ``core/pdfparse.py`` each object-syntax element has one reader:
     ``bytes.fromhex`` runs only in ``_ascii_hex_decode`` (hex strings)
     and ``parse_tounicode`` (CMap code units), the ``stream`` keyword
-    with its end of line is searched only in ``_stream_split``, only
-    ``_literal_string`` walks a literal string's delimiters, no bytes
-    literal names a dictionary key (a ``/Length`` regex, say) but those
-    ``PDF_KEY_LITERALS`` allows, and no regex is built at run time or
-    names a key the module reads (``_regex_names_a_key``): every
-    ``/Key value`` lookup goes through ``_read_dict``."""
+    with its end of line is searched only in ``_stream_split``, which
+    only the object-table builder ``_parse_objects`` calls, and that
+    once per object, only ``_literal_string`` walks a literal string's
+    delimiters, no bytes literal names a dictionary key (a ``/Length``
+    regex, say) but those ``PDF_KEY_LITERALS`` allows, no regex is built
+    at run time or names a key the module reads
+    (``_regex_names_a_key``), and no ``b"Image" in body`` substring
+    test guesses at a key but those ``PDF_SUBSTRING_TESTS`` allows:
+    every ``/Key value`` lookup goes through ``_read_dict``, and every
+    object is read through the table."""
     rules = {
         "fromhex": (
             lambda n: isinstance(n, ast.Attribute) and n.attr == "fromhex",
@@ -237,6 +260,12 @@ def test_pdf_syntax_elements_are_read_in_one_function():
             lambda n: _bytes_literal(n, lambda v: v.startswith(b"stream") and v != b"stream"),
             ["_stream_split"],
         ),
+        "stream split": (
+            lambda n: isinstance(n, ast.Call) and getattr(n.func, "id", None) == "_stream_split",
+            ["_parse_objects"],
+        ),
+        "substring test": (_substring_test(lambda v: v not in PDF_SUBSTRING_TESTS), []),
+        "stream substring test": (_substring_test(lambda v: v == b"stream"), ["_parse_objects"]),
         "dictionary key": (
             lambda n: _bytes_literal(
                 n, lambda v: re.search(rb"/[A-Za-z]", v) and v not in PDF_KEY_LITERALS
@@ -252,3 +281,5 @@ def test_pdf_syntax_elements_are_read_in_one_function():
     for what, (hit, readers) in rules.items():
         hits = _pdfparse_hits(hit)
         assert sorted(hits) == readers, f"{what} read at {hits}"
+    splits = _pdfparse_hits(rules["stream split"][0])
+    assert len(splits["_parse_objects"]) == 1, f"_stream_split called at {splits}"

@@ -97,6 +97,27 @@ def test_resume_equals_fresh(spark, corpus_dir, tmp_path):
     assert s3["buckets_run"] == 0
 
 
+def test_resume_at_another_bucket_count_is_refused(spark, corpus_dir, tmp_path):
+    """A resume must hash urls into the buckets that were committed: at
+    another count it would skip rows never committed and write second
+    copies of rows already written, so it raises before writing."""
+    import json
+
+    import pytest
+
+    out = str(tmp_path / "out")
+    run_extraction(spark, f"{corpus_dir}/pages.parquet", out, n_buckets=16)
+    mdir = os.path.join(out, "_manifest")
+    lines = [json.loads(ln) for f_ in os.listdir(mdir) for ln in open(os.path.join(mdir, f_))]
+    assert {rec["n_buckets"] for rec in lines} == {16}
+    before = _part_files(out)
+    with pytest.raises(ValueError, match="committed at 16 buckets"):
+        run_extraction(spark, f"{corpus_dir}/pages.parquet", out, n_buckets=32)
+    assert _part_files(out) == before
+    resumed = run_extraction(spark, f"{corpus_dir}/pages.parquet", out, n_buckets=16)
+    assert resumed["buckets_run"] == 0
+
+
 def test_size_aware_repartition_isolates_whales(spark):
     """Small rows (a null ``html`` among them) land only in partitions
     ``[0, n)``, whales only in the ``n_whale`` partitions after them,
